@@ -18,8 +18,11 @@ never committed, so it cannot go stale relative to the source tree).
 Locally the package is importable from the repo root, so the same
 script runs without the zip.
 
-Resume: re-running with the same --output skips buckets already marked
-ok in the lineage manifest (idempotent per-bucket overwrite).
+Resume: only parse is bucket-local, so only parse is checkpointed per
+url-hash bucket (<output>/data, manifest <output>/_lineage); every later
+stage runs once over the whole checkpoint, through the same code as
+--no-resume, and then records its completion in the manifest. A rerun
+re-parses only unrecorded buckets and does nothing on a finished output.
 """
 
 from __future__ import annotations
@@ -27,13 +30,15 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from redo_log_parser_spark.config import PipelineConfig
-from redo_log_parser_spark.pipeline import run_pipeline
+from redo_log_parser_spark.pipeline import parse, run_parsed
 from redo_log_parser_spark.session import get_spark
-from redo_log_parser_spark.sinks.lineage import run_resumable
+from redo_log_parser_spark.sinks.lineage import (
+    TAIL_BUCKET, completed_buckets, read_resumed, record_lineage, run_resumable)
 from redo_log_parser_spark.sources.documents import read_documents
 
 
@@ -115,10 +120,11 @@ def main() -> int:
         "FASTER end-to-end through this pipeline: sf1 2.5M rows 91 s "
         "pandas vs 77 s sql, hash-identical sinks; see PLANS.md §14)",
     )
-    ap.add_argument("--buckets", type=int, default=16)
+    ap.add_argument("--buckets", type=int, default=16,
+                    help="url-hash buckets of the parse checkpoint")
     ap.add_argument("--run-id", default="run0")
     ap.add_argument("--no-resume", action="store_true",
-                    help="process everything as one job (no bucket lineage)")
+                    help="parse in memory: no checkpoint, no lineage")
     ap.add_argument(
         "--explode-records", action="store_true",
         help="documents whose text cells batch SEVERAL 2-line redo "
@@ -127,6 +133,10 @@ def main() -> int:
         "gains a '#kkkk' position suffix preserving (warc_ts, url) "
         "order. Fuzz-validated (diff_fuzz_sweep --axis packdoc)")
     args = ap.parse_args()
+    if not args.no_resume and TAIL_BUCKET in completed_buckets(args.output):
+        # finished output: no session, no job
+        print({"buckets_processed": 0})
+        return 0
 
     spark = get_spark("rlps-pipeline")
     cfg = PipelineConfig(
@@ -138,7 +148,6 @@ def main() -> int:
         xes_document=args.xes_file,
         reference_trace_order=args.reference_trace_order,
         root_classes=tuple(args.root_class or ()),
-        output_dir=args.output,
     )
     if args.input_format == "logfile":
         from redo_log_parser_spark.sources.logfile import read_log_files
@@ -217,36 +226,40 @@ def main() -> int:
         print_verbose_entries(docs, cfg, source=args.input, parser=args.parser)
 
     if args.no_resume:
-        res = run_pipeline(docs, args.output, cfg, parser=args.parser)
-        if args.print_schema and res.schema is not None:
-            # reference console dump incl. its header line
-            # (cli/package.scala:58-66 — typo preserved verbatim)
-            print(
-                "\nExctracted the following database schema from "
-                "transformed log entries:"
-            )
-            if args.reference_console_order:
-                print(_reference_order_dump(docs, cfg, args.strict, res))
-            else:
-                print(res.schema.format_console(strict=args.strict))
-        print({"routed": res.routed_counts, "traces": res.n_traces})
-        return 0
-
-    def process(bucket_df, bucket_out):
-        res = run_pipeline(bucket_df, bucket_out, cfg, parser=args.parser)
-        clean = sum(
-            v for k, v in res.routed_counts.items() if k != "sink_rejects"
+        parsed = parse(docs, cfg, args.parser)
+        resumed = {}
+    else:
+        entries = run_resumable(
+            docs, args.output,
+            lambda df: parse(df, cfg, args.parser,
+                             keep_cols=("url", "warc_ts", "lang", "bucket")),
+            n_buckets=args.buckets, run_id=args.run_id,
         )
-        return {
-            "rows_in": clean + res.routed_counts.get("sink_rejects", 0),
-            "rows_clean": clean,
-            "rows_reject": res.routed_counts.get("sink_rejects", 0),
-        }
+        parsed = read_resumed(spark, args.output)
+        resumed = {"buckets_processed": len(entries)}
 
-    entries = run_resumable(
-        docs, args.output, process, n_buckets=args.buckets, run_id=args.run_id
-    )
-    print({"buckets_processed": len(entries)})
+    t0 = time.monotonic()
+    res = run_parsed(parsed, args.output, cfg)
+    if not args.no_resume:
+        rows_in = sum(res.routed_counts.values())
+        rejects = res.routed_counts["sink_rejects"]
+        record_lineage(args.output, {
+            "bucket": TAIL_BUCKET, "status": "ok", "rows_in": rows_in,
+            "rows_clean": rows_in - rejects, "rows_reject": rejects,
+            "wall_sec": time.monotonic() - t0, "run_id": args.run_id,
+        })
+    if args.print_schema and res.schema is not None:
+        # reference console dump incl. its header line
+        # (cli/package.scala:58-66 — typo preserved verbatim)
+        print(
+            "\nExctracted the following database schema from "
+            "transformed log entries:"
+        )
+        if args.reference_console_order:
+            print(_reference_order_dump(docs, cfg, args.strict, res))
+        else:
+            print(res.schema.format_console(strict=args.strict))
+    print({"routed": res.routed_counts, "traces": res.n_traces, **resumed})
     return 0
 
 

@@ -85,10 +85,6 @@ class PipelineConfig:
     # --- Spark-scale knobs (no reference equivalent) ---
     # Salt buckets for skewed trace collection (hot case_ids / hot hosts).
     n_salt: int = 16
-    # Number of url-hash buckets used for checkpoint/lineage partitioning.
-    n_url_buckets: int = 64
-    # Where lineage / metrics / sink tables go.
-    output_dir: str = "/tmp/redo_log_parser_spark_out"
 
     @property
     def all_root_classes(self) -> tuple[str, ...]:

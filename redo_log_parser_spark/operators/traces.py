@@ -14,8 +14,7 @@ Spark design:
     first-insert attribute values on (value, pk_table, pk_col), with the
     tiny FK-pair list broadcast.
   * Case ids are the root entities' row ids — stable, already unique,
-    and requiring no global sort at 10^12 rows. A numbered view for
-    golden-file comparison exists separately (`number_cases`).
+    and requiring no global sort at 10^12 rows.
   * The table-graph walk (J2) iterates on the DRIVER over tables (3-8 in
     practice) issuing one DataFrame join per traversed edge — data-level
     work stays distributed, only the walk plan is driver-side.
@@ -271,15 +270,3 @@ def collect_traces(
         lambda x: F.struct(*[x[c].alias(c) for c in event_cols]),
     )
     return merged.select("case_id", drop_keys.alias("events"))
-
-
-def number_cases(traces: DataFrame, roots_first_seen: DataFrame) -> DataFrame:
-    """Golden-output helper ONLY: map case_id -> dense index by the root
-    entity's first appearance (deterministic stand-in for the reference's
-    bucket numbering, TraceIDParserHelper.scala:33-37). Uses a global
-    window — fine for test-sized outputs, not for 10^12-row runs."""
-    from pyspark.sql import Window
-
-    w = Window.orderBy("first_sk")
-    idx = roots_first_seen.withColumn("case_idx", F.row_number().over(w) - 1)
-    return traces.join(idx.select("case_id", "case_idx"), "case_id")

@@ -10,20 +10,22 @@ Spark (SURVEY.md §3.1):
   5. discover       schema aggregates → driver summary (small)
   6. traces         entity edges → case propagation → salted collect
   7. serialize      per-trace XES XML strings → sink
-  8. lineage        per-bucket metrics + resumable manifest
 
-Steps 1-4 are embarrassingly parallel over url-hash buckets; 5-7 shuffle
-on (table,col,row) / value / case keys. The parsed frame is cached once
-and feeds both the routing write and the aggregates.
+Only step 1 is bucket-local (the CLI checkpoints it per url-hash bucket,
+sinks/lineage.py); step 2 is a window over row ids and 5-7 shuffle on
+(table,col,row) / value / case keys, so `run_parsed` runs steps 2-7 once
+over the whole parsed log. The uniquified frame is cached once and feeds
+both the routing write and the aggregates.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from .caching import operator_caches, register
 from .config import PipelineConfig, DEFAULT_CONFIG
 from .functions.javaspace import java_equals_ignore_case
 from .functions.parse import parse_documents
@@ -83,6 +85,18 @@ def _safe_root_names(roots) -> dict[str, str]:
     }
 
 
+def parse(
+    docs: DataFrame,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    parser: str = "pandas",
+    keep_cols: tuple[str, ...] = ("url", "warc_ts", "lang"),
+) -> DataFrame:
+    """Step 1: parser='pandas' (the byte-parity Arrow kernel) or 'sql'
+    (pure-JVM expressions, no Python workers; functions/parse_sql.py)."""
+    parse_fn = parse_documents if parser == "pandas" else parse_documents_sql
+    return parse_fn(docs, cfg, keep_cols=keep_cols)
+
+
 def print_verbose_entries(
     docs: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
@@ -97,10 +111,9 @@ def print_verbose_entries(
     stage shows an n-row head under the reference's exact headers —
     .show() computes only the partitions it needs, the rest of the plan
     never runs."""
-    parse_fn = parse_documents if parser == "pandas" else parse_documents_sql
     print(f"\n\nRead following log entries from {source}:")
     docs.drop("html").show(n, truncate=False)
-    parsed = parse_fn(docs, cfg)
+    parsed = parse(docs, cfg, parser)
     print("\n\nExtracted the following statements out of the log entries:")
     parsed.show(n, truncate=False)
     print("\n\nTransformed the following log entries and their row identifiers:\n")
@@ -140,38 +153,49 @@ def run_pipeline(
     write_sinks: bool = True,
     parser: str = "pandas",
 ) -> PipelineResult:
-    """Full run over a documents frame. Root class comes from cfg
-    (replacing the reference's interactive prompt, cli/package.scala:73-86);
-    when None, trace assembly is skipped (schema-only run).
-
-    parser='pandas' (default, the byte-parity Arrow kernel) or 'sql'
-    (pure-JVM expression parser — identical output on well-formed
-    records, no Python workers; see functions/parse_sql.py)."""
-    result = PipelineResult(out_dir=out_dir)
-
-    parse_fn = parse_documents if parser == "pandas" else parse_documents_sql
-    parsed = parse_fn(docs, cfg)
-    events = uniquify_row_ids(parsed).cache()
-    enriched = enrich(events, table_dict, lang_map)
-
-    if write_sinks:
-        result.routed_counts = write_fanout(enriched, out_dir)
-
-    clean = enriched.filter(F.col("parse_error").isNull())
-    cols_df, ind_df = discover_schema(
-        clean,
-        strict=cfg.strict_primary_keys,
-        ind_mode="eager" if cfg.eager_ind else "final",
-        mono_mode="reference" if cfg.reference_monotonicity else "log",
+    """Full run over a documents frame: `parse`, then `run_parsed`."""
+    return run_parsed(
+        parse(docs, cfg, parser), out_dir, cfg, table_dict, lang_map,
+        write_sinks,
     )
-    result.schema = summarize_schema(cols_df, ind_df)
 
-    # Multi-root: the reference loops "pick a root → emit XES" over the
-    # SAME parsed log and discovered schema until --singleRun
-    # (Main.scala:131-162); here every requested root reuses the cached
-    # events and the one discovery pass — one trace sink per root.
-    roots = cfg.all_root_classes
-    if roots:
+
+def run_parsed(
+    parsed: DataFrame,
+    out_dir: str,
+    cfg: PipelineConfig = DEFAULT_CONFIG,
+    table_dict: DataFrame | None = None,
+    lang_map: DataFrame | None = None,
+    write_sinks: bool = True,
+) -> PipelineResult:
+    """Steps 2-7 over the whole parsed log. Root class comes from cfg
+    (replacing the reference's interactive prompt, cli/package.scala:73-86);
+    when None, trace assembly is skipped (schema-only run)."""
+    result = PipelineResult(out_dir=out_dir)
+    # every frame cached here or by the operators is released on exit,
+    # also when a stage raises
+    with operator_caches():
+        events = register(uniquify_row_ids(parsed).cache())
+        enriched = enrich(events, table_dict, lang_map)
+
+        if write_sinks:
+            result.routed_counts = write_fanout(enriched, out_dir)
+
+        clean = enriched.filter(F.col("parse_error").isNull())
+        cols_df, ind_df = discover_schema(
+            clean,
+            strict=cfg.strict_primary_keys,
+            ind_mode="eager" if cfg.eager_ind else "final",
+            mono_mode="reference" if cfg.reference_monotonicity else "log",
+        )
+        result.schema = summarize_schema(cols_df, ind_df)
+
+        # Multi-root: the reference loops "pick a root → emit XES" over
+        # the SAME parsed log and discovered schema until --singleRun
+        # (Main.scala:131-162); here every requested root reuses the
+        # cached events and the one discovery pass — one trace sink per
+        # root.
+        roots = cfg.all_root_classes
         for rc in roots:
             # Java equalsIgnoreCase, not lowercase equality — matches
             # the trace layer's table matching (javaspace)
@@ -195,10 +219,12 @@ def run_pipeline(
                 else f"{out_dir}/traces_xes/{safe_names[rc]}"
             )
             if write_sinks:
-                traces.select("case_id", "trace_xml").write.mode(
-                    "overwrite"
-                ).parquet(dest)
-                n = docs.sparkSession.read.parquet(dest).count()
+                # counted on the write pass, not by re-reading the sink
+                obs = Observation("traces")
+                traces.select("case_id", "trace_xml").observe(
+                    obs, F.count(F.lit(1)).alias("n")
+                ).write.mode("overwrite").parquet(dest)
+                n = int(obs.get["n"])
             else:
                 n = traces.count()
             if cfg.xes_document and write_sinks:
@@ -222,6 +248,4 @@ def run_pipeline(
                 )
             result.n_traces_by_root[rc] = n
             result.n_traces += n
-
-    events.unpersist()
     return result

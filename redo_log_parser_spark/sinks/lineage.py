@@ -1,22 +1,27 @@
-"""Per-partition lineage + metrics with idempotent resume (north rule).
+"""Per-bucket lineage + metrics with idempotent resume (north rule).
 
-The input documents table is split into `n_url_buckets` deterministic
-url-hash buckets. Each bucket is processed and written independently;
-on success a lineage row (bucket id, row counts, wall time, status) is
-appended. On restart, completed buckets are anti-joined away and only
-pending buckets re-run — writes are per-bucket directories, so a retry
-overwrites its own bucket only (idempotent).
+Only a bucket-local stage can be resumed bucket by bucket. In this
+pipeline that is parse alone: ROWID incarnations, schema discovery, FK
+inclusion and trace assembly need the whole log, so they run once over
+everything parse has written (`read_resumed`), never per bucket.
 
-This is the batch equivalent of checkpointing: no Structured Streaming
-state is required because the unit of recovery is a deterministic input
-partition, exactly as SURVEY.md §4.3 prescribes. At cluster scale the
-same code runs with Iceberg `overwritePartitions` instead of directory
-overwrite; the bucket column doubles as the Iceberg partition spec
-(bucket(url) — BASELINE.json north_star partitioning).
+`run_resumable` splits the input into deterministic url-hash buckets,
+runs a map-style transform over the pending ones in ONE write job
+partitioned by bucket, and appends a manifest entry per bucket. On
+restart, buckets with an `ok` entry are skipped and dynamic partition
+overwrite rewrites only the pending buckets, so a retry is idempotent.
+A caller marks its global stages written with one more entry in the
+same manifest, bucket `TAIL_BUCKET`.
+
+This is the batch equivalent of checkpointing: the unit of recovery is
+a deterministic input partition (SURVEY.md §4.3). At cluster scale the
+same code runs with Iceberg `overwritePartitions`; the bucket column
+doubles as the partition spec (bucket(url), BASELINE.json north_star).
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -24,87 +29,88 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "bucket int, status string, rows_in long, rows_clean long, "
-    "rows_reject long, wall_sec double, run_id string"
-)
-
-
-def with_bucket(df: DataFrame, n_buckets: int, key: str = "url") -> DataFrame:
-    """Deterministic url-hash bucket column (xxhash64 — stable across
-    Spark versions and cluster sizes)."""
-    return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+# bucket id of the entry that records the global stages as written
+TAIL_BUCKET = -1
 
 
 def _lineage_dir(out_dir: str) -> str:
     return f"{out_dir}/_lineage"
 
 
-def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    path = _lineage_dir(out_dir)
-    if not os.path.exists(path):
-        return set()
-    try:
-        df = spark.read.schema(LINEAGE_SCHEMA).json(path)
-        return {r["bucket"] for r in df.filter(F.col("status") == "ok").collect()}
-    except Exception:
-        return set()
+def _data_dir(out_dir: str) -> str:
+    return f"{out_dir}/data"
+
+
+def completed_buckets(out_dir: str) -> set[int]:
+    """Buckets with an `ok` manifest entry. The manifest is a few small
+    JSON files written by the driver, so it is read there: no Spark job."""
+    done = set()
+    for name in glob.glob(f"{_lineage_dir(out_dir)}/*.json"):
+        with open(name) as fh:
+            entry = json.load(fh)
+        if entry["status"] == "ok":
+            done.add(entry["bucket"])
+    return done
 
 
 def record_lineage(out_dir: str, entry: dict) -> None:
     """Append one lineage record (tiny; JSON lines on the driver — an
-    Iceberg `_lineage` table append in cluster deployments)."""
+    Iceberg `_lineage` table append in cluster deployments). Written to a
+    temporary name and renamed, so a crash never leaves half an entry."""
     path = _lineage_dir(out_dir)
     os.makedirs(path, exist_ok=True)
     fname = f"{path}/bucket_{entry['bucket']:05d}_{entry['run_id']}.json"
-    with open(fname, "w") as fh:
+    with open(fname + ".tmp", "w") as fh:
         fh.write(json.dumps(entry) + "\n")
+    os.replace(fname + ".tmp", fname)
 
 
-def run_resumable_batched(
+def read_resumed(spark: SparkSession, out_dir: str) -> DataFrame:
+    """All buckets `run_resumable` wrote under `out_dir`, as one frame
+    without the bucket column."""
+    return spark.read.parquet(_data_dir(out_dir)).drop("bucket")
+
+
+def run_resumable(
     docs: DataFrame,
     out_dir: str,
     transform,
     n_buckets: int = 16,
     run_id: str = "run0",
 ) -> list[dict]:
-    """Resume ALL pending buckets in ONE Spark write job (round-2 VERDICT
-    item 6: at 4,096 buckets a per-bucket driver loop of jobs pays 4,096
-    job-scheduling round trips; here the bucket id is a partition column
-    and dynamic partition overwrite gives the same per-bucket idempotence
-    in a single action).
+    """Resume ALL pending buckets in ONE Spark write job: the bucket id
+    (xxhash64 of url — stable across Spark versions and cluster sizes)
+    is a partition column, and dynamic partition overwrite gives
+    per-bucket idempotence in a single action, where a per-bucket driver
+    loop would pay one job round trip per bucket.
 
-    `transform(pending_df) -> DataFrame` is a pure frame transformation
-    applied to the union of all pending buckets at once; it must keep the
-    `bucket` column (the write partitions by it, so a retried bucket
-    overwrites exactly its own directory — identical recovery unit to
-    run_resumable). The lineage manifest is derived from ONE read-back
-    aggregate over the freshly written data (which also verifies the
-    files are readable): per-bucket rows_in, and — when the transform's
-    output carries a `parse_error` column — rows_clean/rows_reject split
-    by its nullity, so "which bucket was dirty" stays answerable at 4k
-    buckets (round-3 VERDICT #3: these used to be hardcoded 0 /
-    duplicated). Without a parse_error column rows_clean = rows_in and
-    rows_reject = 0, which is then literally true of the written data.
+    `transform(pending_df) -> DataFrame` is a pure, bucket-local frame
+    transformation applied to the union of all pending buckets at once;
+    it must keep the `bucket` column. A stage that needs the whole input
+    (a window, join or aggregate across urls) must not run in it: it
+    would see one slice of the data per job.
+
+    The manifest is derived from ONE read-back aggregate over the freshly
+    written data (which also verifies the files are readable): per-bucket
+    rows_in, and — when the output carries a `parse_error` column —
+    rows_clean/rows_reject split by its nullity (without one, rows_clean
+    = rows_in and rows_reject = 0, literally true of the written data).
     `wall_sec` is the whole single-job wall, recorded identically on
     every entry of the job (NOT divided) with `job_buckets` = how many
     buckets shared it — per-bucket timing does not exist in a
-    single-action write, and pretending otherwise hid the slow bucket.
-    Use run_resumable instead when each bucket genuinely needs
-    driver-side work (e.g. its own sink layout) or true per-bucket
-    walls; use this for the common map-style resume."""
+    single-action write."""
     spark = docs.sparkSession
-    done = completed_buckets(spark, out_dir)
+    done = completed_buckets(out_dir)
     pending = [b for b in range(n_buckets) if b not in done]
     if not pending:
         return []
     t0 = time.monotonic()
-    bucketed = with_bucket(docs, n_buckets)
-    pending_df = bucketed.filter(F.col("bucket").isin(pending))
-    out = transform(pending_df)
+    bucketed = docs.withColumn(
+        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    out = transform(bucketed.filter(F.col("bucket").isin(pending)))
     if "bucket" not in out.columns:
         raise ValueError("transform must preserve the 'bucket' column")
-    data_dir = f"{out_dir}/data"
+    data_dir = _data_dir(out_dir)
     (
         out.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
@@ -140,41 +146,4 @@ def run_resumable_batched(
         }
         record_lineage(out_dir, entry)
         results.append(entry)
-    return results
-
-
-def run_resumable(
-    docs: DataFrame,
-    out_dir: str,
-    process_bucket,
-    n_buckets: int = 16,
-    run_id: str = "run0",
-) -> list[dict]:
-    """Drive per-bucket processing with resume.
-
-    `process_bucket(bucket_df, bucket_out_dir) -> dict` does the real
-    work for one bucket and returns its metrics. Completed buckets are
-    skipped on re-run (the checkpoint-resume contract)."""
-    spark = docs.sparkSession
-    done = completed_buckets(spark, out_dir)
-    bucketed = with_bucket(docs, n_buckets).cache()
-    results = []
-    for b in range(n_buckets):
-        if b in done:
-            continue
-        t0 = time.monotonic()
-        bucket_df = bucketed.filter(F.col("bucket") == b).drop("bucket")
-        metrics = process_bucket(bucket_df, f"{out_dir}/bucket={b:05d}")
-        entry = {
-            "bucket": b,
-            "status": "ok",
-            "rows_in": int(metrics.get("rows_in", -1)),
-            "rows_clean": int(metrics.get("rows_clean", -1)),
-            "rows_reject": int(metrics.get("rows_reject", -1)),
-            "wall_sec": time.monotonic() - t0,
-            "run_id": run_id,
-        }
-        record_lineage(out_dir, entry)
-        results.append(entry)
-    bucketed.unpersist()
     return results

@@ -1,7 +1,13 @@
 """End-to-end: fan-out routing counts, lineage resume, logfile-source
-parity, enrichment, streaming variant."""
+parity, enrichment, streaming variant, the CLI's resumable default path."""
 
+import ast
+import contextlib
+import hashlib
+import importlib.util
+import io
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,7 +17,7 @@ from redo_log_parser_spark.config import PipelineConfig
 from redo_log_parser_spark.fixtures import enrichment_dims, mini_log_lines
 from redo_log_parser_spark.functions.parse import parse_documents
 from redo_log_parser_spark.pipeline import enrich, run_pipeline
-from redo_log_parser_spark.sinks.lineage import run_resumable, completed_buckets
+from redo_log_parser_spark.sinks.lineage import completed_buckets
 from redo_log_parser_spark.sources.logfile import read_log_files
 from redo_log_parser_spark.operators.rowid import uniquify_row_ids
 
@@ -42,30 +48,17 @@ def test_full_pipeline_counts_and_traces(spark, mini_docs, tmp_path):
     assert row["trace_xml"].startswith("<trace><event>")
 
 
+def _persistent_rdds(spark):
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 def test_unknown_root_class_rejected(spark, mini_docs, tmp_path):
     cfg = PipelineConfig(root_class="NOPE")
+    before = _persistent_rdds(spark)
     with pytest.raises(ValueError, match="root class"):
         run_pipeline(mini_docs, str(tmp_path / "o2"), cfg, write_sinks=False)
-
-
-def test_lineage_resume(spark, mini_docs, tmp_path):
-    out = str(tmp_path / "lineage_out")
-    calls = []
-
-    def process(bucket_df, bucket_out):
-        n = bucket_df.count()
-        calls.append(n)
-        return {"rows_in": n, "rows_clean": n, "rows_reject": 0}
-
-    r1 = run_resumable(mini_docs, out, process, n_buckets=4, run_id="r1")
-    assert len(r1) == 4
-    assert sum(e["rows_in"] for e in r1) == 433
-    assert completed_buckets(spark, out) == {0, 1, 2, 3}
-    # resume: nothing left to do, processor not called again
-    before = len(calls)
-    r2 = run_resumable(spark.createDataFrame(mini_docs.toPandas()), out, process,
-                       n_buckets=4, run_id="r2")
-    assert r2 == [] and len(calls) == before
+    # the raise comes after the events cache was filled; it is released
+    assert _persistent_rdds(spark) == before
 
 
 def test_logfile_source_matches_documents_mode(spark, tmp_path):
@@ -204,13 +197,13 @@ def test_safe_root_names_collision_proof():
 
 
 def test_lineage_batched_resume_single_action(spark, mini_docs, tmp_path):
-    """run_resumable_batched must process ALL pending buckets in one
+    """run_resumable must process ALL pending buckets in one
     write job (plus O(1) bookkeeping jobs), keep per-bucket idempotence,
-    and skip completed buckets exactly like the per-bucket loop."""
+    and skip completed buckets without calling the transform again."""
     from pyspark.sql import functions as F
 
     from redo_log_parser_spark.sinks.lineage import (
-        record_lineage, run_resumable_batched,
+        record_lineage, run_resumable,
     )
 
     out = str(tmp_path / "batched_out")
@@ -221,13 +214,16 @@ def test_lineage_batched_resume_single_action(spark, mini_docs, tmp_path):
             "rows_reject": 0, "wall_sec": 0.0, "run_id": "r0",
         })
 
+    calls = []
+
     def transform(df):
+        calls.append(df)
         return df.select("url", "bucket", F.length("text").alias("n_chars"))
 
     sc = spark.sparkContext
     sc.setJobGroup("batched-resume", "batched lineage resume")
     try:
-        r1 = run_resumable_batched(
+        r1 = run_resumable(
             mini_docs, out, transform, n_buckets=16, run_id="r1")
     finally:
         sc.setJobGroup(None, None)
@@ -236,14 +232,29 @@ def test_lineage_batched_resume_single_action(spark, mini_docs, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup("batched-resume")
     assert 1 <= len(jobs) <= 6, jobs
     assert sorted(e["bucket"] for e in r1) == [b for b in range(16) if b not in (0, 3)]
-    assert completed_buckets(spark, out) == set(range(16))
+    assert completed_buckets(out) == set(range(16))
     written = spark.read.parquet(f"{out}/data")
     n_written = written.count()
     assert n_written == sum(e["rows_in"] for e in r1) > 0
 
-    # fully resumed: nothing pending
-    assert run_resumable_batched(
-        mini_docs, out, transform, n_buckets=16, run_id="r2") == []
+    # fully resumed: nothing pending, the transform is not called again
+    # and no Spark job starts, also for an equal frame built anew
+    fresh = spark.createDataFrame(mini_docs.toPandas())
+    sc.setJobGroup("batched-rerun", "batched lineage rerun")
+    try:
+        assert run_resumable(
+            fresh, out, transform, n_buckets=16, run_id="r2") == []
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(calls) == 1
+    assert sc.statusTracker().getJobIdsForGroup("batched-rerun") == []
+
+    # a fresh output: every bucket runs, and the rows add up to the input
+    r4 = run_resumable(
+        mini_docs, str(tmp_path / "all4"), transform, n_buckets=4)
+    assert [e["bucket"] for e in r4] == [0, 1, 2, 3]
+    assert sum(e["rows_in"] for e in r4) == mini_docs.count() == 433
+    assert completed_buckets(str(tmp_path / "all4")) == {0, 1, 2, 3}
 
     # drop one bucket's lineage record -> exactly that bucket re-runs and
     # dynamic overwrite touches only its own partition (total unchanged)
@@ -251,14 +262,14 @@ def test_lineage_batched_resume_single_action(spark, mini_docs, tmp_path):
     victim = glob.glob(f"{out}/_lineage/bucket_00005_*.json")
     for f in victim:
         os.remove(f)
-    r3 = run_resumable_batched(
+    r3 = run_resumable(
         mini_docs, out, transform, n_buckets=16, run_id="r3")
     assert [e["bucket"] for e in r3] == [5]
     assert spark.read.parquet(f"{out}/data").count() == n_written
 
     # transform that loses the bucket column is rejected loudly
     with pytest.raises(ValueError, match="bucket"):
-        run_resumable_batched(
+        run_resumable(
             mini_docs, str(tmp_path / "other"),
             lambda df: df.select("url"), n_buckets=2)
 
@@ -269,7 +280,7 @@ def test_lineage_batched_manifest_honesty(spark, mini_docs, tmp_path):
     wall_sec = the one shared job wall (identical on every entry, with
     job_buckets recording how many shared it)."""
     from redo_log_parser_spark.functions.parse import parse_documents
-    from redo_log_parser_spark.sinks.lineage import run_resumable_batched
+    from redo_log_parser_spark.sinks.lineage import run_resumable
 
     out = str(tmp_path / "honest_out")
     # corrupt a deterministic slice so some buckets carry real rejects
@@ -284,7 +295,7 @@ def test_lineage_batched_manifest_honesty(spark, mini_docs, tmp_path):
             df, keep_cols=("url", "warc_ts", "lang", "bucket")
         ).select("url", "bucket", "op", "parse_error")
 
-    entries = run_resumable_batched(docs, out, transform, n_buckets=4)
+    entries = run_resumable(docs, out, transform, n_buckets=4)
     assert len(entries) == 4
     got = spark.read.parquet(f"{out}/data")
     by_bucket = {
@@ -329,21 +340,21 @@ def test_lineage_batched_crash_between_write_and_append(spark, mini_docs, tmp_pa
     L.record_lineage = dying_record
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            L.run_resumable_batched(
+            L.run_resumable(
                 mini_docs, out, transform, n_buckets=8, run_id="r1")
     finally:
         L.record_lineage = real_record
 
-    done = completed_buckets(spark, out)
+    done = completed_buckets(out)
     assert len(done) == 3                      # the appends that landed
     data_before = sorted(
         (r["url"], r["bucket"], r["n_chars"])
         for r in spark.read.parquet(f"{out}/data").collect())
 
-    r2 = L.run_resumable_batched(
+    r2 = L.run_resumable(
         mini_docs, out, transform, n_buckets=8, run_id="r2")
     assert sorted(e["bucket"] for e in r2) == sorted(set(range(8)) - done)
-    assert completed_buckets(spark, out) == set(range(8))
+    assert completed_buckets(out) == set(range(8))
     data_after = sorted(
         (r["url"], r["bucket"], r["n_chars"])
         for r in spark.read.parquet(f"{out}/data").collect())
@@ -364,3 +375,168 @@ def test_verbose_entry_dumps(spark, mini_docs, capsys):
     assert ("Transformed the following log entries and their row "
             "identifiers:") in out
     assert "only showing top 5 rows" in out
+
+
+# ---------------------------------------------------------------------------
+# The CLI's two paths: the default path checkpoints only parse per bucket
+# and runs the global stages once; --no-resume parses in memory.
+
+ROOT = '"SYSTEM"."ORDERS"'
+
+
+@pytest.fixture(scope="module")
+def cli_input(spark, mini_docs, tmp_path_factory):
+    """The mini-log as a documents parquet, plus three rows that parse
+    to rejects, so every sink has rows."""
+    bad = (
+        mini_docs.orderBy("url").limit(3)
+        .withColumn("url", F.concat("url", F.lit("#bad")))
+        .withColumn("text", F.lit("not a redo statement"))
+    )
+    path = str(tmp_path_factory.mktemp("cli") / "docs.parquet")
+    mini_docs.unionByName(bad).write.parquet(path)
+    return path
+
+
+@pytest.fixture(scope="module")
+def cli(spark):
+    """Call `jobs/run_pipeline.py`'s main() in this process, on the test
+    session; returns the dict it printed last. `cli.module` is the
+    loaded CLI module."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "jobs", "run_pipeline.py")
+    spec = importlib.util.spec_from_file_location("run_pipeline_cli", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    mod.get_spark = lambda *a, **k: spark
+
+    def run(*argv):
+        buf, saved = io.StringIO(), sys.argv
+        sys.argv = ["run_pipeline.py", *argv]
+        try:
+            with contextlib.redirect_stdout(buf):
+                assert mod.main() == 0
+        finally:
+            sys.argv = saved
+        return ast.literal_eval(buf.getvalue().strip().splitlines()[-1])
+
+    run.module = mod
+    return run
+
+
+def _cli_args(inp, out, *extra):
+    return ("--input", inp, "--output", out, "--root-class", ROOT,
+            "--xes-file", *extra)
+
+
+def _sink_digests(out: str) -> dict:
+    """Row count and DuckDB sum(hash(row)) per sink, sha256 of the .xes."""
+    import duckdb
+
+    con = duckdb.connect()
+    got = {}
+    for sink in ("events_by_op", "rejects", "traces_xes"):
+        got[sink] = con.execute(
+            "SELECT count(*), sum(hash(t)) FROM read_parquet("
+            f"'{out}/{sink}/**/*.parquet', hive_partitioning = true) t"
+        ).fetchone()
+    with open(f"{out}/SYSTEM_._ORDERS_result.xes", "rb") as fh:
+        got["xes"] = hashlib.sha256(fh.read()).hexdigest()
+    return got
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def single_pass(cli, cli_input, tmp_path_factory):
+    """(sink digests, printed summary) of one --no-resume run."""
+    out = str(tmp_path_factory.mktemp("single") / "out")
+    summary = cli(*_cli_args(cli_input, out, "--no-resume"))
+    assert summary["traces"] == 70
+    assert summary["routed"]["sink_rejects"] == 3
+    # --no-resume writes no checkpoint and no manifest
+    assert not os.path.exists(f"{out}/_lineage")
+    assert not os.path.exists(f"{out}/data")
+    return _sink_digests(out), summary
+
+
+@pytest.mark.parametrize("buckets", [1, 4, 16])
+def test_cli_default_path_matches_no_resume(
+        spark, cli, cli_input, single_pass, tmp_path, buckets):
+    """The default path and --no-resume write hash-identical sinks and
+    .xes: only parse runs per bucket, every global stage sees the whole
+    log."""
+    digests, summary = single_pass
+    out = str(tmp_path / f"resumed{buckets}")
+    got = cli(*_cli_args(cli_input, out, "--buckets", str(buckets)))
+    assert got == {**summary, "buckets_processed": buckets}
+    assert _sink_digests(out) == digests
+    # the parse checkpoint lives beside the sinks, not inside them
+    assert os.path.isdir(f"{out}/data/bucket=0")
+
+
+def test_cli_crash_after_parse_reruns_only_the_tail(
+        spark, cli, cli_input, single_pass, tmp_path, monkeypatch):
+    """A tail that raises after the parse checkpoint is written: the
+    rerun starts no parse job and ends with the single-pass sinks."""
+    from redo_log_parser_spark import pipeline
+
+    digests, summary = single_pass
+    out = str(tmp_path / "crashed")
+    args = _cli_args(cli_input, out, "--buckets", "4")
+    real_build = pipeline.build_traces_df
+    real_resumable = cli.module.run_resumable
+
+    def crash(*a, **k):
+        raise RuntimeError("injected tail crash")
+
+    monkeypatch.setattr(pipeline, "build_traces_df", crash)
+    before = _persistent_rdds(spark)
+    with pytest.raises(RuntimeError, match="injected tail crash"):
+        cli(*args)
+    assert _persistent_rdds(spark) == before
+    assert completed_buckets(out) == {0, 1, 2, 3}
+    monkeypatch.setattr(pipeline, "build_traces_df", real_build)
+
+    parse_jobs = []
+    parse_calls = []
+    real_parse = pipeline.parse_documents
+
+    def counted_parse(*a, **k):
+        parse_calls.append(1)
+        return real_parse(*a, **k)
+
+    def grouped_resumable(*a, **k):
+        out, n = _jobs_in_group(
+            spark, "cli-parse-rerun", lambda: real_resumable(*a, **k))
+        parse_jobs.append(n)
+        return out
+
+    monkeypatch.setattr(pipeline, "parse_documents", counted_parse)
+    monkeypatch.setattr(cli.module, "run_resumable", grouped_resumable)
+    got = cli(*args)
+    assert parse_jobs == [0] and parse_calls == []
+    assert got == {**summary, "buckets_processed": 0}
+    assert _sink_digests(out) == digests
+
+
+def test_cli_rerun_on_finished_output_starts_no_job(
+        spark, cli, cli_input, tmp_path):
+    """Once the completion entry is in the manifest, a rerun prints
+    buckets_processed: 0 and starts no Spark job at all."""
+    out = str(tmp_path / "finished")
+    args = _cli_args(cli_input, out, "--buckets", "4")
+    assert cli(*args)["buckets_processed"] == 4
+    summary, n_jobs = _jobs_in_group(spark, "cli-finished-rerun",
+                                     lambda: cli(*args))
+    assert summary == {"buckets_processed": 0}
+    assert n_jobs == 0
