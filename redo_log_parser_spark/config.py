@@ -1,13 +1,14 @@
 """Pipeline configuration.
 
 Mirrors the reference's CLI flags (cli/package.scala:14-20) plus the
-scale-oriented knobs the Spark engine needs (salting, shuffle sizing,
-checkpoint location).
+repo's semantic switches (IND mode, monotonicity, trace order, the
+multi-root list and the .xes document). Spark sizing comes from the
+session, not from here.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 # Reference default: cli/package.scala:20 ("dd-MMM-yyyy HH:mm:ss").
 DEFAULT_TS_FORMAT_JAVA = "dd-MMM-yyyy HH:mm:ss"
@@ -81,10 +82,6 @@ class PipelineConfig:
     # extractor never matches HashMap.values.toSeq sliding windows,
     # Column.scala:104-124; see operators/schema_discovery.monotonicity).
     reference_monotonicity: bool = False
-
-    # --- Spark-scale knobs (no reference equivalent) ---
-    # Salt buckets for skewed trace collection (hot case_ids / hot hosts).
-    n_salt: int = 16
 
     @property
     def all_root_classes(self) -> tuple[str, ...]:

@@ -551,7 +551,7 @@ SQL_ROOT_BUCKETS = """
 """
 
 
-# G4: salted trace collect with deterministic ordering
+# G4: trace collect with deterministic ordering
 def _assigned_events(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     return e.select(
@@ -565,7 +565,7 @@ def _assigned_events(spark, sf_dir):
 
 def q_trace_collect(spark, sf_dir):
     traces = collect_traces(
-        _assigned_events(spark, sf_dir), event_cols=("event_name",), n_salt=8
+        _assigned_events(spark, sf_dir), event_cols=("event_name",)
     )
     return traces.select(
         "case_id",
@@ -619,7 +619,7 @@ SQL_XES_EVENTS = """
 # P10: per-trace XES XML
 def q_xes_trace_xml(spark, sf_dir):
     traces = collect_traces(
-        _assigned_events(spark, sf_dir), event_cols=("event_name", "xes_ts"), n_salt=8
+        _assigned_events(spark, sf_dir), event_cols=("event_name", "xes_ts")
     )
     return trace_xml(traces).select("case_id", "trace_xml")
 

@@ -27,7 +27,7 @@ _NAMES = [
     "Amelia", "Mason", "Harper", "Logan", "Evelyn",
 ]
 _LANGS = ["en", "de", "fr", "es", "it"]
-_HOSTS = [  # deliberately skewed: hot host first (exercises salting)
+_HOSTS = [  # deliberately skewed: hot host first
     "logs-a.example", "logs-a.example", "logs-a.example", "logs-a.example",
     "logs-b.example", "logs-c.example", "mirror.example", "archive.example",
 ]

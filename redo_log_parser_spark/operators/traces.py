@@ -18,11 +18,12 @@ Spark design:
   * The table-graph walk (J2) iterates on the DRIVER over tables (3-8 in
     practice) issuing one DataFrame join per traversed edge — data-level
     work stays distributed, only the walk plan is driver-side.
-  * Trace collection (G4) is a salted two-phase collect_list: hot cases
-    (hub entities joined into thousands of traces) pre-aggregate on
-    (case_id, salt) before the final merge, so no single reducer takes
-    the whole hot key. Order inside a trace is always (ts, url) — never
-    collect_list arrival order (SURVEY.md §1.3 item 6).
+  * Entity edges do not depend on the root class, so a multi-root run
+    builds and caches them once and walks them for every root.
+  * Trace collection (G4) is one groupBy(case_id) collect_list: one
+    shuffle, with Spark's map-side partial aggregate on case_id. Order
+    inside a trace is always (ts, url) — never collect_list arrival
+    order (SURVEY.md §1.3 item 6).
 """
 
 from __future__ import annotations
@@ -66,19 +67,21 @@ def first_insert_values(events: DataFrame) -> DataFrame:
     )
 
 
-def entity_edges(events: DataFrame, schema: SchemaSummary, spark=None) -> DataFrame:
+def entity_edges(events: DataFrame, schema: SchemaSummary) -> DataFrame:
     """J1 — (left_table, left_row, right_table, right_row) entity pairs:
     for each FK→PK ColumnRelation, insert values of the FK column match
     insert values of the referenced PK column
     (RelationsExtractor.scala:111-181). Deduped (the reference keeps a
-    Seq; duplicates are semantically irrelevant downstream)."""
+    Seq; duplicates are semantically irrelevant downstream).
+
+    Cached (through `register`): propagate_cases reads the frame once
+    per traversed table edge, for every root it is passed to."""
+    sess = events.sparkSession
     pairs = schema.fk_pairs()
     if not pairs:
-        sess = spark or events.sparkSession
         return sess.createDataFrame(
             [], "left_table string, left_row string, right_table string, right_row string"
         )
-    sess = spark or events.sparkSession
     pairs_df = sess.createDataFrame(
         pairs, ["fk_table", "fk_col", "pk_table", "pk_col"]
     )
@@ -105,7 +108,7 @@ def entity_edges(events: DataFrame, schema: SchemaSummary, spark=None) -> DataFr
         & (F.col("pk_table") == F.col("right_table"))
         & (F.col("pk_col") == F.col("pk_col_r")),
     ).select("left_table", "left_row", "right_table", "right_row")
-    return edges.distinct()
+    return register(edges.distinct().cache())
 
 
 def root_cases(
@@ -158,7 +161,7 @@ def propagate_cases(
     same table may be reached via different branches).
 
     Driver-side recursion over the TABLE graph (small); per traversed
-    edge one distributed join. Edge frames per table pair are cached."""
+    edge one distributed join over `edges` (cached by entity_edges)."""
     # table-level adjacency from FK pairs (undirected;
     # RelationsExtractor.scala:15-53 relations are directionless after dedup)
     adj: dict[str, set[str]] = {}
@@ -166,7 +169,6 @@ def propagate_cases(
         adj.setdefault(ft, set()).add(pt)
         adj.setdefault(pt, set()).add(ft)
 
-    edges = register(edges.cache())
     # Reference case-clash semantics (probed, fuzz axis `caseclash`):
     # root-bucket GATHERING is equalsIgnoreCase (TraceIDParserHelper
     # .scala:23 — root_cases already matched both case variants, each
@@ -246,27 +248,22 @@ def collect_traces(
     assigned: DataFrame,
     event_cols: tuple[str, ...] = ("event_name", "xes_ts"),
     order_cols: tuple[str, ...] = ("ts", "url"),
-    n_salt: int = 16,
 ) -> DataFrame:
     """G4 — (case_id, events: array<struct>) with events in log order.
 
-    Salted two-phase aggregation: partial collect on (case_id, salt)
-    bounds any single reducer's input for hot cases; the final merge
-    flattens and sorts. sort_array on the (order..., payload) struct
-    makes ordering deterministic regardless of arrival order."""
+    One groupBy(case_id): Spark plans a map-side partial collect_list,
+    one shuffle on case_id and the final merge. sort_array on the
+    (order..., payload) struct makes ordering deterministic regardless
+    of arrival order."""
     ev = F.struct(
         *[F.col(c).alias(f"o{i}") for i, c in enumerate(order_cols)],
         *[F.col(c) for c in event_cols],
     )
-    salted = assigned.withColumn("__salt", F.pmod(F.xxhash64(*order_cols), F.lit(n_salt)))
-    partial = salted.groupBy("case_id", "__salt").agg(
-        F.collect_list(ev).alias("ev_part")
-    )
-    merged = partial.groupBy("case_id").agg(
-        F.sort_array(F.flatten(F.collect_list("ev_part"))).alias("events_raw")
+    traces = assigned.groupBy("case_id").agg(
+        F.sort_array(F.collect_list(ev)).alias("events_raw")
     )
     drop_keys = F.transform(
         F.col("events_raw"),
         lambda x: F.struct(*[x[c].alias(c) for c in event_cols]),
     )
-    return merged.select("case_id", drop_keys.alias("events"))
+    return traces.select("case_id", drop_keys.alias("events"))

@@ -8,7 +8,7 @@ Spark (SURVEY.md §3.1):
   3. enrich         broadcast dictionary joins (table names, lang names)
   4. route          fan-out sinks by op + rejects (single pass)
   5. discover       schema aggregates → driver summary (small)
-  6. traces         entity edges → case propagation → salted collect
+  6. traces         entity edges (once per run) → case propagation → collect
   7. serialize      per-trace XES XML strings → sink
 
 Only step 1 is bucket-local (the CLI checkpoints it per url-hash bucket,
@@ -131,16 +131,19 @@ class PipelineResult:
 
 def build_traces_df(
     events: DataFrame, schema: SchemaSummary, root_table: str,
-    include_update_values: bool = False, n_salt: int = 16,
+    include_update_values: bool = False, edges: DataFrame | None = None,
 ) -> DataFrame:
-    """Steps 6-7 as a reusable plan: (case_id, events, trace_xml)."""
-    edges = entity_edges(events, schema)
+    """Steps 6-7 as a reusable plan: (case_id, events, trace_xml).
+    `edges` is `entity_edges(events, schema)`, built here when omitted;
+    it does not depend on the root, so a multi-root run passes one."""
+    if edges is None:
+        edges = entity_edges(events, schema)
     roots = root_cases(events, root_table, tables=schema.tables)
     assignments = propagate_cases(edges, roots, schema, root_table)
     assigned = with_xes_columns(
         assign_entries(events, assignments), include_update_values
     )
-    traces = collect_traces(assigned, n_salt=n_salt)
+    traces = collect_traces(assigned)
     return trace_xml(traces)
 
 
@@ -193,8 +196,8 @@ def run_parsed(
         # Multi-root: the reference loops "pick a root → emit XES" over
         # the SAME parsed log and discovered schema until --singleRun
         # (Main.scala:131-162); here every requested root reuses the
-        # cached events and the one discovery pass — one trace sink per
-        # root.
+        # cached events, the one discovery pass and the one cached
+        # entity-edge frame — one trace sink per root.
         roots = cfg.all_root_classes
         for rc in roots:
             # Java equalsIgnoreCase, not lowercase equality — matches
@@ -208,10 +211,10 @@ def run_parsed(
                     f"{sorted(result.schema.tables)}"
                 )
         safe_names = _safe_root_names(roots)
+        edges = entity_edges(clean, result.schema)
         for rc in roots:
             traces = build_traces_df(
-                clean, result.schema, rc,
-                cfg.include_update_values, cfg.n_salt,
+                clean, result.schema, rc, cfg.include_update_values, edges,
             )
             dest = (
                 f"{out_dir}/traces_xes"

@@ -127,6 +127,6 @@ def test_schema_discovery_and_traces_caches_owned(spark, mini_docs):
     assert _n_persisted(spark) == base
 
     with operator_caches() as frames:
-        build_traces_df(events, schema, "INVOICES", False, 4).collect()
-        assert frames  # the propagation edge frame
+        build_traces_df(events, schema, "INVOICES").collect()
+        assert frames  # the entity-edge frame
     assert _n_persisted(spark) == base

@@ -106,20 +106,50 @@ def test_streaming_route(spark, mini_docs, tmp_path):
     assert got == {"insert": 161, "update": 220, "delete": 52}
 
 
-def test_multi_root_single_parse(spark, mini_docs, tmp_path):
+def _parquet_digest(path: str) -> tuple:
+    """DuckDB count(*) and sum(hash(row)) over a parquet dir."""
+    import duckdb
+
+    return duckdb.connect().execute(
+        f"SELECT count(*), sum(hash(t)) FROM read_parquet('{path}/*.parquet') t"
+    ).fetchone()
+
+
+def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch):
     """The reference's interactive loop (Main.scala:131-162) re-expressed:
-    several --root-class values share ONE parse + discovery pass and get
-    one XES sink each."""
+    several --root-class values share ONE parse + discovery pass and ONE
+    entity-edge frame, and get one XES sink each, equal to the sink of a
+    single-root run of that root."""
+    from redo_log_parser_spark import pipeline
+
+    calls = []
+    real_edges = pipeline.entity_edges
+
+    def counted_edges(*args, **kwargs):
+        calls.append(1)
+        return real_edges(*args, **kwargs)
+
     out = str(tmp_path / "multiroot")
-    cfg = PipelineConfig(root_classes=('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"'))
+    roots = {'"SYSTEM"."ORDERS"': "SYSTEM_._ORDERS",
+             '"SYSTEM"."USERS"': "SYSTEM_._USERS"}
+    cfg = PipelineConfig(root_classes=tuple(roots))
+    mini_docs.count()  # materialize the fixture's own session cache
+    before = _persistent_rdds(spark)
+    monkeypatch.setattr(pipeline, "entity_edges", counted_edges)
     res = run_pipeline(mini_docs, out, cfg)
-    assert set(res.n_traces_by_root) == {'"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"'}
+    assert len(calls) == 1
+    assert _persistent_rdds(spark) == before
+    assert set(res.n_traces_by_root) == set(roots)
     assert res.n_traces_by_root['"SYSTEM"."ORDERS"'] == 70
     assert res.n_traces == sum(res.n_traces_by_root.values())
-    for sub in ("SYSTEM_._ORDERS", "SYSTEM_._USERS"):
+    for rc, sub in roots.items():
         xes = spark.read.parquet(f"{out}/traces_xes/{sub}")
-        assert xes.count() > 0
         assert xes.first()["trace_xml"].startswith("<trace><event>")
+        single = str(tmp_path / f"single_{sub}")
+        run_pipeline(mini_docs, single, PipelineConfig(root_class=rc))
+        got = _parquet_digest(f"{out}/traces_xes/{sub}")
+        assert got[0] == res.n_traces_by_root[rc] > 0
+        assert got == _parquet_digest(f"{single}/traces_xes")
 
 
 def test_strict_flag_forwarded_to_discovery(spark, mini_docs, tmp_path):

@@ -1,5 +1,8 @@
-"""Skew hardening: the salted two-phase collect must survive a hot case
+"""Skew hardening: the one-shuffle trace collect must survive a hot case
 (one entity owning most events) and still produce correct ordering."""
+
+import re
+from collections import Counter
 
 import pandas as pd
 from datetime import datetime, timedelta
@@ -25,30 +28,35 @@ def hot_case(spark):
     return spark.createDataFrame(pdf).repartition(16)
 
 
-def test_salted_collect_handles_hot_case(hot_case):
+def test_collect_handles_hot_case(hot_case):
     traces = collect_traces(
         hot_case.withColumn("xes_ts", F.lit("t")),
         event_cols=("event_name",),
-        n_salt=16,
     )
     rows = {r["case_id"]: r["events"] for r in traces.collect()}
     assert len(rows) == 51
     hot = rows["HOT"]
     assert len(hot) == 50_000
-    # ordering survived the two-phase merge: strictly increasing ts order
+    # ordering survived the partial/final merge: strictly increasing ts order
     names = [e["event_name"] for e in hot]
     assert names == sorted(names)
     assert all(len(rows[f"c{c}"]) == 10 for c in range(50))
 
 
-def test_salt_actually_splits_partial_groups(hot_case):
-    """The partial aggregation must see >1 salt group for the hot case
-    (otherwise phase one is a no-op and one reducer takes the whole key)."""
-    salted = hot_case.withColumn(
-        "__salt", F.pmod(F.xxhash64("ts", "url"), F.lit(16))
+def _exchanges(df) -> list[str]:
+    """Partitionings of the Exchange nodes in df's physical plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"Exchange (\w+\([^)]*\))", plan)
+
+
+def test_collect_plans_one_shuffle(hot_case):
+    """collect_traces adds exactly one Exchange to its input's plan, a
+    hash partitioning on case_id (the partial collect_list runs map-side
+    before it)."""
+    traces = collect_traces(
+        hot_case.withColumn("xes_ts", F.lit("t")), event_cols=("event_name",)
     )
-    n_groups = (
-        salted.filter(F.col("case_id") == "HOT")
-        .select("__salt").distinct().count()
-    )
-    assert n_groups == 16
+    added = Counter(_exchanges(traces)) - Counter(_exchanges(hot_case))
+    added = list(added.elements())
+    assert len(added) == 1, added
+    assert re.match(r"hashpartitioning\(case_id#\d+, ", added[0]), added

@@ -151,7 +151,7 @@ def test_case_colliding_table_names(spark):
     schema = summarize_schema(cols_df, ind_df)
     assert '"SYSTEM"."T"' in schema.tables and '"SYSTEM"."t"' in schema.tables
 
-    traces = build_traces_df(events, schema, '"SYSTEM"."T"', False, 4)
+    traces = build_traces_df(events, schema, '"SYSTEM"."T"')
     got = {r["case_id"]: r["trace_xml"] for r in traces.collect()}
     # 2 exact-root cases + 1 case-sibling case
     assert set(got) == {"TAAAAX", "TAAABX", "LAAAAX"}
@@ -188,7 +188,7 @@ def test_ambiguous_case_insensitive_root_raises(spark):
     cols_df, ind_df = discover_schema(events)
     schema = summarize_schema(cols_df, ind_df)
     with pytest.raises(ValueError, match="case-insensitively"):
-        build_traces_df(events, schema, '"system"."t"', False, 4).collect()
+        build_traces_df(events, schema, '"system"."t"').collect()
 
 
 def test_root_cases_table_cardinality_guard(spark, monkeypatch):
