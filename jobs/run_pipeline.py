@@ -12,6 +12,10 @@ Cluster deployment (north rule):
     --input <catalog>.documents --output s3://.../out \\
     --root-class '"SYSTEM"."ORDERS"' --buckets 4096 --run-id r1
 
+The session defaults (redo_log_parser_spark/session.py) already turn on
+AQE and let it coalesce cached plans too; shuffle.partitions is then only
+the map-side split count, and any --conf given here overrides a default.
+
 Packaging: `python jobs/make_pyfiles.py` zips redo_log_parser_spark/
 into rlps.zip for --py-files AT DEPLOY TIME (the zip is gitignored —
 never committed, so it cannot go stale relative to the source tree).

@@ -1,9 +1,9 @@
 """SparkSession factory with the pipeline's scale-oriented defaults.
 
-AQE on (runtime re-plan, skew-join splitting, shuffle coalescing), Arrow
-on (the parse kernel is an Arrow-batched pandas UDF), UTC session time
-zone (XES timestamps are rendered with a fixed +00:00 offset,
-TraceIDParser.scala:131-139).
+AQE on (runtime re-plan, skew-join splitting, shuffle coalescing; the
+coalescing also sizes cached plans), Arrow on (the parse kernel is an
+Arrow-batched pandas UDF), UTC session time zone (XES timestamps are
+rendered with a fixed +00:00 offset, TraceIDParser.scala:131-139).
 """
 
 from __future__ import annotations
@@ -16,11 +16,16 @@ DEFAULT_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Spark 4.1 defaults this to false, which keeps a cached frame at the
+    # un-coalesced shuffle.partitions layout: every later scan of it runs
+    # that many near-empty tasks. No consumer keys on a cache's partitioning.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.sql.session.timeZone": "UTC",
-    # sized for local[32] test runs; cluster deploys override via
-    # spark-submit --conf (jobs/run_pipeline.py documents the knobs)
+    # the map-side split count: AQE coalesces every read of it, cached or
+    # not; cluster deploys override via spark-submit --conf
+    # (jobs/run_pipeline.py documents the knobs)
     "spark.sql.shuffle.partitions": "32",
     "spark.sql.files.maxPartitionBytes": "128m",
     # local mode = driver-only JVM; size it to the host (128 GiB box)

@@ -190,7 +190,10 @@ def test_logfile_orphan_line_becomes_reject(spark, tmp_path):
 def test_xes_document_per_root_and_console_schema(spark, mini_docs, tmp_path):
     """cfg.xes_document writes the reference-style <root>_result.xes per
     root (Main.scala:149-153); format_console renders Table/Column
-    toString lines."""
+    toString lines. The op sinks are written from the cached `events`
+    frame, so their file count per op shows that AQE coalesced that
+    cache instead of keeping one partition per shuffle partition."""
+    import glob
     import xml.etree.ElementTree as ET
 
     out = str(tmp_path / "xdoc")
@@ -210,6 +213,12 @@ def test_xes_document_per_root_and_console_schema(spark, mini_docs, tmp_path):
     assert 'USER_ID FK CANDIDATE FOR: "SYSTEM"."USERS".ID' in dump
     strict_dump = res.schema.format_console(strict=True)
     assert "(STRONG PRIMARY KEY)" in strict_dump or "(PRIMARY KEY)" not in strict_dump
+
+    op_dirs = glob.glob(f"{out}/events_by_op/op=*")
+    assert op_dirs
+    for d in op_dirs:
+        files = glob.glob(f"{d}/*.parquet")
+        assert 1 <= len(files) <= spark.sparkContext.defaultParallelism, d
 
 
 def test_safe_root_names_collision_proof():
