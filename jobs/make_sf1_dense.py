@@ -56,7 +56,9 @@ def main() -> None:
     t = pq.read_table(os.path.join(args.src, "documents.parquet"))
     docs = t.to_pylist()
     toks = [d["text"].split() for d in docs]
-    n_docs = len(docs)
+    # chunks come only from docs with tokens, so every draw below extends
+    # the mosaic; the same draws as sampling all docs when none is empty
+    pool = [tj for tj in toks if tj]
 
     rows = []
     for i, d in enumerate(docs):
@@ -65,22 +67,14 @@ def main() -> None:
             rng = random.Random(d["doc_id"] * 10 + r)
             target = len(toks[i])
             out: list[str] = []
-            while len(out) < target:
-                j = rng.randrange(n_docs)
-                tj = toks[j]
-                if not tj:
-                    continue
+            while pool and len(out) < target:
+                tj = pool[rng.randrange(len(pool))]
                 start = rng.randrange(max(1, len(tj) - CHUNK + 1))
                 out.extend(tj[start:start + CHUNK])
-            out = out[:target]
-            text = " ".join(out)
-            rows.append({
-                "doc_id": d["doc_id"] * 10 + r,
-                "text": text,
-                "lang": d["lang"],
-                "source": d["source"],
-                "n_chars": len(text),
-            })
+            text = " ".join(out[:target])
+            # every source column carries over; only these are rebuilt
+            rows.append({**d, "doc_id": d["doc_id"] * 10 + r,
+                         "text": text, "n_chars": len(text)})
 
     os.makedirs(args.out, exist_ok=True)
     schema = t.schema

@@ -18,7 +18,6 @@ Layout:
                dedup / similarity-search operators
   sources/     documents table reader, raw-logfile parity reader (S1-S2)
   sinks/       fan-out by op, XES sink, lineage/metrics + resume (S3-S4)
-  streaming/   Structured Streaming variant of parse→route
   pipeline.py  end-to-end batch pipeline
   oracle.py    pure-Python reference-semantics oracle (tests only)
   fixtures.py  deterministic mini-log generator (FIXTURES.md §1)

@@ -1312,7 +1312,7 @@ def q_dedup_components(spark, sf_dir):
     selection was the only pytest-only batch operator)."""
     d = _docs_wide(spark, sf_dir)
     pairs = DD.ngram_jaccard_pairs(d, n=3, threshold=0.5)
-    # comp is read twice below (the reps window join + the final join);
+    # comp is read twice below (the reps aggregation + the final join);
     # uncached each read re-runs the docs distinct + singleton attach
     comp = register(DD.dedup_components(d, pairs).cache())
     scored = d.select("doc_id", TXT.token_count(F.col("text")).alias("n_tok"))

@@ -78,7 +78,7 @@ def _del(table: str, row_id: str, attr: str, val: str) -> Stmt:
     )
 
 
-def mini_log_statements(id_offset: int = 0, rep: int = 0) -> list[Stmt]:
+def mini_log_statements() -> list[Stmt]:
     """The deterministic mini-log: 161 inserts / 220 updates / 52 deletes
     over SYSTEM.USERS / ORDERS / INVOICES with ROWID reuse.
 
@@ -90,26 +90,20 @@ def mini_log_statements(id_offset: int = 0, rep: int = 0) -> list[Stmt]:
     INVOICES.ORDER_ID → ORDERS.ID (invoices reference only surviving
     orders 32..56 so the final-state inclusion holds).
     """
-    off = id_offset
-    rid_pfx = f"{rep}" if rep else ""
-
-    def rid(prefix: str, i: int) -> str:
-        return _rowid(f"{rid_pfx}{prefix}", i)
-
     stmts: list[Stmt] = []
     for u in range(41):
         stmts.append(
-            _ins("USERS", rid("U", u), ["ID", "NAME"], [str(off + u), _NAMES[u % 20]])
+            _ins("USERS", _rowid("U", u), ["ID", "NAME"], [str(u), _NAMES[u % 20]])
         )
     # orders lifecycle: insert + 3 status updates each
     for o in range(60):
-        r = rid("O", o)
+        r = _rowid("O", o)
         stmts.append(
             _ins(
                 "ORDERS",
                 r,
                 ["ID", "USER_ID", "STATUS"],
-                [str(off + o), str(off + o % 41), "created"],
+                [str(o), str(o % 41), "created"],
             )
         )
         prev = "created"
@@ -118,15 +112,15 @@ def mini_log_statements(id_offset: int = 0, rep: int = 0) -> list[Stmt]:
             prev = st
     # delete orders 0..31
     for o in range(32):
-        stmts.append(_del("ORDERS", rid("O", o), "ID", str(off + o)))
+        stmts.append(_del("ORDERS", _rowid("O", o), "ID", str(o)))
     # re-insert orders 60..69 on the ROWIDs of deleted orders 0..9
     for i, o in enumerate(range(60, 70)):
         stmts.append(
             _ins(
                 "ORDERS",
-                rid("O", i),
+                _rowid("O", i),
                 ["ID", "USER_ID", "STATUS"],
-                [str(off + o), str(off + o % 41), "created"],
+                [str(o), str(o % 41), "created"],
             )
         )
     # invoices referencing surviving orders 32..56 (two invoices each)
@@ -134,15 +128,15 @@ def mini_log_statements(id_offset: int = 0, rep: int = 0) -> list[Stmt]:
         stmts.append(
             _ins(
                 "INVOICES",
-                rid("I", inv),
+                _rowid("I", inv),
                 ["ID", "ORDER_ID", "STATUS"],
-                [str(off + 1000 + inv), str(off + 32 + inv // 2), "created"],
+                [str(1000 + inv), str(32 + inv // 2), "created"],
             )
         )
     for inv in range(40):
-        stmts.append(_upd("INVOICES", rid("I", inv), "STATUS", "sent", "created"))
+        stmts.append(_upd("INVOICES", _rowid("I", inv), "STATUS", "sent", "created"))
     for inv in range(20):
-        stmts.append(_del("INVOICES", rid("I", inv), "ID", str(off + 1000 + inv)))
+        stmts.append(_del("INVOICES", _rowid("I", inv), "ID", str(1000 + inv)))
     return stmts
 
 
@@ -197,18 +191,6 @@ def mini_log_lines() -> list[str]:
         lines.extend(text.split("\n"))
         lines.append("   ")  # blank (whitespace-only) separator line
     return lines
-
-
-def scaled_log_documents(n_records: int, seed: int = 42) -> pd.DataFrame:
-    """Benchmark-scale generator: replicates the mini-log state machine
-    over `n_records` statements with distinct entity ids per replica so
-    schema ground truth is preserved at any scale."""
-    base_len = len(mini_log_statements())
-    reps = (n_records + base_len - 1) // base_len
-    stmts: list[Stmt] = []
-    for r in range(reps):
-        stmts.extend(mini_log_statements(id_offset=2000 * r, rep=r))
-    return statements_to_documents(stmts[:n_records], seed=seed)
 
 
 def enrichment_dims() -> tuple[pd.DataFrame, pd.DataFrame]:

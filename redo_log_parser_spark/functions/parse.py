@@ -30,7 +30,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
@@ -275,19 +275,3 @@ def parse_documents(
     cols = [c for c in keep_cols if c in df.columns]
     parsed = df.select(*cols, parse(F.col(text_col)).alias("p"))
     return parsed.select(*cols, "p.*")
-
-
-def clean_events(parsed: DataFrame) -> DataFrame:
-    """Split off rejects: rows the reference would crash on go to the
-    rejects sink; clean rows continue."""
-    return parsed.filter(F.col("parse_error").isNull())
-
-
-def reject_events(parsed: DataFrame) -> DataFrame:
-    return parsed.filter(F.col("parse_error").isNotNull())
-
-
-def with_seq(events: DataFrame, order_cols: tuple[str, ...] = ("ts", "url")) -> Column:
-    """Sort key struct used everywhere ordering matters (collect_list is
-    never trusted for order; SURVEY.md §1.3 item 6)."""
-    return F.struct(*[F.col(c) for c in order_cols])

@@ -41,21 +41,6 @@ def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     return keep.select(id_col, "fingerprint")
 
 
-def duplicate_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(fingerprint, n_dups, doc_ids) for groups with more than one doc."""
-    fp = docs.select(
-        F.col(id_col), doc_fingerprint(F.col(text_col)).alias("fingerprint")
-    )
-    return (
-        fp.groupBy("fingerprint")
-        .agg(
-            F.count("*").alias("n_dups"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n_dups") > 1)
-    )
-
-
 def with_shingle_set(
     docs: DataFrame, n: int = 3, text_col: str = "text",
     out_col: str = "shs",
@@ -224,17 +209,21 @@ def ngram_jaccard_pairs(
     #   =>  t*max(n_a, n_b) <= min(n_a, n_b)        (length filter)
     # so size-incompatible candidates are dropped INSIDE the join,
     # before the pair aggregation ever sees them (~24% of candidate
-    # events on the bench corpus at t=0.5). The 1e-9 slack guards the
-    # boundary against float rounding of t*max — it can only let a
-    # non-qualifying pair THROUGH to the exact final filter, never
-    # drop a qualifying one.
+    # events on the bench corpus at t=0.5). The slack guards the
+    # boundary against float rounding of t*max (e.g. 25*0.28 rounds to
+    # 7.000000000000001 for a pair at exactly 7/25). It is relative —
+    # rounding error grows with the operands, so an absolute epsilon
+    # stops covering it once n_sh reaches the millions — and can only
+    # let a non-qualifying pair THROUGH to the exact final filter,
+    # never drop a qualifying one.
     common = (
         a.join(b, "shingle")
         .filter(
             (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
             & (
                 F.greatest(F.col("a.n_sh"), F.col("b.n_sh")) * F.lit(t)
-                <= F.least(F.col("a.n_sh"), F.col("b.n_sh")) + F.lit(1e-9)
+                <= F.least(F.col("a.n_sh"), F.col("b.n_sh"))
+                + F.greatest(F.col("a.n_sh"), F.col("b.n_sh")) * F.lit(1e-12)
             )
         )
         .groupBy(
@@ -247,10 +236,14 @@ def ngram_jaccard_pairs(
     # Second exact-necessary prune between the size joins: c <= n_b
     # always, so c(1+t) >= t(n_a+n_b) requires c >= t*n_a. On the bench
     # corpus this collapses the second size join's input from ~10^8
-    # aggregated pairs (most share ONE shingle) to <10^6.
+    # aggregated pairs (most share ONE shingle) to <10^6. Same relative
+    # slack as the length filter (c <= n_a bounds the rounding error).
     return (
         common.join(sz_a, "id_a")
-        .filter(F.col("n_common") + F.lit(1e-9) >= F.col("n_a") * F.lit(t))
+        .filter(
+            F.col("n_common") + F.col("n_a") * F.lit(1e-12)
+            >= F.col("n_a") * F.lit(t)
+        )
         .join(sz_b, "id_b")
         .withColumn(
             "jaccard",
@@ -294,12 +287,10 @@ def with_minhash_sig(
     """Per-ROW MinHash signature — the aggregation-free twin of
     minhash_signatures (identical hash family xxhash64(seed k, shingle),
     identical signature for identical text; parity-pinned in
-    tests/test_text_dedup.py). No groupBy, so it composes with
-    Structured Streaming where an aggregation would be a stateful
-    operator, and lets the batch pair path skip the shingle
-    explode+distinct and per-doc agg shuffles entirely. Docs with fewer
-    than n tokens get an EMPTY signature (minhash_signatures likewise
-    emits no row for them). `keep_shingles` additionally emits the
+    tests/test_text_dedup.py). No groupBy, so the pair path skips the
+    shingle explode+distinct and per-doc agg shuffles entirely. Docs
+    with fewer than n tokens get an EMPTY signature (minhash_signatures
+    likewise emits no row for them). `keep_shingles` additionally emits the
     DISTINCT shingle set under that name (for exact-Jaccard verify).
 
     Shingle construction is with_shingle_set — ONE definition of the
@@ -327,34 +318,12 @@ def with_minhash_sig(
 def banded_keys(
     sigs: DataFrame, bands: int, sig_col: str = "sig",
     keep_cols: tuple[str, ...] = ("doc_id",),
-    sentinel_for: tuple[str, ...] | str | None = None,
-    manifest_col: str | None = None,
 ) -> DataFrame:
     """Explode a signature column into its LSH band keys:
     (*keep_cols, band, bucket) with bucket = xxhash64 of the
-    comma-joined band slice. Shared by the batch candidate join and the
-    streaming near-dedup so both sides band identically. Empty
-    signatures yield no rows (explode of an empty struct array — NOT
-    `bands` keys over an empty slice, which would make every empty doc
-    collide on xxhash64('')) — unless `sentinel_for` names one or more
-    columns, in which case an empty-sig row emits ONE pass-through key
-    (band -1, bucket = xxhash64 over those columns; the streaming path
-    hashes (id, event time) so the key is unique per ARRIVAL, never a
-    hidden exact-dedup-by-id). The sentinel rides the same explode so
-    the stream stays one scan — a filter(size(sig)==0) union branch
-    would re-evaluate the whole signature tree (predicate pushdown
-    substitutes aliases unconditionally, PLANS §10).
-
-    `manifest_col` (requires sentinel_for): EVERY row — not just
-    empty-sig ones — additionally emits its sentinel row, and that row
-    carries the doc's full real-band key array under `manifest_col`
-    (real band rows carry null there). This is the streaming near-dedup
-    contract: the manifest row's bucket is unique per arrival so it
-    always survives key-level dedup, making every doc VISIBLE
-    downstream with its complete key set even when all its real keys
-    are swallowed by earlier state (round-3 VERDICT #1 — the
-    same-trigger group-loss fix needs the full within-batch collision
-    graph).
+    comma-joined band slice. Empty signatures yield no rows (explode of
+    an empty struct array — NOT `bands` keys over an empty slice, which
+    would make every empty doc collide on xxhash64('')).
 
     Signatures must slice evenly into `bands`: callers that build the
     signature validate num_hashes % bands == 0 up front, and a
@@ -362,18 +331,6 @@ def banded_keys(
     direct callers (a truncated-to-zero rows_per_band would make EVERY
     band hash the empty slice and every doc collide with every doc)."""
     rows_per_band = (F.size(sig_col) / bands).cast("int")
-    if isinstance(sentinel_for, str):
-        sentinel_for = (sentinel_for,)
-    if manifest_col is not None and sentinel_for is None:
-        raise ValueError("manifest_col requires sentinel_for")
-    sentinel = (
-        F.struct(
-            F.lit(-1).alias("band"),
-            F.xxhash64(*[F.col(c) for c in sentinel_for]).alias("bucket"),
-        )
-        if sentinel_for is not None
-        else None
-    )
     # runtime banding guard: evaluated once per non-empty-sig row (a
     # cheap modulo) — assert_true returns NULL on success, so the
     # when(...isNull()) wrapper is an always-true gate that cannot be
@@ -409,33 +366,8 @@ def banded_keys(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<band:int,bucket:bigint>>"))
-    if manifest_col is not None:
-        # stage the real-band array ONCE as a named column, then explode
-        # real keys + the per-doc sentinel together; the manifest array
-        # rides the Generate and is kept only on the sentinel row
-        staged = sigs.withColumn("__bsx", band_structs)
-        return (
-            staged.select(
-                *keep_cols,
-                "__bsx",
-                F.explode(F.concat(F.col("__bsx"), F.array(sentinel))).alias("bb"),
-            )
-            .select(
-                *keep_cols,
-                "bb.band",
-                "bb.bucket",
-                F.when(F.col("bb.band") == -1, F.col("__bsx")).alias(manifest_col),
-            )
-        )
-    rows = (
-        band_structs
-        if sentinel is None
-        else F.when(F.size(sig_col) > 0, band_structs).otherwise(
-            F.array(sentinel)
-        )
-    )
     return (
-        sigs.select(*keep_cols, F.explode(rows).alias("bb"))
+        sigs.select(*keep_cols, F.explode(band_structs).alias("bb"))
         .select(*keep_cols, "bb.band", "bb.bucket")
     )
 
@@ -881,39 +813,33 @@ def select_representatives(
     the kept docs — anti-join the rest away or semi-join to filter.
 
     Shuffle shape (round 6, guide §2.3 "aggregate before you shuffle"):
-    when BOTH score and id are integral, the pick is a max_by
-    aggregation ordered by (score, ~id) — bitwise NOT is a total,
-    strictly decreasing bigint map (no MIN_VALUE negation overflow), so
-    max score wins with ties to the SMALLEST id, identical to the
-    window. A partial+final agg ships one candidate row per component
-    per map task; the window fallback (any orderable types) ships and
-    sorts every row. Singleton components pass through unchanged."""
+    the pick is a max_by aggregation ordered by (score, ~id) — bitwise
+    NOT is a total, strictly decreasing bigint map (no MIN_VALUE
+    negation overflow), so max score wins with ties to the SMALLEST id.
+    A partial+final agg ships one candidate row per component per map
+    task. The score may be any orderable type; the id must be integral
+    (the tie-break negates it bitwise), else TypeError. Singleton
+    components pass through unchanged."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     scored = docs.select(id_col, score_col).join(components, id_col)
-    integral = (ByteType, ShortType, IntegerType, LongType)
-    if isinstance(scored.schema[score_col].dataType, integral) and isinstance(
-        scored.schema[id_col].dataType, integral
-    ):
-        picked = scored.groupBy("component_id").agg(
-            F.max_by(
-                F.struct(F.col(id_col), F.col(score_col)),
-                F.struct(
-                    F.col(score_col),
-                    F.bitwise_not(F.col(id_col).cast("long")),
-                ),
-            ).alias("__best")
+    id_type = scored.schema[id_col].dataType
+    if not isinstance(id_type, (ByteType, ShortType, IntegerType, LongType)):
+        raise TypeError(
+            f"select_representatives: {id_col} must be integral, "
+            f"got {id_type.simpleString()}"
         )
-        return picked.select(
-            F.col(f"__best.{id_col}").alias(id_col),
-            "component_id",
-            F.col(f"__best.{score_col}").alias(score_col),
-        )
-    w = Window.partitionBy("component_id").orderBy(
-        F.col(score_col).desc(), F.col(id_col).asc()
+    picked = scored.groupBy("component_id").agg(
+        F.max_by(
+            F.struct(F.col(id_col), F.col(score_col)),
+            F.struct(
+                F.col(score_col),
+                F.bitwise_not(F.col(id_col).cast("long")),
+            ),
+        ).alias("__best")
     )
-    return (
-        scored.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .select(id_col, "component_id", score_col)
+    return picked.select(
+        F.col(f"__best.{id_col}").alias(id_col),
+        "component_id",
+        F.col(f"__best.{score_col}").alias(score_col),
     )

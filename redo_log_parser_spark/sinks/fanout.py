@@ -58,13 +58,3 @@ def write_fanout(
     rejects.write.mode(mode).format(file_format).save(f"{out_dir}/rejects")
     counts["sink_rejects"] = int(rej_obs.get["sink_rejects"])
     return counts
-
-
-def read_sink(spark, out_dir: str, op: str, file_format: str = "parquet") -> DataFrame:
-    """Read one routed sink back; partition pruning keeps the scan to the
-    single op directory."""
-    return (
-        spark.read.format(file_format)
-        .load(f"{out_dir}/events_by_op")
-        .filter(F.col("op") == op)
-    )

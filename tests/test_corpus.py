@@ -78,23 +78,30 @@ def test_select_representatives_best_quality_wins(spark):
     assert [(r["doc_id"], r["component_id"]) for r in kept] == [(7, 7)]
 
 
-def test_select_representatives_agg_path_matches_window(spark):
-    """Integral (score, id) takes the max_by-aggregation regime (round
-    6); float score takes the row_number window. Same graph through
-    both must pick identical representatives, including score ties →
-    smallest id and negative ids (the bitwise-NOT desc ordering)."""
+def test_select_representatives_integral_and_double_scores_agree(spark):
+    """One regime: a max_by aggregation ordered by (score, ~id). An
+    integral score and a double score on the same graph must pick
+    identical representatives, including score ties → smallest id and
+    negative ids (the bitwise-NOT desc ordering). The id must be
+    integral; a string id is rejected up front."""
     rows = [(-3, "a", 5), (-1, "b", 5), (2, "c", 4),   # tie at 5 → -3
             (10, "d", 7), (11, "e", 9),                # clear max → 11
             (20, "f", 0)]                              # singleton
     docs_int = _docs(spark, rows, cols=("doc_id", "text", "score"))
     comps = _docs(spark, [(-3, -3), (-1, -3), (2, -3), (10, 10), (11, 10),
                           (20, 20)], cols=("doc_id", "component_id"))
-    agg = {(r["component_id"], r["doc_id"], r["score"])
-           for r in D.select_representatives(docs_int, comps, "score").collect()}
+    by_int = {(r["component_id"], r["doc_id"], r["score"])
+              for r in D.select_representatives(
+                  docs_int, comps, "score").collect()}
     docs_f = docs_int.withColumn("score", F.col("score").cast("double"))
-    win = {(r["component_id"], r["doc_id"], int(r["score"]))
-           for r in D.select_representatives(docs_f, comps, "score").collect()}
-    assert agg == win == {(-3, -3, 5), (10, 11, 9), (20, 20, 0)}
+    by_double = {(r["component_id"], r["doc_id"], int(r["score"]))
+                 for r in D.select_representatives(
+                     docs_f, comps, "score").collect()}
+    assert by_int == by_double == {(-3, -3, 5), (10, 11, 9), (20, 20, 0)}
+    as_str = F.col("doc_id").cast("string")
+    with pytest.raises(TypeError, match="must be integral"):
+        D.select_representatives(docs_int.withColumn("doc_id", as_str),
+                                 comps.withColumn("doc_id", as_str), "score")
 
 
 def test_hash_sample_deterministic_and_content_keyed(spark):

@@ -1,5 +1,5 @@
 """End-to-end: fan-out routing counts, lineage resume, logfile-source
-parity, enrichment, streaming variant, the CLI's resumable default path."""
+parity, enrichment, the CLI's resumable default path."""
 
 import ast
 import contextlib
@@ -87,23 +87,6 @@ def test_reference_artifact_through_spark(spark):
     counts = {r["op"]: r["count"] for r in parsed.groupBy("op").count().collect()}
     assert counts == {"insert": 161, "update": 220, "delete": 52}
     assert parsed.filter(F.col("parse_error").isNotNull()).count() == 0
-
-
-def test_streaming_route(spark, mini_docs, tmp_path):
-    from redo_log_parser_spark.streaming.stream import (
-        parse_stream, stream_documents, streaming_route)
-
-    src = str(tmp_path / "stream_src")
-    mini_docs.write.mode("overwrite").parquet(src)
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-    stream = stream_documents(spark, src)
-    assert stream.isStreaming
-    q = streaming_route(parse_stream(stream), out, ckpt)
-    q.awaitTermination(120)
-    routed = spark.read.parquet(f"{out}/events_by_op")
-    got = {r["op"]: r["count"] for r in routed.groupBy("op").count().collect()}
-    assert got == {"insert": 161, "update": 220, "delete": 52}
 
 
 def _parquet_digest(path: str) -> tuple:

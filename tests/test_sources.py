@@ -154,3 +154,29 @@ def test_explode_log_records_wide_pad_keeps_order(spark):
         explode_log_records(docs).filter("url like 'v%'").collect()
     )
     assert [r["url"] for r in small] == ["v#0000"]
+
+
+def test_explode_log_records_packed_fuzz_matches_unpacked(spark):
+    """Packed multi-statement text cells (fuzz seed 31, 1-5 records per
+    cell with separator noise) exploded and parsed must give one row per
+    record, equal to the parse of the one-record-per-doc frame. Urls
+    differ by construction (the packed ones carry the '#kkkk' suffix),
+    but both sort in statement order, so rows are compared in url order."""
+    from fuzzgen import (fuzz_records, records_to_documents,
+                         records_to_packed_documents)
+    from redo_log_parser_spark.functions.parse import parse_documents
+    from redo_log_parser_spark.sources.logfile import explode_log_records
+
+    records, _ = fuzz_records(seed=31)
+    cols = ["op", "table_id", "row_id", "ts", "statement", "parse_error"]
+
+    def parsed_rows(docs):
+        return [tuple(r)[1:] for r in docs.select("url", *cols)
+                .orderBy("url").collect()]
+
+    packed = parsed_rows(parse_documents(explode_log_records(
+        spark.createDataFrame(records_to_packed_documents(records, seed=31)))))
+    single = parsed_rows(parse_documents(
+        spark.createDataFrame(records_to_documents(records))))
+    assert len(packed) == len(records)
+    assert packed == single

@@ -49,8 +49,6 @@ def test_exact_dedup(docs):
     ids = {r["doc_id"] for r in kept.collect()}
     # 0,1,5 collapse to 0; 2,3,4 unique
     assert ids == {0, 2, 3, 4}
-    groups = D.duplicate_groups(docs).collect()
-    assert len(groups) == 1 and groups[0]["doc_ids"] == [0, 1, 5]
 
 
 def _py_shingles(text, n=3):
@@ -58,25 +56,40 @@ def _py_shingles(text, n=3):
     return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
 
 
-def test_ngram_jaccard_matches_bruteforce(docs):
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in D.ngram_jaccard_pairs(docs, n=3, threshold=0.3).collect()
-    }
-    want = {}
-    for i, ta in DOCS:
-        for j, tb in DOCS:
-            if i >= j:
-                continue
-            sa, sb = _py_shingles(ta), _py_shingles(tb)
-            if not sa or not sb:
-                continue
-            jac = len(sa & sb) / len(sa | sb)
-            if jac >= 0.3:
-                want[(i, j)] = round(jac, 6)
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-6
+# a pair at Jaccard exactly 7/25: 25 shingles vs a 7-shingle subset.
+# In doubles 25 * 0.28 rounds UP past 7, so the exact length filters must
+# carry slack; the larger doc gets the smaller id so that both filters
+# (the join's max/min and the n_common >= n_a * t prune) see the boundary.
+ON_THRESHOLD = [
+    (10, " ".join(f"w{k}" for k in range(27))),
+    (11, " ".join(f"w{k}" for k in range(9))),
+]
+
+
+def test_ngram_jaccard_matches_bruteforce(spark):
+    for rows, threshold in ((DOCS, 0.3), (DOCS + ON_THRESHOLD, 0.28)):
+        frame = spark.createDataFrame(
+            pd.DataFrame(rows, columns=["doc_id", "text"]))
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in D.ngram_jaccard_pairs(
+                frame, n=3, threshold=threshold).collect()
+        }
+        want = {}
+        for i, ta in rows:
+            for j, tb in rows:
+                if i >= j:
+                    continue
+                sa, sb = _py_shingles(ta), _py_shingles(tb)
+                if not sa or not sb:
+                    continue
+                jac = len(sa & sb) / len(sa | sb)
+                if jac >= threshold:
+                    want[(i, j)] = round(jac, 6)
+        assert set(got) == set(want)
+        for k in want:
+            assert abs(got[k] - want[k]) < 1e-6
+    assert (10, 11) in want  # the on-threshold pair qualifies
 
 
 def test_minhash_lsh_finds_exact_and_near_dups(docs):
@@ -342,7 +355,7 @@ def test_shingles_short_and_empty_docs(spark):
 
 
 def test_row_minhash_sig_matches_aggregated(docs):
-    """with_minhash_sig (per-row, streaming-safe) must produce the exact
+    """with_minhash_sig (per-row, no aggregation) must produce the exact
     signature minhash_signatures aggregates — same hash family, same
     shingling; docs with fewer than n tokens get an empty sig where the
     aggregate emits no row."""

@@ -1,10 +1,8 @@
-"""XES document sink + strict mode end-to-end + stateful streaming
-incarnations."""
+"""XES document sink + strict mode end-to-end."""
 
 import xml.etree.ElementTree as ET
 
 import pytest
-from pyspark.sql import functions as F
 
 from redo_log_parser_spark.config import PipelineConfig
 from redo_log_parser_spark.functions.parse import parse_documents
@@ -51,34 +49,6 @@ def test_strict_mode_pipeline(spark, mini_docs):
     assert ('"SYSTEM"."USERS"', "ID") not in pks  # '10' < '9' string cliff
     assert ('"SYSTEM"."ORDERS"', "ID") not in pks
     assert not any(c == "NAME" or c == "STATUS" for _, c in pks)
-
-
-def test_streaming_stateful_incarnations(spark, mini_docs, tmp_path):
-    """applyInPandasWithState incarnations must equal the batch window
-    over the full mini-log when streamed with availableNow."""
-    from redo_log_parser_spark.streaming.stateful import streaming_incarnations
-    from redo_log_parser_spark.streaming.stream import parse_stream, stream_documents
-
-    src = str(tmp_path / "src")
-    mini_docs.write.mode("overwrite").parquet(src)
-
-    batch_events = uniquify_row_ids(parse_documents(mini_docs))
-    want = {r["url"]: r["row_id"] for r in batch_events.select("url", "row_id").collect()}
-
-    stream = parse_stream(stream_documents(spark, src))
-    out = streaming_incarnations(stream.filter(F.col("parse_error").isNull()))
-    sink = str(tmp_path / "sink")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {r["url"]: r["row_id"] for r in spark.read.parquet(sink).collect()}
-    assert got == want
 
 
 def test_pretty_xes_document_golden_bytes(spark, tmp_path):
