@@ -177,7 +177,7 @@ def check_seed(
             traces = build_traces_df(events, schema, root,
                                      include_update_values=upd)
             write_xes_document(trace_xml_pretty(traces), path, root,
-                               pretty=True, case_order=order)
+                               case_order=order)
             got = open(path, encoding="utf-8").read()
             if not (
                 got[:got.index("<trace>") - 2] == ref[:ref.index("<trace>") - 2]

@@ -54,10 +54,8 @@ class PipelineConfig:
     # Root class(es) for trace building (replaces the interactive loop at
     # cli/package.scala:73-86 and Main.scala:131-162 — the reference asks
     # for roots repeatedly until --singleRun); validated against the
-    # discovered schema. `root_class` is the single-root convenience;
-    # `root_classes` runs several roots over ONE parse+discovery pass,
+    # discovered schema. Several roots share ONE parse+discovery pass,
     # one trace sink per root.
-    root_class: str | None = None
     root_classes: tuple[str, ...] = ()
     # IND semantics: False = final-state inclusion (repo default), True =
     # the reference's eager/latched fold (SchemaDeriver.scala:69-93);
@@ -66,7 +64,8 @@ class PipelineConfig:
     eager_ind: bool = False
     # Also assemble one complete .xes document per root (the reference's
     # CLI output, '<out>/<root>_result.xes', PrettyPrinter layout) —
-    # driver-side streaming assembly; for reference-CLI-sized outputs.
+    # one collect of every trace block to the driver, bounded by
+    # spark.driver.maxResultSize; for reference-CLI-sized outputs.
     xes_document: bool = False
     # Order traces in the .xes document exactly like the reference
     # binary: Scala 2.12 groupBy(HashMap) iteration over its seeded
@@ -82,13 +81,6 @@ class PipelineConfig:
     # extractor never matches HashMap.values.toSeq sliding windows,
     # Column.scala:104-124; see operators/schema_discovery.monotonicity).
     reference_monotonicity: bool = False
-
-    @property
-    def all_root_classes(self) -> tuple[str, ...]:
-        """root_classes if given, else (root_class,) if given, else ()."""
-        if self.root_classes:
-            return self.root_classes
-        return (self.root_class,) if self.root_class is not None else ()
 
     @property
     def ts_format_strptime(self) -> str:

@@ -197,22 +197,6 @@ def py_xml_escape_attr(s: str) -> str:
     )
 
 
-XES_LOG_HEADER = (
-    '<log xes.version="2.0" xmlns="http://www.xes-standard.org/">'
-    '<extension name="Time" prefix="time" uri="http://www.xes-standard.org/time.xesext"/>'
-    '<extension name="Concept" prefix="concept" uri="http://www.xes-standard.org/concept.xesext"/>'
-)
-
-
-def xes_log_header(root_table: str) -> str:
-    """Log element header with concept:name = <root>_XES_Log
-    (TraceIDParser.scala:104-111). The root table id contains literal
-    quotes ('"SYSTEM"."ORDERS"') — escaped like scala.xml serializes
-    attribute text (&quot;)."""
-    name = py_xml_escape_attr(f"{root_table}_XES_Log")
-    return XES_LOG_HEADER + f'<string key="concept:name" value="{name}"/>'
-
-
 XES_PRETTY_HEADER_LINES = (
     "<?xml version='1.0' encoding='UTF-8'?>",  # XML.save xmlDecl quoting
     '<log xes.version="2.0" xmlns="http://www.xes-standard.org/">',
@@ -222,7 +206,11 @@ XES_PRETTY_HEADER_LINES = (
 
 
 def xes_pretty_header(root_table: str) -> str:
-    name = py_xml_escape_attr(f"{root_table}_XES_Log")
+    """Document head up to the first trace, concept:name =
+    <root>_XES_Log (TraceIDParser.scala:104-111). The root table id
+    contains literal quotes ('"SYSTEM"."ORDERS"'), escaped like
+    scala.xml serializes attribute text (&quot;)."""
+    name =py_xml_escape_attr(f"{root_table}_XES_Log")
     return "\n".join(
         XES_PRETTY_HEADER_LINES
         + (f'  <string key="concept:name" value="{name}"/>',)

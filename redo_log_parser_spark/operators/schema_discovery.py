@@ -190,17 +190,14 @@ def _sk_open_sentinel(writes: DataFrame):
     return F.struct(*lits)
 
 
-def pk_uniqueness(writes: DataFrame) -> DataFrame:
-    """A3 — sticky canBePrimaryKey via value-lifetime overlap.
-
-    Each write opens a validity interval for (table,col,row,value) that
-    closes at that row's next write/delete on the column (lead window).
-    A duplicate existed at some prefix ⇔ two intervals of the same
-    (table,col,value) from different rows overlap ⇔ ordering intervals
-    by start, some interval starts before the running max end of its
-    predecessors. Two windows, zero self-joins."""
+def _value_intervals(writes: DataFrame) -> DataFrame:
+    """(table_id, col, row_id, value, start_sk, end_sk) — validity
+    intervals of written values: a write opens at its sk, the same
+    row's next write/delete on the column closes (open intervals get
+    the max sentinel). Shared by pk_uniqueness and the eager IND
+    check."""
     w_row = Window.partitionBy("table_id", "col", "row_id").orderBy("sk")
-    iv = (
+    return (
         writes.withColumn("end_sk", F.lead("sk").over(w_row))
         .filter(F.col("kind") == "write")
         .select(
@@ -212,6 +209,18 @@ def pk_uniqueness(writes: DataFrame) -> DataFrame:
             F.coalesce(F.col("end_sk"), _sk_open_sentinel(writes)).alias("end_sk"),
         )
     )
+
+
+def pk_uniqueness(writes: DataFrame) -> DataFrame:
+    """A3 — sticky canBePrimaryKey via value-lifetime overlap.
+
+    Each write opens a validity interval for (table,col,row,value) that
+    closes at that row's next write/delete on the column (lead window).
+    A duplicate existed at some prefix ⇔ two intervals of the same
+    (table,col,value) from different rows overlap ⇔ ordering intervals
+    by start, some interval starts before the running max end of its
+    predecessors. Two windows, zero self-joins."""
+    iv = _value_intervals(writes)
     w_val = (
         Window.partitionBy("table_id", "col", "value")
         .orderBy("start_sk")
@@ -315,25 +324,6 @@ def inclusion_dependencies(curr: DataFrame, registry: DataFrame) -> DataFrame:
         .select("table_id", "col", "ref_table", "ref_col")
     )
     return ind.unionByName(empty_pairs)
-
-
-def _value_intervals(writes: DataFrame) -> DataFrame:
-    """(table_id, col, value, start_sk, end_sk) — validity intervals of
-    written values: a write opens at its sk, the same row's next
-    write/delete on the column closes (open intervals get the max
-    sentinel). Same construction as pk_uniqueness, minus row identity."""
-    w_row = Window.partitionBy("table_id", "col", "row_id").orderBy("sk")
-    return (
-        writes.withColumn("end_sk", F.lead("sk").over(w_row))
-        .filter(F.col("kind") == "write")
-        .select(
-            "table_id",
-            "col",
-            "value",
-            F.col("sk").alias("start_sk"),
-            F.coalesce(F.col("end_sk"), _sk_open_sentinel(writes)).alias("end_sk"),
-        )
-    )
 
 
 def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> DataFrame:

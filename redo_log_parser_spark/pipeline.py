@@ -138,7 +138,7 @@ def build_traces_df(
     it does not depend on the root, so a multi-root run passes one."""
     if edges is None:
         edges = entity_edges(events, schema)
-    roots = root_cases(events, root_table, tables=schema.tables)
+    roots = root_cases(events, root_table, schema.tables)
     assignments = propagate_cases(edges, roots, schema, root_table)
     assigned = with_xes_columns(
         assign_entries(events, assignments), include_update_values
@@ -153,13 +153,11 @@ def run_pipeline(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     table_dict: DataFrame | None = None,
     lang_map: DataFrame | None = None,
-    write_sinks: bool = True,
     parser: str = "pandas",
 ) -> PipelineResult:
     """Full run over a documents frame: `parse`, then `run_parsed`."""
     return run_parsed(
         parse(docs, cfg, parser), out_dir, cfg, table_dict, lang_map,
-        write_sinks,
     )
 
 
@@ -169,11 +167,10 @@ def run_parsed(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     table_dict: DataFrame | None = None,
     lang_map: DataFrame | None = None,
-    write_sinks: bool = True,
 ) -> PipelineResult:
-    """Steps 2-7 over the whole parsed log. Root class comes from cfg
+    """Steps 2-7 over the whole parsed log. Root classes come from cfg
     (replacing the reference's interactive prompt, cli/package.scala:73-86);
-    when None, trace assembly is skipped (schema-only run)."""
+    when there are none, trace assembly is skipped (schema-only run)."""
     result = PipelineResult(out_dir=out_dir)
     # every frame cached here or by the operators is released on exit,
     # also when a stage raises
@@ -181,8 +178,7 @@ def run_parsed(
         events = register(uniquify_row_ids(parsed).cache())
         enriched = enrich(events, table_dict, lang_map)
 
-        if write_sinks:
-            result.routed_counts = write_fanout(enriched, out_dir)
+        result.routed_counts = write_fanout(enriched, out_dir)
 
         clean = enriched.filter(F.col("parse_error").isNull())
         cols_df, ind_df = discover_schema(
@@ -198,7 +194,7 @@ def run_parsed(
         # (Main.scala:131-162); here every requested root reuses the
         # cached events, the one discovery pass and the one cached
         # entity-edge frame — one trace sink per root.
-        roots = cfg.all_root_classes
+        roots = cfg.root_classes
         for rc in roots:
             # Java equalsIgnoreCase, not lowercase equality — matches
             # the trace layer's table matching (javaspace)
@@ -221,16 +217,13 @@ def run_parsed(
                 if len(roots) == 1
                 else f"{out_dir}/traces_xes/{safe_names[rc]}"
             )
-            if write_sinks:
-                # counted on the write pass, not by re-reading the sink
-                obs = Observation("traces")
-                traces.select("case_id", "trace_xml").observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                ).write.mode("overwrite").parquet(dest)
-                n = int(obs.get["n"])
-            else:
-                n = traces.count()
-            if cfg.xes_document and write_sinks:
+            # counted on the write pass, not by re-reading the sink
+            obs = Observation("traces")
+            traces.select("case_id", "trace_xml").observe(
+                obs, F.count(F.lit(1)).alias("n")
+            ).write.mode("overwrite").parquet(dest)
+            n = int(obs.get["n"])
+            if cfg.xes_document:
                 # one complete reference-style .xes per root
                 # (Main.scala:149-153 writes <path>_<root>_result.xes)
                 from .functions.xes import trace_xml_pretty
@@ -246,8 +239,7 @@ def run_parsed(
                     else None
                 )
                 write_xes_document(
-                    trace_xml_pretty(traces), doc_path, rc, pretty=True,
-                    case_order=order,
+                    trace_xml_pretty(traces), doc_path, rc, case_order=order,
                 )
             result.n_traces_by_root[rc] = n
             result.n_traces += n

@@ -1,108 +1,84 @@
 """XES sink (S3 — TraceIDParser.serializeLogToDisk, :153-160).
 
-Two modes:
-  * write_traces: per-trace XML strings to a parquet/text sink —
-    the scale path (10^9 traces never become one XML document).
-  * write_xes_document: assemble ONE complete .xes file (header +
-    traces + footer) like the reference CLI does — for tooling
-    compatibility on small outputs. Trace order defaults to a
-    deterministic case_id sort; pass case_order=reference_trace_order(
-    events, root) for the reference binary's exact document order
-    (whole-file byte equality). Content per trace has log order.
+write_xes_document assembles ONE complete .xes file (header + traces +
+footer) like the reference CLI does, in the reference's layout: it
+pretty-prints with scala.xml.PrettyPrinter(200, 2) and re-saves with
+XML.save (TraceIDParser.scala:153-160), i.e. 2-space steps, every event
+broken over four lines, and XML.save's single-quoted xml declaration.
+The trace blocks come from functions.xes.trace_xml_pretty; the layout
+is pinned byte-wise by golden tests against real reference output.
 
-The reference pretty-prints with scala.xml.PrettyPrinter(200, 2) and
-re-saves with XML.save (TraceIDParser.scala:153-160). pretty=True
-replicates that layout (2-space steps, events one-per-line under 200
-cols, XML.save's single-quoted xml declaration) so small outputs diff
-clean against a reference-produced .xes; the layout is pinned byte-wise
-by a golden test. (The reference repo ships no .xes artifact, so the
-pin is against the modeled PrettyPrinter semantics, documented in
-functions/xes.py.) Default mode stays canonical single-line elements
-(whitespace-insensitive XML equality, asserted canonically in tests).
+Trace order defaults to a sort of the case ids; pass
+case_order=reference_trace_order(events, root) for the reference
+binary's exact document order (whole-file byte equality). Content per
+trace has log order.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.javaspace import java_equals_ignore_case
-from ..functions.xes import xes_log_header, xes_pretty_header
-
-
-def write_traces(traces_xml: DataFrame, out_dir: str, fmt: str = "parquet") -> None:
-    (traces_xml.select("case_id", "trace_xml").write.mode("overwrite").format(fmt).save(out_dir))
+from ..functions.xes import xes_pretty_header
 
 
 def write_xes_document(
-    traces_xml: DataFrame, path: str, root_table: str, pretty: bool = False,
+    traces_xml: DataFrame, path: str, root_table: str,
     case_order: list[str] | None = None,
 ) -> int:
-    """Write one complete XES 2.0 XML document. Returns trace count.
-
-    pretty=False: canonical single-line elements. pretty=True: the
-    reference's PrettyPrinter(200,2) layout — pass a frame produced by
+    """Write one complete XES 2.0 document in the reference's
+    PrettyPrinter(200,2) layout. `traces_xml` is a frame produced by
     functions.xes.trace_xml_pretty (its trace_xml blocks carry the
-    indentation).
+    indentation). Returns the trace count.
 
-    case_order (optional): explicit document-level trace order as a
-    list of case ids — pass reference_trace_order(...) to reproduce the
-    reference binary's Scala-HashMap trace order byte-for-byte (the
-    default is a deterministic case_id sort). Driver-side reorder —
-    pair it only with reference-CLI-sized outputs.
+    ONE Spark job: (case_id, trace_xml) is collected once and ordered
+    on the driver, by `case_order` when given, else by sorted case id.
+    Python sorts strings by code point, which is the UTF-8 byte order
+    Spark sorts by. The driver holds every pretty block at once, so
+    the collect is bounded by spark.driver.maxResultSize: this sink is
+    for reference-CLI-sized outputs, the parquet `traces_xes` sink is
+    the scale path.
 
-    Deliberately a driver-side assembly (toLocalIterator — streams
-    partitions, never materializes all traces at once); intended for
-    reference-CLI-sized outputs, not the 10^12-row path."""
-    n = 0
-    with open(path, "w", encoding="utf-8", newline="") as fh:
-        if pretty:
-            fh.write(xes_pretty_header(root_table) + "\n")
-        else:
-            fh.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-            fh.write(xes_log_header(root_table))
-        if case_order is not None:
-            collected = traces_xml.select("case_id", "trace_xml").collect()
-            by_case = {r["case_id"]: r["trace_xml"] for r in collected}
-            # both directions are replica-divergence signals, not
-            # conditions to paper over: a duplicate case_id would
-            # silently collapse into one dict entry (undercounting n),
-            # and a stale/extra id in the replayed order would silently
-            # skip — raise instead so a build_traces_df or trace-order
-            # regression is flagged at the sink
-            if len(by_case) != len(collected):
-                from collections import Counter
-                dups = [c for c, k in Counter(
-                    r["case_id"] for r in collected).items() if k > 1]
-                raise ValueError(
-                    f"traces_xml carries duplicate case ids, e.g. "
-                    f"{sorted(dups)[:3]} — one trace per case expected"
-                )
-            missing = set(by_case) - set(case_order)
-            extra = set(case_order) - set(by_case)
-            if missing or extra:
-                raise ValueError(
-                    f"case_order disagrees with the data: "
-                    f"{len(missing)} case ids absent from the order "
-                    f"(e.g. {sorted(missing)[:3]}), {len(extra)} order "
-                    f"entries absent from the data (e.g. {sorted(extra)[:3]})"
-                )
-            rows = ({"trace_xml": by_case[c]} for c in case_order)
-        else:
-            rows = (
-                traces_xml.select("case_id", "trace_xml")
-                .orderBy("case_id")
-                .toLocalIterator()
+    case_order is an explicit document-level trace order as a list of
+    case ids: pass reference_trace_order(...) to reproduce the
+    reference binary's Scala-HashMap trace order byte-for-byte.
+
+    Raises ValueError on a null or duplicate case id, and when
+    case_order names a different set of cases than the data."""
+    collected = traces_xml.select("case_id", "trace_xml").collect()
+    by_case = {r["case_id"]: r["trace_xml"] for r in collected}
+    # replica-divergence signals, not conditions to paper over: a
+    # duplicate case_id would silently collapse into one dict entry,
+    # and a stale/extra id in the replayed order would silently skip
+    if None in by_case:
+        raise ValueError("traces_xml carries a null case id")
+    if len(by_case) != len(collected):
+        from collections import Counter
+        dups = [c for c, k in Counter(
+            r["case_id"] for r in collected).items() if k > 1]
+        raise ValueError(
+            f"traces_xml carries duplicate case ids, e.g. "
+            f"{sorted(dups)[:3]} — one trace per case expected"
+        )
+    if case_order is None:
+        case_order = sorted(by_case)
+    else:
+        missing = set(by_case) - set(case_order)
+        extra = set(case_order) - set(by_case)
+        if missing or extra:
+            raise ValueError(
+                f"case_order disagrees with the data: "
+                f"{len(missing)} case ids absent from the order "
+                f"(e.g. {sorted(missing)[:3]}), {len(extra)} order "
+                f"entries absent from the data (e.g. {sorted(extra)[:3]})"
             )
-        for row in rows:
-            fh.write(row["trace_xml"])
-            if pretty:
-                fh.write("\n")
-            n += 1
+    with open(path, "w", encoding="utf-8", newline="") as fh:
+        fh.write(xes_pretty_header(root_table) + "\n")
+        for c in case_order:
+            fh.write(by_case[c] + "\n")
         fh.write("</log>")
-    return n
+    return len(case_order)
 
 
 def reference_trace_order(

@@ -35,3 +35,28 @@ def mini_docs_pdf():
 @pytest.fixture(scope="session")
 def mini_docs(spark, mini_docs_pdf):
     return spark.createDataFrame(mini_docs_pdf).cache()
+
+
+@pytest.fixture(scope="session")
+def persisted_rdd_ids(spark):
+    """() -> ids of the currently persisted RDDs. Leak checks compare id
+    sets, not counts: the ContextCleaner may reclaim an earlier test's
+    cache mid-test, which lowers a count but never adds an id."""
+    jsc = spark.sparkContext._jsc
+    return lambda: set(jsc.getPersistentRDDs().keySet())
+
+
+@pytest.fixture(scope="session")
+def jobs_in_group(spark):
+    """(group, fn) -> (fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(None, None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

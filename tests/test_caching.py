@@ -4,7 +4,7 @@ Operators that cache() per-call frames (`ngram_jaccard_pairs`,
 `minhash_dedup_pairs`, `simhash_near_dups`, `embedding_near_dup_pairs`)
 register them with caching.operator_caches(); a caller that
 materializes inside the block gets every frame unpersisted on exit, so
-the session's persisted-RDD count returns to its baseline.
+no persisted RDD outlives the block.
 """
 
 import random
@@ -22,10 +22,6 @@ from redo_log_parser_spark.operators.dedup import (
 from redo_log_parser_spark.operators.similarity import (
     embedding_near_dup_pairs,
 )
-
-
-def _n_persisted(spark) -> int:
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 @pytest.fixture()
@@ -48,7 +44,7 @@ def emb(spark):
     return spark.createDataFrame(rows, "vec_id int, embedding array<float>")
 
 
-def test_each_operator_returns_cache_count_to_baseline(spark, docs, emb):
+def test_each_operator_returns_cache_count_to_baseline(docs, emb, persisted_rdd_ids):
     fps = simhash(docs)
     runs = [
         lambda: ngram_jaccard_pairs(docs, threshold=0.1).collect(),
@@ -57,23 +53,23 @@ def test_each_operator_returns_cache_count_to_baseline(spark, docs, emb):
         lambda: simhash_near_dups(fps, max_hamming=10).collect(),
         lambda: embedding_near_dup_pairs(emb, threshold=0.0).collect(),
     ]
-    base = _n_persisted(spark)
+    base = persisted_rdd_ids()
     for run in runs:
         with operator_caches() as frames:
             run()
             assert frames, "operator registered no cached frame"
-        assert _n_persisted(spark) == base
+        assert persisted_rdd_ids() <= base
 
 
-def test_without_context_historical_leak_then_clear(spark, docs):
-    base = _n_persisted(spark)
+def test_without_context_historical_leak_then_clear(spark, docs, persisted_rdd_ids):
+    base = persisted_rdd_ids()
     ngram_jaccard_pairs(docs, threshold=0.1).collect()
-    assert _n_persisted(spark) > base  # documented historical behavior
+    assert persisted_rdd_ids() - base  # documented historical behavior
     spark.catalog.clearCache()
 
 
-def test_nested_contexts_own_only_their_own_frames(spark, docs):
-    base = _n_persisted(spark)
+def test_nested_contexts_own_only_their_own_frames(docs, persisted_rdd_ids):
+    base = persisted_rdd_ids()
     with operator_caches() as outer:
         ngram_jaccard_pairs(docs, threshold=0.1).collect()
         with operator_caches() as inner:
@@ -82,7 +78,7 @@ def test_nested_contexts_own_only_their_own_frames(spark, docs):
             not f.storageLevel.useMemory for f in inner
         ), "inner frames should be unpersisted at inner exit"
         assert any(f.storageLevel.useMemory for f in outer)
-    assert _n_persisted(spark) == base
+    assert persisted_rdd_ids() <= base
 
 
 def test_result_still_correct_after_unpersist(spark, docs):
@@ -101,7 +97,7 @@ def test_result_still_correct_after_unpersist(spark, docs):
     assert inside == again
 
 
-def test_schema_discovery_and_traces_caches_owned(spark, mini_docs):
+def test_schema_discovery_and_traces_caches_owned(mini_docs, persisted_rdd_ids):
     """review r5s5: the ownership mechanism must cover ALL library
     per-call cache() sites with lazy results, not just the dedup/ANN
     four — discover_schema's writes frame, inclusion_dependencies'
@@ -116,7 +112,7 @@ def test_schema_discovery_and_traces_caches_owned(spark, mini_docs):
         F.col("parse_error").isNull()
     )
     mini_docs.count()  # materialize the fixture's own session cache
-    base = _n_persisted(spark)
+    base = persisted_rdd_ids()
 
     with operator_caches() as frames:
         cols_df, ind_df = discover_schema(events)
@@ -124,9 +120,9 @@ def test_schema_discovery_and_traces_caches_owned(spark, mini_docs):
         ind_df.collect()
         schema = summarize_schema(cols_df, ind_df)
         assert len(frames) >= 2  # writes + IND deduped values
-    assert _n_persisted(spark) == base
+    assert persisted_rdd_ids() <= base
 
     with operator_caches() as frames:
         build_traces_df(events, schema, "INVOICES").collect()
         assert frames  # the entity-edge frame
-    assert _n_persisted(spark) == base
+    assert persisted_rdd_ids() <= base

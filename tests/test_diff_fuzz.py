@@ -98,7 +98,7 @@ def _our_xes(events, schema, root, path, include_update_values):
     traces = build_traces_df(
         events, schema, root, include_update_values=include_update_values)
     write_xes_document(
-        trace_xml_pretty(traces), path, root, pretty=True,
+        trace_xml_pretty(traces), path, root,
         case_order=reference_trace_order(events, root))
     return open(path, encoding="utf-8").read()
 

@@ -25,7 +25,7 @@ from redo_log_parser_spark.operators.rowid import uniquify_row_ids
 def test_full_pipeline_counts_and_traces(spark, mini_docs, tmp_path):
     out = str(tmp_path / "out")
     td, lm = enrichment_dims()
-    cfg = PipelineConfig(root_class='"SYSTEM"."ORDERS"')
+    cfg = PipelineConfig(root_classes=('"SYSTEM"."ORDERS"',))
     res = run_pipeline(
         mini_docs, out, cfg,
         table_dict=spark.createDataFrame(td),
@@ -48,17 +48,13 @@ def test_full_pipeline_counts_and_traces(spark, mini_docs, tmp_path):
     assert row["trace_xml"].startswith("<trace><event>")
 
 
-def _persistent_rdds(spark):
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-def test_unknown_root_class_rejected(spark, mini_docs, tmp_path):
-    cfg = PipelineConfig(root_class="NOPE")
-    before = _persistent_rdds(spark)
+def test_unknown_root_class_rejected(mini_docs, tmp_path, persisted_rdd_ids):
+    cfg = PipelineConfig(root_classes=("NOPE",))
+    before = persisted_rdd_ids()
     with pytest.raises(ValueError, match="root class"):
-        run_pipeline(mini_docs, str(tmp_path / "o2"), cfg, write_sinks=False)
+        run_pipeline(mini_docs, str(tmp_path / "o2"), cfg)
     # the raise comes after the events cache was filled; it is released
-    assert _persistent_rdds(spark) == before
+    assert persisted_rdd_ids() <= before
 
 
 def test_logfile_source_matches_documents_mode(spark, tmp_path):
@@ -98,7 +94,8 @@ def _parquet_digest(path: str) -> tuple:
     ).fetchone()
 
 
-def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch):
+def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch,
+                                 persisted_rdd_ids):
     """The reference's interactive loop (Main.scala:131-162) re-expressed:
     several --root-class values share ONE parse + discovery pass and ONE
     entity-edge frame, and get one XES sink each, equal to the sink of a
@@ -117,11 +114,11 @@ def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch):
              '"SYSTEM"."USERS"': "SYSTEM_._USERS"}
     cfg = PipelineConfig(root_classes=tuple(roots))
     mini_docs.count()  # materialize the fixture's own session cache
-    before = _persistent_rdds(spark)
+    before = persisted_rdd_ids()
     monkeypatch.setattr(pipeline, "entity_edges", counted_edges)
     res = run_pipeline(mini_docs, out, cfg)
     assert len(calls) == 1
-    assert _persistent_rdds(spark) == before
+    assert persisted_rdd_ids() <= before
     assert set(res.n_traces_by_root) == set(roots)
     assert res.n_traces_by_root['"SYSTEM"."ORDERS"'] == 70
     assert res.n_traces == sum(res.n_traces_by_root.values())
@@ -129,7 +126,7 @@ def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch):
         xes = spark.read.parquet(f"{out}/traces_xes/{sub}")
         assert xes.first()["trace_xml"].startswith("<trace><event>")
         single = str(tmp_path / f"single_{sub}")
-        run_pipeline(mini_docs, single, PipelineConfig(root_class=rc))
+        run_pipeline(mini_docs, single, PipelineConfig(root_classes=(rc,)))
         got = _parquet_digest(f"{out}/traces_xes/{sub}")
         assert got[0] == res.n_traces_by_root[rc] > 0
         assert got == _parquet_digest(f"{single}/traces_xes")
@@ -140,11 +137,10 @@ def test_strict_flag_forwarded_to_discovery(spark, mini_docs, tmp_path):
     strict runs mark is_pk only for increasing, PK-named, duplicate-free
     columns — a strictly smaller (or equal, here: smaller) set."""
     lenient = run_pipeline(
-        mini_docs, str(tmp_path / "s0"), PipelineConfig(), write_sinks=False
+        mini_docs, str(tmp_path / "s0"), PipelineConfig()
     ).schema.pk_candidates()
     strict = run_pipeline(
-        mini_docs, str(tmp_path / "s1"),
-        PipelineConfig(strict_primary_keys=True), write_sinks=False,
+        mini_docs, str(tmp_path / "s1"), PipelineConfig(strict_primary_keys=True)
     ).schema.pk_candidates()
     assert strict <= lenient
     assert strict != lenient, "strict must actually constrain the PK set"
@@ -180,7 +176,7 @@ def test_xes_document_per_root_and_console_schema(spark, mini_docs, tmp_path):
     import xml.etree.ElementTree as ET
 
     out = str(tmp_path / "xdoc")
-    cfg = PipelineConfig(root_class='"SYSTEM"."ORDERS"', xes_document=True)
+    cfg = PipelineConfig(root_classes=('"SYSTEM"."ORDERS"',), xes_document=True)
     res = run_pipeline(mini_docs, out, cfg)
     doc = f"{out}/SYSTEM_._ORDERS_result.xes"
     root = ET.parse(doc).getroot()
@@ -468,16 +464,6 @@ def _sink_digests(out: str) -> dict:
     return got
 
 
-def _jobs_in_group(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setJobGroup(None, None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 @pytest.fixture(scope="module")
 def single_pass(cli, cli_input, tmp_path_factory):
     """(sink digests, printed summary) of one --no-resume run."""
@@ -507,7 +493,8 @@ def test_cli_default_path_matches_no_resume(
 
 
 def test_cli_crash_after_parse_reruns_only_the_tail(
-        spark, cli, cli_input, single_pass, tmp_path, monkeypatch):
+        cli, cli_input, single_pass, tmp_path, monkeypatch,
+        persisted_rdd_ids, jobs_in_group):
     """A tail that raises after the parse checkpoint is written: the
     rerun starts no parse job and ends with the single-pass sinks."""
     from redo_log_parser_spark import pipeline
@@ -522,10 +509,10 @@ def test_cli_crash_after_parse_reruns_only_the_tail(
         raise RuntimeError("injected tail crash")
 
     monkeypatch.setattr(pipeline, "build_traces_df", crash)
-    before = _persistent_rdds(spark)
+    before = persisted_rdd_ids()
     with pytest.raises(RuntimeError, match="injected tail crash"):
         cli(*args)
-    assert _persistent_rdds(spark) == before
+    assert persisted_rdd_ids() <= before
     assert completed_buckets(out) == {0, 1, 2, 3}
     monkeypatch.setattr(pipeline, "build_traces_df", real_build)
 
@@ -538,8 +525,8 @@ def test_cli_crash_after_parse_reruns_only_the_tail(
         return real_parse(*a, **k)
 
     def grouped_resumable(*a, **k):
-        out, n = _jobs_in_group(
-            spark, "cli-parse-rerun", lambda: real_resumable(*a, **k))
+        out, n = jobs_in_group(
+            "cli-parse-rerun", lambda: real_resumable(*a, **k))
         parse_jobs.append(n)
         return out
 
@@ -552,13 +539,12 @@ def test_cli_crash_after_parse_reruns_only_the_tail(
 
 
 def test_cli_rerun_on_finished_output_starts_no_job(
-        spark, cli, cli_input, tmp_path):
+        cli, cli_input, tmp_path, jobs_in_group):
     """Once the completion entry is in the manifest, a rerun prints
     buckets_processed: 0 and starts no Spark job at all."""
     out = str(tmp_path / "finished")
     args = _cli_args(cli_input, out, "--buckets", "4")
     assert cli(*args)["buckets_processed"] == 4
-    summary, n_jobs = _jobs_in_group(spark, "cli-finished-rerun",
-                                     lambda: cli(*args))
+    summary, n_jobs = jobs_in_group("cli-finished-rerun", lambda: cli(*args))
     assert summary == {"buckets_processed": 0}
     assert n_jobs == 0

@@ -116,7 +116,7 @@ def test_utf16_threshold_xes_bytes(spark, tmp_path, ref_cp):
                                  include_update_values=True)
         out = tmp_path / "ours.xes"
         write_xes_document(
-            trace_xml_pretty(traces), str(out), ROOT, pretty=True,
+            trace_xml_pretty(traces), str(out), ROOT,
             case_order=reference_trace_order(events, ROOT))
         got = out.read_text(encoding="utf-8")
         assert got == ref_xes

@@ -4,9 +4,9 @@ import xml.etree.ElementTree as ET
 
 import pytest
 
-from redo_log_parser_spark.config import PipelineConfig
+from redo_log_parser_spark.caching import operator_caches
 from redo_log_parser_spark.functions.parse import parse_documents
-from redo_log_parser_spark.functions.xes import with_xes_columns
+from redo_log_parser_spark.functions.xes import trace_xml_pretty
 from redo_log_parser_spark.operators.rowid import uniquify_row_ids
 from redo_log_parser_spark.operators.schema_discovery import (
     discover_schema, summarize_schema)
@@ -14,13 +14,25 @@ from redo_log_parser_spark.pipeline import build_traces_df
 from redo_log_parser_spark.sinks.xes import write_xes_document
 
 
-def test_xes_document_is_valid_xml(spark, mini_docs, tmp_path):
-    events = uniquify_row_ids(parse_documents(mini_docs)).cache()
-    cols_df, ind_df = discover_schema(events)
-    schema = summarize_schema(cols_df, ind_df)
-    traces = build_traces_df(events, schema, '"SYSTEM"."ORDERS"')
+@pytest.fixture(scope="module")
+def mini_pretty(spark, mini_docs):
+    """Cached, counted trace_xml_pretty frame of the mini-log's ORDERS
+    traces."""
+    with operator_caches():
+        events = uniquify_row_ids(parse_documents(mini_docs)).cache()
+        cols_df, ind_df = discover_schema(events)
+        schema = summarize_schema(cols_df, ind_df)
+        traces = build_traces_df(events, schema, '"SYSTEM"."ORDERS"')
+        pretty = trace_xml_pretty(traces).cache()
+        pretty.count()
+    yield pretty
+    pretty.unpersist()
+    events.unpersist()
+
+
+def test_xes_document_is_valid_xml(mini_pretty, tmp_path):
     path = str(tmp_path / "out.xes")
-    n = write_xes_document(traces, path, "ORDERS")
+    n = write_xes_document(mini_pretty, path, "ORDERS")
     assert n == 70
     root = ET.parse(path).getroot()
     assert root.tag.endswith("log")
@@ -31,6 +43,40 @@ def test_xes_document_is_valid_xml(spark, mini_docs, tmp_path):
     ev = tr.findall(f"{ns}event")[0]
     keys = {c.get("key") for c in ev}
     assert keys == {"concept:name", "time:timestamp"}
+
+
+def test_xes_document_is_one_job(mini_pretty, tmp_path, jobs_in_group):
+    """Over a cached frame the document costs ONE Spark job, in the
+    default sorted order and in an explicit case_order alike: the
+    blocks are collected once and ordered on the driver."""
+    ids = sorted(r["case_id"] for r in mini_pretty.select("case_id").collect())
+    docs = {}
+    for label, order in (("sorted", None), ("explicit", ids[::-1])):
+        path = str(tmp_path / f"{label}.xes")
+        n, n_jobs = jobs_in_group(
+            f"xes-{label}",
+            lambda: write_xes_document(mini_pretty, path, "ORDERS",
+                                       case_order=order))
+        assert (n, n_jobs) == (70, 1), label
+        docs[label] = [ET.tostring(t).strip() for t in ET.parse(path).getroot()
+                       if t.tag.endswith("trace")]
+    assert docs["sorted"] == docs["explicit"][::-1]
+
+
+def test_xes_document_rejects_duplicate_case_ids(spark, tmp_path):
+    """A repeated case_id is a trace-assembly defect in either order:
+    the default sorted order raises like an explicit case_order does,
+    instead of writing the case twice."""
+    dup = spark.createDataFrame(
+        [("c1", "  <trace>\n  </trace>"), ("c1", "  <trace>\n  </trace>"),
+         ("c2", "  <trace>\n  </trace>")],
+        "case_id string, trace_xml string",
+    )
+    path = str(tmp_path / "dup.xes")
+    with pytest.raises(ValueError, match="duplicate case ids"):
+        write_xes_document(dup, path, "ORDERS")
+    with pytest.raises(ValueError, match="duplicate case ids"):
+        write_xes_document(dup, path, "ORDERS", case_order=["c1", "c2"])
 
 
 def test_strict_mode_pipeline(spark, mini_docs):
@@ -52,7 +98,7 @@ def test_strict_mode_pipeline(spark, mini_docs):
 
 
 def test_pretty_xes_document_golden_bytes(spark, tmp_path):
-    """pretty=True must reproduce the scala.xml PrettyPrinter(200,2) +
+    """The document must reproduce the scala.xml PrettyPrinter(200,2) +
     XML.save layout byte-for-byte (VERIFIED against real reference runs
     in round 3 — tests/fixtures/README.md): single-quoted xml decl,
     2-space steps, EVERY event broken to four lines (PrettyPrinter never
@@ -62,8 +108,6 @@ def test_pretty_xes_document_golden_bytes(spark, tmp_path):
     open tag gets its own line and </string> lands at column 0
     (threshold regimes probed against the binary — see
     trace_xml_pretty)."""
-    from redo_log_parser_spark.functions.xes import trace_xml_pretty
-
     long_name = "Update X value of \"S\".\"T\" entity to " + "y" * 160
     collapsy = "Update X value of \"S\".\"T\" entity to two  spaces"
     rows = [
@@ -81,9 +125,7 @@ def test_pretty_xes_document_golden_bytes(spark, tmp_path):
         "case_id string, events array<struct<event_name string, xes_ts string>>",
     )
     path = str(tmp_path / "pretty.xes")
-    n = write_xes_document(
-        trace_xml_pretty(traces), path, '"S"."T"', pretty=True
-    )
+    n = write_xes_document(trace_xml_pretty(traces), path, '"S"."T"')
     assert n == 1
     esc_long = long_name.replace('"', "&quot;")  # raw: 216 chars -> regime 3
     esc_collapsed = collapsy.replace('"', "&quot;").replace("  ", " ")
@@ -149,18 +191,17 @@ def test_xes_bytes_match_real_reference_output(spark, tmp_path, root,
     ref = open(
         os.path.join(os.path.dirname(__file__), "fixtures", fixture)
     ).read()
-    from redo_log_parser_spark.functions.xes import trace_xml_pretty
     pretty = trace_xml_pretty(traces).cache()
 
     # byte-faithful mode: plain whole-file equality
     path = str(tmp_path / "got_ref_order.xes")
     order = reference_trace_order(events, root)
-    write_xes_document(pretty, path, root, pretty=True, case_order=order)
+    write_xes_document(pretty, path, root, case_order=order)
     assert open(path).read() == ref
 
     # default mode: trace blocks as a multiset, header/footer byte-equal
     path = str(tmp_path / "got.xes")
-    write_xes_document(pretty, path, root, pretty=True)
+    write_xes_document(pretty, path, root)
     got = open(path).read()
     blocks = lambda s: re.findall(r"[ ]*<trace>.*?</trace>", s, re.S)  # noqa: E731
     tg, tr = blocks(got), blocks(ref)
