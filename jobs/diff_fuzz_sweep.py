@@ -174,7 +174,7 @@ def check_seed(
         for tag, upd, ref in (("xes", False, ref_xes),
                               ("xes_updvals", True, ref_xes_upd)):
             path = os.path.join(d, f"o_{tag}.xes")
-            traces = build_traces_df(events, schema, root,
+            traces = build_traces_df(events, schema, [root],
                                      include_update_values=upd)
             write_xes_document(trace_xml_pretty(traces), path, root,
                                case_order=order)

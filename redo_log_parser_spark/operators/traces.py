@@ -11,24 +11,31 @@ multiple traces (TraceIDParserHelper.scala:43-59).
 Spark design:
   * Entity edges (J1): the reference's O(n·m) nested loop
     (RelationsExtractor.scala:96-144) becomes one equi-join of
-    first-insert attribute values on (value, pk_table, pk_col), with the
-    tiny FK-pair list broadcast.
+    first-insert attribute values on (value, pk_table, pk_col); the tiny
+    FK-pair list travels as a literal expression, not as a frame.
   * Case ids are the root entities' row ids — stable, already unique,
     and requiring no global sort at 10^12 rows.
-  * The table-graph walk (J2) iterates on the DRIVER over tables (3-8 in
-    practice) issuing one DataFrame join per traversed edge — data-level
-    work stays distributed, only the walk plan is driver-side.
-  * Entity edges do not depend on the root class, so a multi-root run
-    builds and caches them once and walks them for every root.
-  * Trace collection (G4) is one groupBy(case_id) collect_list: one
-    shuffle, with Spark's map-side partial aggregate on case_id. Order
-    inside a trace is always (ts, url) — never collect_list arrival
-    order (SURVEY.md §1.3 item 6).
+  * The table-graph walk (J2) is planned on the DRIVER: every requested
+    root's path tree over the tables (3-8 in practice) is enumerated
+    and numbered into one small literal hop map. The data-level walk is
+    level-synchronous and shared by all roots: one frontier frame
+    advances one tree level per join, so a run costs as many joins as
+    its deepest path tree, not one per tree edge per root.
+  * Entity edges do not depend on the root class: they are built and
+    cached once per run, and every level of the shared walk reads them.
+  * Every assignment carries its root, so entry assignment (J3) and
+    trace collection (G4) run once for all roots. G4 is one
+    groupBy(root, case_id) collect_list: one shuffle, with Spark's
+    map-side partial aggregate. Order inside a trace is always
+    (ts, url) — never collect_list arrival order (SURVEY.md §1.3
+    item 6).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import itertools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import register
@@ -69,27 +76,27 @@ def entity_edges(events: DataFrame, schema: SchemaSummary) -> DataFrame:
     (RelationsExtractor.scala:111-181). Deduped (the reference keeps a
     Seq; duplicates are semantically irrelevant downstream).
 
-    Cached (through `register`): propagate_cases reads the frame once
-    per traversed table edge, for every root it is passed to."""
-    sess = events.sparkSession
-    pairs = schema.fk_pairs()
-    if not pairs:
-        return sess.createDataFrame(
-            [], "left_table string, left_row string, right_table string, right_row string"
-        )
-    pairs_df = sess.createDataFrame(
-        pairs, ["fk_table", "fk_col", "pk_table", "pk_col"]
-    )
+    Cached (through `register`): propagate_cases reads the frame twice
+    (once per direction) at every level of its walk.
+
+    The FK pair list is tiny: a literal when-chain maps each FK column to
+    its referenced PK columns, so no driver-built frame (and no job to
+    ship one) is needed; with no FK pairs the result is simply empty."""
+    targets: dict[tuple[str, str], list[Column]] = {}
+    for ft, fc, pt, pc in schema.fk_pairs():
+        targets.setdefault((ft, fc), []).append(F.struct(
+            F.lit(pt).alias("pk_table"), F.lit(pc).alias("pk_col")))
+    pk_of = F.lit(None).cast("array<struct<pk_table:string,pk_col:string>>")
+    for (ft, fc), pks in targets.items():
+        pk_of = F.when(
+            (F.col("table_id") == ft) & (F.col("col") == fc), F.array(*pks)
+        ).otherwise(pk_of)
     fi = first_insert_values(events)
-    left = fi.join(
-        F.broadcast(pairs_df),
-        (fi["table_id"] == pairs_df["fk_table"]) & (fi["col"] == pairs_df["fk_col"]),
-    ).select(
+    left = fi.select(
         F.col("table_id").alias("left_table"),
         F.col("row_id").alias("left_row"),
-        "pk_table",
-        "pk_col",
         "value",
+        F.inline(pk_of),
     )
     right = fi.select(
         F.col("table_id").alias("right_table"),
@@ -107,23 +114,34 @@ def entity_edges(events: DataFrame, schema: SchemaSummary) -> DataFrame:
 
 
 def root_cases(
-    events: DataFrame, root_table: str, tables: list[str]
+    events: DataFrame, roots: list[str], tables: list[str]
 ) -> DataFrame:
-    """G3 — one case per root-table entity (equalsIgnoreCase table
-    match, TraceIDParserHelper.scala:22-23). case_id = entity row id.
+    """G3 — one case per root-table entity, for every requested root:
+    (root, table_id, row_id, case_id), case_id = entity row id
+    (equalsIgnoreCase table match, TraceIDParserHelper.scala:22-23).
 
     The match is JAVA equalsIgnoreCase, not lowercase equality —
     'İX'~'ix' and 'ΣA'~'ςa' are Java-equal but lower()-unequal
     (javaspace.java_equals_ignore_case, probed). The name set is tiny,
-    so matching happens driver-side over `tables` (schema.tables) and
-    the row filter is a plain isin — cheaper at scale than a per-row
-    lower() too."""
-    matched = [t for t in tables if java_equals_ignore_case(t, root_table)]
+    so matching happens driver-side over `tables` (schema.tables): the
+    row filter is a plain isin, and a literal when-chain tags each root
+    row with every root that matched its table."""
+    roots_of = {t: [r for r in roots if java_equals_ignore_case(t, r)]
+                for t in tables}
+    roots_of = {t: rs for t, rs in roots_of.items() if rs}
+    tagged = F.lit(None).cast("array<string>")
+    for t, rs in roots_of.items():
+        tagged = F.when(F.col("table_id") == t, F.array(*map(F.lit, rs))).otherwise(tagged)
     return (
-        events.filter(F.col("table_id").isin(matched))
-        .select(F.col("table_id"), F.col("row_id"))
+        events.filter(F.col("table_id").isin(list(roots_of)))
+        .select("table_id", "row_id")
         .distinct()
-        .withColumn("case_id", F.col("row_id"))
+        .select(
+            F.explode(tagged).alias("root"),
+            "table_id",
+            "row_id",
+            F.col("row_id").alias("case_id"),
+        )
     )
 
 
@@ -131,15 +149,19 @@ def propagate_cases(
     edges: DataFrame,
     roots: DataFrame,
     schema: SchemaSummary,
-    root_table: str,
+    root_tables: list[str],
 ) -> DataFrame:
     """J2 — propagate case ids along the entity-edge graph with the
     reference's path-restricted table walk (TraceBinningAssigner.scala:
     20-82: a branch never revisits a table already on its path, but the
-    same table may be reached via different branches).
+    same table may be reached via different branches), for all roots at
+    once: (root, table_id, row_id, case_id).
 
-    Driver-side recursion over the TABLE graph (small); per traversed
-    edge one distributed join over `edges` (cached by entity_edges)."""
+    The driver numbers every root's path tree over the small TABLE
+    graph into a literal map (a driver-built frame would cost a job).
+    The frontier advances all roots one tree level per join with the
+    undirected `edges` (cached by entity_edges), so the walk costs as
+    many joins as the deepest tree."""
     # table-level adjacency from FK pairs (undirected;
     # RelationsExtractor.scala:15-53 relations are directionless after dedup)
     adj: dict[str, set[str]] = {}
@@ -158,12 +180,9 @@ def propagate_cases(
     # the exact name; a case-insensitive unique match is kept for the
     # lenient non-clash path (reference CLI validation is exact,
     # cli/package.scala:78).
-    if root_table in schema.tables:
-        root_actual = root_table
-    else:
-        ci = [t for t in schema.tables
-              if java_equals_ignore_case(t, root_table)]
-        if len(ci) > 1:
+    def root_actual(root_table: str) -> str:
+        ci = [t for t in schema.tables if java_equals_ignore_case(t, root_table)]
+        if len(ci) > 1 and root_table not in ci:
             # the reference CLI would have rejected this argv outright
             # (exact contains, cli/package.scala:78); picking one
             # sibling silently would be arbitrary
@@ -172,47 +191,45 @@ def propagate_cases(
                 f"case-insensitively ({sorted(ci)}) and none exactly — "
                 "pass the exact-case table id"
             )
-        root_actual = ci[0] if ci else root_table
+        return ci[0] if len(ci) == 1 else root_table
 
-    assignments = [roots.select("table_id", "row_id", "case_id")]
+    kids: dict[int, list[Column]] = {}  # node -> [(next_table, next_node)]
+    new_node = itertools.count().__next__
 
-    def step(table: str, assign: DataFrame, nxt: str) -> DataFrame:
-        """rows of `table` with case ids -> related rows of `nxt`."""
-        fwd = edges.filter(
-            (F.col("left_table") == table) & (F.col("right_table") == nxt)
-        ).select(F.col("left_row").alias("row_id"), F.col("right_row").alias("nrow"))
-        bwd = edges.filter(
-            (F.col("right_table") == table) & (F.col("left_table") == nxt)
-        ).select(F.col("right_row").alias("row_id"), F.col("left_row").alias("nrow"))
-        hop = fwd.unionByName(bwd)
-        return (
-            assign.join(hop, "row_id")
-            .select(
-                F.lit(nxt).alias("table_id"),
-                F.col("nrow").alias("row_id"),
-                "case_id",
-            )
+    def walk(table: str, node: int, path: frozenset[str]) -> int:
+        height = 0
+        for nxt in sorted(adj.get(table, ())):
+            if nxt not in path:
+                child = new_node()
+                kids.setdefault(node, []).append(F.struct(
+                    F.lit(nxt).alias("next_table"), F.lit(child).alias("next_node")))
+                height = max(height, 1 + walk(nxt, child, path | {table}))
+        return height
+
+    seeds = {rc: (new_node(), root_actual(rc)) for rc in root_tables}
+    levels = max(walk(t, n, frozenset({t})) for n, t in seeds.values())
+    seed = F.create_map(*[x for r, (n, t) in seeds.items() for x in (
+        F.lit(r), F.struct(F.lit(n).alias("node"), F.lit(t).alias("t")))])[F.col("root")]
+    frontier = roots.filter(F.col("table_id") == seed["t"]).withColumn("node", seed["node"])
+    hop = F.create_map(*[x for n, k in kids.items() for x in (F.lit(n), F.array(*k))])
+    fwd, bwd = [edges.select(
+        F.col(f"{a}_table").alias("table_id"), F.col(f"{a}_row").alias("row_id"),
+        F.col(f"{b}_table").alias("next_table"), F.col(f"{b}_row").alias("nrow"),
+    ) for a, b in (("left", "right"), ("right", "left"))]
+    undirected = fwd.unionByName(bwd)
+    assignments = roots.select("root", "table_id", "row_id", "case_id")
+    for _ in range(levels):
+        frontier = (
+            frontier.select("root", "table_id", "row_id", "case_id",
+                            F.inline(hop[F.col("node")]))
+            .join(undirected, ["table_id", "row_id", "next_table"])
+            .select("root", F.col("next_node").alias("node"),
+                    F.col("next_table").alias("table_id"),
+                    F.col("nrow").alias("row_id"), "case_id")
             .distinct()
         )
-
-    def walk(table: str, assign: DataFrame, path: frozenset[str]) -> None:
-        for nxt in sorted(adj.get(table, ())):
-            if nxt in path:
-                continue
-            nxt_assign = step(table, assign, nxt)
-            assignments.append(nxt_assign)
-            walk(nxt, nxt_assign, path | {table})
-
-    walk(
-        root_actual,
-        roots.filter(F.col("table_id") == root_actual)
-        .select("row_id", "case_id"),
-        frozenset({root_actual}),
-    )
-    out = assignments[0]
-    for a in assignments[1:]:
-        out = out.unionByName(a)
-    return out.distinct()
+        assignments = assignments.unionByName(frontier.drop("node"))
+    return assignments.distinct()
 
 
 def assign_entries(events: DataFrame, assignments: DataFrame) -> DataFrame:
@@ -226,22 +243,24 @@ def collect_traces(
     assigned: DataFrame,
     event_cols: tuple[str, ...] = ("event_name", "xes_ts"),
     order_cols: tuple[str, ...] = ("ts", "url"),
+    keys: tuple[str, ...] = ("case_id",),
 ) -> DataFrame:
-    """G4 — (case_id, events: array<struct>) with events in log order.
+    """G4 — (*keys, events: array<struct>) with events in log order;
+    the pipeline passes keys=("root", "case_id").
 
-    One groupBy(case_id): Spark plans a map-side partial collect_list,
-    one shuffle on case_id and the final merge. sort_array on the
+    One groupBy(*keys): Spark plans a map-side partial collect_list,
+    one shuffle on the keys and the final merge. sort_array on the
     (order..., payload) struct makes ordering deterministic regardless
     of arrival order."""
     ev = F.struct(
         *[F.col(c).alias(f"o{i}") for i, c in enumerate(order_cols)],
         *[F.col(c) for c in event_cols],
     )
-    traces = assigned.groupBy("case_id").agg(
+    traces = assigned.groupBy(*keys).agg(
         F.sort_array(F.collect_list(ev)).alias("events_raw")
     )
     drop_keys = F.transform(
         F.col("events_raw"),
         lambda x: F.struct(*[x[c].alias(c) for c in event_cols]),
     )
-    return traces.select("case_id", drop_keys.alias("events"))
+    return traces.select(*keys, drop_keys.alias("events"))

@@ -8,7 +8,9 @@ Spark (SURVEY.md §3.1):
   3. enrich         broadcast dictionary joins (table names, lang names)
   4. route          fan-out sinks by op + rejects (single pass)
   5. discover       schema aggregates → driver summary (small)
-  6. traces         entity edges (once per run) → case propagation → collect
+  6. traces         entity edges → one level-synchronous case walk for
+                    all roots → one (root, case_id) collect, cached; each
+                    root's parquet sink and .xes read that one frame
   7. serialize      per-trace XES XML strings → sink
 
 Only step 1 is bucket-local (the CLI checkpoints it per url-hash bucket,
@@ -130,20 +132,20 @@ class PipelineResult:
 
 
 def build_traces_df(
-    events: DataFrame, schema: SchemaSummary, root_table: str,
-    include_update_values: bool = False, edges: DataFrame | None = None,
+    events: DataFrame, schema: SchemaSummary, roots: list[str],
+    include_update_values: bool = False,
 ) -> DataFrame:
-    """Steps 6-7 as a reusable plan: (case_id, events, trace_xml).
-    `edges` is `entity_edges(events, schema)`, built here when omitted;
-    it does not depend on the root, so a multi-root run passes one."""
-    if edges is None:
-        edges = entity_edges(events, schema)
-    roots = root_cases(events, root_table, schema.tables)
-    assignments = propagate_cases(edges, roots, schema, root_table)
+    """Steps 6-7 as one plan for all `roots`:
+    (root, case_id, events, trace_xml), one row per trace of each root.
+    The roots share the entity edges, one case walk, one entry
+    assignment and one trace collect."""
+    edges = entity_edges(events, schema)
+    seeds = root_cases(events, roots, schema.tables)
+    assignments = propagate_cases(edges, seeds, schema, roots)
     assigned = with_xes_columns(
         assign_entries(events, assignments), include_update_values
     )
-    traces = collect_traces(assigned)
+    traces = collect_traces(assigned, keys=("root", "case_id"))
     return trace_xml(traces)
 
 
@@ -192,8 +194,8 @@ def run_parsed(
         # Multi-root: the reference loops "pick a root → emit XES" over
         # the SAME parsed log and discovered schema until --singleRun
         # (Main.scala:131-162); here every requested root reuses the
-        # cached events, the one discovery pass and the one cached
-        # entity-edge frame — one trace sink per root.
+        # cached events and the one discovery pass, and all roots share
+        # one trace plan — one trace sink per root.
         roots = cfg.root_classes
         for rc in roots:
             # Java equalsIgnoreCase, not lowercase equality — matches
@@ -207,11 +209,14 @@ def run_parsed(
                     f"{sorted(result.schema.tables)}"
                 )
         safe_names = _safe_root_names(roots)
-        edges = entity_edges(clean, result.schema)
+        if roots:
+            # every root's traces in one cached frame: its first scan
+            # runs the shared walk, each root's outputs then read it
+            all_traces = register(build_traces_df(
+                clean, result.schema, roots, cfg.include_update_values,
+            ).cache())
         for rc in roots:
-            traces = build_traces_df(
-                clean, result.schema, rc, cfg.include_update_values, edges,
-            )
+            traces = all_traces.filter(F.col("root") == rc)
             dest = (
                 f"{out_dir}/traces_xes"
                 if len(roots) == 1

@@ -96,7 +96,7 @@ def _our_xes(events, schema, root, path, include_update_values):
     from redo_log_parser_spark.sinks.xes import reference_trace_order
 
     traces = build_traces_df(
-        events, schema, root, include_update_values=include_update_values)
+        events, schema, [root], include_update_values=include_update_values)
     write_xes_document(
         trace_xml_pretty(traces), path, root,
         case_order=reference_trace_order(events, root))

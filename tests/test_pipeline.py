@@ -132,6 +132,26 @@ def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch,
         assert got == _parquet_digest(f"{single}/traces_xes")
 
 
+def test_trace_tail_job_budget(mini_docs, tmp_path, jobs_in_group):
+    """Spark jobs of a two-root run on the mini-log. All roots share one
+    cached trace frame, so the .xes documents add one collect per root.
+    The ceiling is the count measured when the shared frame landed
+    (56 jobs; 87 before it); a change may lower it, never raise it."""
+    from redo_log_parser_spark.pipeline import parse, run_parsed
+
+    roots = ('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"')
+    mini_docs.count()  # materialize the fixture's own session cache
+    n_jobs = {}
+    for xes in (False, True):
+        cfg = PipelineConfig(root_classes=roots, xes_document=xes)
+        out = str(tmp_path / f"xes{xes}")
+        _, n_jobs[xes] = jobs_in_group(
+            f"job-budget-xes{xes}",
+            lambda: run_parsed(parse(mini_docs), out, cfg))
+    assert n_jobs[True] - n_jobs[False] <= len(roots), n_jobs
+    assert n_jobs[True] <= 56, n_jobs
+
+
 def test_strict_flag_forwarded_to_discovery(spark, mini_docs, tmp_path):
     """cfg.strict_primary_keys must reach discover_schema (ADVICE r1):
     strict runs mark is_pk only for increasing, PK-named, duplicate-free
@@ -495,14 +515,17 @@ def test_cli_default_path_matches_no_resume(
 def test_cli_crash_after_parse_reruns_only_the_tail(
         cli, cli_input, single_pass, tmp_path, monkeypatch,
         persisted_rdd_ids, jobs_in_group):
-    """A tail that raises after the parse checkpoint is written: the
-    rerun starts no parse job and ends with the single-pass sinks."""
+    """A tail that raises after the parse checkpoint is written, before
+    or after the trace frame is cached, releases every cached frame;
+    the rerun starts no parse job and ends with the single-pass sinks."""
     from redo_log_parser_spark import pipeline
+    from redo_log_parser_spark.sinks import xes as xes_sink
 
     digests, summary = single_pass
     out = str(tmp_path / "crashed")
     args = _cli_args(cli_input, out, "--buckets", "4")
     real_build = pipeline.build_traces_df
+    real_write_xes = xes_sink.write_xes_document
     real_resumable = cli.module.run_resumable
 
     def crash(*a, **k):
@@ -515,6 +538,22 @@ def test_cli_crash_after_parse_reruns_only_the_tail(
     assert persisted_rdd_ids() <= before
     assert completed_buckets(out) == {0, 1, 2, 3}
     monkeypatch.setattr(pipeline, "build_traces_df", real_build)
+
+    # a crash after the cached trace frame was filled (by the parquet
+    # write) releases it too
+    cached_at_crash = []
+
+    def crash_in_xes(*a, **k):
+        cached_at_crash.append(persisted_rdd_ids() - before)
+        crash()
+
+    monkeypatch.setattr(xes_sink, "write_xes_document", crash_in_xes)
+    with pytest.raises(RuntimeError, match="injected tail crash"):
+        cli(*args)
+    assert cached_at_crash and cached_at_crash[0]
+    assert persisted_rdd_ids() <= before
+    assert completed_buckets(out) == {0, 1, 2, 3}
+    monkeypatch.setattr(xes_sink, "write_xes_document", real_write_xes)
 
     parse_jobs = []
     parse_calls = []

@@ -53,8 +53,8 @@ def test_reference_trace_assembly_runs(ref_events, ref_schema):
     """Traces for root=ORDERS over the real artifact: every ORDERS
     entity founds a case; USERS/INVOICES entries join their cases."""
     edges = entity_edges(ref_events, ref_schema)
-    roots = root_cases(ref_events, T_ORDERS, ref_schema.tables)
-    assignments = propagate_cases(edges, roots, ref_schema, T_ORDERS)
+    roots = root_cases(ref_events, [T_ORDERS], ref_schema.tables)
+    assignments = propagate_cases(edges, roots, ref_schema, [T_ORDERS])
     assigned = with_xes_columns(assign_entries(ref_events, assignments))
     traces = collect_traces(assigned)
     n_orders_entities = (
@@ -187,7 +187,7 @@ def test_updvals_xes_bytes_match_real_reference_output(spark, tmp_path):
     cols, ind = discover_schema(events, ind_mode="eager")
     schema = summarize_schema(cols, ind)
     traces = build_traces_df(
-        events, schema, '"SYSTEM"."ORDERS"', include_update_values=True)
+        events, schema, ['"SYSTEM"."ORDERS"'], include_update_values=True)
     path = str(tmp_path / "got.xes")
     write_xes_document(
         trace_xml_pretty(traces), path, '"SYSTEM"."ORDERS"')

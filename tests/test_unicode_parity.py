@@ -112,7 +112,7 @@ def test_utf16_threshold_xes_bytes(spark, tmp_path, ref_cp):
         assert events.filter("parse_error is not null").count() == 0
         cols, ind = discover_schema(events, ind_mode="eager")
         schema = summarize_schema(cols, ind)
-        traces = build_traces_df(events, schema, ROOT,
+        traces = build_traces_df(events, schema, [ROOT],
                                  include_update_values=True)
         out = tmp_path / "ours.xes"
         write_xes_document(

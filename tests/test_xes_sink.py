@@ -22,7 +22,7 @@ def mini_pretty(spark, mini_docs):
         events = uniquify_row_ids(parse_documents(mini_docs)).cache()
         cols_df, ind_df = discover_schema(events)
         schema = summarize_schema(cols_df, ind_df)
-        traces = build_traces_df(events, schema, '"SYSTEM"."ORDERS"')
+        traces = build_traces_df(events, schema, ['"SYSTEM"."ORDERS"'])
         pretty = trace_xml_pretty(traces).cache()
         pretty.count()
     yield pretty
@@ -187,7 +187,7 @@ def test_xes_bytes_match_real_reference_output(spark, tmp_path, root,
     events = uniquify_row_ids(parse_documents(docs)).cache()
     cols_df, ind_df = discover_schema(events)
     schema = summarize_schema(cols_df, ind_df)
-    traces = build_traces_df(events, schema, root)
+    traces = build_traces_df(events, schema, [root])
     ref = open(
         os.path.join(os.path.dirname(__file__), "fixtures", fixture)
     ).read()
