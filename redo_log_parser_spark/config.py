@@ -86,13 +86,5 @@ class PipelineConfig:
     def ts_format_strptime(self) -> str:
         return java_ts_format_to_strptime(self.ts_format_java)
 
-    @property
-    def ts_format_spark(self) -> str:
-        """Spark's to_timestamp pattern; java.time-compatible already, but
-        MMM month names are matched case-sensitively by Spark, so the
-        vectorized kernel parses timestamps in pandas instead. Kept for
-        sinks that re-format (always case-safe on output)."""
-        return self.ts_format_java
-
 
 DEFAULT_CONFIG = PipelineConfig()

@@ -44,11 +44,6 @@ _JAVA_DIRECTIVES = [
     ("ss", r"(\d{2})", "S"),
 ]
 
-_STRPTIME_TO_JAVA = {
-    "%Y": "yyyy", "%b": "MMM", "%m": "MM", "%d": "dd",
-    "%H": "HH", "%M": "mm", "%S": "ss",
-}
-
 
 def compile_java_ts_format(java_fmt: str):
     """(anchored regex string, ordered field keys) or None if the
@@ -71,24 +66,6 @@ def compile_java_ts_format(java_fmt: str):
     if not required <= set(fields) or not ({"b", "m"} & set(fields)):
         return None
     return rx, fields
-
-
-def strptime_to_java_format(strptime_fmt: str) -> str | None:
-    """The pandas kernel holds the strptime twin of the configured java
-    pattern (config.java_ts_format_to_strptime); map it back so both
-    parsers share one compiled spec."""
-    out, i = "", 0
-    while i < len(strptime_fmt):
-        if strptime_fmt[i] == "%":
-            d = strptime_fmt[i:i + 2]
-            if d not in _STRPTIME_TO_JAVA:
-                return None
-            out += _STRPTIME_TO_JAVA[d]
-            i += 2
-        else:
-            out += strptime_fmt[i]
-            i += 1
-    return out
 
 
 def py_smart_resolve(s: str, java_fmt: str) -> datetime | None:

@@ -41,9 +41,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..config import PipelineConfig, DEFAULT_CONFIG
+from ..config import PipelineConfig, DEFAULT_CONFIG, java_ts_format_to_strptime
 from .javaspace import ASCII_TRIM as _ASCII_TRIM, WS_CLS as _WS_CLS
-from .javatime import py_smart_resolve, strptime_to_java_format
+from .javatime import py_smart_resolve
 
 # Anchored forms of parser/package.scala:19-27 (fullmatch semantics).
 # The reference patterns run under JAVA regex semantics, which differ
@@ -130,9 +130,10 @@ def _parse_delete_where(where: str | float) -> tuple[list[str], list[str]] | Non
     return cols, vals
 
 
-def parse_record_batch(text: pd.Series, strptime_fmt: str) -> pd.DataFrame:
-    """Parse a batch of 2-line redo records. Pure pandas; shared by the
-    pandas UDF and unit tests."""
+def parse_record_batch(text: pd.Series, java_fmt: str) -> pd.DataFrame:
+    """Parse a batch of 2-line redo records; `java_fmt` is the
+    java.time timestamp pattern (--timestampPattern). Pure pandas;
+    shared by the pandas UDF and unit tests."""
     n = len(text)
     # --- chunking (P1-P2, FileParser.scala:22,52-61) ---
     # ONE pass: statement line + id line + split(" ", 2) of the id line
@@ -151,24 +152,23 @@ def parse_record_batch(text: pd.Series, strptime_fmt: str) -> pd.DataFrame:
     ts_raw = (
         chunk[2].str.strip(_ASCII_TRIM).str.replace(" +", " ", regex=True)
     )
-    ts = pd.to_datetime(ts_raw, format=strptime_fmt, errors="coerce")
+    ts = pd.to_datetime(
+        ts_raw, format=java_ts_format_to_strptime(java_fmt), errors="coerce")
     # java.time SMART resolution for strings the strict parse refused
     # (31-APR -> Apr 30, 24:00:00 -> next-day midnight — the reference's
     # DateTimeFormatter default; binary-probed, functions/javatime.py).
     # Only FAILED rows take the Python fallback — hot path unchanged.
     bad = ts.isna() & ts_raw.notna()
     if bad.any():
-        jfmt = strptime_to_java_format(strptime_fmt)
-        if jfmt is not None:
-            # µs dtype, not ns: Spark timestamps are µs, and a string
-            # like '15-MAY-2263' is VALID to the reference and the JVM
-            # parser but beyond datetime64[ns] (year 2262 cap) — the
-            # strict pass coerces it to NaT, the fallback re-parses it,
-            # and the µs series carries it to year 9999. None -> NaT.
-            fixed = ts_raw[bad].map(lambda s: py_smart_resolve(s, jfmt))
-            fixed = pd.Series(fixed.tolist(), index=fixed.index,
-                              dtype="datetime64[us]")
-            ts = ts.astype("datetime64[us]").fillna(fixed)
+        # µs dtype, not ns: Spark timestamps are µs, and a string
+        # like '15-MAY-2263' is VALID to the reference and the JVM
+        # parser but beyond datetime64[ns] (year 2262 cap) — the
+        # strict pass coerces it to NaT, the fallback re-parses it,
+        # and the µs series carries it to year 9999. None -> NaT.
+        fixed = ts_raw[bad].map(lambda s: py_smart_resolve(s, java_fmt))
+        fixed = pd.Series(fixed.tolist(), index=fixed.index,
+                          dtype="datetime64[us]")
+        ts = ts.astype("datetime64[us]").fillna(fixed)
     idline = chunk[1]  # null ⇔ no id line at all
 
     # --- statement classification + table id (P3, P7) ---
@@ -244,7 +244,7 @@ def make_parse_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
     """Build the fused parse kernel as a pandas UDF returning
     PARSED_STRUCT. Timestamp format is baked in from config
     (reference flag --timestampPattern, cli/package.scala:20)."""
-    fmt = cfg.ts_format_strptime
+    fmt = cfg.ts_format_java
 
     @pandas_udf(PARSED_STRUCT)
     def parse_redo_record(text: pd.Series) -> pd.DataFrame:

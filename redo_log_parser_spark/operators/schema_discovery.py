@@ -28,9 +28,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import Window
+from pyspark.sql.types import ArrayType
 
 from ..caching import register
 
@@ -326,6 +327,14 @@ def inclusion_dependencies(curr: DataFrame, registry: DataFrame) -> DataFrame:
     return ind.unionByName(empty_pairs)
 
 
+def _literal(value) -> Column:
+    """A collected value as a literal expression; a Row becomes a
+    struct."""
+    if isinstance(value, Row):
+        return F.struct(*map(_literal, value))
+    return F.lit(value)
+
+
 def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> DataFrame:
     """A6 under the reference's EAGER/LATCHED semantics
     (SchemaDeriver.scala:69-93).
@@ -395,13 +404,13 @@ def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> Data
     )
     pkey = ["table_id", "col", "ref_table", "ref_col"]
     # The candidate-pair frame is SCHEMA-sized (≤ cols² rows, like the
-    # driver summary) — materialize it once so the three joins below
-    # don't each re-derive the whole final-state lineage.
-    pair_rows = pairs.collect()
-    spark = writes.sparkSession
-    if not pair_rows:
-        return spark.createDataFrame([], pairs.schema).select(*pkey)
-    pairs = spark.createDataFrame(pair_rows, pairs.schema)
+    # driver summary) — collected once and rebuilt from literals, so the
+    # three joins below neither re-derive the whole final-state lineage
+    # nor scan a driver-built frame (createDataFrame of a local list
+    # costs a Python-worker job per scan).
+    pairs = writes.sparkSession.range(1, numPartitions=1).select(F.inline(
+        F.array(*map(_literal, pairs.collect())).cast(ArrayType(pairs.schema))
+    ))
     a_iv = F.broadcast(pairs).join(iv, ["table_id", "col"]).select(
         *pkey, "t0", "value",
         F.col("start_sk").alias("a_start"), F.col("end_sk").alias("a_end"),

@@ -113,20 +113,67 @@ def entity_edges(events: DataFrame, schema: SchemaSummary) -> DataFrame:
     return register(edges.distinct().cache())
 
 
+def resolve_roots(
+    roots: list[str], tables: list[str]
+) -> dict[str, tuple[str, list[str]]]:
+    """root class → (the table its walk starts from, the tables whose
+    entities found its cases). The one place a root name is matched
+    against the discovered `tables`.
+
+    Reference case-clash semantics (probed, fuzz axis `caseclash`):
+    root-bucket GATHERING is equalsIgnoreCase (TraceIDParserHelper
+    .scala:22-23), each gathered row keeping ITS OWN exact table id,
+    but the relation walk starts from schema(rootClass.tableID) — the
+    EXACT-case Table object only (TraceIDParser.scala:73). So a
+    case-sibling's entities found traces containing only their own
+    entries; they never propagate. The walk start prefers the exact
+    name; a unique case-insensitive match is kept for the lenient
+    non-clash path (reference CLI validation is exact,
+    cli/package.scala:78).
+
+    The match is JAVA equalsIgnoreCase, not lowercase equality —
+    'İX'~'ix' and 'ΣA'~'ςa' are Java-equal but lower()-unequal
+    (javaspace.java_equals_ignore_case, probed).
+
+    Raises ValueError for a root that matches no table, and for one
+    that matches several case-insensitively and none exactly: the
+    reference CLI would have rejected that argv outright (exact
+    contains, cli/package.scala:78), and picking one sibling silently
+    would be arbitrary."""
+    gathered = {
+        rc: [t for t in tables if java_equals_ignore_case(t, rc)]
+        for rc in roots
+    }
+    for rc, ci in gathered.items():
+        if not ci:
+            raise ValueError(
+                f"root class {rc!r} not in discovered schema "
+                f"{sorted(tables)}"
+            )
+    resolved = {}
+    for rc, ci in gathered.items():
+        if len(ci) > 1 and rc not in ci:
+            raise ValueError(
+                f"root class {rc!r} matches {len(ci)} tables "
+                f"case-insensitively ({sorted(ci)}) and none exactly — "
+                "pass the exact-case table id"
+            )
+        resolved[rc] = (ci[0] if len(ci) == 1 else rc, ci)
+    return resolved
+
+
 def root_cases(
     events: DataFrame, roots: list[str], tables: list[str]
 ) -> DataFrame:
     """G3 — one case per root-table entity, for every requested root:
-    (root, table_id, row_id, case_id), case_id = entity row id
-    (equalsIgnoreCase table match, TraceIDParserHelper.scala:22-23).
+    (root, table_id, row_id, case_id), case_id = entity row id.
 
-    The match is JAVA equalsIgnoreCase, not lowercase equality —
-    'İX'~'ix' and 'ΣA'~'ςa' are Java-equal but lower()-unequal
-    (javaspace.java_equals_ignore_case, probed). The name set is tiny,
-    so matching happens driver-side over `tables` (schema.tables): the
-    row filter is a plain isin, and a literal when-chain tags each root
-    row with every root that matched its table."""
-    roots_of = {t: [r for r in roots if java_equals_ignore_case(t, r)]
+    The name set is tiny, so matching happens driver-side over `tables`
+    (schema.tables, resolve_roots): the row filter is a plain isin, and
+    a literal when-chain tags each root row with every root that
+    gathers its table."""
+    resolved = resolve_roots(roots, tables)
+    roots_of = {t: [r for r, (_, ci) in resolved.items() if t in ci]
                 for t in tables}
     roots_of = {t: rs for t, rs in roots_of.items() if rs}
     tagged = F.lit(None).cast("array<string>")
@@ -169,30 +216,6 @@ def propagate_cases(
         adj.setdefault(ft, set()).add(pt)
         adj.setdefault(pt, set()).add(ft)
 
-    # Reference case-clash semantics (probed, fuzz axis `caseclash`):
-    # root-bucket GATHERING is equalsIgnoreCase (TraceIDParserHelper
-    # .scala:23 — root_cases already matched both case variants, each
-    # row keeping ITS OWN exact table id), but the relation walk starts
-    # from schema(rootClass.tableID) — the EXACT-case Table object only
-    # (TraceIDParser.scala:73) — and entry assignment is exact
-    # (Helper:51). So a case-sibling's entities found traces containing
-    # only their own entries; they never propagate. root_actual prefers
-    # the exact name; a case-insensitive unique match is kept for the
-    # lenient non-clash path (reference CLI validation is exact,
-    # cli/package.scala:78).
-    def root_actual(root_table: str) -> str:
-        ci = [t for t in schema.tables if java_equals_ignore_case(t, root_table)]
-        if len(ci) > 1 and root_table not in ci:
-            # the reference CLI would have rejected this argv outright
-            # (exact contains, cli/package.scala:78); picking one
-            # sibling silently would be arbitrary
-            raise ValueError(
-                f"root class {root_table!r} matches {len(ci)} tables "
-                f"case-insensitively ({sorted(ci)}) and none exactly — "
-                "pass the exact-case table id"
-            )
-        return ci[0] if len(ci) == 1 else root_table
-
     kids: dict[int, list[Column]] = {}  # node -> [(next_table, next_node)]
     new_node = itertools.count().__next__
 
@@ -206,7 +229,8 @@ def propagate_cases(
                 height = max(height, 1 + walk(nxt, child, path | {table}))
         return height
 
-    seeds = {rc: (new_node(), root_actual(rc)) for rc in root_tables}
+    seeds = {rc: (new_node(), start) for rc, (start, _)
+             in resolve_roots(root_tables, schema.tables).items()}
     levels = max(walk(t, n, frozenset({t})) for n, t in seeds.values())
     seed = F.create_map(*[x for r, (n, t) in seeds.items() for x in (
         F.lit(r), F.struct(F.lit(n).alias("node"), F.lit(t).alias("t")))])[F.col("root")]

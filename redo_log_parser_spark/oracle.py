@@ -31,7 +31,7 @@ from datetime import datetime
 from .config import PipelineConfig, DEFAULT_CONFIG
 from .functions.javaspace import (
     java_equals_ignore_case, py_is_blank, py_java_trim)
-from .functions.javatime import py_smart_resolve, strptime_to_java_format
+from .functions.javatime import py_smart_resolve
 
 # Regexes lifted verbatim from parser/package.scala:19-27. Scala's
 # `val pattern(g...) = s` requires a FULL match, so re.fullmatch is used.
@@ -112,8 +112,7 @@ def parse_chunk(chunk: list[str], cfg: PipelineConfig) -> tuple[str, str, dateti
     except ValueError:
         # java.time default ResolverStyle.SMART (functions/javatime.py,
         # binary-probed): 31-APR -> Apr 30, 24:00:00 -> next-day 00:00
-        jfmt = strptime_to_java_format(cfg.ts_format_strptime)
-        ts = py_smart_resolve(ts_string, jfmt) if jfmt else None
+        ts = py_smart_resolve(ts_string, cfg.ts_format_java)
         if ts is None:
             raise
     return statement, row_id, ts
@@ -599,7 +598,7 @@ def build_traces(
     else:
         ci = [t for t in schema if java_equals_ignore_case(t, root)]
         if len(ci) > 1:
-            # mirror the engine's propagate_cases: an argv matching two
+            # mirror the engine's traces.resolve_roots: an argv matching two
             # case-siblings and neither exactly is ambiguous
             raise ValueError(
                 f"root class {root!r} matches {len(ci)} tables "

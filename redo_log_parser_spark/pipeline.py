@@ -16,20 +16,30 @@ Spark (SURVEY.md §3.1):
 Only step 1 is bucket-local (the CLI checkpoints it per url-hash bucket,
 sinks/lineage.py); step 2 is a window over row ids and 5-7 shuffle on
 (table,col,row) / value / case keys, so `run_parsed` runs steps 2-7 once
-over the whole parsed log. The uniquified frame is cached once and feeds
-both the routing write and the aggregates.
+over the whole parsed log. It is written as its list of stages, each a
+`stage` block that tags its Spark jobs `rlps:<stage>`:
+
+  fanout    the cached uniquified `events` frame and the routed sinks
+  discover  the schema summary
+  traces    every root's traces_xes sink; the first write fills the
+            cached trace frame all roots share
+  xes       every root's .xes document (cfg.xes_document)
 """
 
 from __future__ import annotations
 
+import hashlib
+import re
+from collections import Counter
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .caching import operator_caches, register
 from .config import PipelineConfig, DEFAULT_CONFIG
-from .functions.javaspace import java_equals_ignore_case
 from .functions.parse import parse_documents
 from .functions.parse_sql import parse_documents_sql
 from .functions.xes import trace_xml, with_xes_columns
@@ -58,25 +68,16 @@ def enrich(events: DataFrame, table_dict: DataFrame | None = None,
     return out
 
 
-def _safe_root_name(root: str) -> str:
-    """Filesystem-safe sink suffix for a root class like '"SYS"."ORDERS"'."""
-    import re
-
-    return re.sub(r"[^A-Za-z0-9_.-]+", "_", root).strip("_")
-
-
 def _safe_root_names(roots) -> dict[str, str]:
-    """root → filesystem-safe sink suffix, collision-proof: sanitizing is
-    lossy ('"S"."T"' and 'S_._T' both map to 'S_._T'), and a collision
-    would silently overwrite one root's traces_xes dir and _result.xes.
-    Colliding names get a short content hash suffix so every root keeps
-    its own sink."""
-    import hashlib
-
-    base = {rc: _safe_root_name(rc) for rc in roots}
-    counts: dict[str, int] = {}
-    for name in base.values():
-        counts[name] = counts.get(name, 0) + 1
+    """root → filesystem-safe sink suffix ('"SYS"."ORDERS"' →
+    'SYS_._ORDERS'), collision-proof: sanitizing is lossy ('"S"."T"'
+    and 'S_._T' both map to 'S_._T'), and a collision would silently
+    overwrite one root's traces_xes dir and _result.xes. Colliding
+    names get a short content hash suffix so every root keeps its own
+    sink."""
+    base = {rc: re.sub(r"[^A-Za-z0-9_.-]+", "_", rc).strip("_")
+            for rc in roots}
+    counts = Counter(base.values())
     return {
         rc: (
             name
@@ -126,9 +127,11 @@ def print_verbose_entries(
 class PipelineResult:
     routed_counts: dict[str, int] = field(default_factory=dict)
     schema: SchemaSummary | None = None
-    n_traces: int = 0
     n_traces_by_root: dict[str, int] = field(default_factory=dict)
-    out_dir: str = ""
+
+    @property
+    def n_traces(self) -> int:
+        return sum(self.n_traces_by_root.values())
 
 
 def build_traces_df(
@@ -138,7 +141,8 @@ def build_traces_df(
     """Steps 6-7 as one plan for all `roots`:
     (root, case_id, events, trace_xml), one row per trace of each root.
     The roots share the entity edges, one case walk, one entry
-    assignment and one trace collect."""
+    assignment and one trace collect. A root that names no discovered
+    table raises ValueError (traces.resolve_roots)."""
     edges = entity_edges(events, schema)
     seeds = root_cases(events, roots, schema.tables)
     assignments = propagate_cases(edges, seeds, schema, roots)
@@ -149,18 +153,16 @@ def build_traces_df(
     return trace_xml(traces)
 
 
-def run_pipeline(
-    docs: DataFrame,
-    out_dir: str,
-    cfg: PipelineConfig = DEFAULT_CONFIG,
-    table_dict: DataFrame | None = None,
-    lang_map: DataFrame | None = None,
-    parser: str = "pandas",
-) -> PipelineResult:
-    """Full run over a documents frame: `parse`, then `run_parsed`."""
-    return run_parsed(
-        parse(docs, cfg, parser), out_dir, cfg, table_dict, lang_map,
-    )
+@contextmanager
+def stage(sc: SparkContext, name: str):
+    """Tag every Spark job started inside the block `rlps:<name>`. A
+    tag, not a job group: a group would replace the caller's."""
+    tag = f"rlps:{name}"
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
 
 
 def run_parsed(
@@ -170,82 +172,75 @@ def run_parsed(
     table_dict: DataFrame | None = None,
     lang_map: DataFrame | None = None,
 ) -> PipelineResult:
-    """Steps 2-7 over the whole parsed log. Root classes come from cfg
-    (replacing the reference's interactive prompt, cli/package.scala:73-86);
-    when there are none, trace assembly is skipped (schema-only run)."""
-    result = PipelineResult(out_dir=out_dir)
+    """Steps 2-7 over the whole parsed log, one `stage` block per stage.
+    Root classes come from cfg (replacing the reference's interactive
+    prompt, cli/package.scala:73-86); when there are none, trace
+    assembly is skipped (schema-only run). Uniquify, enrich and the
+    trace operators start no job of their own: their work is counted
+    in the stage whose action runs it."""
+    sc = parsed.sparkSession.sparkContext
+    roots = cfg.root_classes
+    result = PipelineResult()
     # every frame cached here or by the operators is released on exit,
     # also when a stage raises
     with operator_caches():
-        events = register(uniquify_row_ids(parsed).cache())
-        enriched = enrich(events, table_dict, lang_map)
+        with stage(sc, "fanout"):
+            events = register(uniquify_row_ids(parsed).cache())
+            enriched = enrich(events, table_dict, lang_map)
+            result.routed_counts = write_fanout(enriched, out_dir)
 
-        result.routed_counts = write_fanout(enriched, out_dir)
-
-        clean = enriched.filter(F.col("parse_error").isNull())
-        cols_df, ind_df = discover_schema(
-            clean,
-            strict=cfg.strict_primary_keys,
-            ind_mode="eager" if cfg.eager_ind else "final",
-            mono_mode="reference" if cfg.reference_monotonicity else "log",
-        )
-        result.schema = summarize_schema(cols_df, ind_df)
+        with stage(sc, "discover"):
+            clean = enriched.filter(F.col("parse_error").isNull())
+            result.schema = summarize_schema(*discover_schema(
+                clean,
+                strict=cfg.strict_primary_keys,
+                ind_mode="eager" if cfg.eager_ind else "final",
+                mono_mode="reference" if cfg.reference_monotonicity else "log",
+            ))
+        if not roots:
+            return result
 
         # Multi-root: the reference loops "pick a root → emit XES" over
         # the SAME parsed log and discovered schema until --singleRun
-        # (Main.scala:131-162); here every requested root reuses the
-        # cached events and the one discovery pass, and all roots share
-        # one trace plan — one trace sink per root.
-        roots = cfg.root_classes
-        for rc in roots:
-            # Java equalsIgnoreCase, not lowercase equality — matches
-            # the trace layer's table matching (javaspace)
-            if not any(
-                java_equals_ignore_case(rc, t)
-                for t in result.schema.tables
-            ):
-                raise ValueError(
-                    f"root class {rc!r} not in discovered schema "
-                    f"{sorted(result.schema.tables)}"
-                )
+        # (Main.scala:131-162); here all roots share one cached trace
+        # frame, which the first write fills, and each root's outputs
+        # are 1-job scans of it.
         safe_names = _safe_root_names(roots)
-        if roots:
-            # every root's traces in one cached frame: its first scan
-            # runs the shared walk, each root's outputs then read it
+        with stage(sc, "traces"):
             all_traces = register(build_traces_df(
                 clean, result.schema, roots, cfg.include_update_values,
             ).cache())
-        for rc in roots:
-            traces = all_traces.filter(F.col("root") == rc)
-            dest = (
-                f"{out_dir}/traces_xes"
-                if len(roots) == 1
-                else f"{out_dir}/traces_xes/{safe_names[rc]}"
-            )
-            # counted on the write pass, not by re-reading the sink
-            obs = Observation("traces")
-            traces.select("case_id", "trace_xml").observe(
-                obs, F.count(F.lit(1)).alias("n")
-            ).write.mode("overwrite").parquet(dest)
-            n = int(obs.get["n"])
-            if cfg.xes_document:
-                # one complete reference-style .xes per root
-                # (Main.scala:149-153 writes <path>_<root>_result.xes)
-                from .functions.xes import trace_xml_pretty
-                from .sinks.xes import (
-                    reference_trace_order, write_xes_document)
+            for rc in roots:
+                dest = (
+                    f"{out_dir}/traces_xes"
+                    if len(roots) == 1
+                    else f"{out_dir}/traces_xes/{safe_names[rc]}"
+                )
+                # counted on the write pass, not by re-reading the sink
+                obs = Observation("traces")
+                all_traces.filter(F.col("root") == rc).select(
+                    "case_id", "trace_xml"
+                ).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                    "overwrite").parquet(dest)
+                result.n_traces_by_root[rc] = int(obs.get["n"])
 
-                doc_path = (
-                    f"{out_dir}/{safe_names[rc]}_result.xes"
-                )
-                order = (
-                    reference_trace_order(clean, rc)
-                    if cfg.reference_trace_order
-                    else None
-                )
-                write_xes_document(
-                    trace_xml_pretty(traces), doc_path, rc, case_order=order,
-                )
-            result.n_traces_by_root[rc] = n
-            result.n_traces += n
+        if cfg.xes_document:
+            # one complete reference-style .xes per root
+            # (Main.scala:149-153 writes <path>_<root>_result.xes)
+            from .functions.xes import trace_xml_pretty
+            from .sinks.xes import reference_trace_order, write_xes_document
+
+            with stage(sc, "xes"):
+                for rc in roots:
+                    order = (
+                        reference_trace_order(clean, rc)
+                        if cfg.reference_trace_order
+                        else None
+                    )
+                    write_xes_document(
+                        trace_xml_pretty(
+                            all_traces.filter(F.col("root") == rc)),
+                        f"{out_dir}/{safe_names[rc]}_result.xes", rc,
+                        case_order=order,
+                    )
     return result

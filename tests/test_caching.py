@@ -123,6 +123,7 @@ def test_schema_discovery_and_traces_caches_owned(mini_docs, persisted_rdd_ids):
     assert persisted_rdd_ids() <= base
 
     with operator_caches() as frames:
-        build_traces_df(events, schema, ["INVOICES"]).collect()
+        build_traces_df(
+            events, schema, ['"SYSTEM"."INVOICES"']).collect()
         assert frames  # the entity-edge frame
     assert persisted_rdd_ids() <= base

@@ -39,7 +39,7 @@ EDGE_RECORDS = [
 
 
 def kernel(records):
-    return parse_record_batch(pd.Series(records), CFG.ts_format_strptime)
+    return parse_record_batch(pd.Series(records), CFG.ts_format_java)
 
 
 def oracle_rows(records):
@@ -114,7 +114,7 @@ def test_mini_log_histogram():
 def test_alternate_timestamp_format():
     cfg = PipelineConfig(ts_format_java="yyyy-MM-dd HH:mm:ss")
     rec = 'insert into "S"."T"("ID") values (\'1\');\nRID 2014-11-27 15:55:34'
-    got = parse_record_batch(pd.Series([rec]), cfg.ts_format_strptime)
+    got = parse_record_batch(pd.Series([rec]), cfg.ts_format_java)
     assert got.iloc[0]["parse_error"] is None
     assert str(got.iloc[0]["ts"]) == "2014-11-27 15:55:34"
 
@@ -131,7 +131,7 @@ def test_reference_artifact_corpus_parity():
             lines = fh.read().split("\n")
         chunks = oracle.chunk_lines(lines)
         records = ["\n".join(c) for c in chunks]
-        got = parse_record_batch(pd.Series(records), cfg.ts_format_strptime)
+        got = parse_record_batch(pd.Series(records), cfg.ts_format_java)
         # row-by-row against the oracle
         for i, chunk in enumerate(chunks):
             stmt, rid, ts = oracle.parse_chunk(chunk, cfg)

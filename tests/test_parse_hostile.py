@@ -134,5 +134,5 @@ def test_reference_crash_shapes_become_labeled_rejects(stmt, label):
     rec = f"{stmt}\nAAAr {TS}"
     with pytest.raises(Exception):
         oracle.parse_records([rec], CFG)
-    got = parse_record_batch(pd.Series([rec]), CFG.ts_format_strptime)
+    got = parse_record_batch(pd.Series([rec]), CFG.ts_format_java)
     assert got.iloc[0]["parse_error"] == label

@@ -70,7 +70,7 @@ def record(draw):
 @settings(max_examples=300, deadline=None)
 @given(st.lists(record(), min_size=1, max_size=8))
 def test_kernel_equals_oracle_on_random_records(records):
-    got = parse_record_batch(pd.Series(records), CFG.ts_format_strptime)
+    got = parse_record_batch(pd.Series(records), CFG.ts_format_java)
     for i, rec in enumerate(records):
         g = got.iloc[i]
         try:

@@ -16,7 +16,7 @@ from redo_log_parser_spark import oracle
 from redo_log_parser_spark.config import PipelineConfig
 from redo_log_parser_spark.fixtures import enrichment_dims, mini_log_lines
 from redo_log_parser_spark.functions.parse import parse_documents
-from redo_log_parser_spark.pipeline import enrich, run_pipeline
+from redo_log_parser_spark.pipeline import enrich, parse, run_parsed
 from redo_log_parser_spark.sinks.lineage import completed_buckets
 from redo_log_parser_spark.sources.logfile import read_log_files
 from redo_log_parser_spark.operators.rowid import uniquify_row_ids
@@ -26,8 +26,8 @@ def test_full_pipeline_counts_and_traces(spark, mini_docs, tmp_path):
     out = str(tmp_path / "out")
     td, lm = enrichment_dims()
     cfg = PipelineConfig(root_classes=('"SYSTEM"."ORDERS"',))
-    res = run_pipeline(
-        mini_docs, out, cfg,
+    res = run_parsed(
+        parse(mini_docs, cfg), out, cfg,
         table_dict=spark.createDataFrame(td),
         lang_map=spark.createDataFrame(lm),
     )
@@ -52,7 +52,7 @@ def test_unknown_root_class_rejected(mini_docs, tmp_path, persisted_rdd_ids):
     cfg = PipelineConfig(root_classes=("NOPE",))
     before = persisted_rdd_ids()
     with pytest.raises(ValueError, match="root class"):
-        run_pipeline(mini_docs, str(tmp_path / "o2"), cfg)
+        run_parsed(parse(mini_docs, cfg), str(tmp_path / "o2"), cfg)
     # the raise comes after the events cache was filled; it is released
     assert persisted_rdd_ids() <= before
 
@@ -116,7 +116,7 @@ def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch,
     mini_docs.count()  # materialize the fixture's own session cache
     before = persisted_rdd_ids()
     monkeypatch.setattr(pipeline, "entity_edges", counted_edges)
-    res = run_pipeline(mini_docs, out, cfg)
+    res = run_parsed(parse(mini_docs, cfg), out, cfg)
     assert len(calls) == 1
     assert persisted_rdd_ids() <= before
     assert set(res.n_traces_by_root) == set(roots)
@@ -126,41 +126,51 @@ def test_multi_root_single_parse(spark, mini_docs, tmp_path, monkeypatch,
         xes = spark.read.parquet(f"{out}/traces_xes/{sub}")
         assert xes.first()["trace_xml"].startswith("<trace><event>")
         single = str(tmp_path / f"single_{sub}")
-        run_pipeline(mini_docs, single, PipelineConfig(root_classes=(rc,)))
+        run_parsed(parse(mini_docs), single, PipelineConfig(root_classes=(rc,)))
         got = _parquet_digest(f"{out}/traces_xes/{sub}")
         assert got[0] == res.n_traces_by_root[rc] > 0
         assert got == _parquet_digest(f"{single}/traces_xes")
 
 
-def test_trace_tail_job_budget(mini_docs, tmp_path, jobs_in_group):
-    """Spark jobs of a two-root run on the mini-log. All roots share one
-    cached trace frame, so the .xes documents add one collect per root.
-    The ceiling is the count measured when the shared frame landed
-    (56 jobs; 87 before it); a change may lower it, never raise it."""
-    from redo_log_parser_spark.pipeline import parse, run_parsed
-
+def test_trace_tail_job_budget(spark, mini_docs, tmp_path, jobs_in_group):
+    """Spark jobs of a two-root run on the mini-log, per stage of
+    run_parsed (the job tag rlps:<stage>). Every job run_parsed starts
+    carries one stage tag. All roots share one cached trace frame, so
+    the .xes documents add one collect per root. The ceilings are the
+    counts measured when the stages got their tags (56 jobs in all; 87
+    before the shared trace frame); a change may lower them, never
+    raise them."""
     roots = ('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"')
+    ceilings = {"fanout": 4, "discover": 27, "traces": 23,
+                "xes": len(roots)}
+    tagged = spark.sparkContext._jsc.sc().statusTracker()
     mini_docs.count()  # materialize the fixture's own session cache
-    n_jobs = {}
     for xes in (False, True):
         cfg = PipelineConfig(root_classes=roots, xes_document=xes)
         out = str(tmp_path / f"xes{xes}")
-        _, n_jobs[xes] = jobs_in_group(
-            f"job-budget-xes{xes}",
-            lambda: run_parsed(parse(mini_docs), out, cfg))
-    assert n_jobs[True] - n_jobs[False] <= len(roots), n_jobs
-    assert n_jobs[True] <= 56, n_jobs
+        group = f"job-budget-xes{xes}"
+        _, n_jobs = jobs_in_group(
+            group, lambda: run_parsed(parse(mini_docs), out, cfg))
+        in_run = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+        per_stage = {
+            st: len(in_run & set(tagged.getJobIdsForTag(f"rlps:{st}")))
+            for st in ceilings}
+        assert all(per_stage[st] <= c for st, c in ceilings.items()), per_stage
+        assert xes or per_stage["xes"] == 0, per_stage
+        assert sum(per_stage.values()) == n_jobs, (per_stage, n_jobs)
+        assert n_jobs <= 56, n_jobs
 
 
 def test_strict_flag_forwarded_to_discovery(spark, mini_docs, tmp_path):
     """cfg.strict_primary_keys must reach discover_schema (ADVICE r1):
     strict runs mark is_pk only for increasing, PK-named, duplicate-free
     columns — a strictly smaller (or equal, here: smaller) set."""
-    lenient = run_pipeline(
-        mini_docs, str(tmp_path / "s0"), PipelineConfig()
+    lenient = run_parsed(
+        parse(mini_docs), str(tmp_path / "s0"), PipelineConfig()
     ).schema.pk_candidates()
-    strict = run_pipeline(
-        mini_docs, str(tmp_path / "s1"), PipelineConfig(strict_primary_keys=True)
+    strict = run_parsed(
+        parse(mini_docs), str(tmp_path / "s1"),
+        PipelineConfig(strict_primary_keys=True),
     ).schema.pk_candidates()
     assert strict <= lenient
     assert strict != lenient, "strict must actually constrain the PK set"
@@ -197,7 +207,7 @@ def test_xes_document_per_root_and_console_schema(spark, mini_docs, tmp_path):
 
     out = str(tmp_path / "xdoc")
     cfg = PipelineConfig(root_classes=('"SYSTEM"."ORDERS"',), xes_document=True)
-    res = run_pipeline(mini_docs, out, cfg)
+    res = run_parsed(parse(mini_docs, cfg), out, cfg)
     doc = f"{out}/SYSTEM_._ORDERS_result.xes"
     root = ET.parse(doc).getroot()
     ns = "{http://www.xes-standard.org/}"

@@ -318,3 +318,12 @@ def test_ambiguous_case_insensitive_root_raises(spark):
     schema = summarize_schema(cols_df, ind_df)
     with pytest.raises(ValueError, match="case-insensitively"):
         build_traces_df(events, schema, ['"system"."t"']).collect()
+
+
+def test_unknown_root_raises(spark_events, spark_schema):
+    """A root that matches no discovered table raises the unknown-root
+    error (traces.resolve_roots) instead of planning empty traces."""
+    from redo_log_parser_spark.pipeline import build_traces_df
+
+    with pytest.raises(ValueError, match="not in discovered schema"):
+        build_traces_df(spark_events, spark_schema, ['"SYSTEM"."NOPE"'])
