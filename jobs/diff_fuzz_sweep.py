@@ -168,9 +168,9 @@ def check_seed(
         if oracle.reference_console_dump(entries, strict=True) != ref_strict:
             bad.append("schema_strict_bytes")
 
-        from redo_log_parser_spark.sinks.xes import reference_trace_order
+        from redo_log_parser_spark.sinks.xes import reference_trace_orders
 
-        order = reference_trace_order(events, root)
+        order = reference_trace_orders(events, [root])[root]
         for tag, upd, ref in (("xes", False, ref_xes),
                               ("xes_updvals", True, ref_xes_upd)):
             path = os.path.join(d, f"o_{tag}.xes")

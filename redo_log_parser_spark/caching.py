@@ -21,8 +21,7 @@ no active context the behavior is exactly the historical one (cached,
 documented leak, clearCache()/GC hygiene applies); inside a context the
 frames are unpersisted (blocking) on exit. Contexts nest — each block
 owns only the frames cached while it was the innermost. Thread-local,
-so concurrent foreachBatch workers or test threads do not steal each
-other's frames.
+so concurrent threads do not steal each other's frames.
 """
 
 from __future__ import annotations

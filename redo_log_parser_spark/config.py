@@ -70,7 +70,7 @@ class PipelineConfig:
     # Order traces in the .xes document exactly like the reference
     # binary: Scala 2.12 groupBy(HashMap) iteration over its seeded
     # random row-id suffixes, both replayed in pure Python
-    # (functions/scala_order.py; sinks/xes.reference_trace_order).
+    # (functions/scala_order.py; sinks/xes.reference_trace_orders).
     # False = deterministic case_id sort (repo default). Whole-file
     # byte equality against a reference .xes needs True.
     reference_trace_order: bool = False

@@ -676,7 +676,7 @@ def q_schema_discovery(spark, sf_dir):
     docs = synth_mixed_docs(spark, sf_dir)
     parsed = parse_documents(docs, keep_cols=("url", "warc_ts"))
     events = uniquify_row_ids(parsed, order_cols=("ts", "url"))
-    cols_df, _ = discover_schema(events, order_cols=("ts", "url"))
+    cols_df, _ = discover_schema(events)
     return cols_df.select(
         "table_id", "col", "can_be_pk", "values_increasing", "name_like_pk"
     )

@@ -7,11 +7,18 @@ Here each property is one declarative aggregate over the parsed-events
 frame; Catalyst plans partial+final aggregation, and the whole discovery
 costs a handful of shuffles regardless of input size.
 
+The prefix-exact properties read one model: per-row value validity
+intervals [start_sk, end_sk) over the log position sk = (ts, url). A
+write opens an interval, and the same row's next write or delete on the
+column closes it; an interval that never closes has a null end, which
+every reader takes as "open at the end of the log".
+
 Semantics preserved (SURVEY.md §1.3 item 4):
   * Column registry: every column ever referenced, including columns
     created empty by delete statements (SchemaExtractor.scala:130-137).
-  * Current values: last write per (table, column, row) wins; a delete
-    removes the value only for columns NAMED in its where clause
+  * Current values: the intervals still open at the end of the log, so
+    the last write per (table, column, row) wins; a delete removes the
+    value only for columns NAMED in its where clause
     (SchemaExtractor.scala:126-141); ROWID key excluded (:58,127).
   * canBePrimaryKey is sticky-false (Column.scala:79-84 runs after every
     affecting entry): a transient duplicate at ANY prefix disqualifies.
@@ -34,13 +41,6 @@ from pyspark.sql import Window
 from pyspark.sql.types import ArrayType
 
 from ..caching import register
-
-# far-future sentinel for open-ended validity intervals
-_INF_TS = "9999-12-31 00:00:00"
-
-
-def _sort_key(order_cols: tuple[str, ...]):
-    return F.struct(*[F.col(c).alias(f"k{i}") for i, c in enumerate(order_cols)])
 
 
 def insert_kv_pairs() -> F.Column:
@@ -73,11 +73,10 @@ def insert_kv_pairs() -> F.Column:
     )
 
 
-def column_writes(
-    events: DataFrame, order_cols: tuple[str, ...] = ("ts", "url")
-) -> DataFrame:
+def column_writes(events: DataFrame) -> DataFrame:
     """Long frame of per-column effects:
-    (table_id, col, row_id, value, sk, kind) where kind ∈ write|delete.
+    (table_id, col, row_id, value, sk, kind) where kind ∈ write|delete
+    and sk = (ts, url) is the event's log position.
 
     insert → one write per zipped (col, value) (SchemaExtractor.scala:65-88);
     update → one write of the NEW value (:93-116); delete → one tombstone
@@ -90,7 +89,6 @@ def column_writes(
     cached (measured 3× parse cost at sf0.1, round-2 VERDICT item 4);
     one subtree means the parse runs once per action regardless of
     caching, and at 100 TB it is one scan instead of three."""
-    sk = _sort_key(order_cols)
     write_lit = F.lit("write")
     ins_pairs = insert_kv_pairs()
     effects = (
@@ -129,7 +127,8 @@ def column_writes(
         .otherwise(F.array().cast("array<struct<col:string,value:string,kind:string>>"))
     )
     return events.select(
-        "table_id", "row_id", sk.alias("sk"), F.explode(effects).alias("e")
+        "table_id", "row_id", F.struct("ts", "url").alias("sk"),
+        F.explode(effects).alias("e"),
     ).select(
         "table_id",
         F.col("e.col").alias("col"),
@@ -145,58 +144,13 @@ def column_registry(writes: DataFrame) -> DataFrame:
     return writes.select("table_id", "col").distinct()
 
 
-def current_values(writes: DataFrame) -> DataFrame:
-    """A2 — latest value per (table, col, row); deleted values drop out.
-    One window (hash-partitioned on the group key), no driver state."""
-    w = Window.partitionBy("table_id", "col", "row_id").orderBy(F.desc("sk"))
-    return (
-        writes.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") == 1) & (F.col("kind") == "write"))
-        .select("table_id", "col", "row_id", "value")
-    )
-
-
-def _sk_open_sentinel(writes: DataFrame):
-    """Sentinel sort-key marking a still-open validity interval: a struct
-    built from sk's ACTUAL schema (so any order_cols arity/typing works,
-    not just the default ("ts","url")) whose FIRST field exceeds every
-    real value — struct comparison then never consults later fields.
-    Raises for field types with no max literal rather than comparing
-    wrongly."""
-    from pyspark.sql.types import (
-        DateType, DoubleType, FloatType, IntegerType, LongType,
-        StringType, StructType, TimestampType, TimestampNTZType,
-    )
-
-    sk_type = writes.schema["sk"].dataType
-    if not isinstance(sk_type, StructType):
-        raise TypeError(f"sk must be a struct sort key, got {sk_type}")
-    lits = []
-    for f in sk_type.fields:
-        t = f.dataType
-        if isinstance(t, (TimestampType, TimestampNTZType)):
-            lit = F.lit(_INF_TS).cast(t.simpleString())
-        elif isinstance(t, DateType):
-            lit = F.lit("9999-12-31").cast("date")
-        elif isinstance(t, StringType):
-            # above every BMP/supplementary char in UTF8 binary order
-            lit = F.lit("\U0010ffff")
-        elif isinstance(t, (IntegerType, LongType)):
-            lit = F.lit((1 << 31) - 1 if isinstance(t, IntegerType) else (1 << 63) - 1).cast(t.simpleString())
-        elif isinstance(t, (FloatType, DoubleType)):
-            lit = F.lit(float("inf")).cast(t.simpleString())
-        else:
-            raise TypeError(f"no max sentinel for sk field {f.name}: {t}")
-        lits.append(lit.alias(f.name))
-    return F.struct(*lits)
-
-
 def _value_intervals(writes: DataFrame) -> DataFrame:
     """(table_id, col, row_id, value, start_sk, end_sk) — validity
-    intervals of written values: a write opens at its sk, the same
-    row's next write/delete on the column closes (open intervals get
-    the max sentinel). Shared by pk_uniqueness and the eager IND
-    check."""
+    intervals [start_sk, end_sk) of written values: a write opens at its
+    sk, the same row's next write/delete on the column closes it. An
+    interval that never closes has a null end_sk. The one builder of
+    intervals, shared by current_values, pk_uniqueness and the eager
+    IND check."""
     w_row = Window.partitionBy("table_id", "col", "row_id").orderBy("sk")
     return (
         writes.withColumn("end_sk", F.lead("sk").over(w_row))
@@ -207,31 +161,41 @@ def _value_intervals(writes: DataFrame) -> DataFrame:
             "row_id",
             "value",
             F.col("sk").alias("start_sk"),
-            F.coalesce(F.col("end_sk"), _sk_open_sentinel(writes)).alias("end_sk"),
+            "end_sk",
         )
+    )
+
+
+def current_values(writes: DataFrame) -> DataFrame:
+    """A2 — latest value per (table, col, row): the intervals still open
+    at the end of the log. A deleted value's interval is closed by its
+    tombstone, so it drops out."""
+    return _value_intervals(writes).filter(F.col("end_sk").isNull()).select(
+        "table_id", "col", "row_id", "value"
     )
 
 
 def pk_uniqueness(writes: DataFrame) -> DataFrame:
     """A3 — sticky canBePrimaryKey via value-lifetime overlap.
 
-    Each write opens a validity interval for (table,col,row,value) that
-    closes at that row's next write/delete on the column (lead window).
-    A duplicate existed at some prefix ⇔ two intervals of the same
-    (table,col,value) from different rows overlap ⇔ ordering intervals
-    by start, some interval starts before the running max end of its
-    predecessors. Two windows, zero self-joins."""
+    A duplicate existed at some prefix ⇔ two validity intervals of the
+    same (table,col,value) from different rows overlap ⇔ ordering the
+    intervals by start, some interval starts while an earlier-starting
+    one is still open: that one never closes (null end) or ends after
+    this start. The first interval overlaps nothing. One window over
+    the preceding rows, zero self-joins."""
     iv = _value_intervals(writes)
     w_val = (
         Window.partitionBy("table_id", "col", "value")
         .orderBy("start_sk")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    overlapped = iv.withColumn("prev_max_end", F.max("end_sk").over(w_val)).withColumn(
-        "overlap",
-        F.col("prev_max_end").isNotNull() & (F.col("start_sk") < F.col("prev_max_end")),
+    overlap = F.coalesce(
+        F.max(F.col("end_sk").isNull()).over(w_val)
+        | (F.col("start_sk") < F.max("end_sk").over(w_val)),
+        F.lit(False),
     )
-    return overlapped.groupBy("table_id", "col").agg(
+    return iv.withColumn("overlap", overlap).groupBy("table_id", "col").agg(
         (~F.max("overlap")).alias("can_be_pk")
     )
 
@@ -432,16 +396,26 @@ def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> Data
     )
     joined = a_iv.join(b_grp, [*pkey, "value"], "left")
     lo = F.greatest(F.col("a_start"), F.col("t0"))
+    a_end = F.col("a_end")
+
+    def before(x, end):
+        # x < end, where a null end never comes
+        return end.isNull() | (x < end)
+
     # chain coverage: fold sorted B intervals, extending reach while the
     # next interval starts at or before it ([s,e) half-open ⇒ s<=reach
-    # means contiguous); covered iff reach passes a_end
+    # means contiguous). A B-interval that never closes extends reach
+    # to null, which no later step changes. Covered iff reach is null
+    # or passes a_end; an A-interval that never closes needs null.
     reach = F.aggregate(
         F.col("b_ivs"),
         lo,
-        lambda acc, x: F.when((x["s"] <= acc) & (x["e"] > acc), x["e"]).otherwise(acc),
+        lambda acc, x: F.when(
+            (x["s"] <= acc) & before(acc, x["e"]), x["e"]
+        ).otherwise(acc),
     )
-    viol = (lo < F.col("a_end")) & (
-        F.col("b_ivs").isNull() | (reach < F.col("a_end"))
+    viol = before(lo, a_end) & (
+        F.col("b_ivs").isNull() | (reach.isNotNull() & before(reach, a_end))
     )
     violated = (
         joined.withColumn("viol", viol)
@@ -455,7 +429,6 @@ def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> Data
 
 def discover_schema(
     events: DataFrame,
-    order_cols: tuple[str, ...] = ("ts", "url"),
     strict: bool = False,
     ind_mode: str = "final",
     mono_mode: str = "log",
@@ -477,7 +450,7 @@ def discover_schema(
     """
     if mono_mode not in ("log", "reference"):
         raise ValueError(f"mono_mode must be 'log' or 'reference', got {mono_mode!r}")
-    writes = register(column_writes(events, order_cols).cache())
+    writes = register(column_writes(events).cache())
     registry = column_registry(writes)
     uniq = pk_uniqueness(writes)
     cols = registry.join(uniq, ["table_id", "col"], "left")

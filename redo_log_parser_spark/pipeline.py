@@ -228,19 +228,19 @@ def run_parsed(
             # one complete reference-style .xes per root
             # (Main.scala:149-153 writes <path>_<root>_result.xes)
             from .functions.xes import trace_xml_pretty
-            from .sinks.xes import reference_trace_order, write_xes_document
+            from .sinks.xes import reference_trace_orders, write_xes_document
 
             with stage(sc, "xes"):
+                orders = (
+                    reference_trace_orders(clean, roots)
+                    if cfg.reference_trace_order
+                    else {}
+                )
                 for rc in roots:
-                    order = (
-                        reference_trace_order(clean, rc)
-                        if cfg.reference_trace_order
-                        else None
-                    )
                     write_xes_document(
                         trace_xml_pretty(
                             all_traces.filter(F.col("root") == rc)),
                         f"{out_dir}/{safe_names[rc]}_result.xes", rc,
-                        case_order=order,
+                        case_order=orders.get(rc),
                     )
     return result

@@ -23,16 +23,11 @@ from pyspark.sql import functions as F
 SINK_EXCLUDED = {"html", "text", "statement", "parse_error"}
 
 
-def write_fanout(
-    events: DataFrame,
-    out_dir: str,
-    file_format: str = "parquet",
-    mode: str = "overwrite",
-) -> dict[str, int]:
+def write_fanout(events: DataFrame, out_dir: str) -> dict[str, int]:
     """Write clean events partitioned by op (one scan, three sinks) and
-    rejects separately. Returns per-sink routed-row counts (the north
-    rule's per-sink aggregate equality check), measured on the same
-    write pass via Observation."""
+    rejects separately, as parquet, replacing what is there. Returns per-sink
+    routed-row counts (the north rule's per-sink aggregate equality
+    check), measured on the same write pass via Observation."""
     cols = [c for c in events.columns if c not in SINK_EXCLUDED and c != "op"]
     clean = events.filter(F.col("parse_error").isNull()).select(*cols, "op")
 
@@ -43,18 +38,14 @@ def write_fanout(
         F.count(F.when(F.col("op") == "update", 1)).alias("sink_update"),
         F.count(F.when(F.col("op") == "delete", 1)).alias("sink_delete"),
     )
-    (
-        observed.write.mode(mode)
-        .format(file_format)
-        .partitionBy("op")
-        .save(f"{out_dir}/events_by_op")
-    )
+    observed.write.mode("overwrite").partitionBy("op").parquet(
+        f"{out_dir}/events_by_op")
     counts = {k: int(v) for k, v in obs.get.items()}
 
     rej_obs = Observation("rejects")
     rejects = events.filter(F.col("parse_error").isNotNull()).observe(
         rej_obs, F.count(F.lit(1)).alias("sink_rejects")
     )
-    rejects.write.mode(mode).format(file_format).save(f"{out_dir}/rejects")
+    rejects.write.mode("overwrite").parquet(f"{out_dir}/rejects")
     counts["sink_rejects"] = int(rej_obs.get["sink_rejects"])
     return counts

@@ -14,7 +14,7 @@ the Spark engine on the same file, and demands:
   'reference' (the shipped binary's vacuously-true increasing check)
 - .xes for a seed-chosen root: WHOLE-FILE byte equality, plain AND
   --includeUpdateValues (round 4: our .xes is emitted with
-  reference_trace_order, which replays the binary's seeded random
+  reference_trace_orders, which replays the binary's seeded random
   rowid suffixes + Scala 2.12 groupBy iteration — so every fuzz seed
   now also differentially validates the trace-order replica; the
   multiset checks are kept first to localize any failure)
@@ -93,13 +93,13 @@ def _assert_xes_equal(ours: str, ref: str, label: str) -> None:
 
 
 def _our_xes(events, schema, root, path, include_update_values):
-    from redo_log_parser_spark.sinks.xes import reference_trace_order
+    from redo_log_parser_spark.sinks.xes import reference_trace_orders
 
     traces = build_traces_df(
         events, schema, [root], include_update_values=include_update_values)
     write_xes_document(
         trace_xml_pretty(traces), path, root,
-        case_order=reference_trace_order(events, root))
+        case_order=reference_trace_orders(events, [root])[root])
     return open(path, encoding="utf-8").read()
 
 

@@ -26,11 +26,14 @@ from redo_log_parser_spark.operators.schema_discovery import (
 
 
 def _docs(spark, stmts):
+    """stmts: (statement, rid) or (statement, rid, 'dd-MMM-yyyy
+    HH:mm:ss'); without a timestamp, statement i is logged i seconds
+    after 01-JAN-2020."""
     t0 = datetime(2020, 1, 1)
     rows = []
-    for i, (stmt, rid) in enumerate(stmts):
+    for i, (stmt, rid, *stamp) in enumerate(stmts):
         ts = t0 + timedelta(seconds=i)
-        tss = ts.strftime("%d-%b-%Y %H:%M:%S").upper()
+        tss = stamp[0] if stamp else ts.strftime("%d-%b-%Y %H:%M:%S").upper()
         rows.append({
             "url": f"https://x/{i:06d}", "warc_ts": ts,
             "text": f"{stmt}\n{rid} {tss}", "lang": "en",
@@ -214,6 +217,31 @@ def test_eager_mode_delete_breaks_target_side(spark):
     key = ('"S"."T1"', "A", '"S"."T2"', "B")
     assert key in _inds(spark, stmts, "final")
     assert key not in _inds(spark, stmts, "eager")
+
+
+def test_eager_mode_violation_after_31_dec_9999_midnight(spark):
+    """B.K is off 'x' from 31-DEC-9999 06:00 to 08:00 while A.REF holds
+    'x' to the end of the log: A.REF ⊆ B.K breaks at 06:00 and never
+    re-adds. An A-interval that never closes is covered only by
+    B-intervals that reach the end of the log."""
+    from redo_log_parser_spark import oracle
+
+    stmts = [
+        ('insert into "S"."B"("K") values (\'x\');', "S1",
+         "30-DEC-9999 00:00:00"),
+        ('insert into "S"."A"("REF") values (\'x\');', "R1",
+         "30-DEC-9999 01:00:00"),
+        ('update "S"."B" set "K" = \'y\' where "K" = \'x\' and ROWID = \'S1\';',
+         "S1", "31-DEC-9999 06:00:00"),
+        ('update "S"."B" set "K" = \'x\' where "K" = \'y\' and ROWID = \'S1\';',
+         "S1", "31-DEC-9999 08:00:00"),
+    ]
+    got = _inds(spark, stmts, "eager")
+    want = oracle.eager_inds_replay(oracle.uniquify_row_ids(
+        oracle.parse_records([f"{s}\n{rid} {ts}" for s, rid, ts in stmts])))
+    assert got == want
+    assert ('"S"."A"', "REF", '"S"."B"', "K") not in got
+    assert ('"S"."A"', "REF", '"S"."B"', "K") in _inds(spark, stmts, "final")
 
 
 def test_eager_vs_final_on_reference_artifact(spark):

@@ -136,19 +136,21 @@ def test_trace_tail_job_budget(spark, mini_docs, tmp_path, jobs_in_group):
     """Spark jobs of a two-root run on the mini-log, per stage of
     run_parsed (the job tag rlps:<stage>). Every job run_parsed starts
     carries one stage tag. All roots share one cached trace frame, so
-    the .xes documents add one collect per root. The ceilings are the
-    counts measured when the stages got their tags (56 jobs in all; 87
-    before the shared trace frame); a change may lower them, never
-    raise them."""
+    the .xes documents add one collect per root; the reference trace
+    order adds one collect of the event log for all roots. The ceilings
+    are the counts measured when the stages got their tags (56 jobs in
+    all; 87 before the shared trace frame); a change may lower them,
+    never raise them."""
     roots = ('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"')
-    ceilings = {"fanout": 4, "discover": 27, "traces": 23,
-                "xes": len(roots)}
     tagged = spark.sparkContext._jsc.sc().statusTracker()
     mini_docs.count()  # materialize the fixture's own session cache
-    for xes in (False, True):
-        cfg = PipelineConfig(root_classes=roots, xes_document=xes)
-        out = str(tmp_path / f"xes{xes}")
-        group = f"job-budget-xes{xes}"
+    for xes, ref_order in ((False, False), (True, False), (True, True)):
+        ceilings = {"fanout": 4, "discover": 27, "traces": 23,
+                    "xes": len(roots) + ref_order}
+        cfg = PipelineConfig(root_classes=roots, xes_document=xes,
+                             reference_trace_order=ref_order)
+        out = str(tmp_path / f"xes{xes}{ref_order}")
+        group = f"job-budget-xes{xes}-order{ref_order}"
         _, n_jobs = jobs_in_group(
             group, lambda: run_parsed(parse(mini_docs), out, cfg))
         in_run = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
@@ -158,7 +160,7 @@ def test_trace_tail_job_budget(spark, mini_docs, tmp_path, jobs_in_group):
         assert all(per_stage[st] <= c for st, c in ceilings.items()), per_stage
         assert xes or per_stage["xes"] == 0, per_stage
         assert sum(per_stage.values()) == n_jobs, (per_stage, n_jobs)
-        assert n_jobs <= 56, n_jobs
+        assert n_jobs <= 56 + ref_order, n_jobs
 
 
 def test_strict_flag_forwarded_to_discovery(spark, mini_docs, tmp_path):

@@ -81,17 +81,18 @@ def test_mini_log_current_values_match_oracle(spark, mini_docs, mini_docs_pdf):
 
 
 def _docs_from_stmts(rows):
-    """rows: (stmt_type, table, rid, cols, vals) simplified builder."""
+    """rows: (statement, rid) or (statement, rid, 'dd-MMM-yyyy HH:mm:ss');
+    without a timestamp, row i is logged i seconds after 01-JAN-2020."""
     out = []
     t0 = datetime(2020, 1, 1)
-    for i, (stmt,) in enumerate([(r,) for r in rows]):
+    for i, (stmt, rid, *stamp) in enumerate(rows):
         ts = t0 + timedelta(seconds=i)
-        tss = ts.strftime("%d-%b-%Y %H:%M:%S").upper()
+        tss = stamp[0] if stamp else ts.strftime("%d-%b-%Y %H:%M:%S").upper()
         out.append(
             {
                 "url": f"https://x/{i:06d}",
                 "warc_ts": ts,
-                "text": f"{stmt[0]}\n{stmt[1]} {tss}",
+                "text": f"{stmt}\n{rid} {tss}",
                 "lang": "en",
             }
         )
@@ -134,6 +135,25 @@ def test_no_false_positive_from_sequential_reuse(spark):
     assert got["ID"] is True
     _, want = _oracle_schema(pdf)
     assert want['"S"."T"']["ID"].can_be_pk is True
+
+
+def test_overlap_with_interval_open_past_31_dec_9999_midnight(spark):
+    """A value still held at the end of the log overlaps every later
+    holder, also one that starts after 31-DEC-9999 00:00: the parser
+    accepts any time on that day, so no timestamp can stand for "never
+    closes"."""
+    rows = [
+        ('insert into "S"."T"("ID","NAME") values (\'1\',\'x\');', "A",
+         "30-DEC-9999 00:00:00"),
+        ('insert into "S"."T"("ID","NAME") values (\'2\',\'x\');', "B",
+         "31-DEC-9999 12:00:00"),
+    ]
+    pdf = _docs_from_stmts(rows)
+    cols_df, _ = discover_schema(_spark_events(spark, pdf))
+    got = {r["col"]: r["can_be_pk"] for r in cols_df.collect()}
+    _, want = _oracle_schema(pdf)
+    assert got == {c: col.can_be_pk for c, col in want['"S"."T"'].items()}
+    assert got == {"ID": True, "NAME": False}
 
 
 def test_delete_created_empty_column_subset_of_everything(spark):

@@ -244,7 +244,7 @@ def test_case_colliding_table_names(spark):
     table id, but the relation walk starts from the exact-case root
     only — the case-sibling's trace contains just its own entries."""
     from redo_log_parser_spark.pipeline import build_traces_df
-    from redo_log_parser_spark.sinks.xes import reference_trace_order
+    from redo_log_parser_spark.sinks.xes import reference_trace_orders
 
     docs, _ = _docs(spark, CASECLASH_LOG)
     events = uniquify_row_ids(parse_documents(docs))
@@ -266,7 +266,8 @@ def test_case_colliding_table_names(spark):
     assert c_name not in got["LAAAAX"]
     assert "&quot;SYSTEM&quot;.&quot;t&quot;" in got["LAAAAX"]
 
-    order = reference_trace_order(events, '"SYSTEM"."T"')
+    root = '"SYSTEM"."T"'
+    order = reference_trace_orders(events, [root])[root]
     assert sorted(order) == ["LAAAAX", "TAAAAX", "TAAABX"]
 
 

@@ -36,7 +36,7 @@ from redo_log_parser_spark.operators.schema_discovery import (
     discover_schema, summarize_schema)
 from redo_log_parser_spark.pipeline import build_traces_df
 from redo_log_parser_spark.sinks.xes import (
-    reference_trace_order, write_xes_document)
+    reference_trace_orders, write_xes_document)
 from redo_log_parser_spark.sources.logfile import read_log_files
 
 from refbin import ensure_reference_build, parse_schema_dump, run_reference
@@ -117,7 +117,7 @@ def test_utf16_threshold_xes_bytes(spark, tmp_path, ref_cp):
         out = tmp_path / "ours.xes"
         write_xes_document(
             trace_xml_pretty(traces), str(out), ROOT,
-            case_order=reference_trace_order(events, ROOT))
+            case_order=reference_trace_orders(events, [ROOT])[ROOT])
         got = out.read_text(encoding="utf-8")
         assert got == ref_xes
     finally:

@@ -171,7 +171,7 @@ def test_xes_bytes_match_real_reference_output(spark, tmp_path, root,
     Spark pipeline on the reference's own artifacts/redo_log.txt must
     reproduce the reference file exactly for each root.
 
-    Round 4 closed the last divergence: reference_trace_order replays
+    Round 4 closed the last divergence: reference_trace_orders replays
     the reference's seeded random row-id suffixes AND its Scala 2.12
     immutable-HashMap groupBy iteration (functions/scala_order.py), so
     the WHOLE FILE is now byte-equal with a plain comparison — no
@@ -180,7 +180,7 @@ def test_xes_bytes_match_real_reference_output(spark, tmp_path, root,
     import os
     import re
 
-    from redo_log_parser_spark.sinks.xes import reference_trace_order
+    from redo_log_parser_spark.sinks.xes import reference_trace_orders
     from redo_log_parser_spark.sources.logfile import read_log_files
 
     docs = read_log_files(spark, "/root/reference/artifacts/redo_log.txt")
@@ -195,7 +195,7 @@ def test_xes_bytes_match_real_reference_output(spark, tmp_path, root,
 
     # byte-faithful mode: plain whole-file equality
     path = str(tmp_path / "got_ref_order.xes")
-    order = reference_trace_order(events, root)
+    order = reference_trace_orders(events, [root])[root]
     write_xes_document(pretty, path, root, case_order=order)
     assert open(path).read() == ref
 
