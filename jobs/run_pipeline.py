@@ -39,10 +39,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from redo_log_parser_spark.config import PipelineConfig
+from redo_log_parser_spark.functions.scala_order import reference_console_order
 from redo_log_parser_spark.pipeline import parse, run_parsed
 from redo_log_parser_spark.session import get_spark
 from redo_log_parser_spark.sinks.lineage import (
     TAIL_BUCKET, completed_buckets, read_resumed, record_lineage, run_resumable)
+from redo_log_parser_spark.sinks.xes import collect_clean_log
 from redo_log_parser_spark.sources.documents import read_documents
 
 
@@ -109,11 +111,12 @@ def main() -> int:
     )
     ap.add_argument(
         "--reference-console-order", action="store_true",
-        help="with --print-schema: emit the dump in the reference "
-        "binary's exact byte order (Scala-HashMap table/column/"
-        "FK-target iteration, replayed in pure Python and cross-checked "
-        "against the engine's discovered sets); default sorts "
-        "deterministically",
+        help="with --print-schema: lay the discovered schema out in "
+        "the reference binary's Scala-HashMap table/column/FK-target "
+        "order (replayed on the driver over the collected clean log); "
+        "default sorts deterministically. The dump is byte-identical "
+        "to the binary's when the run uses its semantics: --eager-ind, "
+        "plus --reference-monotonicity under --strict",
     )
     ap.add_argument(
         "--parser", choices=("pandas", "sql"), default="pandas",
@@ -137,6 +140,10 @@ def main() -> int:
         "gains a '#kkkk' position suffix preserving (warc_ts, url) "
         "order. Fuzz-validated (diff_fuzz_sweep --axis packdoc)")
     args = ap.parse_args()
+    if args.reference_console_order and not args.print_schema:
+        ap.error("--reference-console-order needs --print-schema")
+    if args.reference_trace_order and not args.xes_file:
+        ap.error("--reference-trace-order needs --xes-file")
     if not args.no_resume and TAIL_BUCKET in completed_buckets(args.output):
         # finished output: no session, no job
         print({"buckets_processed": 0})
@@ -164,66 +171,6 @@ def main() -> int:
 
         docs = explode_log_records(docs)
 
-    def _reference_order_dump(docs, cfg, strict, res):
-        """Byte-faithful reference console dump: pure-Python replay
-        (oracle.reference_console_dump — binary-validated) over the
-        collected log, cross-checked against the engine's discovered
-        sets when the CLI modes match the reference's semantics
-        (--eager-ind; --reference-monotonicity for strict)."""
-        from redo_log_parser_spark import oracle
-
-        # logfile-sourced docs carry no warc_ts column (the ts lives in
-        # the text chunk); their zero-padded urls alone give file order
-        order_cols = [c for c in ("warc_ts", "url") if c in docs.columns]
-        sel = docs.select(*order_cols, "text")
-        # one job: the limit both guards and collects (count()-then-
-        # collect() would scan the input twice)
-        rows = sel.orderBy(*order_cols).limit(1_000_001).collect()
-        if len(rows) > 1_000_000:
-            raise SystemExit(
-                "--reference-console-order collects the whole input to "
-                "the driver (> 1,000,000 rows); it replicates "
-                "the reference CLI's console HashMap order and is meant "
-                "for reference-CLI-sized logs only. Drop the flag to use "
-                "the engine's sorted schema dump for large inputs."
-            )
-        entries = oracle.uniquify_row_ids(
-            oracle.parse_records([r["text"] for r in rows], cfg))
-        dump = oracle.reference_console_dump(entries, strict=strict)
-
-        def canon(s):
-            out, cur = {}, None
-            for ln in s.splitlines():
-                if not ln.strip():
-                    continue
-                if ln.startswith("TABLE "):
-                    cur = ln[6:].strip()
-                    out.setdefault(cur, set())
-                    continue
-                ln = ln.rstrip()
-                m = "FK CANDIDATE FOR: "
-                if m in ln:
-                    head, tg = ln.split(m, 1)
-                    ln = head + m + " AND ".join(sorted(tg.split(" AND ")))
-                out[cur].add(ln)
-            return out
-
-        modes_match = cfg.eager_ind and (
-            not strict or cfg.reference_monotonicity
-        )
-        if modes_match:
-            ours = canon(res.schema.format_console(strict=strict))
-            # explicit raise, not assert: this guard must survive
-            # python -O / PYTHONOPTIMIZE (a divergence here means the
-            # byte-faithful replica and the engine disagree — never
-            # print an unflagged wrong dump)
-            if canon(dump) != ours:
-                raise ValueError(
-                    "reference-order dump disagrees with the engine's "
-                    "discovered schema — report this"
-                )
-        return dump
-
     if args.verbose:
         from redo_log_parser_spark.pipeline import print_verbose_entries
 
@@ -250,7 +197,8 @@ def main() -> int:
         record_lineage(args.output, {
             "bucket": TAIL_BUCKET, "status": "ok", "rows_in": rows_in,
             "rows_clean": rows_in - rejects, "rows_reject": rejects,
-            "wall_sec": time.monotonic() - t0, "run_id": args.run_id,
+            "wall_sec": time.monotonic() - t0, "n_buckets": args.buckets,
+            "run_id": args.run_id,
         })
     if args.print_schema and res.schema is not None:
         # reference console dump incl. its header line
@@ -259,10 +207,12 @@ def main() -> int:
             "\nExctracted the following database schema from "
             "transformed log entries:"
         )
+        order = None
         if args.reference_console_order:
-            print(_reference_order_dump(docs, cfg, args.strict, res))
-        else:
-            print(res.schema.format_console(strict=args.strict))
+            order = reference_console_order(collect_clean_log(
+                parsed, ("table_id", "op", "insert_cols", "upd_attr",
+                         "delete_cols")))
+        print(res.schema.format_console(strict=args.strict, order=order))
     print({"routed": res.routed_counts, "traces": res.n_traces, **resumed})
     return 0
 

@@ -41,6 +41,8 @@ golden passes with plain diff once traces are emitted in this order.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 _M32 = 0xFFFFFFFF
 
 
@@ -87,55 +89,38 @@ def byteswap32(v: int) -> int:
     return (hc * 0x9E3775CD) & _M32
 
 
-class _MutableHashTableReplica:
-    """Order-faithful replica of 2.12 mutable.HashMap's HashTable:
-    byteswap32 improve rotated by tableSizeSeed, index from the HIGH
-    bits, per-bucket PREPEND on insert, resize x2 at count > 0.75*len
-    (re-inserting each old bucket in chain order at the new index,
-    which REVERSES chains that stay together), iteration from the last
-    populated bucket DOWN to 0, each chain head-first."""
+def mutable_hashmap_order(keys_in_insertion_order: list[str]) -> list[str]:
+    """Iteration order of a 2.12 mutable.HashMap[String, _] filled with
+    these keys (repeats are no-ops). Order-faithful replica of its
+    HashTable (mutable/HashTable.scala): byteswap32 improve rotated by
+    tableSizeSeed, index from the HIGH bits, per-bucket PREPEND on
+    insert, resize x2 at count > 0.75*len (re-inserting each old bucket,
+    walked from the END down, head-first at its new index, which
+    REVERSES chains that stay together), iteration from the last bucket
+    DOWN to 0, each chain head-first."""
+    # tableSizeSeed of the initial 16-slot table = bitCount(15) = 4,
+    # assigned ONCE — HashTable.scala leaves it untouched in resize()
+    seed = 4
 
-    # seedvalue is assigned ONCE at construction (tableSizeSeed of the
-    # initial 16-slot table = bitCount(15) = 4) and never recomputed on
-    # resize — HashTable.scala keeps the var untouched in resize()
-    _SEED = 4
+    def index(key: str, size: int) -> int:
+        i = byteswap32(java_string_hash(key))
+        rotated = ((i >> seed) | (i << (32 - seed))) & _M32
+        return (rotated >> (33 - size.bit_length())) & (size - 1)
 
-    def __init__(self):
-        self.table: list[list[str]] = [[] for _ in range(16)]
-        self.count = 0
-
-    def _index(self, hcode: int) -> int:
-        ones = len(self.table) - 1
-        exponent = 32 - ones.bit_length()
-        i = byteswap32(hcode)
-        rot = self._SEED % 32
-        rotated = ((i >> rot) | (i << (32 - rot))) & _M32
-        return (rotated >> exponent) & ones
-
-    def add(self, key: str) -> None:
-        idx = self._index(java_string_hash(key))
-        bucket = self.table[idx]
+    table: list[list[str]] = [[] for _ in range(16)]
+    count = 0
+    for key in keys_in_insertion_order:
+        bucket = table[index(key, len(table))]
         if key in bucket:
-            return
+            continue
         bucket.insert(0, key)
-        self.count += 1
-        if self.count > (len(self.table) * 750) // 1000:
-            self._resize()
-
-    def _resize(self) -> None:
-        old = self.table
-        self.table = [[] for _ in range(len(old) * 2)]
-        # HashTable.resize walks the OLD table from the END down and
-        # re-prepends each chain head-first into the new table
-        for i in range(len(old) - 1, -1, -1):
-            for key in old[i]:
-                self.table[self._index(java_string_hash(key))].insert(0, key)
-
-    def iteration_order(self) -> list[str]:
-        out: list[str] = []
-        for i in range(len(self.table) - 1, -1, -1):
-            out.extend(self.table[i])
-        return out
+        count += 1
+        if count > len(table) * 3 // 4:
+            old, table = table, [[] for _ in range(2 * len(table))]
+            for chain in reversed(old):
+                for k in chain:
+                    table[index(k, len(table))].insert(0, k)
+    return [k for chain in reversed(table) for k in chain]
 
 
 def scala212_groupby_order(keys_in_first_seen_order: list[str]) -> list[str]:
@@ -160,11 +145,41 @@ def scala212_groupby_order(keys_in_first_seen_order: list[str]) -> list[str]:
     distinct = list(dict.fromkeys(keys_in_first_seen_order))
     if len(distinct) <= 4:
         return distinct
-    ht = _MutableHashTableReplica()
-    for k in distinct:
-        ht.add(k)
-    pos = {k: i for i, k in enumerate(ht.iteration_order())}
+    pos = {k: i for i, k in enumerate(mutable_hashmap_order(distinct))}
     return sorted(distinct, key=lambda k: (hamt_order_key(k), pos[k]))
+
+
+def reference_console_order(
+    rows: Iterable[tuple[str, str, list | None, str | None, list | None]],
+) -> tuple[list[str], dict[str, list[str]]]:
+    """The reference console dump's table and column order
+    (cli/package.scala:55-66 iterates its schema HashMaps), from the
+    clean log rows `(table_id, op, insert_cols, upd_attr, delete_cols)`
+    in log order. Returns (tables, {table: columns}).
+
+      * tables: mutable.HashMap[String, Table] over the table ids,
+        inserted in first-appearance order;
+      * columns per table: mutable.HashMap[String, Column], inserted in
+        first-appearance order, where each statement contributes its
+        columns in the iteration order of the attribute map FileParser
+        builds for it (a mutable.HashMap in statement order); a delete's
+        map is additionally rebuilt by `.filter(_ != ROWID)`, which
+        re-hashes the survivors into a new map."""
+    col_seq: dict[str, list[str]] = {}  # first-appearance order
+    for table_id, op, insert_cols, upd_attr, delete_cols in rows:
+        if op == "insert":
+            cols = mutable_hashmap_order(insert_cols)
+        elif op == "update":
+            cols = [upd_attr]
+        else:
+            cols = mutable_hashmap_order(
+                [c for c in mutable_hashmap_order(delete_cols) if c != "ROWID"])
+        seen = col_seq.setdefault(table_id, [])
+        for c in cols:
+            if c not in seen:
+                seen.append(c)
+    tables = mutable_hashmap_order(list(col_seq))
+    return tables, {t: mutable_hashmap_order(col_seq[t]) for t in tables}
 
 
 class JavaRandom:

@@ -501,38 +501,53 @@ class SchemaSummary:
     def pk_candidates(self) -> set[tuple[str, str]]:
         return {(c["table_id"], c["col"]) for c in self.columns if c["is_pk"]}
 
-    def format_console(self, strict: bool = False) -> str:
+    def format_console(
+        self, strict: bool = False,
+        order: tuple[list[str], dict[str, list[str]]] | None = None,
+    ) -> str:
         """The reference's schema dump (Table.scala:38-42,
         Column.scala:43-61): per table a 'TABLE <name>' line, then one
         line per column — '<name> (PRIMARY KEY) ' or
         '(STRONG PRIMARY KEY)' under strict, plus
-        'FK CANDIDATE FOR: <t>.<c> AND ...' from isSubsetOf. The
-        reference iterates HashMaps (arbitrary order); this sorts tables
-        and columns for determinism."""
-        fk_by_col: dict[tuple[str, str], list[str]] = {}
-        for i in sorted(
-            self.inds,
-            key=lambda i: (i["table_id"], i["col"], i["ref_table"], i["ref_col"]),
-        ):
-            fk_by_col.setdefault((i["table_id"], i["col"]), []).append(
-                f"{i['ref_table']}.{i['ref_col']}"
-            )
+        'FK CANDIDATE FOR: <t>.<c> AND ...' from isSubsetOf.
+
+        The reference iterates HashMaps. By default this sorts tables,
+        columns and FK targets for determinism. `order` = (tables,
+        {table: columns}) from scala_order.reference_console_order lays
+        the dump out in the reference's order instead: tables and
+        columns as given, and FK targets as the reference's permutation
+        walk leaves them, the other tables in REVERSE table order with
+        each table's columns in forward order (see
+        oracle.reference_console_dump)."""
+        by_col = {(c["table_id"], c["col"]): c for c in self.columns}
+        if order is None:
+            tables = self.tables
+            cols_of = {t: sorted(c for tc, c in by_col if tc == t)
+                       for t in tables}
+            target_tables = tables
+        else:
+            tables, cols_of = order
+            target_tables = tables[::-1]
+        inds = {(i["table_id"], i["col"], i["ref_table"], i["ref_col"])
+                for i in self.inds}
         blocks = []
-        for t in self.tables:
+        for t in tables:
             lines = [f"TABLE {t}"]
-            cols = sorted(
-                (c for c in self.columns if c["table_id"] == t),
-                key=lambda c: c["col"],
-            )
-            for c in cols:
+            for c in cols_of[t]:
                 pk = (
                     (" (STRONG PRIMARY KEY)" if strict else " (PRIMARY KEY)")
-                    if c["is_pk"]
+                    if by_col[(t, c)]["is_pk"]
                     else ""
                 )
-                targets = fk_by_col.get((t, c["col"]), [])
+                targets = [
+                    f"{o}.{oc}"
+                    for o in target_tables
+                    if o != t
+                    for oc in cols_of[o]
+                    if (t, c, o, oc) in inds
+                ]
                 fk = "FK CANDIDATE FOR: " + " AND ".join(targets) if targets else ""
-                lines.append(f"{c['col']}{pk} {fk}")
+                lines.append(f"{c}{pk} {fk}")
             blocks.append("\n".join(lines))
         return "\n\n".join(blocks)
 

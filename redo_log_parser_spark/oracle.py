@@ -3,6 +3,9 @@
 This module is used ONLY by tests and parity checks: it is a direct,
 row-at-a-time restatement of the reference pipeline so the distributed
 DataFrame implementation can be verified against it on small inputs.
+No pipeline or CLI path imports it: `--reference-console-order` lays
+the engine's own schema out with functions/scala_order
+.reference_console_order, which reference_console_dump calls too.
 It deliberately mirrors the eager fold structure of the Scala code
 (cited per function) including its quirks (NULL -> "UL" token stripping,
 greedy regex splits, delete-only-named-columns value removal).
@@ -32,6 +35,7 @@ from .config import PipelineConfig, DEFAULT_CONFIG
 from .functions.javaspace import (
     java_equals_ignore_case, py_is_blank, py_java_trim)
 from .functions.javatime import py_smart_resolve
+from .functions.scala_order import reference_console_order
 
 # Regexes lifted verbatim from parser/package.scala:19-27. Scala's
 # `val pattern(g...) = s` requires a FULL match, so re.fullmatch is used.
@@ -433,15 +437,9 @@ def reference_console_dump(entries: list[ParsedEntry], strict: bool = False) -> 
     .mkString("\\n\\n")` over Table.toString / Column.toString) —
     including every Scala-HashMap iteration order the reference leaks:
 
-      * TABLE order: mutable.HashMap[String, Table] iteration over the
-        table ids (insertion = first appearance in the log) —
-        functions/scala_order._MutableHashTableReplica;
-      * COLUMN order per table: mutable.HashMap[String, Column]
-        iteration, whose insertion sequence itself follows each
-        statement's attribute-map iteration (FileParser builds
-        mutable.HashMap per statement in statement order; deletes
-        additionally pass through a `.filter(_ != ROWID)` REBUILD whose
-        new map re-hashes the survivors — replicated);
+      * TABLE and COLUMN order: the schema's mutable.HashMap
+        iteration, functions/scala_order.reference_console_order (the
+        CLI's --reference-console-order uses the same function);
       * FK-target order within a line: the stored isSubsetOf sequence
         after the permutation walk. Every entry re-evaluates candidates
         per permutation of schema.toSeq and rewrites the stored seq on
@@ -458,35 +456,11 @@ def reference_console_dump(entries: list[ParsedEntry], strict: bool = False) -> 
     eager_inds_replay (table-birth gate). Validated byte-for-byte
     against the in-sandbox binary in
     tests/test_reference_console_order.py."""
-    from .functions.scala_order import _MutableHashTableReplica
-
-    def map_order(keys: list[str]) -> list[str]:
-        ht = _MutableHashTableReplica()
-        for k in keys:
-            ht.add(k)
-        return ht.iteration_order()
-
     schema = extract_schema(entries)
     pairs = eager_inds_replay(entries)
-    table_seq: list[str] = []
-    col_seq: dict[str, list[str]] = {}
-    for e in entries:
-        if e.table_id not in col_seq:
-            table_seq.append(e.table_id)
-            col_seq[e.table_id] = []
-        if e.op == "insert":
-            cols = map_order(e.insert_cols)
-        elif e.op == "update":
-            cols = [e.upd_attr]
-        else:
-            original = map_order(e.delete_cols)
-            cols = map_order([c for c in original if c != "ROWID"])
-        seen = col_seq[e.table_id]
-        for c in cols:
-            if c not in seen:
-                seen.append(c)
-    t_order = map_order(table_seq)
-    c_order = {t: map_order(col_seq[t]) for t in t_order}
+    t_order, c_order = reference_console_order(
+        (e.table_id, e.op, e.insert_cols, e.upd_attr, e.delete_cols)
+        for e in entries)
 
     blocks = []
     for t in t_order:

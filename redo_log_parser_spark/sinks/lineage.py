@@ -41,15 +41,28 @@ def _data_dir(out_dir: str) -> str:
     return f"{out_dir}/data"
 
 
-def completed_buckets(out_dir: str) -> set[int]:
+def completed_buckets(out_dir: str, n_buckets: int | None = None) -> set[int]:
     """Buckets with an `ok` manifest entry. The manifest is a few small
-    JSON files written by the driver, so it is read there: no Spark job."""
+    JSON files written by the driver, so it is read there: no Spark job.
+
+    With `n_buckets`, raises ValueError on an entry recorded for another
+    bucket count: its bucket id hashed the urls modulo that count, so it
+    names a different slice of the input, and trusting it would skip or
+    re-parse (and duplicate) rows."""
     done = set()
     for name in glob.glob(f"{_lineage_dir(out_dir)}/*.json"):
         with open(name) as fh:
             entry = json.load(fh)
-        if entry["status"] == "ok":
-            done.add(entry["bucket"])
+        if entry["status"] != "ok":
+            continue
+        recorded = entry.get("n_buckets", n_buckets)
+        if n_buckets is not None and recorded != n_buckets:
+            raise ValueError(
+                f"{out_dir} was checkpointed with {recorded} buckets, not "
+                f"the requested {n_buckets}: resume with --buckets "
+                f"{recorded}, or write to a new output"
+            )
+        done.add(entry["bucket"])
     return done
 
 
@@ -100,7 +113,7 @@ def run_resumable(
     buckets shared it — per-bucket timing does not exist in a
     single-action write."""
     spark = docs.sparkSession
-    done = completed_buckets(out_dir)
+    done = completed_buckets(out_dir, n_buckets)
     pending = [b for b in range(n_buckets) if b not in done]
     if not pending:
         return []
@@ -142,6 +155,7 @@ def run_resumable(
             "rows_reject": int(n - n_clean),
             "wall_sec": wall,
             "job_buckets": len(pending),
+            "n_buckets": n_buckets,
             "run_id": run_id,
         }
         record_lineage(out_dir, entry)

@@ -16,9 +16,10 @@ Content per trace has log order.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..functions.javaspace import java_equals_ignore_case
@@ -76,12 +77,43 @@ def write_xes_document(
                 f"(e.g. {sorted(missing)[:3]}), {len(extra)} order "
                 f"entries absent from the data (e.g. {sorted(extra)[:3]})"
             )
-    with open(path, "w", encoding="utf-8", newline="") as fh:
-        fh.write(xes_pretty_header(root_table) + "\n")
-        for c in case_order:
-            fh.write(by_case[c] + "\n")
-        fh.write("</log>")
+    # renamed into place: a failed write leaves no truncated document
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w", encoding="utf-8", newline="") as fh:
+            fh.write(xes_pretty_header(root_table) + "\n")
+            for c in case_order:
+                fh.write(by_case[c] + "\n")
+            fh.write("</log>")
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
     return len(case_order)
+
+
+def collect_clean_log(
+    frame: DataFrame, cols: Iterable[str], max_rows: int = 1_000_000,
+) -> list[Row]:
+    """The clean rows of a parsed or event frame (null `parse_error`),
+    `cols` only, in log order (ts, url), for the driver-side replays of
+    the reference's HashMap orders. Raises ValueError beyond
+    `max_rows`: those replays are for reference-CLI-sized logs."""
+    if "parse_error" in frame.columns:
+        frame = frame.filter(F.col("parse_error").isNull())
+    # ONE job: limit(max_rows + 1) both enforces the guard and collects
+    # (a separate count() would recompute the whole lineage — exactly
+    # on the large uncached inputs the guard exists for)
+    rows = (frame.orderBy("ts", "url").select(*cols)
+            .limit(max_rows + 1).collect())
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"the reference orders collect the clean log to the driver "
+            f"(> max_rows={max_rows} rows), for reference-CLI-sized logs "
+            "only. Use the default sorted order for large inputs, or "
+            "raise max_rows explicitly."
+        )
+    return rows
 
 
 def reference_trace_orders(
@@ -104,22 +136,8 @@ def reference_trace_orders(
     `orig#k` ids, and the HAMT replica orders them. Driver-side over
     the collected event log, collected once for all roots —
     reference-CLI-sized inputs only."""
-    rows = events
-    if "parse_error" in rows.columns:
-        rows = rows.filter(F.col("parse_error").isNull())
-    rows = rows.select("ts", "url", "orig_row_id", "row_id", "op", "table_id")
-    # ONE job: limit(max_rows + 1) both enforces the guard and collects
-    # (a separate count() would recompute the whole events lineage —
-    # exactly on the large uncached inputs the guard exists for)
-    collected = rows.orderBy("ts", "url").limit(max_rows + 1).collect()
-    if len(collected) > max_rows:
-        raise ValueError(
-            f"reference_trace_orders collects the event log to the driver "
-            f"(> max_rows={max_rows} rows); it exists only to "
-            "replicate the reference CLI's HashMap trace order on "
-            "reference-CLI-sized logs. Use the default sorted case_id "
-            "order for large inputs, or raise max_rows explicitly."
-        )
+    collected = collect_clean_log(
+        events, ("orig_row_id", "row_id", "op", "table_id"), max_rows)
     ref_map = reference_row_id_map(
         [(r["orig_row_id"], r["op"]) for r in collected], seed
     )

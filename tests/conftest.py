@@ -1,9 +1,14 @@
+import ast
+import contextlib
+import importlib.util
+import io
 import os
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from redo_log_parser_spark.session import get_spark  # noqa: E402
 
@@ -59,4 +64,30 @@ def jobs_in_group(spark):
             sc.setJobGroup(None, None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
+    return run
+
+
+@pytest.fixture(scope="module")
+def cli(spark):
+    """Call `jobs/run_pipeline.py`'s main() in this process, on the test
+    session; returns the dict it printed last. `cli.module` is the
+    loaded CLI module, `cli.stdout` the last run's whole stdout."""
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline_cli", os.path.join(REPO, "jobs", "run_pipeline.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    mod.get_spark = lambda *a, **k: spark
+
+    def run(*argv):
+        buf, saved = io.StringIO(), sys.argv
+        sys.argv = ["run_pipeline.py", *argv]
+        try:
+            with contextlib.redirect_stdout(buf):
+                assert mod.main() == 0
+        finally:
+            sys.argv = saved
+            run.stdout = buf.getvalue()
+        return ast.literal_eval(buf.getvalue().strip().splitlines()[-1])
+
+    run.module = mod
     return run

@@ -1,13 +1,8 @@
 """End-to-end: fan-out routing counts, lineage resume, logfile-source
 parity, enrichment, the CLI's resumable default path."""
 
-import ast
-import contextlib
 import hashlib
-import importlib.util
-import io
 import os
-import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -448,33 +443,6 @@ def cli_input(spark, mini_docs, tmp_path_factory):
     return path
 
 
-@pytest.fixture(scope="module")
-def cli(spark):
-    """Call `jobs/run_pipeline.py`'s main() in this process, on the test
-    session; returns the dict it printed last. `cli.module` is the
-    loaded CLI module."""
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jobs", "run_pipeline.py")
-    spec = importlib.util.spec_from_file_location("run_pipeline_cli", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    mod.get_spark = lambda *a, **k: spark
-
-    def run(*argv):
-        buf, saved = io.StringIO(), sys.argv
-        sys.argv = ["run_pipeline.py", *argv]
-        try:
-            with contextlib.redirect_stdout(buf):
-                assert mod.main() == 0
-        finally:
-            sys.argv = saved
-        return ast.literal_eval(buf.getvalue().strip().splitlines()[-1])
-
-    run.module = mod
-    return run
-
-
 def _cli_args(inp, out, *extra):
     return ("--input", inp, "--output", out, "--root-class", ROOT,
             "--xes-file", *extra)
@@ -599,3 +567,41 @@ def test_cli_rerun_on_finished_output_starts_no_job(
     summary, n_jobs = jobs_in_group("cli-finished-rerun", lambda: cli(*args))
     assert summary == {"buckets_processed": 0}
     assert n_jobs == 0
+
+
+def test_cli_refuses_resume_with_other_bucket_count(
+        cli, cli_input, single_pass, tmp_path):
+    """A checkpoint's bucket ids hash urls modulo its own bucket count:
+    resuming with another --buckets would re-parse rows under new ids
+    beside the old ones. The rerun raises, naming both counts, and
+    resuming with the recorded count still gives the single-pass
+    sinks."""
+    import glob
+
+    digests, summary = single_pass
+    out = str(tmp_path / "rebucketed")
+    assert cli(*_cli_args(cli_input, out, "--buckets", "4"))[
+        "buckets_processed"] == 4
+    # a crash after parse: the completion entry is missing
+    for f in glob.glob(f"{out}/_lineage/bucket_-0001_*.json"):
+        os.remove(f)
+    with pytest.raises(ValueError, match="4 buckets.* 8"):
+        cli(*_cli_args(cli_input, out, "--buckets", "8"))
+    assert cli(*_cli_args(cli_input, out, "--buckets", "4")) == {
+        **summary, "buckets_processed": 0}
+    assert _sink_digests(out) == digests
+
+
+@pytest.mark.parametrize("flag, needs", [
+    ("--reference-console-order", "--print-schema"),
+    ("--reference-trace-order", "--xes-file"),
+])
+def test_cli_rejects_flag_without_its_output(
+        cli, cli_input, tmp_path, capsys, flag, needs):
+    """A flag that only changes an output the run does not write is an
+    error, not silently ignored."""
+    with pytest.raises(SystemExit) as exc:
+        cli("--input", cli_input, "--output", str(tmp_path / "out"),
+            "--root-class", ROOT, flag)
+    assert exc.value.code == 2
+    assert f"{flag} needs {needs}" in capsys.readouterr().err

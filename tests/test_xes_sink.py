@@ -1,5 +1,6 @@
 """XES document sink + strict mode end-to-end."""
 
+import os
 import xml.etree.ElementTree as ET
 
 import pytest
@@ -77,6 +78,19 @@ def test_xes_document_rejects_duplicate_case_ids(spark, tmp_path):
         write_xes_document(dup, path, "ORDERS")
     with pytest.raises(ValueError, match="duplicate case ids"):
         write_xes_document(dup, path, "ORDERS", case_order=["c1", "c2"])
+
+
+def test_xes_document_failed_write_leaves_no_file(spark, tmp_path):
+    """A write that fails mid-document (here a null block on the second
+    case) leaves neither the document nor a partial file: a truncated
+    .xes under the final name would look complete."""
+    frame = spark.createDataFrame(
+        [("c1", "  <trace>\n  </trace>"), ("c2", None)],
+        "case_id string, trace_xml string",
+    )
+    with pytest.raises(TypeError):
+        write_xes_document(frame, str(tmp_path / "out.xes"), "ORDERS")
+    assert os.listdir(tmp_path) == []
 
 
 def test_strict_mode_pipeline(spark, mini_docs):
