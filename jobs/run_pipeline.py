@@ -66,7 +66,12 @@ def main() -> int:
         "parse+discovery pass (the reference's interactive multi-root "
         "loop, Main.scala:131-162)",
     )
-    ap.add_argument("--timestamp-pattern", default="dd-MMM-yyyy HH:mm:ss")
+    ap.add_argument(
+        "--timestamp-pattern", default="dd-MMM-yyyy HH:mm:ss",
+        help="java.time pattern of the id-line stamps, built of the "
+        "tokens yyyy MMM MM dd HH mm ss and literals; any other "
+        "pattern is refused (exit 2)",
+    )
     ap.add_argument("--include-update-values", action="store_true")
     ap.add_argument("--strict", action="store_true")
     ap.add_argument(
@@ -118,15 +123,6 @@ def main() -> int:
         "to the binary's when the run uses its semantics: --eager-ind, "
         "plus --reference-monotonicity under --strict",
     )
-    ap.add_argument(
-        "--parser", choices=("pandas", "sql"), default="pandas",
-        help="parse kernel: 'pandas' (default — the byte-parity Arrow "
-        "reference kernel) or 'sql' (pure-JVM expression parser — no "
-        "Python workers on the cluster; identical output on well-formed "
-        "records, parity-pinned incl. hostile values, and measured "
-        "FASTER end-to-end through this pipeline: sf1 2.5M rows 91 s "
-        "pandas vs 77 s sql, hash-identical sinks; see PLANS.md §14)",
-    )
     ap.add_argument("--buckets", type=int, default=16,
                     help="url-hash buckets of the parse checkpoint")
     ap.add_argument("--run-id", default="run0")
@@ -144,22 +140,25 @@ def main() -> int:
         ap.error("--reference-console-order needs --print-schema")
     if args.reference_trace_order and not args.xes_file:
         ap.error("--reference-trace-order needs --xes-file")
+    try:
+        cfg = PipelineConfig(
+            ts_format_java=args.timestamp_pattern,
+            include_update_values=args.include_update_values,
+            strict_primary_keys=args.strict,
+            eager_ind=args.eager_ind,
+            reference_monotonicity=args.reference_monotonicity,
+            xes_document=args.xes_file,
+            reference_trace_order=args.reference_trace_order,
+            root_classes=tuple(args.root_class or ()),
+        )
+    except ValueError as e:  # an unsupported --timestamp-pattern
+        ap.error(str(e))
     if not args.no_resume and TAIL_BUCKET in completed_buckets(args.output):
         # finished output: no session, no job
         print({"buckets_processed": 0})
         return 0
 
     spark = get_spark("rlps-pipeline")
-    cfg = PipelineConfig(
-        ts_format_java=args.timestamp_pattern,
-        include_update_values=args.include_update_values,
-        strict_primary_keys=args.strict,
-        eager_ind=args.eager_ind,
-        reference_monotonicity=args.reference_monotonicity,
-        xes_document=args.xes_file,
-        reference_trace_order=args.reference_trace_order,
-        root_classes=tuple(args.root_class or ()),
-    )
     if args.input_format == "logfile":
         from redo_log_parser_spark.sources.logfile import read_log_files
 
@@ -174,16 +173,16 @@ def main() -> int:
     if args.verbose:
         from redo_log_parser_spark.pipeline import print_verbose_entries
 
-        print_verbose_entries(docs, cfg, source=args.input, parser=args.parser)
+        print_verbose_entries(docs, cfg, source=args.input)
 
     if args.no_resume:
-        parsed = parse(docs, cfg, args.parser)
+        parsed = parse(docs, cfg)
         resumed = {}
     else:
         entries = run_resumable(
             docs, args.output,
-            lambda df: parse(df, cfg, args.parser,
-                             keep_cols=("url", "warc_ts", "lang", "bucket")),
+            lambda df: parse(
+                df, cfg, keep_cols=("url", "warc_ts", "lang", "bucket")),
             n_buckets=args.buckets, run_id=args.run_id,
         )
         parsed = read_resumed(spark, args.output)

@@ -10,40 +10,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+from .functions.javatime import compile_java_ts_format
+
 # Reference default: cli/package.scala:20 ("dd-MMM-yyyy HH:mm:ss").
 DEFAULT_TS_FORMAT_JAVA = "dd-MMM-yyyy HH:mm:ss"
-
-_JAVA_TO_STRPTIME = [
-    ("yyyy", "%Y"),
-    ("MMM", "%b"),
-    ("MM", "%m"),
-    ("dd", "%d"),
-    ("HH", "%H"),
-    ("mm", "%M"),
-    ("ss", "%S"),
-]
-
-
-def java_ts_format_to_strptime(java_fmt: str) -> str:
-    """Translate the subset of java.time patterns the reference accepts
-    (README.md:62-70 shows 'dd-MMM-yyyy HH:mm:ss' and
-    'yyyy-MM-dd HH:mm:ss') into strptime format for the pandas kernel.
-
-    Month-name matching is case-insensitive in both the reference
-    (parser/package.scala:13-16, parseCaseInsensitive) and Python
-    strptime, so no extra handling is needed.
-    """
-    out = java_fmt
-    for java_tok, py_tok in _JAVA_TO_STRPTIME:
-        out = out.replace(java_tok, py_tok)
-    return out
 
 
 @dataclass(frozen=True)
 class PipelineConfig:
     """Knobs for one pipeline run."""
 
-    # --timestampPattern (cli/Main.scala flag; cli/package.scala:20)
+    # --timestampPattern (cli/Main.scala flag; cli/package.scala:20),
+    # compiled by functions/javatime.compile_java_ts_format
     ts_format_java: str = DEFAULT_TS_FORMAT_JAVA
     # --includeUpdateValues (cli/package.scala:17): event names carry the
     # new value for updates (TraceIDParser.scala:124-127).
@@ -82,9 +60,10 @@ class PipelineConfig:
     # Column.scala:104-124; see operators/schema_discovery.monotonicity).
     reference_monotonicity: bool = False
 
-    @property
-    def ts_format_strptime(self) -> str:
-        return java_ts_format_to_strptime(self.ts_format_java)
+    def __post_init__(self):
+        # java.time refuses a bad pattern when the reference builds its
+        # formatter, before any row is read; ValueError here likewise
+        compile_java_ts_format(self.ts_format_java)
 
 
 DEFAULT_CONFIG = PipelineConfig()

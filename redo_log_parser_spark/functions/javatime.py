@@ -1,10 +1,18 @@
-"""java.time ResolverStyle.SMART replica for reference timestamp parity.
+"""The reference's --timestampPattern, compiled once for every parse
+path, and its java.time ResolverStyle.SMART replica.
 
-The reference parses timestamps with `DateTimeFormatterBuilder()
-.parseCaseInsensitive().appendPattern(fmt).toFormatter` — the DEFAULT
-resolver style, SMART (parser/package.scala:13-16, FileParser.scala:59).
-SMART accepts two shapes a strict parse rejects, binary-probed this
-session (round 5, fuzz axis `smartts`):
+The reference parses each stamp into a LocalDateTime with ONE
+formatter, `DateTimeFormatterBuilder().parseCaseInsensitive()
+.appendPattern(fmt).toFormatter` (parser/package.scala:13-16,
+FileParser.scala:59). `compile_java_ts_format` is the one translation
+of that pattern here: the kernel and the oracle fullmatch its regex
+before strptime, and the SMART fallback matches the same regex. Its
+groups are fixed-width ASCII, as java.time reads them: `dd` refuses '1'
+and Arabic-Indic digits, and a pattern space takes one space, where
+strptime and Python's `\\d` are wider.
+
+SMART, the formatter's default resolver style, accepts two shapes a
+strict parse rejects, binary-probed in round 5 (fuzz axis `smartts`):
 
   * day-of-month inside the 1-31 FIELD range but past the month's
     actual length -> capped to the month's last day
@@ -18,54 +26,64 @@ Out-of-FIELD-range values stay reference CRASHES = labeled rejects
 here: day 00 or 32, minute/second 60, 24:30:00, 24:00:01 (all probed).
 
 Both engine parsers and the pure-Python oracle route strict-parse
-FAILURES through this module; strings the strict parse accepts never
-reach it, so the hot path is unchanged.  Supported format directives:
-dd MM MMM yyyy HH mm ss (the reference README's two patterns and any
-literal-separated combination of these); other directives disable the
-fallback (strict reject, documented divergence).
+FAILURES through the replica; strings the strict parse accepts never
+reach it, so the hot path is unchanged. A pattern without `mm` or `ss`
+gets no fallback (strict reject, documented divergence).
 """
 
 from __future__ import annotations
 
 import calendar
+import functools
 import re
 from datetime import datetime, timedelta
 
 _MONTHS = {m.upper(): i for i, m in enumerate(calendar.month_abbr) if m}
 
-# (java token, regex, field key) — longest-first so 'yyyy' wins over 'yy'
-_JAVA_DIRECTIVES = [
-    ("yyyy", r"(\d{4})", "Y"),
-    ("MMM", r"([A-Za-z]{3})", "b"),
-    ("MM", r"(\d{2})", "m"),
-    ("dd", r"(\d{2})", "d"),
-    ("HH", r"(\d{2})", "H"),
-    ("mm", r"(\d{2})", "Mi"),
-    ("ss", r"(\d{2})", "S"),
-]
+# java.time letter run -> (regex group, field key, strptime directive)
+_JAVA_DIRECTIVES = {
+    "yyyy": ("([0-9]{4})", "Y", "%Y"),
+    "MMM": ("([A-Za-z]{3})", "b", "%b"),
+    "MM": ("([0-9]{2})", "m", "%m"),
+    "dd": ("([0-9]{2})", "d", "%d"),
+    "HH": ("([0-9]{2})", "H", "%H"),
+    "mm": ("([0-9]{2})", "Mi", "%M"),
+    "ss": ("([0-9]{2})", "S", "%S"),
+}
 
 
-def compile_java_ts_format(java_fmt: str):
-    """(anchored regex string, ordered field keys) or None if the
-    pattern uses directives outside the supported set."""
-    rx, fields, i = "", [], 0
-    while i < len(java_fmt):
-        for tok, sub, key in _JAVA_DIRECTIVES:
-            if java_fmt.startswith(tok, i):
-                rx += sub
-                fields.append(key)
-                i += len(tok)
-                break
+@functools.lru_cache(maxsize=None)
+def compile_java_ts_format(java_fmt: str) -> tuple[str, tuple, str]:
+    """(regex to fullmatch, its groups' field keys, strptime format) of
+    a java.time pattern of the tokens above and literals. ValueError
+    names what it cannot translate: another letter, a quote, [ ] (an
+    optional section), { } # (reserved); a field given twice; and a
+    pattern java.time builds no LocalDateTime from."""
+    rx, fields, st = [], [], []
+    for m in re.finditer(r"([A-Za-z])\1*|.", java_fmt, re.S):
+        run = m.group()
+        if run in _JAVA_DIRECTIVES:
+            group, key, directive = _JAVA_DIRECTIVES[run]
+            # MMM and MM both give the month
+            if key in fields or {key, *fields} >= {"b", "m"}:
+                raise ValueError(
+                    f"timestamp pattern {java_fmt!r} repeats {run!r}")
+            rx.append(group)
+            fields.append(key)
+            st.append(directive)
+        elif run.isalpha() or run in "'[]{}#":
+            raise ValueError(
+                f"timestamp pattern {java_fmt!r}: {run!r} is not "
+                "supported (yyyy MMM MM dd HH mm ss and literals are)")
         else:
-            ch = java_fmt[i]
-            if ch.isalpha():  # an unsupported pattern letter
-                return None
-            rx += re.escape(ch)
-            i += 1
-    required = {"Y", "d", "H", "Mi", "S"}
-    if not required <= set(fields) or not ({"b", "m"} & set(fields)):
-        return None
-    return rx, fields
+            rx.append(re.escape(run))
+            st.append(run.replace("%", "%%"))
+    if (not {"Y", "d", "H"} <= set(fields) or not {"b", "m"} & set(fields)
+            or ("S" in fields and "Mi" not in fields)):
+        raise ValueError(
+            f"timestamp pattern {java_fmt!r} needs yyyy, MMM or MM, dd "
+            "and HH, and ss needs mm")
+    return "".join(rx), tuple(fields), "".join(st)
 
 
 def py_smart_resolve(s: str, java_fmt: str) -> datetime | None:
@@ -75,11 +93,8 @@ def py_smart_resolve(s: str, java_fmt: str) -> datetime | None:
     year-9999-roll extremes, produce a LocalDateTime outside Python's
     datetime range: those stay labeled rejects, a documented bound
     shared with the strict path's own representable range)."""
-    spec = compile_java_ts_format(java_fmt)
-    if spec is None:
-        return None
-    rx, fields = spec
-    m = re.fullmatch(rx, s)
+    rx, fields, _ = compile_java_ts_format(java_fmt)
+    m = re.fullmatch(rx, s) if {"Mi", "S"} <= set(fields) else None
     if not m:
         return None
     v = dict(zip(fields, m.groups()))
@@ -111,10 +126,9 @@ def smart_ts_expr(col, java_fmt: str):
     strict-parse failures take this branch's value."""
     from pyspark.sql import functions as F
 
-    spec = compile_java_ts_format(java_fmt)
-    if spec is None:
+    rx, fields, _ = compile_java_ts_format(java_fmt)
+    if not {"Mi", "S"} <= set(fields):
         return F.lit(None).cast("timestamp")
-    rx, fields = spec
     rx_anchored = r"\A" + rx + r"\z"
     # ONE regex pass: pack every group NUL-joined (the parse_sql update
     # idiom — this branch sits in an interpreted Project with no CSE,

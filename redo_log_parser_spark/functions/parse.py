@@ -14,8 +14,8 @@ Byte-parity notes (SURVEY.md §1.3):
     crash the reference (StringIndexOutOfBounds) — here the row is
     routed to the rejects sink via `parse_error` instead.
   * Java String.split drops trailing empty tokens; mirrored.
-  * Timestamps parse case-insensitively (parser/package.scala:13-16) —
-    pandas `to_datetime(format=...)` with %b is also case-insensitive.
+  * A timestamp must fullmatch the pattern's java.time regex
+    (functions/javatime.py) before case-insensitive `to_datetime` reads it.
 
 Rows the reference would crash on (arity mismatch, update attr mismatch,
 unparseable type) carry a non-null `parse_error` and null payload, so the
@@ -41,9 +41,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from ..config import PipelineConfig, DEFAULT_CONFIG, java_ts_format_to_strptime
+from ..config import PipelineConfig, DEFAULT_CONFIG
 from .javaspace import ASCII_TRIM as _ASCII_TRIM, WS_CLS as _WS_CLS
-from .javatime import py_smart_resolve
+from .javatime import compile_java_ts_format, py_smart_resolve
 
 # Anchored forms of parser/package.scala:19-27 (fullmatch semantics).
 # The reference patterns run under JAVA regex semantics, which differ
@@ -152,13 +152,15 @@ def parse_record_batch(text: pd.Series, java_fmt: str) -> pd.DataFrame:
     ts_raw = (
         chunk[2].str.strip(_ASCII_TRIM).str.replace(" +", " ", regex=True)
     )
+    rx, _, strptime_fmt = compile_java_ts_format(java_fmt)
+    shaped = ts_raw.str.fullmatch(rx, na=False)
     ts = pd.to_datetime(
-        ts_raw, format=java_ts_format_to_strptime(java_fmt), errors="coerce")
-    # java.time SMART resolution for strings the strict parse refused
-    # (31-APR -> Apr 30, 24:00:00 -> next-day midnight — the reference's
-    # DateTimeFormatter default; binary-probed, functions/javatime.py).
-    # Only FAILED rows take the Python fallback — hot path unchanged.
-    bad = ts.isna() & ts_raw.notna()
+        ts_raw.where(shaped), format=strptime_fmt, errors="coerce")
+    # java.time SMART resolution for shaped stamps the strict parse
+    # refused (31-APR -> Apr 30, 24:00:00 -> next-day midnight — the
+    # reference's DateTimeFormatter default; binary-probed,
+    # functions/javatime.py). Only FAILED rows take the Python fallback.
+    bad = ts.isna() & shaped
     if bad.any():
         # µs dtype, not ns: Spark timestamps are µs, and a string
         # like '15-MAY-2263' is VALID to the reference and the JVM
@@ -256,7 +258,6 @@ def make_parse_udf(cfg: PipelineConfig = DEFAULT_CONFIG):
 def parse_documents(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = ("url", "warc_ts", "lang"),
 ) -> DataFrame:
     """Parse the documents table into the canonical parsed-events frame.
@@ -273,5 +274,5 @@ def parse_documents(
     """
     parse = make_parse_udf(cfg)
     cols = [c for c in keep_cols if c in df.columns]
-    parsed = df.select(*cols, parse(F.col(text_col)).alias("p"))
+    parsed = df.select(*cols, parse(F.col("text")).alias("p"))
     return parsed.select(*cols, "p.*")

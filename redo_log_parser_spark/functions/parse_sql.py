@@ -101,14 +101,13 @@ def _split_stripped(c: Column, sep: str) -> Column:
 def parse_documents_sql(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    text_col: str = "text",
     keep_cols: tuple[str, ...] = ("url", "warc_ts", "lang"),
 ) -> DataFrame:
     """Pure-expression equivalent of parse.parse_documents. Output
     schema and column semantics are identical (see module docstring for
     the degenerate-row caveat)."""
     cols = [c for c in keep_cols if c in df.columns]
-    t = F.col(text_col)
+    t = F.col("text")
 
     has_idline = F.regexp_like(t, F.lit(rf"\A(?:{_WS_CLS}*\n)*[^\n]*\n"))
     # Gate chunk fields on an actual chunk match: regexp_extract returns

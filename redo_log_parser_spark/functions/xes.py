@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _PY_CTRL_DROP = _re.compile("[\x00-\x08\x0b\x0c\x0e-\x1f]")
+# the reference's scala.xml.PrettyPrinter(200, 2): line width, indent step
+_PRETTY_WIDTH, _PRETTY_STEP = 200, 2
 
 
 def xes_timestamp(ts: Column) -> Column:
@@ -92,7 +94,7 @@ def trace_xml(traces: DataFrame) -> DataFrame:
     )
 
 
-def trace_xml_pretty(traces: DataFrame, width: int = 200, step: int = 2) -> DataFrame:
+def trace_xml_pretty(traces: DataFrame) -> DataFrame:
     """(case_id, events) → (case_id, trace_xml): the scala.xml
     PrettyPrinter(200, 2) layout of one <trace> as serialized by the
     reference (TraceIDParser.scala:153-160), as a child of <log> —
@@ -109,7 +111,7 @@ def trace_xml_pretty(traces: DataFrame, width: int = 200, step: int = 2) -> Data
     DOES apply to each leaf line: see the three-regime comment below,
     all regimes probed against the real binary. Still pure column
     expressions."""
-    i_trace, i_event, i_leaf = " " * step, " " * (2 * step), " " * (3 * step)
+    i_trace, i_event, i_leaf = (" " * (k * _PRETTY_STEP) for k in (1, 2, 3))
     # Leaf layout — all three regimes VERIFIED against the real binary
     # by differential fuzzing + threshold probes (seed 202 caught the
     # collapse; length sweep 195..210 pinned the cutovers):
@@ -156,9 +158,9 @@ def trace_xml_pretty(traces: DataFrame, width: int = 200, step: int = 2) -> Data
             F.lit(prefix), F.translate(raw, "\t\r", "  "), F.lit('">')
         )
         return (
-            F.when(_utf16_len(col) <= width - 38, inline)
+            F.when(_utf16_len(col) <= _PRETTY_WIDTH - 38, inline)
             .when(
-                _utf16_len(raw) <= width - 37,
+                _utf16_len(raw) <= _PRETTY_WIDTH - 37,
                 F.concat(open_raw, F.lit("\n" + i_leaf + "</string>")),
             )
             .otherwise(F.concat(open_raw, F.lit("\n</string>")))

@@ -33,14 +33,13 @@ from pyspark.sql import functions as F
 def uniquify_row_ids(
     events: DataFrame,
     order_cols: tuple[str, ...] = ("ts", "url"),
-    row_col: str = "row_id",
 ) -> DataFrame:
     """Rewrite reused row ids into deterministic incarnations.
 
     `order_cols` must give a total order of the log within each original
     row id (documents mode: (warc_ts, url) per BASELINE.json input_hint;
     file mode: the carried line-pair sequence)."""
-    w = Window.partitionBy(row_col).orderBy(*[F.col(c) for c in order_cols])
+    w = Window.partitionBy("row_id").orderBy(*[F.col(c) for c in order_cols])
     restart = (
         (F.row_number().over(w) > 1)
         & ((F.col("op") == "insert") | (F.lag("op").over(w) == "delete"))
@@ -52,11 +51,11 @@ def uniquify_row_ids(
     incarnation = F.sum("__restart").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    new_id = F.when(incarnation == 0, F.col(row_col)).otherwise(
-        F.concat_ws("#", F.col(row_col), incarnation.cast("string"))
+    new_id = F.when(incarnation == 0, F.col("row_id")).otherwise(
+        F.concat_ws("#", F.col("row_id"), incarnation.cast("string"))
     )
     return (
-        step1.withColumn("orig_row_id", F.col(row_col))
-        .withColumn(row_col, new_id)
+        step1.withColumn("orig_row_id", F.col("row_id"))
+        .withColumn("row_id", new_id)
         .drop("__restart")
     )

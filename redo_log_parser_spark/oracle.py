@@ -34,7 +34,7 @@ from datetime import datetime
 from .config import PipelineConfig, DEFAULT_CONFIG
 from .functions.javaspace import (
     java_equals_ignore_case, py_is_blank, py_java_trim)
-from .functions.javatime import py_smart_resolve
+from .functions.javatime import compile_java_ts_format, py_smart_resolve
 from .functions.scala_order import reference_console_order
 
 # Regexes lifted verbatim from parser/package.scala:19-27. Scala's
@@ -111,8 +111,12 @@ def parse_chunk(chunk: list[str], cfg: PipelineConfig) -> tuple[str, str, dateti
     statement = py_java_trim(chunk[0])
     row_id, _, rest = chunk[1].partition(" ")  # split(" ", 2)
     ts_string = re.sub(" +", " ", py_java_trim(rest))
+    rx, _, strptime_fmt = compile_java_ts_format(cfg.ts_format_java)
+    if not re.fullmatch(rx, ts_string):
+        raise ValueError(
+            f"timestamp {ts_string!r} does not match {cfg.ts_format_java!r}")
     try:
-        ts = datetime.strptime(ts_string, cfg.ts_format_strptime)
+        ts = datetime.strptime(ts_string, strptime_fmt)
     except ValueError:
         # java.time default ResolverStyle.SMART (functions/javatime.py,
         # binary-probed): 31-APR -> Apr 30, 24:00:00 -> next-day 00:00

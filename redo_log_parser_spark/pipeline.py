@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 from .caching import operator_caches, register
 from .config import PipelineConfig, DEFAULT_CONFIG
 from .functions.parse import parse_documents
-from .functions.parse_sql import parse_documents_sql
 from .functions.xes import trace_xml, with_xes_columns
 from .operators.rowid import uniquify_row_ids
 from .operators.schema_discovery import discover_schema, summarize_schema, SchemaSummary
@@ -91,13 +90,10 @@ def _safe_root_names(roots) -> dict[str, str]:
 def parse(
     docs: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    parser: str = "pandas",
     keep_cols: tuple[str, ...] = ("url", "warc_ts", "lang"),
 ) -> DataFrame:
-    """Step 1: parser='pandas' (the byte-parity Arrow kernel) or 'sql'
-    (pure-JVM expressions, no Python workers; functions/parse_sql.py)."""
-    parse_fn = parse_documents if parser == "pandas" else parse_documents_sql
-    return parse_fn(docs, cfg, keep_cols=keep_cols)
+    """Step 1: the byte-parity Arrow parse kernel (functions/parse.py)."""
+    return parse_documents(docs, cfg, keep_cols=keep_cols)
 
 
 def print_verbose_entries(
@@ -105,7 +101,6 @@ def print_verbose_entries(
     cfg: PipelineConfig = DEFAULT_CONFIG,
     source: str = "<input>",
     n: int = 20,
-    parser: str = "pandas",
 ) -> None:
     """`--verbose` analogue of the reference's per-entry console dumps
     (cli/package.scala:23-53: printEntries / printParsedLogEntries /
@@ -116,7 +111,7 @@ def print_verbose_entries(
     never runs."""
     print(f"\n\nRead following log entries from {source}:")
     docs.drop("html").show(n, truncate=False)
-    parsed = parse(docs, cfg, parser)
+    parsed = parse(docs, cfg)
     print("\n\nExtracted the following statements out of the log entries:")
     parsed.show(n, truncate=False)
     print("\n\nTransformed the following log entries and their row identifiers:\n")

@@ -22,9 +22,9 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from ..functions.javaspace import java_equals_ignore_case
 from ..functions.scala_order import reference_row_id_map, scala212_groupby_order
 from ..functions.xes import xes_pretty_header
+from ..operators.traces import resolve_roots
 
 
 def write_xes_document(
@@ -148,25 +148,25 @@ def reference_trace_orders(
     # With case-colliding table names (fuzz axis `caseclash`) BOTH
     # siblings contribute, each under its own per-table row order, in
     # the table-map's iteration order over the FULL table-id key set.
-    table_order = scala212_groupby_order(
-        list(dict.fromkeys(r["table_id"] for r in collected)))
+    table_ids = list(dict.fromkeys(r["table_id"] for r in collected))
+    table_order = scala212_groupby_order(table_ids)
     return {
-        root: _trace_order(collected, ref_map, table_order, root)
-        for root in roots
+        root: _trace_order(collected, ref_map, table_order, set(tables))
+        for root, (_, tables) in resolve_roots(list(roots), table_ids).items()
     }
 
 
 def _trace_order(
-    collected: list, ref_map: dict, table_order: list[str], root_table: str,
+    collected: list, ref_map: dict, table_order: list[str], root_tables: set,
 ) -> list[str]:
     """One root's trace order over the collected, log-ordered event
-    rows; see reference_trace_orders."""
+    rows of the tables it gathers; see reference_trace_orders."""
     seen: dict[str, str] = {}
     seen_orig: dict[str, str] = {}
     rows_in_table: dict[str, list[str]] = {}
     for r in collected:
         t = r["table_id"]
-        if not java_equals_ignore_case(t, root_table):
+        if t not in root_tables:
             continue
         cid = r["row_id"]
         if cid not in seen:
@@ -197,7 +197,7 @@ def _trace_order(
             )
     out: list[str] = []
     for t in table_order:
-        if not java_equals_ignore_case(t, root_table):
+        if t not in root_tables:
             continue
         ref_ids = [seen[cid] for cid in rows_in_table.get(t, [])]
         ours_of = {seen[cid]: cid for cid in rows_in_table.get(t, [])}

@@ -112,9 +112,7 @@ def read_log_files(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def explode_log_records(
-    docs: DataFrame, text_col: str = "text", id_col: str = "url"
-) -> DataFrame:
+def explode_log_records(docs: DataFrame) -> DataFrame:
     """Multi-statement documents → one row per 2-line record, with the
     reference's exact pairing semantics (blank lines dropped, remaining
     lines grouped in pairs — FileParser.scala:22), as pure expressions.
@@ -123,7 +121,7 @@ def explode_log_records(
     run this BEFORE parse_documents / parse_documents_sql. Every other
     column is carried unchanged (an exploded record inherits its doc's
     warc_ts; the parse extracts the per-record ts from the chunk).
-    `id_col` gains a zero-padded '#kkkk' position suffix so
+    `url` gains a zero-padded '#kkkk' position suffix so
     (warc_ts, url) ordering inside a doc equals record order; the pad
     is 4 digits minimum and widens with the doc's own record count
     (a cell packing >=10,000 records pads to its max seq's width, so
@@ -144,21 +142,19 @@ def explode_log_records(
     re-breaks that tie by the packed doc's base url — same multiset of
     events, possibly different incarnation split within the tie. That
     is inherent to any url-rewriting step, not specific to this one."""
-    other = [c for c in docs.columns if c != text_col]
+    other = [c for c in docs.columns if c != "text"]
     # chunking semantics + the O(L²)-substitution scale guard live in
     # _paired_chunks (the lines array is let-bound per row there)
     ex = docs.select(
-        *other, F.explode(_paired_chunks(F.col(text_col))).alias("__c")
+        *other, F.explode(_paired_chunks(F.col("text"))).alias("__c")
     )
     out_cols = []
     for c in docs.columns:
-        if c == text_col:
-            out_cols.append(F.col("__c.text").alias(text_col))
-        elif c == id_col:
+        if c == "text":
+            out_cols.append(F.col("__c.text").alias("text"))
+        elif c == "url":
             out_cols.append(
-                F.concat_ws(
-                    "#", F.col(id_col), F.col("__c.seqstr")
-                ).alias(id_col)
+                F.concat_ws("#", F.col("url"), F.col("__c.seqstr")).alias("url")
             )
         else:
             out_cols.append(F.col(c))

@@ -119,6 +119,43 @@ def test_alternate_timestamp_format():
     assert str(got.iloc[0]["ts"]) == "2014-11-27 15:55:34"
 
 
+@pytest.mark.parametrize("pattern, stamp, want", [
+    # the reference README's two patterns, a coarser one, and a '%'
+    # literal (strptime's escape character)
+    ("dd-MMM-yyyy HH:mm:ss", "21-JUL-2020 16:29:41", "2020-07-21 16:29:41"),
+    ("yyyy-MM-dd HH:mm:ss", "2020-07-21 16:29:41", "2020-07-21 16:29:41"),
+    ("dd-MMM-yyyy HH:mm", "21-jul-2020 16:29", "2020-07-21 16:29:00"),
+    ("dd%MMM-yyyy HH:mm:ss", "21%JUL-2020 16:29:41", "2020-07-21 16:29:41"),
+    # java.time parses these with directives the compiler does not have
+    ("yyyy-MM-dd'T'HH:mm:ss", None, None),
+    ("d-MMM-yyyy HH:mm:ss", None, None),
+    ("dd-MMM-yy HH:mm:ss", None, None),
+    ("dd-MMM-yyyy HH:mm:ss.SSS", None, None),
+    ("dd-MMM-yyyy HH:mm:ss[.SSS]", None, None),
+    # java.time refuses the pattern ('T' is no pattern letter) ...
+    ("yyyy-MM-ddTHH:mm:ss", None, None),
+    # ... or builds no LocalDateTime from it; a twice-given field
+    ("dd-MMM-yyyy", None, None),
+    ("dd-MMM-yyyy HH:ss", None, None),
+    ("dd dd-MMM-yyyy HH:mm:ss", None, None),
+])
+def test_config_compiles_timestamp_pattern(pattern, stamp, want):
+    """PipelineConfig compiles --timestamp-pattern up front: a pattern
+    the compiler cannot translate raises ValueError instead of
+    rejecting every row, and an accepted one parses its stamps in the
+    kernel and the oracle alike."""
+    if want is None:
+        with pytest.raises(ValueError, match="timestamp pattern"):
+            PipelineConfig(ts_format_java=pattern)
+        return
+    cfg = PipelineConfig(ts_format_java=pattern)
+    rec = f'insert into "S"."T"("ID") values (\'1\');\nRID {stamp}'
+    got = parse_record_batch(pd.Series([rec]), cfg.ts_format_java).iloc[0]
+    assert got["parse_error"] is None
+    assert str(got["ts"]) == want
+    [entry] = oracle.parse_records([rec], cfg)
+    assert str(entry.ts) == want
+
 def test_reference_artifact_corpus_parity():
     """Run both implementations over the reference's own shipped logs;
     every extraction must agree byte-for-byte."""

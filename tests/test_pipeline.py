@@ -605,3 +605,94 @@ def test_cli_rejects_flag_without_its_output(
             "--root-class", ROOT, flag)
     assert exc.value.code == 2
     assert f"{flag} needs {needs}" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("argv, says", [
+    (("--timestamp-pattern", "yyyy-MM-ddTHH:mm:ss"), "'T'"),
+    (("--parser", "sql"), "--parser"),
+])
+def test_cli_refuses_before_any_job(
+        cli, cli_input, tmp_path, capsys, jobs_in_group, argv, says):
+    """A --timestamp-pattern the compiler cannot translate is a usage
+    error before the session's first job, as java.time refuses it
+    before the reference reads a row; --parser is gone (the CLI runs
+    the one parse kernel)."""
+    out = tmp_path / "out"
+
+    def run():
+        with pytest.raises(SystemExit) as exc:
+            cli("--input", cli_input, "--output", str(out),
+                "--root-class", ROOT, "--no-resume", *argv)
+        return exc.value.code
+
+    code, n_jobs = jobs_in_group("cli-refused", run)
+    assert (code, n_jobs) == (2, 0)
+    assert says in capsys.readouterr().err
+    assert not out.exists()
+
+
+def test_cli_timestamp_pattern(spark, cli, mini_docs_pdf, tmp_path):
+    """The mini-log stamped yyyy-MM-dd HH:mm:ss routes and traces like
+    the original under that pattern. Under the default pattern every
+    row is a bad_timestamp reject, and the run still ends."""
+    import re
+    from datetime import datetime
+
+    def iso(m):
+        return datetime.strptime(m.group(), "%d-%b-%Y %H:%M:%S").strftime(
+            "%Y-%m-%d %H:%M:%S")
+
+    pdf = mini_docs_pdf.copy()
+    pdf["text"] = [
+        re.sub(r"[0-9]{2}-[A-Z]{3}-[0-9]{4} [0-9:]{8}", iso, t)
+        for t in pdf["text"]]
+    inp = str(tmp_path / "iso.parquet")
+    spark.createDataFrame(pdf).write.parquet(inp)
+    got = cli("--input", inp, "--output", str(tmp_path / "iso"),
+              "--root-class", ROOT, "--no-resume",
+              "--timestamp-pattern", "yyyy-MM-dd HH:mm:ss")
+    assert got == {"routed": {"sink_insert": 161, "sink_update": 220,
+                              "sink_delete": 52, "sink_rejects": 0},
+                   "traces": 70}
+    out = str(tmp_path / "default")
+    got = cli("--input", inp, "--output", out, "--no-resume")
+    assert got["routed"]["sink_rejects"] == len(pdf)
+    assert [r[0] for r in spark.read.parquet(f"{out}/rejects")
+            .select("parse_error").distinct().collect()] == ["bad_timestamp"]
+
+
+def test_cli_include_update_values(cli, cli_input, tmp_path):
+    """--include-update-values names each update event with its new
+    value (TraceIDParser.scala:124-127) in the .xes document."""
+    import re
+
+    out = tmp_path / "upd"
+    cli("--input", cli_input, "--output", str(out), "--root-class", ROOT,
+        "--no-resume", "--xes-file", "--include-update-values")
+    xes = (out / "SYSTEM_._ORDERS_result.xes").read_text(encoding="utf-8")
+    names = re.findall(r'key="concept:name" value="(Update [^"]*)"', xes)
+    assert names
+    assert all(re.fullmatch(r"Update .+ value of .+ entity to .*", n)
+               for n in names), names[:3]
+
+
+def test_cli_explode_records(spark, cli, tmp_path):
+    """--explode-records un-packs documents that batch several records
+    (fuzz seed 31, 1-5 per text cell): they route like the same
+    records one per document."""
+    from fuzzgen import (fuzz_records, records_to_documents,
+                         records_to_packed_documents)
+
+    records, _ = fuzz_records(seed=31)
+    routed = {}
+    for name, pdf, extra in (
+            ("single", records_to_documents(records), ()),
+            ("packed", records_to_packed_documents(records, seed=31),
+             ("--explode-records",))):
+        inp = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(pdf).write.parquet(inp)
+        routed[name] = cli("--input", inp, "--output",
+                           str(tmp_path / f"{name}_out"), "--no-resume",
+                           *extra)["routed"]
+    assert routed["packed"] == routed["single"]
+    assert sum(routed["single"].values()) == len(records)

@@ -298,85 +298,105 @@ def test_kelvin_sign_pk_name_heuristic(spark):
     assert dump == f'TABLE "SYSTEM"."T"\n{kcol} \nID (STRONG PRIMARY KEY) '
 
 
-def test_smart_timestamp_resolution_all_surfaces(spark):
-    """java.time ResolverStyle.SMART parity (binary-probed battery):
-    day capped to month length, 24:00:00 = next-day midnight, cap THEN
-    roll when combined; true out-of-range fields stay rejects (the
-    reference crashes on those). All three parse surfaces must agree."""
-    import pandas as pd
+def _java_time(spark, stamps, pattern):
+    """Each stamp as the reference parses it, 'yyyy-MM-dd HH:mm:ss', or
+    None where it throws: java.time through the session's JVM, with
+    the formatter built as parser/package.scala:13-16 builds it."""
+    from pyspark.errors import DateTimeException
 
-    battery = [
-        ("31-APR-2024 10:00:00", "2024-04-30 10:00:00"),
-        ("29-FEB-2023 11:30:00", "2023-02-28 11:30:00"),
-        ("30-FEB-2024 10:00:00", "2024-02-29 10:00:00"),
-        ("01-MAY-2024 24:00:00", "2024-05-02 00:00:00"),
-        ("31-FEB-2024 24:00:00", "2024-03-01 00:00:00"),
-        ("31-DEC-2024 24:00:00", "2025-01-01 00:00:00"),
-        ("32-JAN-2024 10:00:00", None),
-        ("00-JAN-2024 10:00:00", None),
-        ("01-MAY-2024 24:30:00", None),
-        ("01-MAY-2024 24:00:01", None),
-        ("01-MAY-2024 23:60:00", None),
-        ("15-MAY-2024 10:00:00", "2024-05-15 10:00:00"),
-    ]
+    jt = spark._jvm.java.time
+    fmt = (jt.format.DateTimeFormatterBuilder().parseCaseInsensitive()
+           .appendPattern(pattern).toFormatter())
+    out = jt.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
+    got = []
+    for s in stamps:
+        try:
+            got.append(jt.LocalDateTime.parse(s, fmt).format(out))
+        except DateTimeException:  # the JVM's, as PySpark raises it
+            got.append(None)
+    return got
+
+
+def _assert_surfaces_match_java_time(spark, stamps, pattern):
+    """The kernel, the JVM parser and the oracle each parse `stamps`
+    under `pattern` to java.time's value, and reject where it throws."""
+    from redo_log_parser_spark.config import PipelineConfig
+
+    cfg = PipelineConfig(ts_format_java=pattern)
+    want = _java_time(spark, stamps, pattern)
+    # the battery holds both shapes, so the comparison is not vacuous
+    assert None in want and any(w is not None for w in want), want
     rows = [
         (f"https://h.example/{i:04d}",
          f'insert into "SYSTEM"."T"("ID") values (\'{i}\');\n'
          f"RID{i:04d}X {ts}")
-        for i, (ts, _) in enumerate(battery)
+        for i, ts in enumerate(stamps)
     ]
     docs = spark.createDataFrame(rows, "url string, text string")
-
     for parser in (parse_documents, parse_documents_sql):
         got = {
             r["url"][-4:]: (None if r["ts"] is None
                             else r["ts"].strftime("%Y-%m-%d %H:%M:%S"),
                             r["parse_error"])
-            for r in parser(docs).collect()
+            for r in parser(docs, cfg=cfg).collect()
         }
-        for i, (ts, want) in enumerate(battery):
+        for i, (ts, w) in enumerate(zip(stamps, want)):
             got_ts, err = got[f"{i:04d}"]
-            assert got_ts == want, (parser.__name__, ts, got_ts, want)
-            assert (err is None) == (want is not None), (
+            assert got_ts == w, (parser.__name__, ts, got_ts, w)
+            assert err == (None if w else "bad_timestamp"), (
                 parser.__name__, ts, err)
 
     # oracle: clean shapes parse to the same datetimes, crash shapes raise
-    for i, (ts, want) in enumerate(battery):
-        rec = rows[i][1]
-        if want is None:
-            with pytest.raises(Exception):
-                oracle.parse_records([rec])
+    for (_, rec), ts, w in zip(rows, stamps, want):
+        if w is None:
+            with pytest.raises(ValueError):
+                oracle.parse_records([rec], cfg)
         else:
-            [entry] = oracle.parse_records([rec])
-            assert entry.ts.strftime("%Y-%m-%d %H:%M:%S") == want
+            [entry] = oracle.parse_records([rec], cfg)
+            assert entry.ts.strftime("%Y-%m-%d %H:%M:%S") == w, ts
+
+
+def test_smart_timestamp_resolution_all_surfaces(spark):
+    """java.time ResolverStyle.SMART parity (binary-probed battery):
+    day capped to month length, 24:00:00 = next-day midnight, cap THEN
+    roll when combined; true out-of-range fields stay rejects (the
+    reference crashes on those). So do stamps java.time's fixed-width
+    ASCII fields refuse: an unpadded day or hour, Arabic-Indic digits,
+    a tab or an NBSP for the space. All three parse surfaces must
+    agree with java.time."""
+    _assert_surfaces_match_java_time(spark, [
+        "31-APR-2024 10:00:00",
+        "29-FEB-2023 11:30:00",
+        "30-FEB-2024 10:00:00",
+        "01-MAY-2024 24:00:00",
+        "31-FEB-2024 24:00:00",
+        "31-DEC-2024 24:00:00",
+        "32-JAN-2024 10:00:00",
+        "00-JAN-2024 10:00:00",
+        "01-MAY-2024 24:30:00",
+        "01-MAY-2024 24:00:01",
+        "01-MAY-2024 23:60:00",
+        "15-MAY-2024 10:00:00",
+        "21-jul-2020 16:29:41",
+        "1-JUL-2020 16:29:41",
+        "21-JUL-2020 6:29:41",
+        "\u0662\u0661-JUL-2020 16:29:41",
+        "21-JUL-2020\t16:29:41",
+        "21-JUL-2020\xa016:29:41",
+    ], "dd-MMM-yyyy HH:mm:ss")
 
 
 def test_smart_resolution_iso_pattern(spark):
     """The SMART replica is pattern-generic: the reference's second
-    README pattern (yyyy-MM-dd HH:mm:ss) caps and rolls identically."""
-    from redo_log_parser_spark.config import PipelineConfig
-
-    cfg = PipelineConfig(ts_format_java="yyyy-MM-dd HH:mm:ss")
-    battery = [
-        ("2024-04-31 10:00:00", "2024-04-30 10:00:00"),
-        ("2024-02-30 24:00:00", "2024-03-01 00:00:00"),
-        ("2024-05-01 24:30:00", None),
-    ]
-    rows = [
-        (f"https://h.example/{i:04d}",
-         f'insert into "SYSTEM"."T"("ID") values (\'{i}\');\n'
-         f"RID{i:04d}X {ts}")
-        for i, (ts, _) in enumerate(battery)
-    ]
-    docs = spark.createDataFrame(rows, "url string, text string")
-    for parser in (parse_documents, parse_documents_sql):
-        got = {
-            r["url"][-4:]: (None if r["ts"] is None
-                            else r["ts"].strftime("%Y-%m-%d %H:%M:%S"))
-            for r in parser(docs, cfg=cfg).collect()
-        }
-        for i, (ts, want) in enumerate(battery):
-            assert got[f"{i:04d}"] == want, (parser.__name__, ts)
+    README pattern (yyyy-MM-dd HH:mm:ss) caps and rolls identically,
+    and refuses an unpadded month as java.time does."""
+    _assert_surfaces_match_java_time(spark, [
+        "2024-04-31 10:00:00",
+        "2024-02-30 24:00:00",
+        "2024-05-01 24:30:00",
+        "2020-07-21 16:29:41",
+        "2020-7-21 16:29:41",
+    ], "yyyy-MM-dd HH:mm:ss")
 
 
 def test_smart_resolution_representable_bounds(spark):
