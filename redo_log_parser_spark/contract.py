@@ -30,10 +30,9 @@ from .operators import dedup as DD
 from .operators import similarity as SIM
 from .operators.rowid import uniquify_row_ids
 from .operators.schema_discovery import (
+    column_facts,
     discover_schema,
     inclusion_dependencies,
-    pk_uniqueness,
-    monotonicity,
 )
 from .operators.traces import collect_traces
 
@@ -369,7 +368,9 @@ def q_pk_sticky_overlap(spark, sf_dir):
         ).alias("sk"),
         F.lit("write").alias("kind"),
     )
-    return pk_uniqueness(writes).select("col", "can_be_pk")
+    # mono_mode='reference' leaves out the log-order lag window, which
+    # this query does not read
+    return column_facts(writes, "reference").select("col", "can_be_pk")
 
 
 SQL_PK_STICKY_OVERLAP = """
@@ -401,7 +402,7 @@ def q_monotonicity(spark, sf_dir):
         ).alias("sk"),
         F.lit("write").alias("kind"),
     )
-    return monotonicity(writes).select("col", "values_increasing")
+    return column_facts(writes).select("col", "values_increasing")
 
 
 SQL_MONOTONICITY = """
@@ -688,7 +689,7 @@ def q_schema_discovery(spark, sf_dir):
 # uses the STRING comparison branch: the synthesized row ids are
 # 'RID<okey>' — non-numeric — and Column.scala:104-106 coerces BOTH row
 # id and value with .toDouble, so the numeric branch never runs (the
-# repo's monotonicity() replicates that gate); the lag compares the
+# repo's column_facts() replicates that gate); the lag compares the
 # id_val strings over inserts ordered by (date, url). increasing(PRIO)
 # is false for any non-trivial row count because only 5 distinct string
 # values exist (a strict increase over >5 writes is impossible) —

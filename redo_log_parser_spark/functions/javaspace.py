@@ -83,7 +83,7 @@ def py_java_trim(s: str) -> str:
 _SIMPLE_LOWER = {"İ": "i"}
 
 
-def _utf16_units(s: str) -> list[str]:
+def utf16_units(s: str) -> list[str]:
     """The string as UTF-16 code units (astral chars -> 2 surrogates)."""
     if all(ord(ch) <= 0xFFFF for ch in s):
         return list(s)
@@ -113,7 +113,7 @@ def _java_lower_unit(ch: str) -> str:
 
 def java_equals_ignore_case(a: str, b: str) -> bool:
     """String.equalsIgnoreCase, unit-for-unit."""
-    ua, ub = _utf16_units(a), _utf16_units(b)
+    ua, ub = utf16_units(a), utf16_units(b)
     if len(ua) != len(ub):
         return False
     for c1, c2 in zip(ua, ub):

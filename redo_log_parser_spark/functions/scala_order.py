@@ -43,26 +43,17 @@ from __future__ import annotations
 
 from collections.abc import Iterable
 
+from .javaspace import utf16_units
+
 _M32 = 0xFFFFFFFF
 
 
 def java_string_hash(s: str) -> int:
     """JLS String.hashCode over UTF-16 code units, as unsigned 32-bit."""
     h = 0
-    for unit in _utf16_units(s):
-        h = (31 * h + unit) & _M32
+    for unit in utf16_units(s):
+        h = (31 * h + ord(unit)) & _M32
     return h
-
-
-def _utf16_units(s: str):
-    for ch in s:
-        cp = ord(ch)
-        if cp < 0x10000:
-            yield cp
-        else:  # surrogate pair
-            cp -= 0x10000
-            yield 0xD800 + (cp >> 10)
-            yield 0xDC00 + (cp & 0x3FF)
 
 
 def improve_immutable(hcode: int) -> int:

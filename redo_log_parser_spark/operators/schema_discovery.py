@@ -23,9 +23,11 @@ Semantics preserved (SURVEY.md §1.3 item 4):
   * canBePrimaryKey is sticky-false (Column.scala:79-84 runs after every
     affecting entry): a transient duplicate at ANY prefix disqualifies.
     Exact equivalent without replaying prefixes: two rows held the same
-    value with overlapping validity intervals. Computed with one window.
+    value with overlapping validity intervals.
   * areValuesIncreasing over log-ordered writes (the reference iterates
     a HashMap — order-unstable; log order is the documented intent).
+    Both column flags come from one frame of the writes and one
+    groupBy(table, column) (column_facts), no join with the registry.
   * IND/FK: final-state inclusion across tables (matches the eager
     latched fold on both shipped artifacts). Computed as ONE join over
     deduped column values, not N² anti-joins.
@@ -149,8 +151,8 @@ def _value_intervals(writes: DataFrame) -> DataFrame:
     intervals [start_sk, end_sk) of written values: a write opens at its
     sk, the same row's next write/delete on the column closes it. An
     interval that never closes has a null end_sk. The one builder of
-    intervals, shared by current_values, pk_uniqueness and the eager
-    IND check."""
+    intervals, shared by current_values and the eager IND check;
+    column_facts runs the same lead over writes and tombstones."""
     w_row = Window.partitionBy("table_id", "col", "row_id").orderBy("sk")
     return (
         writes.withColumn("end_sk", F.lead("sk").over(w_row))
@@ -175,41 +177,32 @@ def current_values(writes: DataFrame) -> DataFrame:
     )
 
 
-def pk_uniqueness(writes: DataFrame) -> DataFrame:
-    """A3 — sticky canBePrimaryKey via value-lifetime overlap.
+def column_facts(writes: DataFrame, mono_mode: str = "log") -> DataFrame:
+    """A3 + A4 — (table_id, col, can_be_pk, values_increasing) for every
+    column in `writes`, from one frame and one groupBy. A column that
+    only deletes created has no writes and keeps both flags true, as
+    the reference initializes them (Column.scala:79-84, 95-130).
 
-    A duplicate existed at some prefix ⇔ two validity intervals of the
-    same (table,col,value) from different rows overlap ⇔ ordering the
+    can_be_pk is sticky via value-lifetime overlap. A duplicate existed
+    at some prefix ⇔ two validity intervals of the same
+    (table,col,value) from different rows overlap ⇔ ordering the
     intervals by start, some interval starts while an earlier-starting
     one is still open: that one never closes (null end) or ends after
-    this start. The first interval overlaps nothing. One window over
-    the preceding rows, zero self-joins."""
-    iv = _value_intervals(writes)
-    w_val = (
-        Window.partitionBy("table_id", "col", "value")
-        .orderBy("start_sk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    overlap = F.coalesce(
-        F.max(F.col("end_sk").isNull()).over(w_val)
-        | (F.col("start_sk") < F.max("end_sk").over(w_val)),
-        F.lit(False),
-    )
-    return iv.withColumn("overlap", overlap).groupBy("table_id", "col").agg(
-        (~F.max("overlap")).alias("can_be_pk")
-    )
+    this start. The first interval overlaps nothing. The intervals are
+    the write rows of `writes` with the same row's next write or
+    tombstone as end (`_value_intervals`' lead, tombstones kept); one
+    window over the preceding writes, zero self-joins.
 
-
-def monotonicity(writes: DataFrame) -> DataFrame:
-    """A4 — were log-ordered written values strictly increasing?
-
-    This implements the INTENDED semantics of
-    Column.verifyIncreasingValuesOnChange (Column.scala:95-130): the
+    values_increasing (mono_mode='log') — were log-ordered written
+    values strictly increasing? This implements the INTENDED semantics
+    of Column.verifyIncreasingValuesOnChange (Column.scala:95-130): the
     branch gate maps (rowID, value) with BOTH `.toDouble`, so the
     numeric comparison runs only when every row id AND every value
     parses as a double (a real Oracle ROWID never does); anything else
     falls to the case-insensitive string comparison, here over
-    log-ordered writes.
+    log-ordered writes. The lag orders writes before tombstones, so it
+    steps over writes only: a tombstone's null must not reset the
+    comparison.
 
     ROUND-3 DISCOVERY (instrumented run of the actual reference binary,
     tests/fixtures/README.md): the SHIPPED check is vacuously true. Its
@@ -217,34 +210,56 @@ def monotonicity(writes: DataFrame) -> DataFrame:
     uses the List cons extractor, but `mutable.HashMap.values.toSeq`
     sliding windows are not Lists, so every window falls through to the
     default `true` — areValuesIncreasing never flips (the probe shows
-    increasing=true even for STATE/NAME on redo_log.txt). Use
-    discover_schema(mono_mode='reference') for byte-faithful strict
-    output; this function remains the real signal."""
-    wr = writes.filter(F.col("kind") == "write")
-    w = Window.partitionBy("table_id", "col").orderBy("sk")
-    stepped = wr.withColumn("prev", F.lag("value").over(w))
-    num_prev = F.col("prev").try_cast("double")
-    num_cur = F.col("value").try_cast("double")
-    per_col = stepped.groupBy("table_id", "col").agg(
-        F.min(
-            F.col("value").try_cast("double").isNotNull()
-            & F.col("row_id").try_cast("double").isNotNull()
-        ).alias("all_numeric"),
-        F.min(
-            F.when(F.col("prev").isNull(), F.lit(True)).otherwise(num_prev < num_cur)
-        ).alias("inc_numeric"),
-        F.min(
-            F.when(F.col("prev").isNull(), F.lit(True)).otherwise(
-                F.lower("prev") < F.lower("value")
-            )
-        ).alias("inc_string"),
+    increasing=true even for STATE/NAME on redo_log.txt).
+    mono_mode='reference' is that constant True, byte-faithful for
+    strict output, and builds no lag window; 'log' remains the real
+    signal.
+
+    Partitioning (PLANS §15): the lead and overlap windows keep their
+    fine keys (t, c, row_id) and (t, c, value); only the lag window
+    shuffles on (t, c), and the groupBy reuses that exchange."""
+    if mono_mode not in ("log", "reference"):
+        raise ValueError(f"mono_mode must be 'log' or 'reference', got {mono_mode!r}")
+    is_write = F.col("kind") == "write"
+    value, end_sk = F.col("value"), F.col("end_sk")
+    w_row = Window.partitionBy("table_id", "col", "row_id").orderBy("sk")
+    w_val = (
+        Window.partitionBy("table_id", "col", "value")
+        .orderBy("sk")
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-    return per_col.select(
+    overlap = F.coalesce(
+        F.max(F.when(is_write, end_sk.isNull())).over(w_val)
+        | (F.col("sk") < F.max(F.when(is_write, end_sk)).over(w_val)),
+        F.lit(False),
+    )
+    rows = writes.withColumn("end_sk", F.lead("sk").over(w_row)).withColumn(
+        "overlap", overlap)
+    aggs = [F.max(F.when(is_write, F.col("overlap"))).alias("any_overlap")]
+    increasing = F.lit(True)
+    if mono_mode == "log":
+        w_log = Window.partitionBy("table_id", "col").orderBy(~is_write, "sk")
+        rows = rows.withColumn("prev", F.lag("value").over(w_log))
+        prev = F.col("prev")
+        first = prev.isNull()  # the first write has no predecessor
+
+        def all_writes(c: Column, name: str) -> Column:
+            return F.min(F.when(is_write, c)).alias(name)
+
+        aggs += [
+            all_writes(value.try_cast("double").isNotNull()
+                       & F.col("row_id").try_cast("double").isNotNull(), "all_numeric"),
+            all_writes(first | (prev.try_cast("double") < value.try_cast("double")),
+                       "inc_numeric"),
+            all_writes(first | (F.lower(prev) < F.lower(value)), "inc_string"),
+        ]
+        increasing = F.when(F.col("all_numeric"), F.col("inc_numeric")).otherwise(
+            F.col("inc_string"))
+    return rows.groupBy("table_id", "col").agg(*aggs).select(
         "table_id",
         "col",
-        F.when(F.col("all_numeric"), F.col("inc_numeric"))
-        .otherwise(F.col("inc_string"))
-        .alias("values_increasing"),
+        F.coalesce(~F.col("any_overlap"), F.lit(True)).alias("can_be_pk"),
+        F.coalesce(increasing, F.lit(True)).alias("values_increasing"),
     )
 
 
@@ -445,31 +460,17 @@ def discover_schema(
                 log-order signal (the reference's documented intent);
                 'reference' — constant True, byte-faithful to the
                 shipped binary whose increasing check is vacuous (see
-                monotonicity() docstring; pinned against a real strict
+                column_facts() docstring; pinned against a real strict
                 console dump in tests/test_reference_golden.py).
     """
-    if mono_mode not in ("log", "reference"):
-        raise ValueError(f"mono_mode must be 'log' or 'reference', got {mono_mode!r}")
     writes = register(column_writes(events).cache())
     registry = column_registry(writes)
-    uniq = pk_uniqueness(writes)
-    cols = registry.join(uniq, ["table_id", "col"], "left")
-    if mono_mode == "log":
-        cols = cols.join(monotonicity(writes), ["table_id", "col"], "left")
-    else:
-        cols = cols.withColumn("values_increasing", F.lit(True))
-    cols = (
-        cols
-        # a column with no writes (delete-created) has no duplicates and
-        # trivially increasing values — reference initializes both true
-        .fillna({"can_be_pk": True, "values_increasing": True})
-        .withColumn(
-            # Java (?i) WITHOUT UNICODE_CASE = ASCII-only folding
-            # (Column.scala:146-149 `matches("(?i:.*id)")` etc.) — a
-            # KELVIN-SIGN "KEY" must NOT match (binary-probed; the old
-            # F.lower() unicode-folded it to "key")
-            "name_like_pk", F.col("col").rlike("(?i)(id|nr|key|no)\\z")
-        )
+    cols = column_facts(writes, mono_mode).withColumn(
+        # Java (?i) WITHOUT UNICODE_CASE = ASCII-only folding
+        # (Column.scala:146-149 `matches("(?i:.*id)")` etc.) — a
+        # KELVIN-SIGN "KEY" must NOT match (binary-probed; the old
+        # F.lower() unicode-folded it to "key")
+        "name_like_pk", F.col("col").rlike("(?i)(id|nr|key|no)\\z")
     )
     pk_expr = (
         (F.col("can_be_pk") & F.col("values_increasing") & F.col("name_like_pk"))

@@ -183,6 +183,12 @@ def run_parsed(
             events = register(uniquify_row_ids(parsed).cache())
             enriched = enrich(events, table_dict, lang_map)
             result.routed_counts = write_fanout(enriched, out_dir)
+        n_rejects = result.routed_counts["sink_rejects"]
+        if roots and sum(result.routed_counts.values()) == n_rejects:
+            raise ValueError(
+                f"no clean row to discover the schema of the root classes "
+                f"from: {n_rejects} of {n_rejects} rows are parse rejects, "
+                f"see {out_dir}/rejects")
 
         with stage(sc, "discover"):
             clean = enriched.filter(F.col("parse_error").isNull())

@@ -3,6 +3,7 @@ parity, enrichment, the CLI's resumable default path."""
 
 import hashlib
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,30 +133,56 @@ def test_trace_tail_job_budget(spark, mini_docs, tmp_path, jobs_in_group):
     run_parsed (the job tag rlps:<stage>). Every job run_parsed starts
     carries one stage tag. All roots share one cached trace frame, so
     the .xes documents add one collect per root; the reference trace
-    order adds one collect of the event log for all roots. The ceilings
-    are the counts measured when the stages got their tags (56 jobs in
-    all; 87 before the shared trace frame); a change may lower them,
-    never raise them."""
+    order adds one collect of the event log for all roots. The eager
+    IND check adds its own discovery jobs. The ceilings are the counts
+    measured when both column flags came from one groupBy (50 jobs for
+    the .xes run, 56 before; 87 before the shared trace frame); a
+    change may lower them, never raise them."""
     roots = ('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"')
     tagged = spark.sparkContext._jsc.sc().statusTracker()
     mini_docs.count()  # materialize the fixture's own session cache
-    for xes, ref_order in ((False, False), (True, False), (True, True)):
-        ceilings = {"fanout": 4, "discover": 27, "traces": 23,
-                    "xes": len(roots) + ref_order}
-        cfg = PipelineConfig(root_classes=roots, xes_document=xes,
-                             reference_trace_order=ref_order)
-        out = str(tmp_path / f"xes{xes}{ref_order}")
-        group = f"job-budget-xes{xes}-order{ref_order}"
-        _, n_jobs = jobs_in_group(
-            group, lambda: run_parsed(parse(mini_docs), out, cfg))
+    runs = (  # (config, discover ceiling, run ceiling)
+        ({}, 21, 48),
+        ({"xes_document": True}, 21, 50),
+        ({"xes_document": True, "reference_trace_order": True}, 21, 51),
+        ({"eager_ind": True, "strict_primary_keys": True,
+          "reference_monotonicity": True}, 38, 65),
+    )
+    for i, (kw, discover, total) in enumerate(runs):
+        cfg = PipelineConfig(root_classes=roots, **kw)
+        xes = len(roots) + cfg.reference_trace_order if cfg.xes_document else 0
+        ceilings = {"fanout": 4, "discover": discover, "traces": 23, "xes": xes}
+        group = f"job-budget-{i}"
+        _, n_jobs = jobs_in_group(group, lambda: run_parsed(
+            parse(mini_docs), str(tmp_path / f"run{i}"), cfg))
         in_run = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
         per_stage = {
             st: len(in_run & set(tagged.getJobIdsForTag(f"rlps:{st}")))
             for st in ceilings}
-        assert all(per_stage[st] <= c for st, c in ceilings.items()), per_stage
-        assert xes or per_stage["xes"] == 0, per_stage
-        assert sum(per_stage.values()) == n_jobs, (per_stage, n_jobs)
-        assert n_jobs <= 56 + ref_order, n_jobs
+        assert all(per_stage[st] <= c for st, c in ceilings.items()), (kw, per_stage)
+        assert sum(per_stage.values()) == n_jobs, (kw, per_stage, n_jobs)
+        assert n_jobs <= total, (kw, n_jobs)
+
+
+def test_all_rows_rejected_stops_before_discovery(
+        spark, mini_docs, tmp_path, jobs_in_group):
+    """A root class needs a schema, and a log whose every row is a
+    parse reject has none: run_parsed ends after the routed sinks with
+    an error that names the rejects sink, and starts no discovery job.
+    Here the mini-log's dd-MMM-yyyy stamps meet a yyyy-MM-dd pattern."""
+    cfg = PipelineConfig(root_classes=('"SYSTEM"."ORDERS"',),
+                         ts_format_java="yyyy-MM-dd HH:mm:ss")
+    out = str(tmp_path / "rejected")
+    n_rows = mini_docs.count()
+    group = "all-rejects"
+    with pytest.raises(ValueError, match=re.escape(
+            f"{n_rows} of {n_rows} rows are parse rejects, see {out}/rejects")):
+        jobs_in_group(group, lambda: run_parsed(parse(mini_docs, cfg), out, cfg))
+    in_run = set(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+    discover = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForTag(
+        "rlps:discover")
+    assert in_run and not in_run & set(discover)
+    assert spark.read.parquet(f"{out}/rejects").count() == n_rows
 
 
 def test_strict_flag_forwarded_to_discovery(spark, mini_docs, tmp_path):

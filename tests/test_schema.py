@@ -216,3 +216,50 @@ def test_monotonicity_branch_gated_on_rowid_coercion(spark):
         assert got["ID"] is want, (want, got)
         _, oracle_schema = _oracle_schema(pdf)
         assert oracle_schema['"S"."M"']["ID"].values_increasing is want
+
+
+def test_fuzz_log_columns_match_oracle(spark):
+    """Both column flags and the PK verdict, lenient and strict, equal
+    the oracle's per-entry fold on random fuzz logs (deletes, updates
+    and ROWID reuse mixed), not only on the mini-log."""
+    from fuzzgen import fuzz_records, records_to_documents
+    from redo_log_parser_spark.fixtures import _fmt_ts
+
+    for seed in (311, 422, 533):
+        records, _ = fuzz_records(seed)
+        events = _spark_events(spark, records_to_documents(records))
+        entries = oracle.uniquify_row_ids(oracle.parse_records(
+            [f"{s.statement}\n{s.row_id} {_fmt_ts(ts)}" for s, ts in records]))
+        want_schema = oracle.extract_schema(entries)
+        for strict in (False, True):
+            cols_df, _ = discover_schema(events, strict=strict)
+            got = {
+                (r["table_id"], r["col"]): (
+                    r["can_be_pk"], r["values_increasing"], r["is_pk"])
+                for r in cols_df.collect()
+            }
+            want = {
+                (t, c.name): (c.can_be_pk, c.values_increasing,
+                              c.is_pk_candidate(strict))
+                for t, tbl in want_schema.items()
+                for c in tbl.values()
+            }
+            assert got == want, (seed, strict, set(got.items()) ^ set(want.items()))
+
+
+def test_tombstone_does_not_reset_monotonicity(spark):
+    """Writes b, then a delete, then a on one column: the written values
+    fell, whatever the delete in between. The log-order comparison steps
+    over writes only, so the tombstone's null value must not count as a
+    fresh start."""
+    rows = [
+        ('insert into "S"."T"("NAME") values (\'b\');', "A"),
+        ('delete from "S"."T" where "NAME" = \'b\' and ROWID = \'A\';', "A"),
+        ('insert into "S"."T"("NAME") values (\'a\');', "B"),
+    ]
+    pdf = _docs_from_stmts(rows)
+    cols_df, _ = discover_schema(_spark_events(spark, pdf))
+    got = {r["col"]: r["values_increasing"] for r in cols_df.collect()}
+    _, want = _oracle_schema(pdf)
+    assert want['"S"."T"']["NAME"].values_increasing is False
+    assert got == {"NAME": False}
