@@ -142,7 +142,11 @@ def run_once(cpus: str = CPUS, sf_dir: str = SF_DIR) -> dict:
         best = None
         for _ in range(3):
             t0 = time.monotonic()
-            fn(spark, sf_dir).count()  # materialize the full plan
+            # count() runs only what the row count needs: Spark prunes
+            # columns no one reads, and with them e.g. every column-fact
+            # window of schema_discovery (`bench_extra.py noop` runs
+            # the whole plan)
+            fn(spark, sf_dir).count()
             dt = time.monotonic() - t0
             best = dt if best is None or dt < best else best
             spark.catalog.clearCache()

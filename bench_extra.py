@@ -7,6 +7,11 @@ Usage:
   python bench_extra.py explain <query> [out_file]   # .explain("formatted") dump
   python bench_extra.py noop <query> [<query> ...]   # noop-sink isolation (guide §1.4)
 
+`time` calls count(), as bench.py does, so Spark prunes every column no
+one reads: for schema_discovery that drops every column-fact window and
+times parse, ROWID incarnation and the column registry only. `noop`
+writes every column and runs the whole plan.
+
 Respects SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS exactly like bench.py.
 """
 
