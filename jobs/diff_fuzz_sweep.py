@@ -144,15 +144,14 @@ def check_seed(
             if got_order != [s.statement.strip() for s, _ts in records]:
                 bad.append("packdoc_order")
 
-        cols, ind = discover_schema(events, ind_mode="eager")
-        schema = summarize_schema(cols, ind)
+        schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
         if parse_schema_dump(schema.format_console()) != parse_schema_dump(ref_plain):
             bad.append("schema_plain")
 
-        cols_s, ind_s = discover_schema(
-            events, strict=True, ind_mode="eager", mono_mode="reference")
+        schema_s = summarize_schema(*discover_schema(
+            events, strict=True, ind_mode="eager", mono_mode="reference"))
         if parse_schema_dump(
-            summarize_schema(cols_s, ind_s).format_console(strict=True)
+            schema_s.format_console(strict=True)
         ) != parse_schema_dump(ref_strict):
             bad.append("schema_strict")
 
@@ -238,10 +237,10 @@ def check_seed_wide(spark, seed: int) -> list[str]:
         if got_rowids != [(r.row_id, u.row_id)
                           for r, u in zip(raw, entries)]:
             bad.append("rowid_replay")
-        _, ind_df = discover_schema(events, ind_mode="eager")
         got = {
-            (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-            for r in ind_df.collect()
+            (i["table_id"], i["col"], i["ref_table"], i["ref_col"])
+            for i in summarize_schema(
+                *discover_schema(events, ind_mode="eager")).inds
         }
         if got != oracle.eager_inds_replay(entries):
             bad.append("eager_ind_replay")

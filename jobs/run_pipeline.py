@@ -20,12 +20,11 @@ Packaging: `python jobs/make_pyfiles.py` zips redo_log_parser_spark/
 into rlps.zip for --py-files AT DEPLOY TIME (the zip is gitignored —
 never committed, so it cannot go stale relative to the source tree).
 Locally the package is importable from the repo root, so the same
-script runs without the zip. On a cluster, also set SPARK_MASTER to the
-master spark-submit runs on: without it get_spark starts
-local[$SPARK_GRAFT_CPUS] whatever --master says. A
-cluster master keeps PySpark's own Python worker daemon and reused
-workers: PySpark puts --py-files on a worker's sys.path only after it
-forks, so the package's preloading daemon
+script runs without the zip. Under spark-submit the run keeps its
+--master; run with plain python, it starts local[$SPARK_GRAFT_CPUS]. A
+cluster master, local-cluster[...] included, keeps PySpark's own Python
+worker daemon and reused workers: PySpark puts --py-files on a worker's
+sys.path only after it forks, so the package's preloading daemon
 (redo_log_parser_spark.worker_daemon, named for local masters only in
 session.LOCAL_CONFS) could not be imported there.
 

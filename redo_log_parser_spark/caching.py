@@ -1,7 +1,7 @@
 """Cache-lifecycle ownership for per-call cached frames.
 
 Several operators (`ngram_jaccard_pairs`, `minhash_dedup_pairs`,
-`simhash_near_dups`, `embedding_near_dup_pairs`) cache() an
+`embedding_near_dup_pairs`) cache() an
 intermediate frame that their lazy result reads more than once within
 one action. The operator cannot unpersist it (dropping the mark before
 the caller's action would disable the reuse), so in a long-lived

@@ -461,8 +461,7 @@ def q_ind_subset(spark, sf_dir):
     curr = frames[0]
     for f in frames[1:]:
         curr = curr.unionByName(f)
-    registry = curr.select("table_id", "col").distinct()
-    return inclusion_dependencies(curr, registry)
+    return inclusion_dependencies(curr)
 
 
 _SQL_IND_VALUES = " union all ".join(
@@ -677,7 +676,7 @@ def q_schema_discovery(spark, sf_dir):
     docs = synth_mixed_docs(spark, sf_dir)
     parsed = parse_documents(docs, keep_cols=("url", "warc_ts"))
     events = uniquify_row_ids(parsed, order_cols=("ts", "url"))
-    cols_df, _ = discover_schema(events)
+    cols_df = discover_schema(events)[0]
     return cols_df.select(
         "table_id", "col", "can_be_pk", "values_increasing", "name_like_pk"
     )

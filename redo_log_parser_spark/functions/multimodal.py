@@ -12,8 +12,8 @@ Two decode modes (round-4 VERDICT item 5 closed the strict stub):
     codec swap-in at deployment; the dispatch point is `_strict_decode`.
   * decode="fake"    -> deterministic fake decoder: metadata and feature
     vectors derived from a stable hash of the bytes — same shape, same
-    schema, same batch behavior, so downstream operators (resize plan,
-    frame sampling, feature join) are exercised without codec deps.
+    schema, same batch behavior, so downstream operators (e.g. a
+    feature join) are exercised without codec deps.
 
 Batches stream through mapInPandas an Arrow batch at a time, so peak
 executor memory is one batch of decoded media, not one partition —
@@ -305,30 +305,4 @@ def decode_media(
     return df.select(id_col, bytes_col).mapInPandas(
         decode_batches,
         schema=MEDIA_META_ERR_SCHEMA if keep_errors else MEDIA_META_SCHEMA,
-    )
-
-
-def resize_plan(meta: DataFrame, max_side: int = 224) -> DataFrame:
-    """Pure-expression resize planning over decoded metadata: target
-    dims preserving aspect ratio (the decode-side work would consume
-    this plan batch-wise)."""
-    scale = F.least(
-        F.lit(max_side) / F.col("width"), F.lit(max_side) / F.col("height"),
-        F.lit(1.0),
-    )
-    return meta.select(
-        "media_id",
-        F.round(F.col("width") * scale).cast("int").alias("target_w"),
-        F.round(F.col("height") * scale).cast("int").alias("target_h"),
-    )
-
-
-def sample_frames(meta: DataFrame, every_n: int = 5) -> DataFrame:
-    """(media_id, frame_idx) — deterministic frame sampling plan for
-    video rows; explode of a sequence, no UDF."""
-    return meta.filter(F.col("n_frames") > 1).select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-        ).alias("frame_idx"),
     )

@@ -10,7 +10,7 @@ Five families, each picked for a different scale/recall trade-off:
   minhash_lsh        MinHash signatures + banded LSH: candidate pairs
                      come from band-bucket joins, verified with true
                      Jaccard. Sub-quadratic; the web-scale near-dup path.
-  simhash            64-bit SimHash fingerprints + Hamming-band blocking.
+  simhash            64-bit SimHash fingerprints.
   embedding_cosine   near-dup by cosine of an embedding column (see
                      operators/similarity.py for the ANN machinery).
 
@@ -544,70 +544,6 @@ def simhash(
         ).otherwise(F.lit(0).cast("bigint"))
         fp_col = bit if fp_col is None else fp_col + bit
     return summed.select(id_col, fp_col.alias("simhash"))
-
-
-def simhash_near_dups(
-    fps: DataFrame, max_hamming: int = 3, id_col: str = "doc_id",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Blocked Hamming search: split the 64-bit fingerprint into
-    max_hamming+1 bands — any pair within distance max_hamming agrees on
-    at least one full band (pigeonhole), so candidates come from band
-    equi-joins; verified with bit_count(xor).
-
-    `max_bucket_size` (corpus-scale knob, default off): see _cap_buckets.
-    Note capping voids the pigeonhole *guarantee* for pairs inside
-    dropped buckets — bounded pairs vs exactness, observable via the
-    lsh_dropped_rows metric.
-
-    The banded frame is CACHED before the self-join: `fps` is normally
-    the simhash aggregate (explode + 64-vote groupBy), and the join's
-    two aliases would otherwise evaluate it twice — AQE does not reuse
-    the exchange across self-join aliases (round-4 sf1 A/B: 2.85 s →
-    0.87-1.54 s warm, identical 7,054 pairs). Same cache lifecycle as
-    ngram_jaccard_pairs (caller clears between invocations if needed)."""
-    n_bands = max_hamming + 1
-    width = 64 // n_bands
-    banded = fps.select(
-        id_col,
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright("simhash", b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bucket"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select(id_col, "simhash", "bb.band", "bb.bucket")
-    if max_bucket_size is not None:
-        banded = _cap_buckets(banded, max_bucket_size)
-    banded = register(banded.cache())
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    return (
-        pairs.withColumn(
-            "hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def dedup_components(

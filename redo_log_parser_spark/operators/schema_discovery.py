@@ -15,7 +15,8 @@ every reader takes as "open at the end of the log".
 
 Semantics preserved (SURVEY.md §1.3 item 4):
   * Column registry: every column ever referenced, including columns
-    created empty by delete statements (SchemaExtractor.scala:130-137).
+    created empty by delete statements (SchemaExtractor.scala:130-137):
+    the rows of column_facts, one per (table, column) of the writes.
   * Current values: the intervals still open at the end of the log, so
     the last write per (table, column, row) wins; a delete removes the
     value only for columns NAMED in its where clause
@@ -28,21 +29,28 @@ Semantics preserved (SURVEY.md §1.3 item 4):
     a HashMap — order-unstable; log order is the documented intent).
     Both column flags come from one frame of the writes and one
     groupBy(table, column) (column_facts), no join with the registry.
-  * IND/FK: final-state inclusion across tables (matches the eager
-    latched fold on both shipped artifacts). Computed as ONE join over
-    deduped column values, not N² anti-joins.
+  * IND/FK: final-state inclusion across tables, from ONE self-join
+    over deduped current values (not N² anti-joins) for the columns
+    that hold a value; a column without one is a subset of every column
+    of another table (SchemaDeriver.scala:63). summarize_schema adds
+    those pairs on the driver from column_facts' has_value, and under
+    ind_mode='eager' keeps only the final pairs the reference's latched
+    fold would hold (latched_pairs): both modes share one plan.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
-from pyspark.sql.types import ArrayType
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..caching import register
+
+# an inclusion dependency: (table_id, col) ⊆ (ref_table, ref_col)
+PAIR = ("table_id", "col", "ref_table", "ref_col")
 
 
 def insert_kv_pairs() -> F.Column:
@@ -141,11 +149,6 @@ def column_writes(events: DataFrame) -> DataFrame:
     )
 
 
-def column_registry(writes: DataFrame) -> DataFrame:
-    """A1 + column existence: every (table, column) ever referenced."""
-    return writes.select("table_id", "col").distinct()
-
-
 def _value_intervals(writes: DataFrame) -> DataFrame:
     """(table_id, col, row_id, value, start_sk, end_sk) — validity
     intervals [start_sk, end_sk) of written values: a write opens at its
@@ -178,10 +181,17 @@ def current_values(writes: DataFrame) -> DataFrame:
 
 
 def column_facts(writes: DataFrame, mono_mode: str = "log") -> DataFrame:
-    """A3 + A4 — (table_id, col, can_be_pk, values_increasing) for every
-    column in `writes`, from one frame and one groupBy. A column that
-    only deletes created has no writes and keeps both flags true, as
-    the reference initializes them (Column.scala:79-84, 95-130).
+    """A1 + A3 + A4 — (table_id, col, can_be_pk, values_increasing,
+    created_sk, has_value) for every column in `writes`, from one frame
+    and one groupBy. A column that only deletes created has no writes
+    and keeps both flags true, as the reference initializes them
+    (Column.scala:79-84, 95-130).
+
+    created_sk is the column's birth, the first log position that names
+    it, tombstones included. has_value: some written interval is still
+    open at the end of the log, the test current_values applies, so a
+    column without one has no current value (empty, or emptied by
+    deletes). The IND assembly in summarize_schema reads both.
 
     can_be_pk is sticky via value-lifetime overlap. A duplicate existed
     at some prefix ⇔ two validity intervals of the same
@@ -235,7 +245,11 @@ def column_facts(writes: DataFrame, mono_mode: str = "log") -> DataFrame:
     )
     rows = writes.withColumn("end_sk", F.lead("sk").over(w_row)).withColumn(
         "overlap", overlap)
-    aggs = [F.max(F.when(is_write, F.col("overlap"))).alias("any_overlap")]
+    aggs = [
+        F.max(F.when(is_write, F.col("overlap"))).alias("any_overlap"),
+        F.min("sk").alias("created_sk"),
+        F.max(is_write & end_sk.isNull()).alias("has_value"),
+    ]
     increasing = F.lit(True)
     if mono_mode == "log":
         w_log = Window.partitionBy("table_id", "col").orderBy(~is_write, "sk")
@@ -260,17 +274,21 @@ def column_facts(writes: DataFrame, mono_mode: str = "log") -> DataFrame:
         "col",
         F.coalesce(~F.col("any_overlap"), F.lit(True)).alias("can_be_pk"),
         F.coalesce(increasing, F.lit(True)).alias("values_increasing"),
+        "created_sk",
+        "has_value",
     )
 
 
-def inclusion_dependencies(curr: DataFrame, registry: DataFrame) -> DataFrame:
-    """A6 — all cross-table inclusion dependencies in ONE shuffle join.
+def inclusion_dependencies(curr: DataFrame) -> DataFrame:
+    """A6 — the cross-table inclusion dependencies between columns that
+    hold a value, in ONE shuffle join.
 
     distinct(A) ⊆ distinct(B)  ⇔  |distinct(A) ∩ distinct(B)| = |distinct(A)|.
     Deduped values joined on value; per column-pair match counts compared
-    to the left column's distinct count. Empty columns (possible via
-    delete-created columns) are ⊆ every other-table column
-    (forall over empty set, SchemaDeriver.scala:63)."""
+    to the left column's distinct count. A column absent from `curr` has
+    no value and is ⊆ every other-table column (forall over the empty
+    set, SchemaDeriver.scala:63); summarize_schema adds those pairs from
+    column_facts' has_value."""
     d = register(curr.select("table_id", "col", "value").distinct().cache())
     n = d.groupBy("table_id", "col").agg(F.count("*").alias("n_distinct"))
     a = d.alias("a")
@@ -286,37 +304,27 @@ def inclusion_dependencies(curr: DataFrame, registry: DataFrame) -> DataFrame:
         )
         .agg(F.count("*").alias("n_match"))
     )
-    ind = (
+    return (
         matched.join(n, ["table_id", "col"])
         .filter(F.col("n_match") == F.col("n_distinct"))
-        .select("table_id", "col", "ref_table", "ref_col")
+        .select(*PAIR)
     )
-    # empty columns: in the registry but absent from current values
-    nonempty = d.select("table_id", "col").distinct()
-    empty = registry.join(nonempty, ["table_id", "col"], "left_anti")
-    empty_pairs = (
-        empty.crossJoin(
-            registry.select(
-                F.col("table_id").alias("ref_table"), F.col("col").alias("ref_col")
-            )
-        )
-        .filter(F.col("table_id") != F.col("ref_table"))
-        .select("table_id", "col", "ref_table", "ref_col")
-    )
-    return ind.unionByName(empty_pairs)
 
 
 def _literal(value) -> Column:
-    """A collected value as a literal expression; a Row becomes a
-    struct."""
-    if isinstance(value, Row):
+    """A driver-side value as a literal expression; a tuple (a Row
+    too) becomes a struct."""
+    if isinstance(value, tuple):
         return F.struct(*map(_literal, value))
     return F.lit(value)
 
 
-def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> DataFrame:
+def latched_pairs(writes: DataFrame, pairs: set[tuple], born: dict) -> set[tuple]:
     """A6 under the reference's EAGER/LATCHED semantics
-    (SchemaDeriver.scala:69-93).
+    (SchemaDeriver.scala:69-93): the final-state `pairs` (table_id, col,
+    ref_table, ref_col) that the reference's per-entry fold still holds
+    at the end of the log. `born` maps (table_id, col) to the column's
+    created_sk (column_facts).
 
     The reference recomputes isSubsetOf after EVERY entry, but only ADDS
     a pair at an entry that CREATES one of the two TABLES — not merely
@@ -341,60 +349,46 @@ def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> Data
     evaluation step from t0 through the end of the log.
 
     The final evaluation is the final state, so eager pairs ⊆ final
-    pairs: candidates come from the final-state join and are FILTERED by
-    a continuity check — no per-entry replay. Liveness of a value in a
-    column is a union of write intervals, and every possible violation
-    has a witness at an interval boundary (an A-interval start not
-    covered by B, or a B-interval end inside a live A-interval — both
-    are real log steps). Hence: holds-at-every-step ⇔ each A-interval
-    clipped to [t0, ∞) chains through contiguous B-intervals of the
-    same value. One extra window + one join + one fold over per-value
-    interval arrays (small groups); pair frame is broadcast."""
-    final_pairs = inclusion_dependencies(current_values(writes), registry)
-    iv = _value_intervals(writes)
-    created = writes.groupBy("table_id", "col").agg(F.min("sk").alias("created_sk"))
-    tbirth = writes.groupBy("table_id").agg(F.min("sk").alias("tb_sk"))
-    pairs = (
-        final_pairs.join(created, ["table_id", "col"])
-        .join(tbirth, ["table_id"])
-        .join(
-            created.select(
-                F.col("table_id").alias("ref_table"),
-                F.col("col").alias("ref_col"),
-                F.col("created_sk").alias("ref_created_sk"),
-            ),
-            ["ref_table", "ref_col"],
-        )
-        .join(
-            tbirth.select(
-                F.col("table_id").alias("ref_table"),
-                F.col("tb_sk").alias("ref_tb_sk"),
-            ),
-            ["ref_table"],
-        )
+    pairs: the gate filters the final pairs on the driver (a table's
+    birth is its columns' earliest created_sk), and a continuity check
+    drops the violated ones — no per-entry replay. Liveness of a value
+    in a column is a union of write intervals, and every possible
+    violation has a witness at an interval boundary (an A-interval start
+    not covered by B, or a B-interval end inside a live A-interval —
+    both are real log steps). Hence: holds-at-every-step ⇔ each
+    A-interval clipped to [t0, ∞) chains through contiguous B-intervals
+    of the same value. The gated pairs are schema-sized (≤ cols²): they
+    enter the check as one literal, broadcast, with no driver-built
+    frame to scan (createDataFrame of a local list costs a
+    Python-worker job per scan), and ONE collect returns the violated
+    ones."""
+    def order(sk):
+        # Spark's ascending order of a collected log position: a null
+        # field (a document without a url) comes first
+        return tuple((v is not None, v) for v in sk)
+
+    birth: dict = {}
+    for (t, _), sk in born.items():
+        birth[t] = min(birth.get(t, sk), sk, key=order)
+    candidates = []
+    for p in pairs:
         # pair birth = the entry creating the LATER of the two TABLES;
         # columns born after it never open the gate (see docstring)
-        .withColumn("t0", F.greatest("tb_sk", "ref_tb_sk"))
-        .filter(
-            (F.col("created_sk") <= F.col("t0"))
-            & (F.col("ref_created_sk") <= F.col("t0"))
-        )
-        .select("table_id", "col", "ref_table", "ref_col", "t0")
-    )
-    pkey = ["table_id", "col", "ref_table", "ref_col"]
-    # The candidate-pair frame is SCHEMA-sized (≤ cols² rows, like the
-    # driver summary) — collected once and rebuilt from literals, so the
-    # three joins below neither re-derive the whole final-state lineage
-    # nor scan a driver-built frame (createDataFrame of a local list
-    # costs a Python-worker job per scan).
-    pairs = writes.sparkSession.range(1, numPartitions=1).select(F.inline(
-        F.array(*map(_literal, pairs.collect())).cast(ArrayType(pairs.schema))
-    ))
-    a_iv = F.broadcast(pairs).join(iv, ["table_id", "col"]).select(
-        *pkey, "t0", "value",
+        t0 = max(birth[p[0]], birth[p[2]], key=order)
+        if max(order(born[p[:2]]), order(born[p[2:]])) <= order(t0):
+            candidates.append((*p, t0))
+    if not candidates:
+        return set()
+    shape = StructType([StructField(c, StringType()) for c in PAIR]
+                       + [StructField("t0", writes.schema["sk"].dataType)])
+    gated = writes.sparkSession.range(1, numPartitions=1).select(F.inline(
+        F.array(*map(_literal, candidates)).cast(ArrayType(shape))))
+    iv = _value_intervals(writes)
+    a_iv = F.broadcast(gated).join(iv, ["table_id", "col"]).select(
+        *PAIR, "t0", "value",
         F.col("start_sk").alias("a_start"), F.col("end_sk").alias("a_end"),
     )
-    b_iv = F.broadcast(pairs.select(*pkey)).join(
+    b_iv = F.broadcast(gated.select(*PAIR)).join(
         iv.select(
             F.col("table_id").alias("ref_table"),
             F.col("col").alias("ref_col"),
@@ -402,14 +396,14 @@ def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> Data
         ),
         ["ref_table", "ref_col"],
     )
-    b_grp = b_iv.groupBy(*pkey, "value").agg(
+    b_grp = b_iv.groupBy(*PAIR, "value").agg(
         F.sort_array(
             F.collect_list(
                 F.struct(F.col("start_sk").alias("s"), F.col("end_sk").alias("e"))
             )
         ).alias("b_ivs")
     )
-    joined = a_iv.join(b_grp, [*pkey, "value"], "left")
+    joined = a_iv.join(b_grp, [*PAIR, "value"], "left")
     lo = F.greatest(F.col("a_start"), F.col("t0"))
     a_end = F.col("a_end")
 
@@ -432,14 +426,8 @@ def inclusion_dependencies_eager(writes: DataFrame, registry: DataFrame) -> Data
     viol = before(lo, a_end) & (
         F.col("b_ivs").isNull() | (reach.isNotNull() & before(reach, a_end))
     )
-    violated = (
-        joined.withColumn("viol", viol)
-        .groupBy(*pkey)
-        .agg(F.max("viol").alias("any_viol"))
-        .filter(F.col("any_viol"))
-        .select(*pkey)
-    )
-    return pairs.select(*pkey).join(violated, pkey, "left_anti")
+    violated = joined.filter(viol).select(*PAIR).distinct().collect()
+    return {p[:4] for p in candidates} - {tuple(r) for r in violated}
 
 
 def discover_schema(
@@ -447,24 +435,31 @@ def discover_schema(
     strict: bool = False,
     ind_mode: str = "final",
     mono_mode: str = "log",
-) -> tuple[DataFrame, DataFrame]:
-    """Full schema discovery. Returns (columns_df, ind_df):
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """Full schema discovery, lazy. Returns the arguments of
+    summarize_schema, (columns_df, ind_df, eager_writes):
 
-    columns_df: (table_id, col, can_be_pk, values_increasing,
-                 name_like_pk, is_pk)
-    ind_df:     (table_id, col, ref_table, ref_col) — INDs under
-                ind_mode='final' (default: final-state inclusion) or
-                'eager' (the reference's latched fold; both agree on the
-                shipped artifacts, see tests/test_ind_semantics.py).
-    mono_mode:  'log' (default) — values_increasing is the real
-                log-order signal (the reference's documented intent);
-                'reference' — constant True, byte-faithful to the
-                shipped binary whose increasing check is vacuous (see
-                column_facts() docstring; pinned against a real strict
-                console dump in tests/test_reference_golden.py).
+    columns_df:   (table_id, col, can_be_pk, values_increasing,
+                   created_sk, has_value, name_like_pk, is_pk)
+    ind_df:       (table_id, col, ref_table, ref_col) — final-state
+                  INDs between columns that hold a value
+                  (inclusion_dependencies).
+    eager_writes: under ind_mode='eager', the cached writes frame that
+                  summarize_schema checks the reference's latched fold
+                  against (latched_pairs; both modes agree on the
+                  shipped artifacts, see tests/test_ind_semantics.py);
+                  None under ind_mode='final' (default: final-state
+                  inclusion).
+    mono_mode:    'log' (default) — values_increasing is the real
+                  log-order signal (the reference's documented intent);
+                  'reference' — constant True, byte-faithful to the
+                  shipped binary whose increasing check is vacuous (see
+                  column_facts() docstring; pinned against a real strict
+                  console dump in tests/test_reference_golden.py).
     """
+    if ind_mode not in ("final", "eager"):
+        raise ValueError(f"ind_mode must be 'final' or 'eager', got {ind_mode!r}")
     writes = register(column_writes(events).cache())
-    registry = column_registry(writes)
     cols = column_facts(writes, mono_mode).withColumn(
         # Java (?i) WITHOUT UNICODE_CASE = ASCII-only folding
         # (Column.scala:146-149 `matches("(?i:.*id)")` etc.) — a
@@ -478,13 +473,8 @@ def discover_schema(
         else F.col("can_be_pk")
     )
     cols = cols.withColumn("is_pk", pk_expr)
-    if ind_mode == "eager":
-        ind = inclusion_dependencies_eager(writes, registry)
-    elif ind_mode == "final":
-        ind = inclusion_dependencies(current_values(writes), registry)
-    else:
-        raise ValueError(f"ind_mode must be 'final' or 'eager', got {ind_mode!r}")
-    return cols, ind
+    ind = inclusion_dependencies(current_values(writes))
+    return cols, ind, writes if ind_mode == "eager" else None
 
 
 @dataclass(frozen=True)
@@ -563,8 +553,28 @@ class SchemaSummary:
         )
 
 
-def summarize_schema(cols: DataFrame, ind: DataFrame) -> SchemaSummary:
-    return SchemaSummary(
-        columns=[r.asDict() for r in cols.collect()],
-        inds=[r.asDict() for r in ind.collect()],
-    )
+def summarize_schema(
+    cols: DataFrame, ind: DataFrame, eager_writes: DataFrame | None = None,
+) -> SchemaSummary:
+    """Collect discover_schema's frames into the driver-side schema and
+    assemble its INDs there; columns and pairs are schema-sized however
+    long the log is. The IND pairs are the self-join's, plus every
+    column without a value (has_value false) ⊆ every column of another
+    table (SchemaDeriver.scala:63). With `eager_writes` (ind_mode=
+    'eager') only the pairs the reference's latched fold keeps survive,
+    see latched_pairs. `columns` keeps discover_schema's columns but the
+    two IND inputs, created_sk and has_value."""
+    columns, born, empty = [], {}, []
+    for r in cols.collect():
+        c = r.asDict()
+        key = (c["table_id"], c["col"])
+        born[key] = c.pop("created_sk")
+        if not c.pop("has_value"):
+            empty.append(key)
+        columns.append(c)
+    pairs = {tuple(r) for r in ind.collect()}
+    pairs |= {(t, c, rt, rc) for t, c in empty for rt, rc in born if rt != t}
+    if eager_writes is not None:
+        pairs = latched_pairs(eager_writes, pairs, born)
+    return SchemaSummary(columns=columns,
+                         inds=[dict(zip(PAIR, p)) for p in sorted(pairs)])

@@ -4,12 +4,10 @@
                     projection + TakeOrderedAndProject — no global sort
                     materialization, scales linearly, the correctness
                     baseline.
-  lsh_bucketed_ann  sign-random-projection LSH: embeddings hash into
-                    2^n_planes buckets via deterministic hyperplanes;
-                    the query probes its own bucket (and optional
-                    multi-probe neighbors), brute-forcing only within.
-                    The 100 TB scale path: the bucket join prunes the
-                    candidate set by ~2^n_planes.
+  with_lsh_bucket   sign-random-projection LSH: embeddings hash into
+                    2^n_planes buckets via deterministic hyperplanes.
+  ivf_ann           IVF search: brute-force only within the query's
+                    nearest coarse centroids.
   embedding_near_dup_pairs  all-pairs near-duplicates within LSH buckets.
 
 Hyperplanes (and IVF centroids) are generated from a seeded RNG on the
@@ -41,10 +39,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
     )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
 
 
 def _query_topk(cand: DataFrame, query: list[float], k: int,
@@ -113,8 +107,8 @@ def _sig_from_planes(vec: Column, planes_col: Column) -> Column:
 
 
 def py_lsh_signature(vec, planes) -> int:
-    """Driver-side twin of _sig_from_planes (same fold order) — used to
-    bucket the query vector without a Spark job."""
+    """Driver-side twin of _sig_from_planes (same fold order), the
+    reference the with_lsh_bucket parity test compares against."""
     sig = 0
     for plane in planes:
         sig = sig * 2 + (1 if float(np.dot(vec, plane)) > 0 else 0)
@@ -168,31 +162,6 @@ def with_lsh_bucket(
     else:
         sig = _sig_from_planes(v, F.col("__planes"))
     return base.withColumn("lsh_bucket", sig).drop("__planes")
-
-
-def lsh_bucketed_ann(
-    emb: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_planes: int = 8,
-    seed: int = 42,
-    multiprobe_bits: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: score only vectors whose bucket is the query's
-    bucket or differs in ≤ multiprobe_bits planes (multi-probe recall
-    boost). At scale, `lsh_bucket` doubles as the storage partition key
-    so probes become partition-pruned scans."""
-    planes = _hyperplanes(len(query), n_planes, seed)
-    qsig = py_lsh_signature(query, planes)
-    probe = [qsig]
-    if multiprobe_bits >= 1:
-        # flipping any single bit == flipping exactly one plane's sign
-        probe += [qsig ^ (1 << p) for p in range(n_planes)]
-    bucketed = with_lsh_bucket(emb, len(query), n_planes, seed, vec_col)
-    cand = bucketed.filter(F.col("lsh_bucket").isin(probe))
-    return _query_topk(cand, query, k, id_col, vec_col)
 
 
 def _sq_dist(a: Column, c: Column) -> Column:

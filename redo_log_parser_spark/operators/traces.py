@@ -266,18 +266,17 @@ def assign_entries(events: DataFrame, assignments: DataFrame) -> DataFrame:
 def collect_traces(
     assigned: DataFrame,
     event_cols: tuple[str, ...] = ("event_name", "xes_ts"),
-    order_cols: tuple[str, ...] = ("ts", "url"),
     keys: tuple[str, ...] = ("case_id",),
 ) -> DataFrame:
-    """G4 — (*keys, events: array<struct>) with events in log order;
-    the pipeline passes keys=("root", "case_id").
+    """G4 — (*keys, events: array<struct>) with events in log order
+    (ts, url); the pipeline passes keys=("root", "case_id").
 
     One groupBy(*keys): Spark plans a map-side partial collect_list,
     one shuffle on the keys and the final merge. sort_array on the
-    (order..., payload) struct makes ordering deterministic regardless
+    (ts, url, payload) struct makes ordering deterministic regardless
     of arrival order."""
     ev = F.struct(
-        *[F.col(c).alias(f"o{i}") for i, c in enumerate(order_cols)],
+        F.col("ts").alias("o0"), F.col("url").alias("o1"),
         *[F.col(c) for c in event_cols],
     )
     traces = assigned.groupBy(*keys).agg(

@@ -652,17 +652,3 @@ def xes_trace_xml(trace: list[ParsedEntry], include_update_values: bool = False)
         for e in trace
     )
     return f"<trace>{events}</trace>"
-
-
-def xes_log_xml(
-    traces: list[list[ParsedEntry]], root: str, include_update_values: bool = False
-) -> str:
-    """Full <log> document (TraceIDParser.scala:97-112), canonical form."""
-    body = "".join(xes_trace_xml(t, include_update_values) for t in traces)
-    return (
-        '<log xes.version="2.0" xmlns="http://www.xes-standard.org/">'
-        '<extension name="Time" prefix="time" uri="http://www.xes-standard.org/time.xesext"/>'
-        '<extension name="Concept" prefix="concept" uri="http://www.xes-standard.org/concept.xesext"/>'
-        f'<string key="concept:name" value="{root}_XES_Log"/>'
-        f"{body}</log>"
-    )

@@ -44,7 +44,9 @@ Unicode 14, e.g. U+A7C0, which JDK 17 (Unicode 13) leaves as they are.
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CONFS = {
@@ -78,17 +80,36 @@ LOCAL_CONFS = {
 }
 
 
+def _submitted_master() -> str | None:
+    """The master of the JVM spark-submit started for this process, or
+    None when the process was not started by spark-submit (only
+    spark-submit exports PYSPARK_GATEWAY_PORT to it). Its launcher always
+    writes spark.master into the JVM's conf, `local[*]` when --master was
+    not given."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return None
+    SparkContext._ensure_initialized()
+    return SparkConf().get("spark.master")
+
+
 def get_spark(
     app_name: str = "redo-log-parser-spark",
     master: str | None = None,
     confs: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The session, on the master spark-submit set when it started this
+    process (`master` is then ignored), else on `master`, by default
+    `local[$SPARK_GRAFT_CPUS]`. A `local` or `local[...]` master adds
+    LOCAL_CONFS; `local-cluster[...]` runs separate executor JVMs, so it
+    counts as a cluster."""
     builder = SparkSession.builder.appName(app_name)
-    if not master and not os.environ.get("SPARK_MASTER"):
-        master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-    if master:
+    submitted = _submitted_master()
+    if submitted:
+        master = submitted
+    else:
+        master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
         builder = builder.master(master)
-    local = (master or os.environ["SPARK_MASTER"]).startswith("local")
+    local = re.fullmatch(r"local(\[.*\])?", master) is not None
     merged = {**DEFAULT_CONFS, **(LOCAL_CONFS if local else {}), **(confs or {})}
     for k, v in merged.items():
         builder = builder.config(k, v)

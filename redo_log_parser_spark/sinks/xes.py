@@ -117,8 +117,7 @@ def collect_clean_log(
 
 
 def reference_trace_orders(
-    events: DataFrame, roots: Iterable[str], seed: int = 42,
-    max_rows: int = 1_000_000,
+    events: DataFrame, roots: Iterable[str],
 ) -> dict[str, list[str]]:
     """The reference binary's document-level trace order for each root,
     as this engine's case ids (round-3 VERDICT #5 — closes the one
@@ -135,12 +134,13 @@ def reference_trace_orders(
     reference's row-id strings from this engine's deterministic
     `orig#k` ids, and the HAMT replica orders them. Driver-side over
     the collected event log, collected once for all roots —
-    reference-CLI-sized inputs only."""
+    reference-CLI-sized inputs only (collect_clean_log's guard). The
+    suffix stream has the seed of the reference CLI run,
+    reference_row_id_map's default."""
     collected = collect_clean_log(
-        events, ("orig_row_id", "row_id", "op", "table_id"), max_rows)
+        events, ("orig_row_id", "row_id", "op", "table_id"))
     ref_map = reference_row_id_map(
-        [(r["orig_row_id"], r["op"]) for r in collected], seed
-    )
+        [(r["orig_row_id"], r["op"]) for r in collected])
     # The reference's bucket order is a NESTED groupBy (TraceIDParser
     # .scala:46-57): outer `logEntries.groupBy(_.tableID)` over ALL
     # tables — iterated in Scala-Map order, filtered equalsIgnoreCase

@@ -1,8 +1,8 @@
 """Cache-lifecycle ownership (round-4 VERDICT item 4 / ADVICE).
 
 Operators that cache() per-call frames (`ngram_jaccard_pairs`,
-`minhash_dedup_pairs`, `simhash_near_dups`, `embedding_near_dup_pairs`)
-register them with caching.operator_caches(); a caller that
+`minhash_dedup_pairs`, `embedding_near_dup_pairs`) register them with
+caching.operator_caches(); a caller that
 materializes inside the block gets every frame unpersisted on exit, so
 no persisted RDD outlives the block.
 """
@@ -16,8 +16,6 @@ from redo_log_parser_spark.caching import operator_caches
 from redo_log_parser_spark.operators.dedup import (
     minhash_dedup_pairs,
     ngram_jaccard_pairs,
-    simhash,
-    simhash_near_dups,
 )
 from redo_log_parser_spark.operators.similarity import (
     embedding_near_dup_pairs,
@@ -45,12 +43,10 @@ def emb(spark):
 
 
 def test_each_operator_returns_cache_count_to_baseline(docs, emb, persisted_rdd_ids):
-    fps = simhash(docs)
     runs = [
         lambda: ngram_jaccard_pairs(docs, threshold=0.1).collect(),
         lambda: ngram_jaccard_pairs(docs, threshold=0.1, max_df=30).collect(),
         lambda: minhash_dedup_pairs(docs, threshold=0.1).collect(),
-        lambda: simhash_near_dups(fps, max_hamming=10).collect(),
         lambda: embedding_near_dup_pairs(emb, threshold=0.0).collect(),
     ]
     base = persisted_rdd_ids()
@@ -100,7 +96,7 @@ def test_result_still_correct_after_unpersist(spark, docs):
 def test_schema_discovery_and_traces_caches_owned(mini_docs, persisted_rdd_ids):
     """review r5s5: the ownership mechanism must cover ALL library
     per-call cache() sites with lazy results, not just the dedup/ANN
-    four — discover_schema's writes frame, inclusion_dependencies'
+    three — discover_schema's writes frame, inclusion_dependencies'
     deduped values, and the case-propagation edge frame."""
     from redo_log_parser_spark.functions.parse import parse_documents
     from redo_log_parser_spark.operators.rowid import uniquify_row_ids
@@ -115,10 +111,7 @@ def test_schema_discovery_and_traces_caches_owned(mini_docs, persisted_rdd_ids):
     base = persisted_rdd_ids()
 
     with operator_caches() as frames:
-        cols_df, ind_df = discover_schema(events)
-        cols_df.collect()
-        ind_df.collect()
-        schema = summarize_schema(cols_df, ind_df)
+        schema = summarize_schema(*discover_schema(events))
         assert len(frames) >= 2  # writes + IND deduped values
     assert persisted_rdd_ids() <= base
 

@@ -140,8 +140,7 @@ def test_xes_pretty_width_regimes_match_reference(spark, tmp_path, ref_cp):
 
     docs = read_log_files(spark, log)
     events = uniquify_row_ids(parse_documents(docs)).cache()
-    cols, ind = discover_schema(events, ind_mode="eager")
-    schema = summarize_schema(cols, ind)
+    schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
     got = _our_xes(events, schema, root, str(tmp_path / "ours.xes"), True)
     events.unpersist()
     _assert_xes_equal(got, ref_xes, "width regimes")
@@ -165,8 +164,7 @@ def test_documents_mode_matches_reference(spark, tmp_path, ref_cp, seed):
     events = uniquify_row_ids(parse_documents(docs)).cache()
     try:
         assert events.filter("parse_error is not null").count() == 0
-        cols, ind = discover_schema(events, ind_mode="eager")
-        schema = summarize_schema(cols, ind)
+        schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
         _assert_schema_dumps_equal(
             schema.format_console(), ref_plain, f"docs-mode seed={seed}")
         _assert_xes_equal(
@@ -212,8 +210,7 @@ def test_timestamp_pattern_matches_reference(spark, tmp_path, ref_cp):
         docs = read_log_files(spark, log)
         events = uniquify_row_ids(parse_documents(docs, cfg=cfg)).cache()
         assert events.filter("parse_error is not null").count() == 0
-        cols, ind = discover_schema(events, ind_mode="eager")
-        schema = summarize_schema(cols, ind)
+        schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
         got = _our_xes(events, schema, root, str(tmp_path / "o.xes"), False)
         events.unpersist()
         _assert_xes_equal(got, ref_xes, f"pattern={pat or 'default'}")
@@ -236,16 +233,15 @@ def test_fuzz_matches_reference(spark, tmp_path, ref_cp, seed):
     try:
         assert events.filter("parse_error is not null").count() == 0
 
-        cols, ind = discover_schema(events, ind_mode="eager")
-        schema = summarize_schema(cols, ind)
+        schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
         _assert_schema_dumps_equal(
             schema.format_console(), ref_plain, f"seed={seed} plain")
         _assert_console_bytes_equal(log, ref_plain, False, f"seed={seed}")
 
-        cols_s, ind_s = discover_schema(
-            events, strict=True, ind_mode="eager", mono_mode="reference")
+        schema_s = summarize_schema(*discover_schema(
+            events, strict=True, ind_mode="eager", mono_mode="reference"))
         _assert_schema_dumps_equal(
-            summarize_schema(cols_s, ind_s).format_console(strict=True),
+            schema_s.format_console(strict=True),
             ref_strict, f"seed={seed} strict")
         _assert_console_bytes_equal(
             log, ref_strict, True, f"seed={seed} strict")
@@ -320,8 +316,7 @@ def test_fuzz_ts_style_matches_reference(spark, tmp_path, ref_cp,
     events = uniquify_row_ids(parse_documents(docs, cfg=cfg)).cache()
     try:
         assert events.filter("parse_error is not null").count() == 0
-        cols, ind = discover_schema(events, ind_mode="eager")
-        schema = summarize_schema(cols, ind)
+        schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
         _assert_schema_dumps_equal(
             schema.format_console(), ref_plain, f"{ts_style} plain")
 

@@ -8,7 +8,7 @@ pinned against the binary below). An inclusion that becomes true LATER,
 when both tables already exist, is never added — including every pair
 involving a column born into an existing table. This engine defaults to
 FINAL-STATE inclusion (SURVEY.md §1.3.4, §7.2) and, since round 2, also
-offers ind_mode='eager' (inclusion_dependencies_eager) that reproduces
+offers ind_mode='eager' (schema_discovery.latched_pairs) that reproduces
 the latched fold exactly — including on redo_log.txt, where the two
 definitions genuinely differ by two pairs and the reference's own
 database_state.txt FK annotations match EAGER (see
@@ -41,6 +41,16 @@ def _docs(spark, stmts):
     return spark.createDataFrame(pd.DataFrame(rows))
 
 
+def _ind_set(events, mode="final"):
+    """The schema's IND pairs under `mode`, as summarize_schema
+    assembles them."""
+    schema = summarize_schema(*discover_schema(events, ind_mode=mode))
+    return {
+        (i["table_id"], i["col"], i["ref_table"], i["ref_col"])
+        for i in schema.inds
+    }
+
+
 def test_late_inclusion_is_reported_final_state(spark):
     """T1.A = {x}; T2.B grows to {y, x} only AFTER both columns exist.
     Reference (eager latch): A ⊄ B forever. This engine: final-state
@@ -50,12 +60,7 @@ def test_late_inclusion_is_reported_final_state(spark):
         ('insert into "S"."T2"("B") values (\'y\');', "S1"),
         ('insert into "S"."T2"("B") values (\'x\');', "S2"),  # late inclusion
     ]
-    events = uniquify_row_ids(parse_documents(_docs(spark, stmts)))
-    _, ind_df = discover_schema(events)
-    got = {
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in ind_df.collect()
-    }
+    got = _ind_set(uniquify_row_ids(parse_documents(_docs(spark, stmts))))
     assert ('"S"."T1"', "A", '"S"."T2"', "B") in got  # final-state semantics
 
 
@@ -68,24 +73,14 @@ def test_broken_inclusion_is_dropped_like_reference(spark):
         ('insert into "S"."T2"("B") values (\'x\');', "S1"),  # A ⊆ B here
         ('insert into "S"."T1"("A") values (\'z\');', "R2"),  # breaks it
     ]
-    events = uniquify_row_ids(parse_documents(_docs(spark, stmts)))
-    _, ind_df = discover_schema(events)
-    got = {
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in ind_df.collect()
-    }
+    got = _ind_set(uniquify_row_ids(parse_documents(_docs(spark, stmts))))
     assert ('"S"."T1"', "A", '"S"."T2"', "B") not in got
     # the reverse still holds in both definitions: B={x} ⊆ A={x,z}
     assert ('"S"."T2"', "B", '"S"."T1"', "A") in got
 
 
 def _inds(spark, stmts, mode):
-    events = uniquify_row_ids(parse_documents(_docs(spark, stmts)))
-    _, ind_df = discover_schema(events, ind_mode=mode)
-    return {
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in ind_df.collect()
-    }
+    return _ind_set(uniquify_row_ids(parse_documents(_docs(spark, stmts))), mode)
 
 
 def test_eager_mode_latches_like_reference(spark):
@@ -136,6 +131,27 @@ def test_eager_gate_is_table_birth_not_column_birth(spark):
     assert ('"S"."A2"', "NEW", '"S"."B2"', "K") in final
 
 
+def test_eager_gate_orders_a_null_url_first(spark):
+    """The gate compares log positions (ts, url) on the driver. Two
+    tables born in the same second, one from a document without a url:
+    the null url sorts first, as in Spark, instead of failing the
+    comparison; the late column NEW still gains nothing."""
+    t0 = datetime(2020, 1, 1)
+    docs = spark.createDataFrame(pd.DataFrame([
+        (None, t0, 'insert into "S"."A"("ID") values (\'1\');\n'
+         "R1 01-JAN-2020 00:00:00"),
+        ("u1", t0, 'insert into "S"."B"("K") values (\'1\');\n'
+         "S1 01-JAN-2020 00:00:00"),
+        ("u2", t0 + timedelta(seconds=1),
+         'update "S"."A" set "NEW" = \'1\' where "NEW" = \'0\''
+         " and ROWID = 'R1';\nR1 01-JAN-2020 00:00:01"),
+    ], columns=["url", "warc_ts", "text"]).assign(lang="en"),
+        "url string, warc_ts timestamp, text string, lang string")
+    events = uniquify_row_ids(parse_documents(docs))
+    assert _ind_set(events, "eager") == {
+        ('"S"."A"', "ID", '"S"."B"', "K"), ('"S"."B"', "K", '"S"."A"', "ID")}
+
+
 def test_eager_gate_table_birth_matches_binary(spark, tmp_path):
     """The same three probe logs that pinned the gate, replayed through
     the ACTUAL reference binary (skips without the toolchain): our
@@ -183,8 +199,8 @@ def test_eager_gate_table_birth_matches_binary(spark, tmp_path):
         open(log, "w").write("\n".join(lines) + "\n")
         ref_dump, _ = run_reference(log, "-", str(tmp_path / f"{name}.xes"))
         events = uniquify_row_ids(parse_documents(read_log_files(spark, log)))
-        cols_df, ind_df = discover_schema(events, ind_mode="eager")
-        ours = summarize_schema(cols_df, ind_df).format_console()
+        ours = summarize_schema(
+            *discover_schema(events, ind_mode="eager")).format_console()
         a, b = parse_schema_dump(ref_dump), parse_schema_dump(ours)
         assert a == b, (name, a, b)
 
@@ -258,13 +274,7 @@ def test_eager_vs_final_on_reference_artifact(spark):
 
     docs = read_log_files(spark, "/root/reference/artifacts/redo_log.txt")
     events = uniquify_row_ids(parse_documents(docs, keep_cols=("url",))).cache()
-    _, ind_final = discover_schema(events, ind_mode="final")
-    _, ind_eager = discover_schema(events, ind_mode="eager")
-    as_set = lambda df: {  # noqa: E731
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in df.collect()
-    }
-    eager, final = as_set(ind_eager), as_set(ind_final)
+    eager, final = _ind_set(events, "eager"), _ind_set(events, "final")
     assert eager <= final  # the final evaluation IS the final state
     assert final - eager == {
         ('"SYSTEM"."ORDERS"', "ID", '"SYSTEM"."INVOICES"', "ID"),
@@ -287,13 +297,7 @@ def test_eager_vs_final_on_evaluation_artifact(spark):
     cfg = PipelineConfig(ts_format_java="yyyy-MM-dd HH:mm:ss")
     docs = read_log_files(spark, "/root/reference/artifacts/evaluation_log.txt")
     events = uniquify_row_ids(parse_documents(docs, cfg, keep_cols=("url",))).cache()
-    _, ind_final = discover_schema(events, ind_mode="final")
-    _, ind_eager = discover_schema(events, ind_mode="eager")
-    as_set = lambda df: {  # noqa: E731
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in df.collect()
-    }
-    eager, final = as_set(ind_eager), as_set(ind_final)
+    eager, final = _ind_set(events, "eager"), _ind_set(events, "final")
     assert eager <= final
     # Ground truth = oracle.eager_inds_replay, the set-level replay of
     # the reference loop (validated against the actual binary on probe
@@ -333,15 +337,11 @@ def test_eager_mode_matches_pure_python_replay_on_fuzz_logs(spark):
     from redo_log_parser_spark import oracle
     from redo_log_parser_spark.fixtures import _fmt_ts
 
-    for seed in (311, 422, 533):
+    # seeds 17 and 311 each hold a delete-created empty column
+    for seed in (17, 311, 422, 533):
         records, _tables = fuzz_records(seed)
         docs = spark.createDataFrame(records_to_documents(records))
-        events = uniquify_row_ids(parse_documents(docs))
-        _, ind_df = discover_schema(events, ind_mode="eager")
-        got = {
-            (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-            for r in ind_df.collect()
-        }
+        got = _ind_set(uniquify_row_ids(parse_documents(docs)), "eager")
         entries = oracle.uniquify_row_ids(oracle.parse_records(
             [f"{s.statement}\n{s.row_id} {_fmt_ts(ts)}"
              for s, ts in records]))
@@ -402,10 +402,6 @@ def test_duplicate_insert_columns_collapse_last_wins(spark):
         .filter("table_id = '\"S\".\"T\"'").collect()
     }
     assert fi[("B", "R1")] == "y" and ("B", "R1") in fi
-    _, ind_df = discover_schema(events)
-    got = {
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in ind_df.collect()
-    }
+    got = _ind_set(events)
     assert ('"S"."Q"', "C", '"S"."T"', "B") in got     # {y,z} ⊆ {y,z}
     assert ('"S"."P"', "A", '"S"."T"', "B") not in got  # x is phantom

@@ -134,19 +134,21 @@ def test_trace_tail_job_budget(spark, mini_docs, tmp_path, jobs_in_group):
     carries one stage tag. All roots share one cached trace frame, so
     the .xes documents add one collect per root; the reference trace
     order adds one collect of the event log for all roots. The eager
-    IND check adds its own discovery jobs. The ceilings are the counts
-    measured when both column flags came from one groupBy (50 jobs for
-    the .xes run, 56 before; 87 before the shared trace frame); a
-    change may lower them, never raise them."""
+    IND check adds one collect of its coverage fold to discovery. The
+    ceilings are the counts measured when both IND modes shared one
+    plan (44 jobs for the .xes run; 50 before, when eager mode built
+    its own; 56 before both column flags came from one groupBy; 87
+    before the shared trace frame); a change may lower them, never
+    raise them."""
     roots = ('"SYSTEM"."ORDERS"', '"SYSTEM"."USERS"')
     tagged = spark.sparkContext._jsc.sc().statusTracker()
     mini_docs.count()  # materialize the fixture's own session cache
     runs = (  # (config, discover ceiling, run ceiling)
-        ({}, 21, 48),
-        ({"xes_document": True}, 21, 50),
-        ({"xes_document": True, "reference_trace_order": True}, 21, 51),
+        ({}, 15, 42),
+        ({"xes_document": True}, 15, 44),
+        ({"xes_document": True, "reference_trace_order": True}, 15, 45),
         ({"eager_ind": True, "strict_primary_keys": True,
-          "reference_monotonicity": True}, 38, 65),
+          "reference_monotonicity": True}, 23, 50),
     )
     for i, (kw, discover, total) in enumerate(runs):
         cfg = PipelineConfig(root_classes=roots, **kw)

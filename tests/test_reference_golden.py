@@ -29,8 +29,7 @@ def ref_events(spark):
 
 @pytest.fixture(scope="module")
 def ref_schema(ref_events):
-    cols_df, ind_df = discover_schema(ref_events)
-    return summarize_schema(cols_df, ind_df)
+    return summarize_schema(*discover_schema(ref_events))
 
 
 def test_reference_schema_ground_truth(ref_schema):
@@ -89,8 +88,8 @@ def test_console_dump_matches_real_reference_output(spark):
 
     docs = read_log_files(spark, "/root/reference/artifacts/redo_log.txt")
     events = uniquify_row_ids(parse_documents(docs))
-    cols, ind = discover_schema(events, ind_mode="eager")
-    dump = summarize_schema(cols, ind).format_console()
+    dump = summarize_schema(
+        *discover_schema(events, ind_mode="eager")).format_console()
 
     def parse_dump(s):
         tables, cur = {}, None
@@ -143,9 +142,9 @@ def test_strict_console_dump_matches_real_reference_output(spark):
                 tables[cur].add(line.rstrip())
         return tables
 
-    cols, ind = discover_schema(
-        events, strict=True, ind_mode="eager", mono_mode="reference")
-    ours = parse_dump(summarize_schema(cols, ind).format_console(strict=True))
+    ours = parse_dump(summarize_schema(*discover_schema(
+        events, strict=True, ind_mode="eager", mono_mode="reference",
+    )).format_console(strict=True))
     ref_path = os.path.join(os.path.dirname(__file__), "fixtures",
                             "reference_redo_log_schema_strict.txt")
     ref = parse_dump(open(ref_path).read())
@@ -156,13 +155,13 @@ def test_strict_console_dump_matches_real_reference_output(spark):
     # default log-order mode: strictly fewer STRONG markers (the IDs are
     # inserted in increasing order per entity but interleaved per log
     # order across rows — the real signal is more conservative)
-    cols_log, ind_log = discover_schema(
-        events, strict=True, ind_mode="eager", mono_mode="log")
+    schema_log = summarize_schema(*discover_schema(
+        events, strict=True, ind_mode="eager", mono_mode="log"))
     strong = lambda d: {  # noqa: E731
         (t, ln) for t, lines in d.items() for ln in lines if "STRONG" in ln
     }
     ours_log = parse_dump(
-        summarize_schema(cols_log, ind_log).format_console(strict=True))
+        schema_log.format_console(strict=True))
     assert strong(ours_log) <= strong(ours)
 
 
@@ -184,8 +183,7 @@ def test_updvals_xes_bytes_match_real_reference_output(spark, tmp_path):
 
     docs = read_log_files(spark, "/root/reference/artifacts/redo_log.txt")
     events = uniquify_row_ids(parse_documents(docs)).cache()
-    cols, ind = discover_schema(events, ind_mode="eager")
-    schema = summarize_schema(cols, ind)
+    schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
     traces = build_traces_df(
         events, schema, ['"SYSTEM"."ORDERS"'], include_update_values=True)
     path = str(tmp_path / "got.xes")

@@ -26,8 +26,7 @@ def _oracle_schema(pdf, strict=False):
 
 def test_mini_log_schema_matches_oracle(spark, mini_docs, mini_docs_pdf):
     events = _spark_events(spark, mini_docs_pdf)
-    cols_df, ind_df = discover_schema(events)
-    summary = summarize_schema(cols_df, ind_df)
+    summary = summarize_schema(*discover_schema(events))
 
     _, want = _oracle_schema(mini_docs_pdf)
     want_cols = {
@@ -110,7 +109,7 @@ def test_sticky_transient_duplicate(spark):
     ]
     pdf = _docs_from_stmts(rows)
     events = _spark_events(spark, pdf)
-    cols_df, ind_df = discover_schema(events)
+    cols_df = discover_schema(events)[0]
     got = {r["col"]: r["can_be_pk"] for r in cols_df.collect()}
     assert got["ID"] is False
 
@@ -130,7 +129,7 @@ def test_no_false_positive_from_sequential_reuse(spark):
     ]
     pdf = _docs_from_stmts(rows)
     events = _spark_events(spark, pdf)
-    cols_df, _ = discover_schema(events)
+    cols_df = discover_schema(events)[0]
     got = {r["col"]: r["can_be_pk"] for r in cols_df.collect()}
     assert got["ID"] is True
     _, want = _oracle_schema(pdf)
@@ -149,7 +148,7 @@ def test_overlap_with_interval_open_past_31_dec_9999_midnight(spark):
          "31-DEC-9999 12:00:00"),
     ]
     pdf = _docs_from_stmts(rows)
-    cols_df, _ = discover_schema(_spark_events(spark, pdf))
+    cols_df = discover_schema(_spark_events(spark, pdf))[0]
     got = {r["col"]: r["can_be_pk"] for r in cols_df.collect()}
     _, want = _oracle_schema(pdf)
     assert got == {c: col.can_be_pk for c, col in want['"S"."T"'].items()}
@@ -158,22 +157,33 @@ def test_overlap_with_interval_open_past_31_dec_9999_midnight(spark):
 
 def test_delete_created_empty_column_subset_of_everything(spark):
     """A delete on a never-seen column creates an empty column
-    (SchemaExtractor.scala:130-137); empty ⊆ every other-table column."""
+    (SchemaExtractor.scala:130-137); empty ⊆ every other-table column.
+    Under ind_mode='eager' the table-birth gate still applies: A.GHOST,
+    born into an existing table after B's birth, gains nothing from B,
+    while C.GHOST, born with its table, is ⊆ every column of A and B;
+    the eager set equals the oracle's replay of the latched fold."""
     rows = [
         ('insert into "S"."A"("ID") values (\'1\');', "A1"),
         ('insert into "S"."B"("ID") values (\'9\');', "B1"),
         ('delete from "S"."A" where "GHOST" = \'g\' and ROWID = \'A2\';', "A2"),
+        ('delete from "S"."C" where "GHOST" = \'g\' and ROWID = \'C1\';', "C1"),
     ]
     pdf = _docs_from_stmts(rows)
     events = _spark_events(spark, pdf)
-    cols_df, ind_df = discover_schema(events)
     got_ind = {
-        (r["table_id"], r["col"], r["ref_table"], r["ref_col"])
-        for r in ind_df.collect()
+        mode: {
+            (i["table_id"], i["col"], i["ref_table"], i["ref_col"])
+            for i in summarize_schema(*discover_schema(events, ind_mode=mode)).inds
+        }
+        for mode in ("final", "eager")
     }
-    assert ('"S"."A"', "GHOST", '"S"."B"', "ID") in got_ind
-    _, want = _oracle_schema(pdf)
+    assert ('"S"."A"', "GHOST", '"S"."B"', "ID") in got_ind["final"]
+    entries, want = _oracle_schema(pdf)
     assert ('"S"."B"', "ID") in want['"S"."A"']["GHOST"].is_subset_of
+    assert got_ind["eager"] == oracle.eager_inds_replay(entries)
+    assert ('"S"."A"', "GHOST", '"S"."B"', "ID") not in got_ind["eager"]
+    assert {('"S"."C"', "GHOST", '"S"."A"', "ID"),
+            ('"S"."C"', "GHOST", '"S"."B"', "ID")} <= got_ind["eager"]
 
 
 def test_strict_pk_monotonicity_and_name(spark):
@@ -186,7 +196,7 @@ def test_strict_pk_monotonicity_and_name(spark):
     ]
     pdf = _docs_from_stmts(rows)
     events = _spark_events(spark, pdf)
-    cols_df, ind_df = discover_schema(events, strict=True)
+    cols_df = discover_schema(events, strict=True)[0]
     got = {r["col"]: (r["is_pk"], r["values_increasing"]) for r in cols_df.collect()}
     # KEY: unique + increasing + name matches
     assert got["KEY"] == (True, True)
@@ -211,7 +221,7 @@ def test_monotonicity_branch_gated_on_rowid_coercion(spark):
     ])
     for pdf, want in ((alpha, False), (numeric, True)):
         events = _spark_events(spark, pdf)
-        cols_df, _ = discover_schema(events)
+        cols_df = discover_schema(events)[0]
         got = {r["col"]: r["values_increasing"] for r in cols_df.collect()}
         assert got["ID"] is want, (want, got)
         _, oracle_schema = _oracle_schema(pdf)
@@ -219,24 +229,26 @@ def test_monotonicity_branch_gated_on_rowid_coercion(spark):
 
 
 def test_fuzz_log_columns_match_oracle(spark):
-    """Both column flags and the PK verdict, lenient and strict, equal
-    the oracle's per-entry fold on random fuzz logs (deletes, updates
-    and ROWID reuse mixed), not only on the mini-log."""
+    """Both column flags and the PK verdict, lenient and strict, and the
+    final-state INDs equal the oracle's per-entry fold on random fuzz
+    logs (deletes, updates and ROWID reuse mixed), not only on the
+    mini-log. Seeds 17 and 311 each hold a delete-created empty column,
+    which is ⊆ every column of another table."""
     from fuzzgen import fuzz_records, records_to_documents
     from redo_log_parser_spark.fixtures import _fmt_ts
 
-    for seed in (311, 422, 533):
+    for seed in (17, 311, 422, 533):
         records, _ = fuzz_records(seed)
         events = _spark_events(spark, records_to_documents(records))
         entries = oracle.uniquify_row_ids(oracle.parse_records(
             [f"{s.statement}\n{s.row_id} {_fmt_ts(ts)}" for s, ts in records]))
         want_schema = oracle.extract_schema(entries)
         for strict in (False, True):
-            cols_df, _ = discover_schema(events, strict=strict)
+            schema = summarize_schema(*discover_schema(events, strict=strict))
             got = {
                 (r["table_id"], r["col"]): (
                     r["can_be_pk"], r["values_increasing"], r["is_pk"])
-                for r in cols_df.collect()
+                for r in schema.columns
             }
             want = {
                 (t, c.name): (c.can_be_pk, c.values_increasing,
@@ -245,6 +257,17 @@ def test_fuzz_log_columns_match_oracle(spark):
                 for c in tbl.values()
             }
             assert got == want, (seed, strict, set(got.items()) ^ set(want.items()))
+        got_ind = {
+            (i["table_id"], i["col"], i["ref_table"], i["ref_col"])
+            for i in schema.inds
+        }
+        want_ind = {
+            (t, c.name, rt, rc)
+            for t, tbl in want_schema.items()
+            for c in tbl.values()
+            for rt, rc in c.is_subset_of
+        }
+        assert got_ind == want_ind, (seed, sorted(got_ind ^ want_ind))
 
 
 def test_tombstone_does_not_reset_monotonicity(spark):
@@ -258,7 +281,7 @@ def test_tombstone_does_not_reset_monotonicity(spark):
         ('insert into "S"."T"("NAME") values (\'a\');', "B"),
     ]
     pdf = _docs_from_stmts(rows)
-    cols_df, _ = discover_schema(_spark_events(spark, pdf))
+    cols_df = discover_schema(_spark_events(spark, pdf))[0]
     got = {r["col"]: r["values_increasing"] for r in cols_df.collect()}
     _, want = _oracle_schema(pdf)
     assert want['"S"."T"']["NAME"].values_increasing is False

@@ -87,7 +87,10 @@ def test_daemon_preloads_the_parse_kernel(spark):
 
 def test_daemon_confs_only_for_a_local_master(monkeypatch):
     # a cluster's daemon starts before --py-files reach sys.path, so it
-    # could not import worker_daemon: only local sessions get it
+    # could not import worker_daemon: only local sessions get it.
+    # Under spark-submit (`submitted`: the master its launcher wrote
+    # into the JVM's conf) that master stands, whatever get_spark is
+    # passed, and local-cluster's executors are separate JVMs.
     class Builder:
         def __init__(self):
             self.confs = {}
@@ -106,17 +109,28 @@ def test_daemon_confs_only_for_a_local_master(monkeypatch):
         def getOrCreate(self):
             return self.confs
 
-    def confs(**kw):
+    def confs(submitted=None, **kw):
         monkeypatch.setattr(session, "SparkSession",
                             types.SimpleNamespace(builder=Builder()))
+        if submitted:
+            monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "1")
+            monkeypatch.setattr(session, "SparkContext", types.SimpleNamespace(
+                _ensure_initialized=lambda: None))
+            monkeypatch.setattr(session, "SparkConf",
+                                lambda: {"spark.master": submitted})
+        else:
+            monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
         return session.get_spark(**kw)
 
-    monkeypatch.delenv("SPARK_MASTER", raising=False)
-    for local in (confs(), confs(master="local[2]")):
+    for local in (confs(), confs(master="local[2]"), confs("local[2]"),
+                  confs("local[*]", master="spark://h:7077")):
         assert session.LOCAL_CONFS.items() <= local.items()
-    monkeypatch.setenv("SPARK_MASTER", "yarn")
-    for cluster in (confs(), confs(master="spark://h:7077")):
+    for cluster in (confs(master="spark://h:7077"), confs("yarn"),
+                    confs(master="local-cluster[2,1,1024]"),
+                    confs("local-cluster[2,1,1024]", master="local[2]")):
         assert not session.LOCAL_CONFS.keys() & cluster.keys()
+    assert "master" not in confs("local[2]", master="local[4]")
+    assert confs(master="local[2]")["master"] == "local[2]"
     assert confs(master="local[2]")["spark.python.worker.reuse"] == "false"
 
 

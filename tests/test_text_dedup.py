@@ -7,8 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from redo_log_parser_spark.functions import text as T
-from redo_log_parser_spark.functions.multimodal import (
-    decode_media, resize_plan, sample_frames)
+from redo_log_parser_spark.functions.multimodal import decode_media
 from redo_log_parser_spark.operators import dedup as D
 from redo_log_parser_spark.operators import similarity as S
 
@@ -42,6 +41,9 @@ def test_token_count_and_quality(docs):
     assert 0.0 <= rows[4]["q"] <= 1.0
     # normalization: case/extra-space dup shares the fingerprint
     assert rows[0]["fp"] == rows[5]["fp"] == rows[1]["fp"]
+    # so does the SimHash of identical token multisets
+    vals = {r["doc_id"]: r["simhash"] for r in D.simhash(docs).collect()}
+    assert vals[0] == vals[1] == vals[5]
 
 
 def test_exact_dedup(docs):
@@ -104,19 +106,6 @@ def test_minhash_lsh_finds_exact_and_near_dups(docs):
     assert not any(4 in p for p in pairs)
 
 
-def test_simhash_near_dups(docs):
-    fps = D.simhash(docs)
-    vals = {r["doc_id"]: r["simhash"] for r in fps.collect()}
-    assert vals[0] == vals[1] == vals[5]  # identical token multisets
-    dups = {
-        (r["id_a"], r["id_b"]): r["hamming"]
-        for r in D.simhash_near_dups(fps, max_hamming=16).collect()
-    }
-    assert dups[(0, 1)] == 0
-    # truly different docs are far in hamming space (not asserted absent:
-    # 64-bit simhash on tiny docs is noisy; only near-pairs are asserted)
-
-
 @pytest.fixture(scope="module")
 def emb(spark):
     rng = np.random.RandomState(7)
@@ -145,13 +134,6 @@ def test_cosine_topk_matches_numpy(emb):
         assert abs(g[1] - w[1]) < 1e-5
 
 
-def test_lsh_ann_recall_on_top1(emb):
-    q = [float(x) for x in emb.filter(F.col("vec_id") == 3).first()["embedding"]]
-    approx = [r["vec_id"] for r in S.lsh_bucketed_ann(emb, q, k=3, n_planes=6).collect()]
-    assert 3 in approx  # the vector itself must be found
-    assert 7 in approx  # and its planted near-duplicate
-
-
 def test_embedding_near_dup_pairs(emb):
     pairs = {
         (r["id_a"], r["id_b"]): r["cosine"]
@@ -171,10 +153,6 @@ def test_multimodal_decode_plumbing(spark, mini_docs):
     again = decode_media(mini_docs.limit(20), kind="image", mode="fake").collect()
     assert {r["media_id"]: r["feature"] for r in rows} == {
         r["media_id"]: r["feature"] for r in again}
-    plan = resize_plan(meta, max_side=128).collect()
-    assert all(max(r["target_w"], r["target_h"]) <= 128 for r in plan)
-    frames = sample_frames(meta.withColumn("n_frames", F.lit(11)), every_n=5)
-    assert frames.groupBy("media_id").count().first()["count"] == 3
 
 
 def test_multimodal_strict_mode_rejects_unknown_magic():
@@ -216,15 +194,6 @@ def test_minhash_bucket_cap_bounds_pairs(spark):
     assert got == {(100, 101)}
 
 
-def test_simhash_bucket_cap(spark):
-    rows = [(i, "same same same same text here") for i in range(30)]
-    rows += [(100, "pp qq rr ss tt uu"), (101, "pp qq rr ss tt uu")]
-    degen = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    fps = D.simhash(degen)
-    capped = D.simhash_near_dups(fps, max_hamming=3, max_bucket_size=5)
-    assert {(r["id_a"], r["id_b"]) for r in capped.collect()} == {(100, 101)}
-
-
 def test_lsh_bucket_matches_driver_twin_and_plan_bounded(spark):
     """Plan-size hygiene (VERDICT r1 #9): hyperplanes ride a broadcast
     column, so the optimized plan must stay O(1) in dim — checked at
@@ -259,34 +228,6 @@ def test_ivf_bucket_plan_bounded_high_dim(spark):
     for vid, v in zip(pdf["vec_id"], vecs):
         d = [float(((v - _np.asarray(c)) ** 2).sum()) for c in cents]
         assert rows[vid] == int(_np.argmin(d)), vid
-
-
-def test_simhash_near_dups_equal_exact_hamming(spark):
-    """Pigeonhole blocking is COMPLETE for hamming <= max_hamming, and the
-    bit_count verify is exact — so the operator's output must equal the
-    brute-force Hamming pair set over the computed fingerprints."""
-    rows = [(i, t) for i, t in enumerate([
-        "alpha beta gamma delta epsilon zeta",
-        "alpha beta gamma delta epsilon zeta",      # exact dup of 0
-        "alpha beta gamma delta epsilon eta",        # near
-        "one two three four five six seven",
-        "totally different words entirely here now",
-        "alpha beta gamma delta zeta epsilon",       # permuted (same multiset)
-    ])]
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    fps = D.simhash(docs)
-    vals = {r["doc_id"]: r["simhash"] & ((1 << 64) - 1) for r in fps.collect()}
-    for h in (3, 8):
-        want = {
-            (a, b): bin(vals[a] ^ vals[b]).count("1")
-            for a in vals for b in vals
-            if a < b and bin(vals[a] ^ vals[b]).count("1") <= h
-        }
-        got = {
-            (r["id_a"], r["id_b"]): r["hamming"]
-            for r in D.simhash_near_dups(fps, max_hamming=h).collect()
-        }
-        assert got == want, h
 
 
 def test_bucket_cap_drop_metric_is_observable(spark):

@@ -37,8 +37,7 @@ def oracle_state(mini_docs_pdf):
 
 @pytest.fixture(scope="module")
 def spark_schema(spark_events):
-    cols_df, ind_df = discover_schema(spark_events)
-    return summarize_schema(cols_df, ind_df)
+    return summarize_schema(*discover_schema(spark_events))
 
 
 def test_entity_edges_match_oracle(spark_events, spark_schema, oracle_state):
@@ -249,8 +248,7 @@ def test_case_colliding_table_names(spark):
     docs, _ = _docs(spark, CASECLASH_LOG)
     events = uniquify_row_ids(parse_documents(docs))
     assert events.filter("parse_error is not null").count() == 0
-    cols_df, ind_df = discover_schema(events)
-    schema = summarize_schema(cols_df, ind_df)
+    schema = summarize_schema(*discover_schema(events))
     assert '"SYSTEM"."T"' in schema.tables and '"SYSTEM"."t"' in schema.tables
 
     traces = build_traces_df(events, schema, ['"SYSTEM"."T"'])
@@ -315,8 +313,7 @@ def test_ambiguous_case_insensitive_root_raises(spark):
     ]
     docs = spark.createDataFrame(rows, "url string, text string")
     events = uniquify_row_ids(parse_documents(docs))
-    cols_df, ind_df = discover_schema(events)
-    schema = summarize_schema(cols_df, ind_df)
+    schema = summarize_schema(*discover_schema(events))
     with pytest.raises(ValueError, match="case-insensitively"):
         build_traces_df(events, schema, ['"system"."t"']).collect()
 

@@ -110,8 +110,7 @@ def test_utf16_threshold_xes_bytes(spark, tmp_path, ref_cp):
     events = uniquify_row_ids(parse_documents(docs)).cache()
     try:
         assert events.filter("parse_error is not null").count() == 0
-        cols, ind = discover_schema(events, ind_mode="eager")
-        schema = summarize_schema(cols, ind)
+        schema = summarize_schema(*discover_schema(events, ind_mode="eager"))
         traces = build_traces_df(events, schema, [ROOT],
                                  include_update_values=True)
         out = tmp_path / "ours.xes"
@@ -141,8 +140,8 @@ def test_unicode_blank_lines_schema(spark, tmp_path, ref_cp):
     for parse in (parse_documents, parse_documents_sql):
         events = uniquify_row_ids(parse(docs))
         assert events.filter("parse_error is not null").count() == 0, parse
-        cols, ind = discover_schema(events, ind_mode="eager")
-        got = summarize_schema(cols, ind).format_console()
+        got = summarize_schema(
+            *discover_schema(events, ind_mode="eager")).format_console()
         assert parse_schema_dump(got) == parse_schema_dump(ref_plain), parse
 
     lines = log.read_text(encoding="utf-8").splitlines()
@@ -286,7 +285,7 @@ def test_kelvin_sign_pk_name_heuristic(spark):
     ]
     docs = spark.createDataFrame(rows, "url string, text string")
     events = uniquify_row_ids(parse_documents(docs))
-    cols_df, _ = discover_schema(events, strict=True)
+    cols_df = discover_schema(events, strict=True)[0]
     got = {r["col"]: (r["name_like_pk"], r["is_pk"])
            for r in cols_df.collect()}
     assert got[kcol] == (False, False)

@@ -21,8 +21,7 @@ def mini_pretty(spark, mini_docs):
     traces."""
     with operator_caches():
         events = uniquify_row_ids(parse_documents(mini_docs)).cache()
-        cols_df, ind_df = discover_schema(events)
-        schema = summarize_schema(cols_df, ind_df)
+        schema = summarize_schema(*discover_schema(events))
         traces = build_traces_df(events, schema, ['"SYSTEM"."ORDERS"'])
         pretty = trace_xml_pretty(traces).cache()
         pretty.count()
@@ -102,8 +101,7 @@ def test_strict_mode_pipeline(spark, mini_docs):
     INVOICES.ID (fixed-width 1000..1049) IS — exactly what the reference
     computes on such a log. NAME/STATUS never qualify."""
     events = uniquify_row_ids(parse_documents(mini_docs))
-    cols_df, ind_df = discover_schema(events, strict=True)
-    schema = summarize_schema(cols_df, ind_df)
+    schema = summarize_schema(*discover_schema(events, strict=True))
     pks = schema.pk_candidates()
     assert ('"SYSTEM"."INVOICES"', "ID") in pks
     assert ('"SYSTEM"."USERS"', "ID") not in pks  # '10' < '9' string cliff
@@ -199,8 +197,7 @@ def test_xes_bytes_match_real_reference_output(spark, tmp_path, root,
 
     docs = read_log_files(spark, "/root/reference/artifacts/redo_log.txt")
     events = uniquify_row_ids(parse_documents(docs)).cache()
-    cols_df, ind_df = discover_schema(events)
-    schema = summarize_schema(cols_df, ind_df)
+    schema = summarize_schema(*discover_schema(events))
     traces = build_traces_df(events, schema, [root])
     ref = open(
         os.path.join(os.path.dirname(__file__), "fixtures", fixture)
