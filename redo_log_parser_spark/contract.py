@@ -1667,7 +1667,7 @@ def q_ivf_ann(spark, sf_dir):
 
 def q_multimodal_meta(spark, sf_dir):
     """Binary-column decode plumbing via mapInPandas (deterministic fake
-    decoder; real codecs stubbed behind mode='strict').
+    decoder, the only one; a real codec would swap in at _fake_decode).
 
     The fake decoder derives dims from the sha256 of the payload
     (functions/multimodal.py:_fake_decode), which DuckDB can restate

@@ -20,12 +20,8 @@ partitions and cluster sizes (required for checkpoint-resume idempotence).
 
 from __future__ import annotations
 
-import itertools
-import threading
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import Window
 
 from ..caching import register
 from ..functions.text import doc_fingerprint, tokens
@@ -99,36 +95,12 @@ def validate_bands(num_hashes: int, bands: int) -> None:
         )
 
 
-# unique observe() names (one per _cap_buckets call in a plan);
-# itertools.count + lock instead of a bare module int so two threads
-# building plans concurrently can't mint the same name (round-3 VERDICT
-# minor #4)
-_CAP_SEQ = itertools.count(1)
-_CAP_SEQ_LOCK = threading.Lock()
-
-
-def _drop_hot_shingles(sh: DataFrame, max_df: int) -> DataFrame:
-    """Remove shingles whose document frequency exceeds max_df — the
-    standard inverted-index guard: one stop-phrase shingle shared by m
-    docs would otherwise fan the self-join out O(m²). One extra count
-    window over the shingle partitioning (same shuffle key the join
-    needs anyway)."""
-    w = Window.partitionBy("shingle")
-    return (
-        sh.withColumn("__df", F.count("*").over(w))
-        .filter(F.col("__df") <= max_df)
-        .drop("__df")
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_df: int | None = None,
-    hash_index: bool = True,
 ) -> DataFrame:
     """Exact Jaccard over n-gram shingle sets via inverted index:
     (id_a, id_b, jaccard) for unordered pairs ≥ threshold.
@@ -138,29 +110,21 @@ def ngram_jaccard_pairs(
     per-doc dedup and set sizes are ROW-SIDE (array_distinct + size on
     the cached array frame) — no distinct shuffle, no sizes groupBy.
 
-    `hash_index` (default True): the inverted index joins on
-    xxhash64(shingle) instead of the shingle STRING — same exchanges,
-    ~40% less wall (round-4 sf1 A/B: 6.1-7.4 s → 3.7-4.8 s, identical
-    2,560 pairs; fixed-width bigint keys shuffle, sort and compare
-    cheaper than ~25-byte UTF8 shingles). Two distinct shingles
-    colliding would inflate one pair's n_common by 1 — probability
-    ≈ m²/2^65 for m distinct shingles (1.8e-7 at sf1's 2.6M; the
-    minhash/simhash paths already accept the same hash). Set False for
-    string-exact semantics.
+    The inverted index joins on xxhash64(shingle), not the shingle
+    string: same exchanges, ~40% less wall (round-4 sf1 A/B: 6.1-7.4 s
+    → 3.7-4.8 s, identical 2,560 pairs; fixed-width bigint keys
+    shuffle, sort and compare cheaper than ~25-byte UTF8 shingles). Two
+    distinct shingles colliding would inflate one pair's n_common by 1
+    — probability ≈ m²/2^65 for m distinct shingles (1.8e-7 at sf1's
+    2.6M; the minhash/simhash paths accept the same hash).
+    tests/test_text_dedup.py checks the pairs against exact Python
+    Jaccard over the shingle strings.
 
-    `max_df` (corpus-scale knob, default off): shingles appearing in
-    more than max_df docs are dropped from the index BEFORE the join,
-    bounding the per-shingle fan-out at max_df² pairs. Jaccard is then
-    computed over the RETAINED shingle sets (sizes shrink consistently
-    with the numerator — so that branch re-derives sizes from the
-    post-drop index), i.e. Jaccard-over-rare-shingles — the usual
-    web-dedup approximation. Leave None for exact semantics.
-
-    Cache lifecycle: the per-doc shingle frame (or the filtered index)
-    is cache()d because the plan reads it twice WITHIN one action; it
-    cannot be unpersisted here (the return value is lazy — dropping the
-    mark before the caller's action would disable the reuse). Long-lived
-    sessions should take ownership via caching.operator_caches():
+    Cache lifecycle: the per-doc shingle frame is cache()d because the
+    plan reads it twice WITHIN one action; it cannot be unpersisted
+    here (the return value is lazy — dropping the mark before the
+    caller's action would disable the reuse). Long-lived sessions
+    should take ownership via caching.operator_caches():
 
         with operator_caches():
             pairs = ngram_jaccard_pairs(docs).collect()  # materialize
@@ -168,38 +132,20 @@ def ngram_jaccard_pairs(
     which unpersists every frame cached inside the block on exit.
     Without it, the historical hygiene applies: clearCache() between
     invocations (bench.py does) or ContextCleaner GC reclaim."""
-    base = with_shingle_set(docs, n, text_col).select(id_col, "shs")
-
-    def _index(frame: DataFrame) -> DataFrame:
-        # n_sh rides ON the index rows (one long per row) so the join
-        # below can length-filter candidates BEFORE they reach the pair
-        # aggregation — see the filter derivation there
-        ix = frame.select(
-            F.col(id_col),
-            F.size("shs").alias("n_sh"),
-            F.explode("shs").alias("shingle"),
-        )
-        if hash_index:
-            # hash AFTER the explode: a plain codegen'd projection, not
-            # an interpreted transform() inside the array
-            ix = ix.select(
-                id_col, "n_sh", F.xxhash64("shingle").alias("shingle")
-            )
-        return ix
-
-    if max_df is not None:
-        # base is consumed once here (retained-set sizes come from the
-        # post-drop index) — caching it would pin every doc's shingle
-        # array for zero reuse; cache the filtered index instead
-        ix0 = _index(base).drop("n_sh")  # n must be the RETAINED size
-        sh0 = register(_drop_hot_shingles(ix0, max_df).cache())
-        sizes = sh0.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-        sh = sh0.join(sizes, id_col)
-    else:
-        # read twice: the index explode and sizes
-        base = register(base.cache())
-        sh = _index(base)
-        sizes = base.select(id_col, F.size("shs").alias("n_sh"))
+    # read twice: the index explode and sizes
+    base = register(
+        with_shingle_set(docs, n, text_col).select(id_col, "shs").cache())
+    # n_sh rides ON the index rows (one long per row) so the join below
+    # can length-filter candidates BEFORE they reach the pair
+    # aggregation — see the filter derivation there. The shingle is
+    # hashed AFTER the explode: a plain codegen'd projection, not an
+    # interpreted transform() inside the array
+    sh = base.select(
+        F.col(id_col),
+        F.size("shs").alias("n_sh"),
+        F.explode("shs").alias("shingle"),
+    ).select(id_col, "n_sh", F.xxhash64("shingle").alias("shingle"))
+    sizes = base.select(id_col, F.size("shs").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     t = float(threshold)
@@ -372,50 +318,15 @@ def banded_keys(
     )
 
 
-def _cap_buckets(
-    banded: DataFrame, max_bucket_size: int, keys: tuple[str, str] = ("band", "bucket")
-) -> DataFrame:
-    """Drop LSH buckets larger than max_bucket_size before the self-join:
-    one degenerate bucket (e.g. every empty doc hashing identically) is
-    an O(m²) pair explosion at corpus scale. Docs keep their other
-    bands, so only pairs WHOSE EVERY agreeing band is degenerate are
-    lost — the standard recall-for-bound trade. Oversized-bucket rows
-    are counted into the `lsh_dropped_rows` observation metric so the
-    drop is visible, never silent."""
-    with _CAP_SEQ_LOCK:
-        seq = next(_CAP_SEQ)
-    w = Window.partitionBy(*keys)
-    sized = banded.withColumn("__bsz", F.count("*").over(w)).observe(
-        f"lsh_bucket_cap_{seq}",
-        F.sum((F.col("__bsz") > max_bucket_size).cast("long")).alias(
-            "lsh_dropped_rows"
-        ),
-    )
-    kept = sized.filter(F.col("__bsz") <= max_bucket_size).drop("__bsz")
-    return kept
-
-
 def minhash_lsh_candidates(
     sigs: DataFrame, bands: int = 16, id_col: str = "doc_id",
-    max_bucket_size: int | None = None,
-    num_hashes: int | None = None,
 ) -> DataFrame:
     """Band the signature and bucket-join: docs agreeing on any full band
-    become candidate pairs (id_a < id_b, distinct).
-
-    `num_hashes`: pass the signature length to fail fast on configs
-    banded_keys cannot band (see validate_bands — bands > len(sig)
-    truncates rows_per_band to 0 and EVERY doc would collide with every
-    doc). Left None the same invariant is still enforced, but at action
-    time by banded_keys' row-level assert (round-3 ADVICE: this entry
-    point used to be unguarded).
-
-    `max_bucket_size` (corpus-scale knob, default off): see _cap_buckets."""
-    if num_hashes is not None:
-        validate_bands(num_hashes, bands)
+    become candidate pairs (id_a < id_b, distinct). Signatures that do
+    not slice evenly into `bands` fail at action time, in banded_keys'
+    row-level assert; minhash_dedup_pairs also checks its config with
+    validate_bands before it builds the plan."""
     banded = banded_keys(sigs, bands, sig_col="sig", keep_cols=(id_col,))
-    if max_bucket_size is not None:
-        banded = _cap_buckets(banded, max_bucket_size)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -431,7 +342,6 @@ def minhash_lsh_candidates(
 def minhash_dedup_pairs(
     docs: DataFrame, num_hashes: int = 64, bands: int = 16, n: int = 3,
     threshold: float = 0.8, id_col: str = "doc_id", text_col: str = "text",
-    max_bucket_size: int | None = None,
 ) -> DataFrame:
     """LSH candidates verified with exact Jaccard.
 
@@ -448,8 +358,9 @@ def minhash_dedup_pairs(
     band self-join, pair distinct, two verify joins — four exchanges
     total, none carrying more than the corpus once. At 100 TB the
     verify joins move shingle arrays only for docs that appear in
-    candidate pairs (inner joins on cand), and degenerate buckets stay
-    bounded via max_bucket_size.
+    candidate pairs (inner joins on cand). A ValueError names both
+    numbers when `num_hashes` does not slice evenly into `bands`
+    (validate_bands), before any Spark job starts.
 
     Cache lifecycle: per_doc stays cache()d after return — the lazy
     result reads it three times in one action, so it cannot be
@@ -471,9 +382,7 @@ def minhash_dedup_pairs(
         .cache()
     )
     per_doc = register(per_doc)
-    cand = minhash_lsh_candidates(
-        per_doc.select(id_col, "sig"), bands, id_col, max_bucket_size
-    )
+    cand = minhash_lsh_candidates(per_doc.select(id_col, "sig"), bands, id_col)
     a = per_doc.select(
         F.col(id_col).alias("id_a"), F.col("shs").alias("shs_a"),
         F.col("n_sh").alias("n_a"),
@@ -546,12 +455,15 @@ def simhash(
     return summed.select(id_col, fp_col.alias("simhash"))
 
 
+# dedup_components' first pointer-jump round (see its docstring)
+_JUMP_FROM = 2
+
+
 def dedup_components(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 25,
-    jump_from: int = 2,
     local_edges_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Fuzzy-dedup clustering: connected components over a near-dup pair
@@ -559,18 +471,18 @@ def dedup_components(
     component (the canonical representative). Docs in no pair are their
     own singleton component.
 
-    Two regimes, identical output (tests/test_text_dedup.py pins their
-    parity on the same graph): at or below `local_edges_threshold`
-    symmetrized edges (bounded, counted first) are collected and solved
+    Two regimes, identical output (tests/test_corpus.py pins both
+    against a Python union-find on random graphs); the symmetrized
+    edge count, counted first, picks one. At or below
+    `local_edges_threshold` edges, the edges are collected and solved
     with one driver union-find — the near-dup subgraph is typically
-    vanishingly small next to the corpus and each distributed round is
-    a full job; above it, distributed min-label propagation runs as
-    before.
+    vanishingly small next to the corpus, and each distributed round
+    is a full job. Above it, distributed min-label propagation runs.
 
     Distributed min-label propagation WITH pointer jumping: each round
     (1) joins labels onto the (symmetrized) edge list and takes the min
     over {self} ∪ neighbors — one shuffle join + one partial+final agg —
-    and, from round `jump_from` on, (2) shortcuts label(v) ←
+    and, from round _JUMP_FROM (2) on, (2) shortcuts label(v) ←
     label(label(v)) with one more self-join (labels are vertex ids and
     min-propagation keeps label(v) ≤ v, so the jump is a pure
     improvement). Neighbor propagation alone needs O(component diameter)
@@ -579,19 +491,20 @@ def dedup_components(
     so even pathological chains converge in O(log n) rounds (round-2
     VERDICT item 8; pinned by the 200-node chain test). Real near-dup
     graphs are low-diameter and converge within the first 2-3 rounds —
-    `jump_from=2` keeps those rounds at one join each and spends the
-    jump join only on graphs that actually have depth (a jump on every
-    round measured 2× the bench cost for zero round savings on the sf
-    corpus). Label frame is localCheckpoint'ed so lineage stays flat.
-    Raises if max_iters rounds don't converge rather than returning a
-    partial clustering.
+    starting the jump at round 2 keeps those rounds at one join each
+    and spends the jump join only on graphs that actually have depth (a
+    jump on every round measured 2× the bench cost for zero round
+    savings on the sf corpus). Label frame is localCheckpoint'ed so
+    lineage stays flat. Raises if max_iters rounds don't converge
+    rather than returning a partial clustering.
 
-    The iteration runs ONLY over vertices that appear in some pair:
+    Both regimes label ONLY the vertices that appear in some pair:
     singletons (the overwhelming majority of a near-dup corpus — their
     label never moves off their own id) are attached by one final left
-    join instead of riding every round's shuffle. At web scale this is
-    the difference between propagating labels for billions of untouched
-    docs per round and propagating only the near-dup subgraph."""
+    join (`_with_singletons`) instead of riding every round's shuffle.
+    At web scale this is the difference between propagating labels for
+    billions of untouched docs per round and propagating only the
+    near-dup subgraph."""
     # symmetrize ROW-SIDE (one explode), not union(half, half.swapped):
     # a self-referencing union evaluates the pair tree once PER BRANCH
     # while the cache above it builds (PLANS §13 — no exchange reuse
@@ -641,6 +554,7 @@ def dedup_components(
     n_edges = edges.count()  # also materializes the cache the loop needs
     if n_edges <= local_edges_threshold:
         edge_rows = edges.collect()
+        edges.unpersist()
         parent: dict = {}
 
         def find(x):
@@ -658,26 +572,14 @@ def dedup_components(
                 lo, hi = (a, b) if a < b else (b, a)
                 parent[hi] = lo
         verts = {v for row in edge_rows for v in row}
-        spark = docs.sparkSession
         from pyspark.sql.types import StructField, StructType
 
         vtype = edges.schema["src"].dataType
-        schema = StructType(
-            [StructField("v", vtype), StructField("__comp", vtype)]
+        labels = docs.sparkSession.createDataFrame(
+            [(v, find(v)) for v in sorted(verts)],
+            StructType([StructField("v", vtype), StructField("label", vtype)]),
         )
-        comp_local = spark.createDataFrame(
-            [(v, find(v)) for v in sorted(verts)], schema
-        ).select(F.col("v").alias(id_col), "__comp")
-        edges.unpersist()
-        return (
-            docs.select(id_col)
-            .distinct()
-            .join(comp_local, id_col, "left")
-            .select(
-                id_col,
-                F.coalesce(F.col("__comp"), F.col(id_col)).alias("component_id"),
-            )
-        )
+        return _with_singletons(labels)
 
     # symmetrized, so `src` alone covers every vertex touched by a pair
     labels = (
@@ -702,7 +604,7 @@ def dedup_components(
             .agg(F.min("label").alias("label"),
                  F.max("old").alias("old"))
         )
-        if it >= jump_from:
+        if it >= _JUMP_FROM:
             # pointer jump: every label IS a vertex id, so label(label(v))
             # exists in the same frame; left join guards the invariant
             # rather than silently dropping rows if it were ever violated

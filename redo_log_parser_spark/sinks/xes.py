@@ -92,26 +92,30 @@ def write_xes_document(
     return len(case_order)
 
 
-def collect_clean_log(
-    frame: DataFrame, cols: Iterable[str], max_rows: int = 1_000_000,
-) -> list[Row]:
+# the most clean rows collect_clean_log brings to the driver
+REPLAY_MAX_ROWS = 1_000_000
+
+
+def collect_clean_log(frame: DataFrame, cols: Iterable[str]) -> list[Row]:
     """The clean rows of a parsed or event frame (null `parse_error`),
     `cols` only, in log order (ts, url), for the driver-side replays of
-    the reference's HashMap orders. Raises ValueError beyond
-    `max_rows`: those replays are for reference-CLI-sized logs."""
+    the reference's HashMap orders (the CLI's --reference-console-order
+    and --reference-trace-order). Raises ValueError beyond
+    REPLAY_MAX_ROWS: those replays are for reference-CLI-sized logs."""
     if "parse_error" in frame.columns:
         frame = frame.filter(F.col("parse_error").isNull())
-    # ONE job: limit(max_rows + 1) both enforces the guard and collects
-    # (a separate count() would recompute the whole lineage — exactly
-    # on the large uncached inputs the guard exists for)
+    # ONE job: limit(REPLAY_MAX_ROWS + 1) both enforces the guard and
+    # collects (a separate count() would recompute the whole lineage —
+    # exactly on the large uncached inputs the guard exists for)
     rows = (frame.orderBy("ts", "url").select(*cols)
-            .limit(max_rows + 1).collect())
-    if len(rows) > max_rows:
+            .limit(REPLAY_MAX_ROWS + 1).collect())
+    if len(rows) > REPLAY_MAX_ROWS:
         raise ValueError(
-            f"the reference orders collect the clean log to the driver "
-            f"(> max_rows={max_rows} rows), for reference-CLI-sized logs "
-            "only. Use the default sorted order for large inputs, or "
-            "raise max_rows explicitly."
+            f"the log has more than {REPLAY_MAX_ROWS:,} clean rows: "
+            "--reference-console-order and --reference-trace-order "
+            "replay the reference's orders on the driver, for "
+            "reference-CLI-sized logs only. Run without them; the "
+            "default sorted orders have no row limit."
         )
     return rows
 

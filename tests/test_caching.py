@@ -45,7 +45,6 @@ def emb(spark):
 def test_each_operator_returns_cache_count_to_baseline(docs, emb, persisted_rdd_ids):
     runs = [
         lambda: ngram_jaccard_pairs(docs, threshold=0.1).collect(),
-        lambda: ngram_jaccard_pairs(docs, threshold=0.1, max_df=30).collect(),
         lambda: minhash_dedup_pairs(docs, threshold=0.1).collect(),
         lambda: embedding_near_dup_pairs(emb, threshold=0.0).collect(),
     ]

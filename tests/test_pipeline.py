@@ -636,6 +636,23 @@ def test_cli_rejects_flag_without_its_output(
     assert f"{flag} needs {needs}" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("flags", [
+    ("--print-schema", "--reference-console-order"),
+    ("--xes-file", "--reference-trace-order"),
+])
+def test_cli_replay_guard_names_the_flag(
+        cli, cli_input, tmp_path, monkeypatch, flags):
+    """The reference orders are replayed on the driver over the collected
+    clean log. Past `REPLAY_MAX_ROWS` clean rows the run stops with a
+    ValueError naming the flag that asked for the replay."""
+    from redo_log_parser_spark.sinks import xes
+
+    monkeypatch.setattr(xes, "REPLAY_MAX_ROWS", 5)
+    with pytest.raises(ValueError, match=f"more than 5 clean rows.*{flags[1]}"):
+        cli("--input", cli_input, "--output", str(tmp_path / "out"),
+            "--root-class", ROOT, "--no-resume", *flags)
+
+
 @pytest.mark.parametrize("argv, says", [
     (("--timestamp-pattern", "yyyy-MM-ddTHH:mm:ss"), "'T'"),
     (("--parser", "sql"), "--parser"),

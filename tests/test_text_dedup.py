@@ -68,30 +68,49 @@ ON_THRESHOLD = [
 ]
 
 
+def _py_jaccard_pairs(rows, threshold):
+    """Exact Python Jaccard over the shingle strings, per pair at or
+    above `threshold`."""
+    want = {}
+    for i, ta in rows:
+        for j, tb in rows:
+            if i >= j:
+                continue
+            sa, sb = _py_shingles(ta), _py_shingles(tb)
+            if not sa or not sb:
+                continue
+            jac = len(sa & sb) / len(sa | sb)
+            if jac >= threshold:
+                want[(i, j)] = round(jac, 6)
+    return want
+
+
+def _assert_matches_py_jaccard(frame, rows, threshold):
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in D.ngram_jaccard_pairs(
+            frame, n=3, threshold=threshold).collect()
+    }
+    want = _py_jaccard_pairs(rows, threshold)
+    assert want and set(got) == set(want)
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-6
+    return want
+
+
 def test_ngram_jaccard_matches_bruteforce(spark):
     for rows, threshold in ((DOCS, 0.3), (DOCS + ON_THRESHOLD, 0.28)):
         frame = spark.createDataFrame(
             pd.DataFrame(rows, columns=["doc_id", "text"]))
-        got = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in D.ngram_jaccard_pairs(
-                frame, n=3, threshold=threshold).collect()
-        }
-        want = {}
-        for i, ta in rows:
-            for j, tb in rows:
-                if i >= j:
-                    continue
-                sa, sb = _py_shingles(ta), _py_shingles(tb)
-                if not sa or not sb:
-                    continue
-                jac = len(sa & sb) / len(sa | sb)
-                if jac >= threshold:
-                    want[(i, j)] = round(jac, 6)
-        assert set(got) == set(want)
-        for k in want:
-            assert abs(got[k] - want[k]) < 1e-6
+        want = _assert_matches_py_jaccard(frame, rows, threshold)
     assert (10, 11) in want  # the on-threshold pair qualifies
+
+
+def test_ngram_jaccard_hash_index_parity(docs):
+    """The xxhash64-keyed inverted index gives the pairs and values of
+    exact Python Jaccard over the shingle strings: a 64-bit collision
+    is the only way they could differ (p ≈ m²/2^65)."""
+    _assert_matches_py_jaccard(docs, DOCS, 0.3)
 
 
 def test_minhash_lsh_finds_exact_and_near_dups(docs):
@@ -104,6 +123,22 @@ def test_minhash_lsh_finds_exact_and_near_dups(docs):
     assert all(a < b for a, b in pairs)
     # jaccard verification keeps unrelated docs out
     assert not any(4 in p for p in pairs)
+
+
+@pytest.mark.parametrize("num_hashes, bands", [(32, 5), (32, 0), (4, 8)])
+def test_minhash_bad_band_config_fails_before_any_job(
+        docs, jobs_in_group, num_hashes, bands):
+    """A signature that does not slice evenly into `bands` (a remainder,
+    no band, or fewer hashes than bands) is a ValueError naming both
+    numbers, raised while the plan is built: no Spark job starts."""
+    def build():
+        with pytest.raises(ValueError) as exc:
+            D.minhash_dedup_pairs(docs, num_hashes=num_hashes, bands=bands)
+        return str(exc.value)
+
+    msg, n_jobs = jobs_in_group("bad-bands", build)
+    assert f"num_hashes={num_hashes}" in msg and f"bands={bands}" in msg
+    assert n_jobs == 0
 
 
 @pytest.fixture(scope="module")
@@ -143,55 +178,16 @@ def test_embedding_near_dup_pairs(emb):
 
 
 def test_multimodal_decode_plumbing(spark, mini_docs):
-    meta = decode_media(mini_docs.limit(20), kind="image", mode="fake")
+    meta = decode_media(mini_docs.limit(20), kind="image")
     rows = meta.collect()
     assert len(rows) == 20
     r0 = rows[0]
     assert r0["kind"] == "image" and len(r0["feature"]) == 16
     assert r0["n_bytes"] > 0 and r0["width"] >= 64
     # deterministic: same input -> same features
-    again = decode_media(mini_docs.limit(20), kind="image", mode="fake").collect()
+    again = decode_media(mini_docs.limit(20), kind="image").collect()
     assert {r["media_id"]: r["feature"] for r in rows} == {
         r["media_id"]: r["feature"] for r in again}
-
-
-def test_multimodal_strict_mode_rejects_unknown_magic():
-    # strict is REAL now (tests/test_multimodal_strict.py); non-media
-    # bytes surface a clear error instead of invented metadata
-    from redo_log_parser_spark.functions.multimodal import _strict_decode
-
-    with pytest.raises(ValueError, match="unsupported magic"):
-        _strict_decode(b"<html>not media</html>")
-
-
-def test_max_df_bounds_hot_shingle_fanout(spark):
-    """One stop-phrase shingle shared by all docs must not produce an
-    O(n^2) pair set once max_df is applied; genuinely-duplicate docs
-    (sharing RARE shingles) still pair."""
-    rows = [(i, f"aaa bbb ccc unique{i} tail{i}") for i in range(40)]
-    rows += [(100, "xxx yyy zzz www vvv"), (101, "xxx yyy zzz www vvv")]
-    hot = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    uncapped = D.ngram_jaccard_pairs(hot, n=3, threshold=0.01).count()
-    assert uncapped > 700  # C(40,2) hot-shingle pairs + the planted dup
-    capped = D.ngram_jaccard_pairs(hot, n=3, threshold=0.01, max_df=5).collect()
-    assert {(r["id_a"], r["id_b"]) for r in capped} == {(100, 101)}
-    assert capped[0]["jaccard"] == 1.0
-
-
-def test_minhash_bucket_cap_bounds_pairs(spark):
-    """A degenerate LSH bucket (here: 30 identical docs agreeing on every
-    band) must be droppable via max_bucket_size without losing pairs in
-    healthy buckets."""
-    rows = [(i, "same same same same text here") for i in range(30)]
-    rows += [(100, "pp qq rr ss tt uu"), (101, "pp qq rr ss tt uu")]
-    degen = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    free = D.minhash_dedup_pairs(degen, num_hashes=32, bands=8, threshold=0.5)
-    assert free.count() == 30 * 29 // 2 + 1
-    capped = D.minhash_dedup_pairs(
-        degen, num_hashes=32, bands=8, threshold=0.5, max_bucket_size=5
-    )
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert got == {(100, 101)}
 
 
 def test_lsh_bucket_matches_driver_twin_and_plan_bounded(spark):
@@ -228,61 +224,6 @@ def test_ivf_bucket_plan_bounded_high_dim(spark):
     for vid, v in zip(pdf["vec_id"], vecs):
         d = [float(((v - _np.asarray(c)) ** 2).sum()) for c in cents]
         assert rows[vid] == int(_np.argmin(d)), vid
-
-
-def test_bucket_cap_drop_metric_is_observable(spark):
-    """The lsh_dropped_rows observation must report exactly the rows in
-    oversized buckets (30 identical docs x 8 bands) — the drop is
-    visible, never silent."""
-    rows = [(i, "same same same same text here") for i in range(30)]
-    rows += [(100, "pp qq rr ss tt uu"), (101, "pp qq rr ss tt uu")]
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    out = D.minhash_dedup_pairs(docs, 32, 8, threshold=0.5, max_bucket_size=5)
-    out.collect()
-    om = out._jdf.queryExecution().observedMetrics()
-    vals = {}
-    it = om.iterator()
-    while it.hasNext():
-        kv = it.next()
-        vals[str(kv._1())] = kv._2()
-    (name, row), = [(k, v) for k, v in vals.items() if k.startswith("lsh_bucket_cap")]
-    assert row.getLong(0) == 30 * 8  # every row of the degenerate buckets
-
-
-def test_bucket_cap_names_unique_across_threads(spark):
-    """_cap_buckets observe names must never collide — round-3 VERDICT
-    minor #4: the old bare-int module counter could mint duplicates
-    under concurrent plan construction. Build plans from several
-    threads and check every minted name is distinct (observe() raises
-    on duplicate names within one plan; across plans duplicate names
-    would silently merge metrics)."""
-    import re
-    import threading
-
-    rows = [(i, f"w{i} x{i} y{i} z{i} q{i}") for i in range(8)]
-    docs = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    sigs = D.with_minhash_sig(docs, num_hashes=16).select("doc_id", "sig")
-    plans, errs = [], []
-
-    def build():
-        try:
-            df = D.minhash_lsh_candidates(sigs, bands=4, max_bucket_size=3)
-            plans.append(df._jdf.queryExecution().analyzed().toString())
-        except Exception as e:  # pragma: no cover - diagnostic
-            errs.append(e)
-
-    threads = [threading.Thread(target=build) for _ in range(6)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs
-    names = []
-    for p in plans:  # a plan may print its CollectMetrics name twice
-        got = set(re.findall(r"lsh_bucket_cap_\d+", p))
-        assert len(got) == 1, got
-        names.append(got.pop())
-    assert len(names) == 6 and len(set(names)) == 6
 
 
 def test_shingles_short_and_empty_docs(spark):
@@ -339,16 +280,3 @@ def test_minhash_per_doc_frame_is_projection_only(docs):
     )
     plan = per_doc._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-
-
-def test_ngram_jaccard_hash_index_parity(docs):
-    """hash_index=True (default, bigint inverted index) must produce
-    the exact pair set and jaccard values of the string-keyed index —
-    a 64-bit collision is the only way they can differ (p ≈ m²/2^65)."""
-    kw = dict(n=3, threshold=0.3)
-    hashed = {(r["id_a"], r["id_b"]): r["jaccard"]
-              for r in D.ngram_jaccard_pairs(docs, **kw).collect()}
-    exact = {(r["id_a"], r["id_b"]): r["jaccard"]
-             for r in D.ngram_jaccard_pairs(
-                 docs, hash_index=False, **kw).collect()}
-    assert hashed == exact and hashed
